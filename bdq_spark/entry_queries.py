@@ -4838,6 +4838,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB/continuous shape for correlating two event feeds.  The
     emitted pairs are value-hash-checked against the batch range join
     oracle — stream/batch unification for JOINS, not just aggregates."""
+    from bdq_spark.session import private_session, rebind
     from bdq_spark.streaming import interval_join
 
     ev = load_table(spark, sf_dir, "events")
@@ -4866,30 +4867,27 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition; partition count is pinned at the first checkpoint, so
     # size it to the stream's throughput, not the session's batch
     # default (local-mode measurement: 32 -> 8 partitions cuts this
-    # query 7.0 s -> 2.7 s, all state-store setup).  Restored after
-    # start — only the streaming query captures it.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # query 7.0 s -> 2.7 s, all state-store setup).  The query runs on
+    # a private session, so the caller's conf is untouched; the memory
+    # sink registers its table in that session.
+    stream = private_session(spark, {"spark.sql.shuffle.partitions": "8"})
+    q = (
+        rebind(joined, stream).writeStream.outputMode("append")
+        .format("memory")
+        .queryName(sink)
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination()
-    out = spark.table(sink).select(
+    out = stream.table(sink).select(
         "user_id",
         F.unix_millis("l_ts").alias("l_ts_ms"),
         F.unix_millis("r_ts").alias("r_ts_ms"),
         "l_event_id",
         "r_event_id",
     ).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out
+    stream.catalog.dropTempView(sink)
+    return rebind(out, spark)
 
 
 # ---------------------------------------------------------------------------

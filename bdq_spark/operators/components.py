@@ -27,13 +27,11 @@ Scale mechanics, per round:
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bdq_spark.operators._checkpoint import data_checkpoint
+from bdq_spark.session import private_session, rebind
 
 __all__ = ["connected_components", "apply_dedup_clusters", "pagerank", "pagerank_quantized", "triangle_counts", "kcore"]
 
@@ -61,100 +59,24 @@ def _maybe_broadcast(df: DataFrame, n_nodes: int, bound: int) -> DataFrame:
     return F.broadcast(df) if n_nodes <= bound else df.hint("shuffle_hash")
 
 
-# depth-counted save/restore for _aqe_disabled: overlapping scopes on
-# one session (concurrent SparkPipeline steps each planning a
-# past-the-cutover graph op) must save the USER's AQE setting exactly
-# once — at the outermost entry — and restore it exactly once, at the
-# outermost exit.  Naive per-scope save/restore races: scope A saves
-# "true", B saves the "false" A just set, A restores "true" mid-B, B
-# finally restores "false" and the session leaks AQE-off.  The lock
-# guards only the bookkeeping (entry/exit), never the yielded body, so
-# concurrent graph sections still run in parallel.
-_AQE_LOCK = threading.Lock()
-_AQE_SCOPES: dict = {}  # id(session) -> [depth, saved_value]
-
-
-@contextmanager
-def _aqe_disabled(spark):
-    """Scope for the co-partitioned shuffle path of the iterative graph
-    operators.  ``localCheckpoint`` preserves a relation's
-    ``outputPartitioning`` through the resulting ``LogicalRDD`` — but
-    only when the captured physical plan is concrete: under AQE the
-    captured root is an ``AdaptiveSparkPlanExec``, which reports unknown
-    partitioning until execution commits a final plan, so every
-    checkpointed side loses its co-partitioning and every per-round join
-    re-shuffles the full edge relation (measured: the x100 pagerank
-    graph, just past the broadcast cutover, paid 153 s vs 20 s at x30).
-    Inside this scope plans are static, checkpoints keep their
-    ``HashPartitioning``, and EnsureRequirements elides the per-round
-    exchanges.  The trade — no runtime skew splitting during the rounds
-    — is the standard one for co-partitioned iterative graph execution
-    (a skewed key cannot be split without breaking co-location anyway);
-    map-side partial aggregation still absorbs hot destination keys.
-
-    Caveat: ``spark.conf`` is SESSION-scoped, so a query planned
-    CONCURRENTLY on the same session (e.g. a parallel
-    ``SparkPipeline`` step) while a past-the-cutover graph op holds
-    this scope also plans without AQE — unavoidable for a shared
-    session; pipelines that interleave huge-graph steps with
-    AQE-sensitive steps should order them sequentially or run the
-    graph step on ``spark.newSession()``.  What IS guaranteed: the
-    user's AQE setting is saved at the OUTERMOST scope entry and
-    restored at the OUTERMOST exit (depth-counted, lock-guarded), so
-    overlapping scopes can never restore each other's intermediate
-    "false" and leak AQE-off past the last exit.
-    """
-    key = "spark.sql.adaptive.enabled"
-    sid = id(spark)
-    with _AQE_LOCK:
-        depth, saved = _AQE_SCOPES.get(sid, (0, None))
-        if depth == 0:
-            saved = spark.conf.get(key)
-            spark.conf.set(key, "false")
-        _AQE_SCOPES[sid] = (depth + 1, saved)
-    try:
-        yield
-    finally:
-        with _AQE_LOCK:
-            depth, saved = _AQE_SCOPES[sid]
-            if depth == 1:
-                del _AQE_SCOPES[sid]
-                spark.conf.set(key, saved)
-            else:
-                _AQE_SCOPES[sid] = (depth - 1, saved)
-
-
-_CONF_LOCK = threading.Lock()
-_CONF_SCOPES: dict = {}  # (id(session), key) -> [depth, saved_value]
-
-
-@contextmanager
-def _conf_pinned(spark, key: str, value: str):
-    """Depth-counted session-conf pin (same locking discipline as
-    :func:`_aqe_disabled`): the USER's value is saved at the OUTERMOST
-    scope entry and restored at the OUTERMOST exit, so overlapping
-    scopes on one session can never restore each other's intermediate
-    values and leak the pin past the last exit.  Every entry SETS the
-    value (nested scopes with different values: innermost-set wins
-    until the outermost exit — a perf-only effect for the iterative
-    loops this serves; results never depend on the pinned confs)."""
-    sid = (id(spark), key)
-    with _CONF_LOCK:
-        depth, saved = _CONF_SCOPES.get(sid, (0, None))
-        if depth == 0:
-            saved = spark.conf.get(key)
-        _CONF_SCOPES[sid] = (depth + 1, saved)
-        spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        with _CONF_LOCK:
-            depth, saved = _CONF_SCOPES[sid]
-            if depth == 1:
-                del _CONF_SCOPES[sid]
-                spark.conf.set(key, saved)
-            else:
-                _CONF_SCOPES[sid] = (depth - 1, saved)
+# conf of the private session (:func:`bdq_spark.session.private_session`)
+# that the co-partitioned shuffle path of the iterative graph operators
+# plans in.  ``localCheckpoint`` preserves a relation's
+# ``outputPartitioning`` through the resulting ``LogicalRDD`` — but only
+# when the captured physical plan is concrete: under AQE the captured
+# root is an ``AdaptiveSparkPlanExec``, which reports unknown
+# partitioning until execution commits a final plan, so every
+# checkpointed side loses its co-partitioning and every per-round join
+# re-shuffles the full edge relation (measured: the x100 pagerank graph,
+# just past the broadcast cutover, paid 153 s vs 20 s at x30).  Without
+# AQE plans are static, checkpoints keep their ``HashPartitioning``, and
+# EnsureRequirements elides the per-round exchanges.  The trade — no
+# runtime skew splitting during the rounds — is the standard one for
+# co-partitioned iterative graph execution (a skewed key cannot be split
+# without breaking co-location anyway); map-side partial aggregation
+# still absorbs hot destination keys.  The caller's session keeps AQE:
+# inputs cross into the clone and results cross back by ``rebind``.
+_AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
 
 
 # per-partition row target for the ITERATION-LOOP shuffles of the
@@ -183,10 +105,25 @@ def _shuffle_partitions(spark) -> int:
         return spark.sparkContext.defaultParallelism
 
 
+def _round_loop_confs(spark, n_rows: int) -> dict:
+    """Conf of the private session a broadcast-regime round loop runs
+    in: AQE off and the shuffle width pinned to the data,
+    ``ceil(n_rows / _ROUND_ROWS_PER_PARTITION)`` capped at the session's
+    count.  Every loop query is one aggregate whose input row count is
+    KNOWN (counted at setup), so AQE's only per-round contribution was
+    re-deriving that width as an extra scheduled query-stage job, and
+    the rounds are a serial driver-bound chain (measured at sf0.1: CC
+    4 -> 2 jobs and ~0.5 -> ~0.25 s per round; results bit-identical)."""
+    n_part = max(
+        1, min(_shuffle_partitions(spark), -(-n_rows // _ROUND_ROWS_PER_PARTITION))
+    )
+    return {**_AQE_OFF, "spark.sql.shuffle.partitions": str(n_part)}
+
+
 def _keyed_checkpoint(df: DataFrame, key: str) -> DataFrame:
     """Hash-partition ``df`` by ``key`` into the session's shuffle
-    partition count and checkpoint it — inside :func:`_aqe_disabled`
-    the checkpoint keeps the partitioning, so downstream equi-joins and
+    partition count and checkpoint it — in an ``_AQE_OFF`` session the
+    checkpoint keeps the partitioning, so downstream equi-joins and
     aggregates on ``key`` (with the same partition count, which
     ENSURE_REQUIREMENTS defaults to) insert no exchange.
 
@@ -201,57 +138,6 @@ def _keyed_checkpoint(df: DataFrame, key: str) -> DataFrame:
     feeds."""
     spark = df.sparkSession
     return data_checkpoint(df.repartition(_shuffle_partitions(spark), key))
-
-
-def _cloned_session(spark):
-    """An ISOLATED SparkSession for a graph op's iterative section
-    (``graph_session=True``): same SparkContext (same executors, same
-    cached blocks), cloned SQL state — so the :func:`_aqe_disabled`
-    scope the co-partitioned path needs flips AQE off on the CLONE
-    only, and queries planned concurrently on the caller's session
-    keep their AQE.  This removes the one residual caveat of the
-    shared-session scope (documented in :func:`_aqe_disabled`) for
-    pipeline users, at zero cost to the default path.
-
-    ``cloneSession()`` (not ``newSession()``): the clone COPIES the
-    current runtime SQL conf — shuffle partition counts etc. set at
-    runtime keep governing the graph — where a new session would reset
-    to the builder-time conf."""
-    from pyspark.sql import SparkSession
-
-    jclone = spark._jsparkSession.cloneSession()
-    return SparkSession(spark.sparkContext, jsparkSession=jclone)
-
-
-def _rebind(df: DataFrame, session) -> DataFrame:
-    """Re-expose ``df`` as a DataFrame of ``session`` WITHOUT copying
-    data: the physical plan's ``RDD[InternalRow]`` (lazy — nothing
-    executes here) becomes the new frame's leaf.  Planning of ``df``'s
-    own subtree stays with the session that created it (its
-    ``QueryExecution`` is already bound), so rebinding the graph input
-    into the clone and the result back out gives the iterative section
-    the clone's conf while the caller composes the output with their
-    own session's frames as usual.  Sessions sharing one SparkContext
-    is exactly the case ``internalCreateDataFrame`` exists for
-    (package-private in Scala, public in bytecode — the same surface
-    PySpark itself crosses for Arrow ingestion)."""
-    jdf = df._jdf
-    jrdd = jdf.queryExecution().toRdd()
-    jnew = session._jsparkSession.internalCreateDataFrame(
-        jrdd, jdf.schema(), False
-    )
-    return DataFrame(jnew, session)
-
-
-def _enter_graph_session(df: DataFrame, graph_session: bool):
-    """Common entry hook: returns ``(df, exec_spark, caller_spark)`` —
-    identity when ``graph_session`` is False (the default path plans
-    nothing extra), else ``df`` rebound into a cloned session."""
-    spark = df.sparkSession
-    if not graph_session:
-        return df, spark, spark
-    clone = _cloned_session(spark)
-    return _rebind(df, clone), clone, spark
 
 
 # fused-setup regime floor, in INPUT PAIR rows: a pair relation at or
@@ -303,17 +189,9 @@ def connected_components(
     id_b: str = "id_b",
     max_iterations: int = 20,
     broadcast_max_nodes: int = GRAPH_BROADCAST_MAX_NODES,
-    graph_session: bool = False,
 ) -> DataFrame:
     """Label every node appearing in ``pairs`` with its component's
     minimum member id.
-
-    ``graph_session=True`` runs the iterative section on a CLONED
-    session (:func:`_cloned_session`), so the AQE-off scope the
-    past-cutover path requires can't leak into queries planned
-    concurrently on the caller's session; the input crosses in and the
-    result crosses back as zero-copy RDD rebinds.  Default False: no
-    extra planning, byte-identical to the historical path.
 
     Output: ``(id, cluster_id, is_keeper)`` — one row per distinct node;
     ``is_keeper`` marks the minimum-id member, giving a deterministic
@@ -328,43 +206,46 @@ def connected_components(
     min per id (``_round_broadcast`` — provably equal to the classic
     neighbor-min + merge-join round, with one broadcast build instead
     of two and no second join).  Near-dup graphs are sized by the
-    duplicate population, not the corpus, so this is the common case.  A larger graph takes the CO-PARTITIONED shuffle path:
-    edges are hash-partitioned by source and labels by id once at setup
-    (under :func:`_aqe_disabled`, so the checkpoints keep their
-    partitioning), the per-round label relation inherits hash(id)
-    through its lazy checkpoint (the merge join's left side), and each
-    round again costs exactly one exchange — the min-aggregate; the
-    edge relation is shuffled once at setup, never per round.  Values
-    are exact integers on either path, so the result is identical.
+    duplicate population, not the corpus, so this is the common case.
+    A larger graph takes the CO-PARTITIONED shuffle path: edges are
+    hash-partitioned by source and labels by id once at setup (planned
+    without AQE, so the checkpoints keep their partitioning), the
+    per-round label relation inherits hash(id) through its lazy
+    checkpoint (the merge join's left side), and each round again costs
+    exactly one exchange — the min-aggregate; the edge relation is
+    shuffled once at setup, never per round.  Values are exact integers
+    on either path, so the result is identical.  The AQE-off sections
+    plan on a private session; the caller's conf is never touched.
     """
     # checkpoint the INPUT first: the union below reads the pair relation
     # twice (both edge directions), and the upstream pair producers
     # (LSH banding, Jaccard verify) are the expensive part of the whole
     # clustering query — without this they would execute twice
+    spark = pairs.sparkSession
     directed = data_checkpoint(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     )
-    directed, spark, caller_spark = _enter_graph_session(
-        directed, graph_session
+    both = directed.union(
+        directed.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    mirror = directed.select(F.col("b").alias("a"), F.col("a").alias("b"))
     # the count is one cheap job over the checkpoint blocks just
     # materialized; it picks the setup regime BEFORE the symmetrize
     # shuffle runs, so small graphs never get pinned wide
     n_pairs = directed.count()
     if _may_exceed_cutover(n_pairs, broadcast_max_nodes):
-        with _aqe_disabled(spark):
-            # ONE symmetrize-dedup shuffle, captured with hash(a): the
-            # per-partition dropDuplicates rides the repartition
-            # exchange (hash(a) satisfies the (a, b) clustering), and
-            # past the cutover the rounds reuse this partitioning
-            # without a second edge materialization — see
-            # :func:`pagerank`
-            edges = data_checkpoint(
-                directed.union(mirror)
+        # ONE symmetrize-dedup shuffle, captured with hash(a) (AQE off):
+        # the per-partition dropDuplicates rides the repartition
+        # exchange (hash(a) satisfies the (a, b) clustering), and past
+        # the cutover the rounds reuse this partitioning without a
+        # second edge materialization — see :func:`pagerank`
+        edges = rebind(
+            data_checkpoint(
+                rebind(both, private_session(spark, _AQE_OFF))
                 .repartition(_shuffle_partitions(spark), "a")
                 .dropDuplicates()
-            )
+            ),
+            spark,
+        )
     else:
         # small graph (cannot cross the node cutover): the rounds
         # broadcast the label side, so edge partitioning is never
@@ -372,7 +253,7 @@ def connected_components(
         # checkpoint to the data's natural width instead of pinning a
         # sub-partition-size relation at the session shuffle count
         # (see :func:`_may_exceed_cutover` for the measured cliff)
-        edges = data_checkpoint(directed.union(mirror).distinct())
+        edges = data_checkpoint(both.distinct())
     labels = (
         edges.select(F.col("a").alias("id"))
         .distinct()
@@ -508,28 +389,14 @@ def connected_components(
     if n_nodes > broadcast_max_nodes:
         # edges already carry hash(a) from the setup checkpoint; only
         # the label relation needs keying
-        with _aqe_disabled(spark):
-            out = _rounds(edges, _keyed_checkpoint(labels, "id"))
+        loop = private_session(spark, _AQE_OFF)
+        labels = _keyed_checkpoint(rebind(labels, loop), "id")
     else:
-        # broadcast-regime rounds: every loop query is one node-scale
-        # min-aggregate whose output row count is KNOWN (n_nodes), so
-        # pin the shuffle width to the data and drop AQE for the loop —
-        # AQE's only per-round contribution is re-deriving that width
-        # as an extra scheduled query-stage job, and the rounds are a
-        # serial driver-bound chain (measured at sf0.1: 4 -> 2 jobs and
-        # ~0.5 -> ~0.25 s per round; labels bit-identical)
-        n_part = max(
-            1,
-            min(
-                _shuffle_partitions(spark),
-                -(-n_nodes // _ROUND_ROWS_PER_PARTITION),
-            ),
-        )
-        with _aqe_disabled(spark), _conf_pinned(
-            spark, "spark.sql.shuffle.partitions", str(n_part)
-        ):
-            out = _rounds(edges, labels)
-    return _rebind(out, caller_spark) if graph_session else out
+        # broadcast-regime rounds: one node-scale min-aggregate each,
+        # over n_nodes known rows (see :func:`_round_loop_confs`)
+        loop = private_session(spark, _round_loop_confs(spark, n_nodes))
+        labels = rebind(labels, loop)
+    return rebind(_rounds(rebind(edges, loop), labels), spark)
 
 
 def apply_dedup_clusters(
@@ -551,6 +418,54 @@ def apply_dedup_clusters(
     return df.join(non_keepers, id_column, "left_anti")
 
 
+def _pagerank_setup(
+    edges: DataFrame, src: str, dst: str, broadcast_max_nodes: int
+) -> tuple:
+    """Setup shared by :func:`pagerank` and :func:`pagerank_quantized`:
+    ONE edge shuffle for the whole query, planned without AQE so the
+    checkpoint keeps its hash(src) partitioning (same shuffle count as
+    a plain distinct; small graphs get de-pinned right after), then the
+    node set.  Returns ``(e, nodes, n_nodes)`` on the caller's
+    session."""
+    spark = edges.sparkSession
+    e = rebind(
+        data_checkpoint(
+            rebind(
+                edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")),
+                private_session(spark, _AQE_OFF),
+            )
+            .repartition(_shuffle_partitions(spark), "src")
+            .dropDuplicates()
+        ),
+        spark,
+    )
+    e = _depin_small_edges(e, broadcast_max_nodes)
+    nodes = (
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    return e, nodes, nodes.count()
+
+
+def _pagerank_rounds(
+    run, e: DataFrame, nodes: DataFrame, n_nodes: int, broadcast_max_nodes: int
+) -> DataFrame:
+    """``run(e, nodes)`` on the caller's session under the node cutover;
+    past it in an AQE-off private session over id-keyed nodes, so the
+    rounds' checkpoints keep their partitioning (the co-partitioned
+    path), with the result rebound to the caller."""
+    if n_nodes <= broadcast_max_nodes:
+        return run(e, nodes)
+    spark = e.sparkSession
+    loop = private_session(spark, _AQE_OFF)
+    return rebind(
+        run(rebind(e, loop), _keyed_checkpoint(rebind(nodes, loop), "id")),
+        spark,
+    )
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -558,7 +473,6 @@ def pagerank(
     iterations: int = 3,
     damping: float = 0.85,
     broadcast_max_nodes: int = GRAPH_BROADCAST_MAX_NODES,
-    graph_session: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank power iteration over an edge relation —
     the standard importance measure for entity graphs a data pipeline
@@ -579,8 +493,8 @@ def pagerank(
     Scale mechanics: the edge relation is materialized EXACTLY ONCE —
     one shuffle that hash-partitions it by source (per-partition dedup
     rides the same exchange: hash(src) satisfies the (src, dst)
-    distinct clustering) into a SERIALIZED checkpoint captured under
-    :func:`_aqe_disabled` so it keeps its partitioning.  The per-edge
+    distinct clustering) into a SERIALIZED checkpoint planned without
+    AQE so it keeps its partitioning.  The per-edge
     ``rank/outdeg`` weight is NOT pre-joined onto the edges (an
     edge-scale second materialization, measured 59 s of the x100 wall):
     the out-degree is joined onto the rank relation ONCE at setup and
@@ -588,8 +502,8 @@ def pagerank(
     NODE-scale with a filter+project (no join) and streams the edges
     against that — per iteration the only work is one shuffle (the
     per-destination partial-agg sum) plus — only when dangling nodes
-    exist at all — a 1-row mass aggregate over the deg-null rank rows.  A LAZY ``localCheckpoint``
-    per iteration keeps the plan flat (same iterative-lineage cure as
+    exist at all — a 1-row mass aggregate over the deg-null rank rows.
+    A LAZY ``localCheckpoint`` per iteration keeps the plan flat (same iterative-lineage cure as
     :func:`connected_components`).  When the node table is small
     (``<= broadcast_max_nodes``), the weight and update joins run as
     BROADCAST hash joins; a huge graph takes the CO-PARTITIONED path —
@@ -597,35 +511,12 @@ def pagerank(
     inheriting hash(id) through its per-round lazy checkpoint, and the
     node-sized join sides built as SHUFFLE_HASH maps so the edge side
     streams without per-round sorts.
-
-    ``graph_session=True``: same cloned-session isolation contract as
-    :func:`connected_components` — the AQE-off scope (which this
-    operator holds for its ENTIRE body, setup included) applies to the
-    clone only.
     """
-    edges, spark, caller_spark = _enter_graph_session(edges, graph_session)
-    with _aqe_disabled(spark):
-        # ONE edge shuffle for the whole query, captured with its
-        # hash(src) partitioning (same shuffle count as a plain
-        # distinct; small graphs get de-pinned right below)
-        e = data_checkpoint(
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .repartition(_shuffle_partitions(spark), "src")
-            .dropDuplicates()
-        )
-    e = _depin_small_edges(e, broadcast_max_nodes)
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = nodes.count()
+    e, nodes, n_nodes = _pagerank_setup(edges, src, dst, broadcast_max_nodes)
     if n_nodes == 0:
-        out = nodes.withColumn("rank", F.lit(0.0))
-        return _rebind(out, caller_spark) if graph_session else out
+        return nodes.withColumn("rank", F.lit(0.0))
 
-    def _run(nodes: DataFrame) -> DataFrame:
+    def _run(e: DataFrame, nodes: DataFrame) -> DataFrame:
         # node-scale static: out-degree per source (exchange-free over
         # the src-partitioned edges).  The degree is joined onto the
         # rank relation ONCE here and CARRIED through the iterations —
@@ -692,15 +583,10 @@ def pagerank(
             )
         # every round is PLANNED here (localCheckpoint builds its RDD at
         # call time, lazy only in materialization), so the whole loop's
-        # plans are captured inside the caller's scope
+        # plans are captured in the session ``e`` and ``nodes`` belong to
         return ranks.select("id", "rank")
 
-    if n_nodes > broadcast_max_nodes:
-        with _aqe_disabled(spark):
-            out = _run(_keyed_checkpoint(nodes, "id"))
-    else:
-        out = _run(nodes)
-    return _rebind(out, caller_spark) if graph_session else out
+    return _pagerank_rounds(_run, e, nodes, n_nodes, broadcast_max_nodes)
 
 
 def pagerank_quantized(
@@ -710,7 +596,6 @@ def pagerank_quantized(
     iterations: int = 3,
     scale: int = 10**12,
     broadcast_max_nodes: int = GRAPH_BROADCAST_MAX_NODES,
-    graph_session: bool = False,
 ) -> DataFrame:
     """Engine-portable PageRank twin: the same power iteration as
     :func:`pagerank` carried out entirely in EXACT bigint arithmetic —
@@ -736,31 +621,14 @@ def pagerank_quantized(
     iteration under the node-count broadcast bound, broadcast 1-row
     dangling scalar, lazy localCheckpoint; above the bound, the same
     co-partitioned setup (edges by source, nodes/ranks by id, planned
-    under :func:`_aqe_disabled`) keeps the rounds at one exchange with
-    the edge relation shuffled once at setup.  ``graph_session=True``:
-    same cloned-session AQE isolation as :func:`pagerank`.
+    without AQE) keeps the rounds at one exchange with the edge
+    relation shuffled once at setup.
     """
-    edges, spark, caller_spark = _enter_graph_session(edges, graph_session)
-    with _aqe_disabled(spark):
-        # ONE edge shuffle, captured with hash(src) — see :func:`pagerank`
-        e = data_checkpoint(
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .repartition(_shuffle_partitions(spark), "src")
-            .dropDuplicates()
-        )
-    e = _depin_small_edges(e, broadcast_max_nodes)
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = nodes.count()
+    e, nodes, n_nodes = _pagerank_setup(edges, src, dst, broadcast_max_nodes)
     if n_nodes == 0:
-        out = nodes.withColumn("rank_q", F.lit(0).cast("bigint"))
-        return _rebind(out, caller_spark) if graph_session else out
+        return nodes.withColumn("rank_q", F.lit(0).cast("bigint"))
 
-    def _run(nodes: DataFrame) -> DataFrame:
+    def _run(e: DataFrame, nodes: DataFrame) -> DataFrame:
         # node-scale static — deg carried on the rank relation and
         # dangling detection by count comparison, exactly as in
         # :func:`pagerank` (see the comment there; OPTIMIZATION_r13)
@@ -819,12 +687,7 @@ def pagerank_quantized(
             )
         return ranks.select("id", "rank_q")
 
-    if n_nodes > broadcast_max_nodes:
-        with _aqe_disabled(spark):
-            out = _run(_keyed_checkpoint(nodes, "id"))
-    else:
-        out = _run(nodes)
-    return _rebind(out, caller_spark) if graph_session else out
+    return _pagerank_rounds(_run, e, nodes, n_nodes, broadcast_max_nodes)
 
 
 def triangle_counts(
@@ -935,7 +798,6 @@ def kcore(
     dst: str = "dst",
     max_rounds: int = 20,
     broadcast_max_nodes: int = GRAPH_BROADCAST_MAX_NODES,
-    graph_session: bool = False,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling (Seidman 1983; the
     Matula-Beck peel, rounds-synchronous): repeatedly delete every node
@@ -975,10 +837,11 @@ def kcore(
 
     - ``<= broadcast_max_nodes`` edges: each round is one degree
       aggregation plus two BROADCAST anti-joins against the (shrinking)
-      sub-k node set, eager checkpoint per round, AQE left on.
+      sub-k node set, lazy checkpoint per round, AQE off and the
+      shuffle width pinned to the data (:func:`_round_loop_confs`).
     - above it: the adjacency is hash-partitioned by source ONCE
-      (inside :func:`_aqe_disabled`, so every per-round checkpoint
-      keeps the partitioning), after which the peel rounds are
+      (planned without AQE, so every per-round checkpoint keeps the
+      partitioning), after which the peel rounds are
       EXCHANGE-FREE: the degree aggregation and the source-side
       anti-join are co-partitioned on ``src`` (SHUFFLE_HASH build on
       the bad set, so the adjacency streams unsorted), and the
@@ -997,20 +860,7 @@ def kcore(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    if graph_session:
-        # same cloned-session AQE isolation as connected_components,
-        # via self-recursion: rebind the edge input into the clone
-        # (upstream planning stays with the caller's session — toRdd
-        # captures it under the caller's conf), peel there, rebind the
-        # result back
-        rebased, _, caller_spark = _enter_graph_session(
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")),
-            True,
-        )
-        out = kcore(
-            rebased, k, "src", "dst", max_rounds, broadcast_max_nodes
-        )
-        return _rebind(out, caller_spark)
+    spark = edges.sparkSession
     fwd = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     )
@@ -1025,83 +875,51 @@ def kcore(
     )
     n_edges = cur.count()
 
-    if n_edges <= broadcast_max_nodes:
-        # same round-loop conf pin as the CC broadcast regime: every
-        # peel round's only shuffle is the degree aggregate, whose
-        # input row count is KNOWN (n_edges, counted above), so pin
-        # the shuffle width to the data and drop AQE for the loop —
-        # AQE's per-round contribution was re-deriving that width as
-        # extra scheduled query-stage jobs in a SERIAL job chain
-        # (OPTIMIZATION_r13; data-derived, not a local-mode constant).
-        # The anti-joins are explicit broadcasts, so AQE had no join
-        # strategy left to improve here.
-        spark = edges.sparkSession
-        n_part = max(
-            1,
-            min(
-                _shuffle_partitions(spark),
-                -(-n_edges // _ROUND_ROWS_PER_PARTITION),
-            ),
-        )
-        # NOTE on the pin vs the shrinking peel (ADVICE r13): n_part is
-        # derived once from the INITIAL n_edges while cur only shrinks,
-        # so late rounds run wider than their data — but this regime is
-        # entered only when n_edges <= broadcast_max_nodes, which caps
-        # the over-partitioning at ceil(bound / 50k) tasks (a handful);
-        # re-deriving would cost the very count jobs this loop removes.
-        with _aqe_disabled(spark), _conf_pinned(
-            spark, "spark.sql.shuffle.partitions", str(n_part)
-        ):
-            # (geometric convergence checks were measured here and
-            # REJECTED in r14: a kcore overshoot round costs broadcast-
-            # build jobs that outweigh the one count job a skipped
-            # check saves — docs_kcore_graph read 33 -> 42 construct
-            # jobs with the doubling schedule.  The CC broadcast loop
-            # keeps them because its overshoot rounds cost exactly one
-            # job each.)
-            for _ in range(max_rounds):
-                deg = cur.groupBy("src").agg(
-                    F.count(F.lit(1)).alias("degree")
-                )
-                # LAZY checkpoint + count as the round's single action
-                # (the count materializes the blocks; an eager
-                # checkpoint + a separate isEmpty was two jobs), and
-                # the previous round's lazily-checkpointed cur
-                # materializes inside the same job (OPTIMIZATION_r13 —
-                # the peel is a serial job chain, so every job saved
-                # is wall time at any scale)
-                bad = deg.where(F.col("degree") < k).select(
-                    "src"
-                ).localCheckpoint(eager=False)
-                if bad.count() == 0:
-                    return deg.select(F.col("src").alias("id"), "degree")
-                # (Sharing ONE broadcast build between the two anti-
-                # joins — identical aliased children so ReuseExchange
-                # canonicalizes them — was measured in r14 and
-                # REJECTED: the final plan does show ReusedExchange,
-                # but the localCheckpoint construction still submits
-                # two broadcast-build jobs at runtime, so the round's
-                # job count is unchanged and the rename is simpler.)
-                cur = (
-                    cur.join(F.broadcast(bad), "src", "left_anti")
-                    .join(
-                        F.broadcast(bad.withColumnRenamed("src", "dst")),
-                        "dst",
-                        "left_anti",
-                    )
-                    .localCheckpoint(eager=False)
-                )
-            deg = cur.groupBy("src").agg(
-                F.count(F.lit(1)).alias("degree")
-            )
-            if deg.where(F.col("degree") < k).isEmpty():
-                return deg.select(F.col("src").alias("id"), "degree")
-        raise RuntimeError(
-            f"kcore: peel did not converge within {max_rounds} rounds"
-        )
+    # each peel returns the final (src, degree) relation, or None when
+    # max_rounds rounds did not converge
+    def _degrees_if_converged(cur: DataFrame) -> DataFrame | None:
+        deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
+        return deg if deg.where(F.col("degree") < k).isEmpty() else None
 
-    with _aqe_disabled(edges.sparkSession):
-        cur = _keyed_checkpoint(cur, "src")
+    def _peel_broadcast(cur: DataFrame) -> DataFrame | None:
+        # (geometric convergence checks were measured here and REJECTED
+        # in r14: a kcore overshoot round costs broadcast-build jobs that
+        # outweigh the one count job a skipped check saves —
+        # docs_kcore_graph read 33 -> 42 construct jobs with the
+        # doubling schedule.  The CC broadcast loop keeps them because
+        # its overshoot rounds cost exactly one job each.)
+        for _ in range(max_rounds):
+            deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
+            # LAZY checkpoint + count as the round's single action (the
+            # count materializes the blocks; an eager checkpoint + a
+            # separate isEmpty was two jobs), and the previous round's
+            # lazily-checkpointed cur materializes inside the same job
+            # (OPTIMIZATION_r13 — the peel is a serial job chain, so
+            # every job saved is wall time at any scale)
+            bad = deg.where(F.col("degree") < k).select(
+                "src"
+            ).localCheckpoint(eager=False)
+            if bad.count() == 0:
+                return deg
+            # (Sharing ONE broadcast build between the two anti-joins —
+            # identical aliased children so ReuseExchange canonicalizes
+            # them — was measured in r14 and REJECTED: the final plan
+            # does show ReusedExchange, but the localCheckpoint
+            # construction still submits two broadcast-build jobs at
+            # runtime, so the round's job count is unchanged and the
+            # rename is simpler.)
+            cur = (
+                cur.join(F.broadcast(bad), "src", "left_anti")
+                .join(
+                    F.broadcast(bad.withColumnRenamed("src", "dst")),
+                    "dst",
+                    "left_anti",
+                )
+                .localCheckpoint(eager=False)
+            )
+        return _degrees_if_converged(cur)
+
+    def _peel_copartitioned(cur: DataFrame) -> DataFrame | None:
         for _ in range(max_rounds):
             deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
             bad = deg.where(F.col("degree") < k).select(
@@ -1109,7 +927,7 @@ def kcore(
             ).localCheckpoint(eager=True)
             n_bad = bad.count()
             if n_bad == 0:
-                return deg.select(F.col("src").alias("id"), "degree")
+                return deg
             # shuffle-hash build on the bad set: co-partitioned on src,
             # so the adjacency streams (no per-round sort of the edges)
             survivors = cur.join(
@@ -1142,9 +960,26 @@ def kcore(
                     "src",
                 )
         # one final check: the last filter round may have converged
-        deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-        if deg.where(F.col("degree") < k).isEmpty():
-            return deg.select(F.col("src").alias("id"), "degree")
+        return _degrees_if_converged(cur)
+
+    if n_edges <= broadcast_max_nodes:
+        # same round-loop conf as the CC broadcast regime: every peel
+        # round's only shuffle is the degree aggregate over n_edges
+        # known rows, and the anti-joins are explicit broadcasts, so AQE
+        # had no join strategy left to improve here.  NOTE on the pin vs
+        # the shrinking peel (ADVICE r13): the width is derived once
+        # from the INITIAL n_edges while cur only shrinks, so late
+        # rounds run wider than their data — but this regime is entered
+        # only when n_edges <= broadcast_max_nodes, which caps the
+        # over-partitioning at ceil(bound / 50k) tasks (a handful);
+        # re-deriving would cost the very count jobs this loop removes.
+        loop = private_session(spark, _round_loop_confs(spark, n_edges))
+        deg = _peel_broadcast(rebind(cur, loop))
+    else:
+        loop = private_session(spark, _AQE_OFF)
+        deg = _peel_copartitioned(_keyed_checkpoint(rebind(cur, loop), "src"))
+    if deg is None:
         raise RuntimeError(
             f"kcore: peel did not converge within {max_rounds} rounds"
         )
+    return rebind(deg.select(F.col("src").alias("id"), "degree"), spark)

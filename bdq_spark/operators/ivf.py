@@ -292,10 +292,14 @@ def knn_ivf_quantized(
             _q_expr(query_vec, scale).alias("q"),
         )
         .select(
-            "id", "vec", F.expr(_dists_sql("q", centroids)).alias("__d")
+            "id",
+            "vec",
+            F.expr(_dists_sql("q", centroids)).alias("__d"),
+            # norm staged once per query row, before the per-cell explode
+            l2_norm(F.col("vec")).alias("__n"),
         )
         .withColumn("cluster", F.explode(F.expr(probe_cells_sql)))
-        .select("id", "vec", "cluster", l2_norm(F.col("vec")).alias("__n"))
+        .select("id", "vec", "cluster", "__n")
     )
 
     # norms once per ROW below the join (same rationale as knn_ivf /

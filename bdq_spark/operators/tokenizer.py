@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bdq_spark.functions.text import word_tokens
+from bdq_spark.session import private_session, rebind
 
 __all__ = [
     "word_frequencies",
@@ -214,8 +215,6 @@ def train_bpe(
     end-of-word marker — merges never cross word boundaries because
     words are separate rows).
     """
-    from bdq_spark.operators.components import _aqe_disabled
-
     spark = df.sparkSession
     words = word_freq if word_freq is not None else word_frequencies(
         df, text_column
@@ -239,12 +238,11 @@ def train_bpe(
         words = words.coalesce(n_part)
 
     merges: List[tuple] = []
-    prev = words
     # the collected pair-list window: big enough that real batches never
     # hit the coverage guard, still a bounded driver materialization
     window = max(64, 16 * max_batch)
-    # AQE off for the ITERATION LOOP only (depth-counted session scope
-    # shared with the graph operators): every loop query is one
+    # AQE off for the ITERATION LOOP only, in a private session (the
+    # caller's session keeps its conf): every loop query is one
     # pair-count shuffle over the vocabulary table whose partitioning
     # the coalesce above already right-sized, so AQE's only effect is
     # materializing that shuffle as an extra scheduled query-stage job
@@ -252,50 +250,51 @@ def train_bpe(
     # each extra job is pure wall time at any scale (measured at sf0.1:
     # 42 -> 22 jobs, 19.4 -> 9.1 s same-box for 30 merges; merge table
     # bit-identical — AQE never changes results, only stage planning).
-    with _aqe_disabled(spark):
-        while len(merges) < n_merges:
-            pair_counts = (
-                words.select(
-                    "freq",
-                    F.explode(_adjacent_pairs(F.col("syms"))).alias("p"),
-                )
-                .groupBy("p.left", "p.right")
-                .agg(F.sum("freq").alias("pair_count"))
-                .filter(F.col("pair_count") >= min_pair_count)
+    words = rebind(
+        words, private_session(spark, {"spark.sql.adaptive.enabled": "false"})
+    )
+    while len(merges) < n_merges:
+        pair_counts = (
+            words.select(
+                "freq",
+                F.explode(_adjacent_pairs(F.col("syms"))).alias("p"),
             )
-            # bounded top-window collect; ties break lexicographically
-            # for determinism.  _select_safe_batch then takes the
-            # longest prefix sequential BPE would provably merge in this
-            # exact order, so one fold applies up to max_batch merges —
-            # ~batch× fewer jobs, bit-identical merge table (equivalence
-            # pinned in tests/test_tokenizer.py against the Sennrich
-            # reference).
-            top = pair_counts.orderBy(
-                F.col("pair_count").desc(), "left", "right"
-            ).limit(window).collect()
-            if not top:
-                break
-            batch = _select_safe_batch(
-                top,
-                complete=len(top) < window,
-                cap=min(max_batch, n_merges - len(merges)),
-            )
-            rules = []
-            for left, right, cnt in batch:
-                merges.append((len(merges), left, right, left + right, cnt))
-                rules.append((left, right, left + right))
-            # LAZY checkpoint: next iteration's collect is the action
-            # that materializes it — one job per BATCH, lineage flat
-            words = words.withColumn(
-                "syms", _merge_pairs_multi(F.col("syms"), rules)
-            ).localCheckpoint(eager=False)
-            prev = words
+            .groupBy("p.left", "p.right")
+            .agg(F.sum("freq").alias("pair_count"))
+            .filter(F.col("pair_count") >= min_pair_count)
+        )
+        # bounded top-window collect; ties break lexicographically
+        # for determinism.  _select_safe_batch then takes the
+        # longest prefix sequential BPE would provably merge in this
+        # exact order, so one fold applies up to max_batch merges —
+        # ~batch× fewer jobs, bit-identical merge table (equivalence
+        # pinned in tests/test_tokenizer.py against the Sennrich
+        # reference).
+        top = pair_counts.orderBy(
+            F.col("pair_count").desc(), "left", "right"
+        ).limit(window).collect()
+        if not top:
+            break
+        batch = _select_safe_batch(
+            top,
+            complete=len(top) < window,
+            cap=min(max_batch, n_merges - len(merges)),
+        )
+        rules = []
+        for left, right, cnt in batch:
+            merges.append((len(merges), left, right, left + right, cnt))
+            rules.append((left, right, left + right))
+        # LAZY checkpoint: next iteration's collect is the action
+        # that materializes it — one job per BATCH, lineage flat
+        words = words.withColumn(
+            "syms", _merge_pairs_multi(F.col("syms"), rules)
+        ).localCheckpoint(eager=False)
 
-        # make sure the final fold is materialized before returning
-        # (callers may unpersist upstream blocks); cheap if the loop
-        # already did it
-        prev.count()
-    return merges, prev
+    # make sure the final fold is materialized before returning
+    # (callers may unpersist upstream blocks); cheap if the loop
+    # already did it
+    words.count()
+    return merges, rebind(words, spark)
 
 
 def bpe_segment_corpus(

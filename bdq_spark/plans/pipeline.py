@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from bdq_spark.plans.dag import DAG
 from bdq_spark.plans.statestore import CatalogPersistedStateStore
 from bdq_spark.plans.ui_logger import SparkUILogger
+from bdq_spark.session import private_session, rebind
 
 __all__ = [
     "SparkPipeline",
@@ -833,15 +834,12 @@ def _write_table_v1_fallback(
             log.info("Creating new table %s", name)
             writer.saveAsTable(name)
         else:
-            previous = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                df.write.mode("overwrite").insertInto(name)
-            finally:
-                if previous is not None:
-                    spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode", previous
-                    )
+            # dynamic overwrite on a private session: the caller's conf
+            # is never touched (``insertInto`` ignores the writer option)
+            dynamic = private_session(
+                spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+            )
+            rebind(df, dynamic).write.mode("overwrite").insertInto(name)
 
 
 def _write_table(

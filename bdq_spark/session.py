@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["get_spark", "builder_defaults"]
 
@@ -51,3 +51,37 @@ def get_spark(spark: SparkSession | None = None) -> SparkSession:
         .appName("bdq_spark")
         .getOrCreate()
     )
+
+
+def private_session(spark: SparkSession, confs: dict) -> SparkSession:
+    """A clone of ``spark`` with ``confs`` set, for a hand-scheduled
+    loop that plans under its own SQL conf (AQE off, a pinned shuffle
+    width, dynamic partition overwrite).
+
+    ``cloneSession()`` shares the SparkContext, executors, cached
+    blocks and catalog, and copies the runtime SQL conf, so everything
+    the caller set keeps governing the loop except ``confs``.  Nothing
+    is restored: the clone is private to the call, so a query planned
+    concurrently on ``spark`` (a parallel ``SparkPipeline`` step) never
+    sees the loop's conf.  Frames cross between the sessions with
+    :func:`rebind`."""
+    clone = SparkSession(
+        spark.sparkContext, jsparkSession=spark._jsparkSession.cloneSession()
+    )
+    for key, value in confs.items():
+        clone.conf.set(key, value)
+    return clone
+
+
+def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df`` as a frame of ``session``: its analyzed logical plan is
+    re-planned there, so optimization and physical planning follow
+    ``session``'s conf.  Nothing executes.  Checkpointed leaves keep
+    their RDD, partitioning and size statistics, so joins against a
+    rebound relation still broadcast where they did before."""
+    if int(session.version.split(".")[0]) >= 4:
+        dataset = session._jvm.org.apache.spark.sql.classic.Dataset
+    else:
+        dataset = session._jvm.org.apache.spark.sql.Dataset
+    jdf = dataset.ofRows(session._jsparkSession, df._jdf.logicalPlan())
+    return DataFrame(jdf, session)

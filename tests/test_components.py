@@ -430,66 +430,52 @@ def test_shuffle_path_parity_all_ops(spark):
 
 
 def test_keyed_checkpoint_elides_round_exchanges(spark):
-    """The mechanism the shuffle path rests on: inside ``_aqe_disabled``
-    a ``_keyed_checkpoint``-ed relation keeps its HashPartitioning
-    through the LogicalRDD, so the pagerank round shape (edge join on
-    src -> per-dst sum -> rank-update join on id) plans with exactly ONE
-    exchange — the aggregate.  If a Spark upgrade stops preserving
-    partitioning through localCheckpoint, this fails loudly."""
+    """The mechanism the shuffle path rests on: in an AQE-off private
+    session a ``_keyed_checkpoint``-ed relation keeps its
+    HashPartitioning through the LogicalRDD, so the pagerank round shape
+    (edge join on src -> per-dst sum -> rank-update join on id) plans
+    with exactly ONE exchange — the aggregate.  If a Spark upgrade stops
+    preserving partitioning through localCheckpoint, this fails
+    loudly."""
     from pyspark.sql import functions as F
 
-    from bdq_spark.operators.components import (
-        _aqe_disabled,
-        _keyed_checkpoint,
-    )
+    from bdq_spark.operators.components import _AQE_OFF, _keyed_checkpoint
+    from bdq_spark.session import private_session, rebind
 
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        e = spark.range(2000).select(
-            (F.col("id") % 97).alias("src"), (F.col("id") % 89).alias("dst")
-        )
-        r = spark.range(97).select(
-            F.col("id"), F.lit(1.0).alias("rank")
-        )
-        with _aqe_disabled(spark):
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-            ep = _keyed_checkpoint(e, "src")
-            rp = _keyed_checkpoint(r, "id")
-            contrib = (
-                ep.join(rp, ep.src == rp.id)
-                .groupBy("dst")
-                .agg(F.sum("rank").alias("c"))
-            )
-            nodes = rp.select("id")
-            ranks = nodes.join(
-                contrib, nodes.id == contrib.dst, "left"
-            ).select("id", F.coalesce("c", F.lit(0.0)).alias("rank"))
-            plan = ranks._jdf.queryExecution().executedPlan().toString()
-            assert plan.count("Exchange") == 1, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    loop = private_session(
+        spark, {**_AQE_OFF, "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    )
+    assert loop.conf.get("spark.sql.adaptive.enabled") == "false"
+    e = spark.range(2000).select(
+        (F.col("id") % 97).alias("src"), (F.col("id") % 89).alias("dst")
+    )
+    r = spark.range(97).select(F.col("id"), F.lit(1.0).alias("rank"))
+    ep = _keyed_checkpoint(rebind(e, loop), "src")
+    rp = _keyed_checkpoint(rebind(r, loop), "id")
+    contrib = (
+        ep.join(rp, ep.src == rp.id)
+        .groupBy("dst")
+        .agg(F.sum("rank").alias("c"))
+    )
+    nodes = rp.select("id")
+    ranks = nodes.join(
+        contrib, nodes.id == contrib.dst, "left"
+    ).select("id", F.coalesce("c", F.lit(0.0)).alias("rank"))
+    plan = ranks._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") != "-1"
 
 
 def test_aqe_disabled_restores_on_exception(spark):
-    """The co-partitioned scope must restore the session's AQE conf even
-    when the iterative section raises (e.g. a convergence bound)."""
+    """A graph operator that raises inside its AQE-off loop (here a
+    convergence bound past the cutover: a 6-node path needs >1 round)
+    leaves the caller's session with AQE on."""
     import pytest as _p
 
-    from bdq_spark.operators.components import _aqe_disabled
-
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    with _p.raises(RuntimeError, match="boom"):
-        with _aqe_disabled(spark):
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-            raise RuntimeError("boom")
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-    # and through a real operator failure past the cutover: a 6-node
-    # path needs >1 round, so max_iterations=1 raises inside the scope
     from bdq_spark.operators import connected_components
 
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "id_a long, id_b long"
     )
@@ -500,116 +486,92 @@ def test_aqe_disabled_restores_on_exception(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
-def test_graph_session_isolates_aqe_from_concurrent_queries(spark):
-    """VERDICT r11 item 6: ``graph_session=True`` runs the iterative
-    section on a CLONED session, so while a past-the-cutover graph op
-    holds its AQE-off scope, a query planned concurrently on the
-    CALLER's session still plans with AQE.  Proven three ways: (a) the
-    AQE scope is entered on a session that is NOT the caller's, and
-    the caller's conf reads AQE-on INSIDE the scope; (b) results are
-    identical to the default path on both regimes; (c) the result
-    frame is re-bound to the caller's session, so downstream
-    composition (joins with caller-session frames) works."""
-    import bdq_spark.operators.components as comp
+def test_loops_leave_caller_session_conf_untouched(spark):
+    """The hand-scheduled loops (CC on both regimes, kcore, BPE) plan
+    on a private session: a thread polling the CALLER's session while
+    they run never sees AQE off or a pinned shuffle width, and a frame
+    planned on the caller mid-loop is still adaptive — what a parallel
+    ``SparkPipeline`` step on the same session sees.  Results come back
+    as frames of the caller's session."""
+    import threading
+
+    from bdq_spark.operators.components import kcore
+    from bdq_spark.operators.tokenizer import train_bpe
+
+    aqe_key = "spark.sql.adaptive.enabled"
+    width_key = "spark.sql.shuffle.partitions"
+    expected = (spark.conf.get(aqe_key), spark.conf.get(width_key))
+    assert expected[0] == "true"
+    seen, adaptive = set(), set()
+    stop = threading.Event()
+
+    def poll():
+        probe = spark.range(100).groupBy("id").count()
+        while not stop.is_set():
+            seen.add((spark.conf.get(aqe_key), spark.conf.get(width_key)))
+            plan = probe._jdf.queryExecution().executedPlan().toString()
+            adaptive.add(plan.startswith("AdaptiveSparkPlan"))
 
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (7, 8), (8, 9)],
+        [(i, i + 1) for i in range(8)] + [(20, 21), (21, 22)],
         "id_a long, id_b long",
     )
-    baseline = sorted(
-        map(tuple, comp.connected_components(pairs).collect())
+    edges = pairs.selectExpr("id_a as src", "id_b as dst").unionByName(
+        spark.createDataFrame([(0, 2), (1, 3)], "src long, dst long")
     )
-
-    seen = {}
-    real_scope = comp._aqe_disabled
-
-    from contextlib import contextmanager
-
-    @contextmanager
-    def spy_scope(scoped_spark):
-        with real_scope(scoped_spark):
-            seen["scoped_is_caller"] = scoped_spark is spark
-            seen["scoped_jsession_is_caller"] = (
-                scoped_spark._jsparkSession == spark._jsparkSession
-            )
-            # the concurrent-planning guarantee, observed mid-scope:
-            # the caller session still reports AQE on (and a frame
-            # planned on it now would plan adaptively)
-            seen["caller_aqe_mid_scope"] = spark.conf.get(
-                "spark.sql.adaptive.enabled"
-            )
-            seen["scoped_aqe_mid_scope"] = scoped_spark.conf.get(
-                "spark.sql.adaptive.enabled"
-            )
-            yield
-
-    comp._aqe_disabled = spy_scope
+    docs = spark.createDataFrame(
+        [(i, "the cat sat on the mat with the hat") for i in range(20)],
+        "doc_id long, text string",
+    )
+    poller = threading.Thread(target=poll, daemon=True)
+    poller.start()
     try:
-        # broadcast_max_nodes=0 forces the co-partitioned (AQE-off)
-        # path on this tiny graph
-        out = comp.connected_components(
-            pairs, broadcast_max_nodes=0, graph_session=True
-        )
-        got = sorted(map(tuple, out.collect()))
+        outs = [
+            connected_components(pairs),
+            connected_components(pairs, broadcast_max_nodes=0),
+            kcore(edges, k=2),
+            kcore(edges, k=2, broadcast_max_nodes=0),
+            train_bpe(docs, n_merges=8)[1],
+        ]
     finally:
-        comp._aqe_disabled = real_scope
+        stop.set()
+        poller.join(timeout=60)
+    assert not poller.is_alive()
+    assert seen == {expected}, seen
+    assert adaptive == {True}
+    assert all(o.sparkSession is spark for o in outs)
+    # results compose with caller-session frames
+    names = spark.createDataFrame([(1, "a"), (20, "b")], "id long, nm string")
+    assert outs[1].join(names, "id").count() == 2
 
-    assert got == baseline
-    assert seen["scoped_is_caller"] is False
-    assert seen["scoped_jsession_is_caller"] is False
-    assert seen["caller_aqe_mid_scope"] == "true"
-    assert seen["scoped_aqe_mid_scope"] == "false"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
-    # (c) the result is the CALLER's frame: composing with a
-    # caller-session relation must not raise a cross-session error
-    out2 = comp.connected_components(pairs, graph_session=True)
-    assert out2.sparkSession is spark
-    names = spark.createDataFrame([(1, "a"), (5, "b")], "id long, nm string")
-    assert out2.join(names, "id").count() == 2
+def test_cluster_relation_keeps_size_statistics(spark):
+    """A relation crossing into a loop's private session and back keeps
+    its size statistics, so the dedup anti-join against a small cluster
+    relation still plans as a broadcast.  A rebind through ``toRdd``
+    reports ``sizeInBytes = Long.MaxValue`` and plans a sort-merge
+    join."""
+    from bdq_spark.operators import apply_dedup_clusters
+    from bdq_spark.operators.components import _AQE_OFF
+    from bdq_spark.session import private_session, rebind
 
-    # pagerank: identical ranks through the isolated session on both
-    # regimes (broadcast and co-partitioned)
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (4, 1)], "src long, dst long"
+    docs = spark.range(1000).withColumnRenamed("id", "doc_id")
+    # a local relation: its size statistic is exact
+    clusters = spark.sql(
+        "SELECT * FROM VALUES (1L, 1L, true), (2L, 1L, false), "
+        "(3L, 1L, false), (10L, 10L, true), (11L, 10L, false) "
+        "AS t(id, cluster_id, is_keeper)"
     )
-    p0 = {r.id: round(r.rank, 9) for r in comp.pagerank(e).collect()}
-    p1 = {
-        r.id: round(r.rank, 9)
-        for r in comp.pagerank(e, graph_session=True).collect()
-    }
-    p2 = {
-        r.id: round(r.rank, 9)
-        for r in comp.pagerank(
-            e, broadcast_max_nodes=0, graph_session=True
-        ).collect()
-    }
-    assert p0 == p1 == p2
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    crossed = rebind(rebind(clusters, private_session(spark, _AQE_OFF)), spark)
 
-    # pagerank_quantized and kcore carry the same option (the whole
-    # _aqe_disabled-holding family): identical results on both regimes
-    q0 = sorted(map(tuple, comp.pagerank_quantized(e).collect()))
-    q1 = sorted(
-        map(
-            tuple,
-            comp.pagerank_quantized(
-                e, broadcast_max_nodes=0, graph_session=True
-            ).collect(),
-        )
-    )
-    assert q0 == q1
-    k0 = sorted(map(tuple, comp.kcore(e, k=2).collect()))
-    k1 = sorted(
-        map(
-            tuple,
-            comp.kcore(
-                e, k=2, broadcast_max_nodes=0, graph_session=True
-            ).collect(),
-        )
-    )
-    assert k0 == k1
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    def size(df):
+        return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+    assert size(crossed) == size(clusters) < 10_000
+    kept = apply_dedup_clusters(docs, crossed)
+    plan = kept._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+    assert kept.count() == 997
 
 
 def test_data_checkpoint_stores_serialized_blocks(spark):
@@ -635,29 +597,6 @@ def test_data_checkpoint_stores_serialized_blocks(spark):
     # at least one live cached RDD is memory+serialized (ours); the
     # default-deserialized level may coexist from other fixtures
     assert (True, False) in levels, levels
-
-
-def test_aqe_scope_overlap_restores_outermost(spark):
-    """ADVICE r10 (medium): two OVERLAPPING _aqe_disabled scopes on one
-    session (concurrent pipeline steps) must not race the save/restore —
-    the naive per-scope version let scope B save the 'false' A had just
-    set, so B's restore leaked AQE-off session-wide.  Depth-counted:
-    the user's value is saved at the outermost entry, AQE stays off
-    while ANY scope is live, and the outermost exit restores."""
-    from bdq_spark.operators.components import _aqe_disabled
-
-    key = "spark.sql.adaptive.enabled"
-    assert spark.conf.get(key) == "true"
-    a = _aqe_disabled(spark)
-    b = _aqe_disabled(spark)
-    a.__enter__()
-    b.__enter__()  # overlapping, non-nested exit order below
-    assert spark.conf.get(key) == "false"
-    a.__exit__(None, None, None)
-    # a scope is still live: AQE must STAY off (old code restored here)
-    assert spark.conf.get(key) == "false"
-    b.__exit__(None, None, None)
-    assert spark.conf.get(key) == "true"
 
 
 def test_shuffle_partitions_auto_fallback(spark):
@@ -723,18 +662,21 @@ def test_depin_small_edges_keeps_cutover_capable_graphs(spark):
     from pyspark.sql import functions as F
 
     from bdq_spark.operators.components import (
+        _AQE_OFF,
         _depin_small_edges,
         _keyed_checkpoint,
-        _aqe_disabled,
     )
+    from bdq_spark.session import private_session, rebind
 
-    with _aqe_disabled(spark):
-        e = _keyed_checkpoint(
+    e = _keyed_checkpoint(
+        rebind(
             spark.range(2_000).select(
                 F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
             ),
-            "src",
-        )
+            private_session(spark, _AQE_OFF),
+        ),
+        "src",
+    )
     n_before = e.rdd.getNumPartitions()
     # tiny vs its cutover: coalesced below the pin
     assert (

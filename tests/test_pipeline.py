@@ -165,6 +165,33 @@ def test_step_spark_table_write_and_multi_output(spark, tmp_path):
     assert spark.table("t_odd").count() == 15
 
 
+def test_overwrite_partitions_leaves_session_conf_untouched(spark):
+    """``overwrite_partitions`` replaces only the partitions it writes,
+    and leaves the session's partitionOverwriteMode as it found it —
+    here unset, so a later plain overwrite is static again."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    spark.sql("DROP TABLE IF EXISTS t_parts")
+    spark.createDataFrame(
+        [(1, "a"), (2, "a"), (3, "b"), (4, "b"), (5, "b")], "id long, p string"
+    ).write.partitionBy("p").format("parquet").saveAsTable("t_parts")
+    ppn = SparkPipeline("parts", spark=spark)
+
+    @ppn.step_spark_table(
+        outputs="t_parts", mode="overwrite_partitions", format="parquet"
+    )
+    def refresh(step):
+        return spark.createDataFrame([(10, "a")], "id long, p string")
+
+    ppn()
+    assert sorted(r.id for r in spark.table("t_parts").collect()) == [3, 4, 5, 10]
+    assert spark.conf.get(key, None) is None
+    spark.createDataFrame(
+        [(20, "a"), (21, "c")], "id long, p string"
+    ).write.mode("overwrite").insertInto("t_parts")
+    assert spark.table("t_parts").count() == 2
+
+
 def test_state_store_and_metrics(spark):
     spark.sql("CREATE DATABASE IF NOT EXISTS bdq_state")
     ppn = SparkPipeline("metered", spark=spark, state_store_database="bdq_state")

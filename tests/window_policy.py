@@ -34,7 +34,29 @@ rotation in ``bdq_spark/entry_queries.py``.
 # OPTIMIZATION — declared queries must compute byte-identical results
 # (the gating entries' value hashes are exactly that check); see
 # OPTIMIZATION_r14.md for the before/after evidence.
+#
+# Private-session change (after round 14): every hand-scheduled loop
+# that used to flip the shared session's conf (AQE off, pinned shuffle
+# width, dynamic partition overwrite) now plans on a private
+# ``cloneSession()`` (bdq_spark/session.py), frames crossing by
+# logical-plan rebind.  Plans and job counts are unchanged, results
+# identical; the gating entries below value-hash every moved loop, and
+# BENCH_AB_private_session.json holds the same-box A/B.
 TOUCHED = {
+    # the private-session helper and the logical-plan rebind
+    "bdq_spark/session.py": [
+        "embedding_dedup_clusters",
+        "near_dup_kcore",
+        "pagerank_part_supplier",
+        "bpe_train_merges",
+        "streaming_interval_join",
+    ],
+    # the BPE merge loop runs on an AQE-off private session
+    "bdq_spark/operators/tokenizer.py": [
+        "bpe_train_merges",
+        "doc_bpe_packing",
+        "corpus_training_pipeline",
+    ],
     # Optimization: the CC broadcast-regime loop counts its convergence
     # flag only at geometrically spaced rounds (1, 2, 4, 8, then every
     # +4) instead of every round — the skipped counts are serial
@@ -43,12 +65,17 @@ TOUCHED = {
     # (embedding_dedup_clusters 50 -> 43 construct jobs).  kcore is
     # comment-only (the geometric schedule was measured there and
     # rejected; rejection documented in-code).  Gated by the CC
-    # broadcast-regime entries.
+    # broadcast-regime entries.  (private-session change: the CC,
+    # pagerank and kcore loops run on private sessions, the
+    # graph_session option is gone — gated by all three families.)
     "bdq_spark/operators/components.py": [
         "embedding_dedup_clusters",
         "documents_deduped",
         "near_dup_clusters",
         "corpus_prepare_neardup",
+        "pagerank_part_supplier",
+        "near_dup_kcore",
+        "docs_kcore_graph",
     ],
     # Optimization: explicit-schema reads everywhere the caller knows
     # the table schema (append_zonemap/append_bloom/write_bloom_index/
@@ -72,7 +99,11 @@ TOUCHED = {
     # (second r14 change: persisted_vector_index_probe stages per-ROW
     # L2 norms below its bucket join — same cosine_from_norms pattern
     # as the dedup.py/ivf.py entries below.)
+    # (private-session change: streaming_interval_join starts its
+    # stream on a private session with 8 shuffle partitions instead of
+    # setting and restoring the caller's conf.)
     "bdq_spark/entry_queries.py": [
+        "streaming_interval_join",
         "streaming_ingest_dedup_index",
         "streaming_ingest_vector_index",
         "multimodal_mjpeg_pixel_stats",
@@ -133,6 +164,9 @@ TOUCHED = {
     # with cosine_from_norms — per candidate pair only the dot product
     # remains, same arithmetic order, values bit-identical (the float
     # knn_ivf already had this; guide §4.2 evaluate-once).
+    # (private-session change: the probe-side norm is staged before
+    # the cell explode, once per query row instead of once per probed
+    # cell — same expression, values bit-identical.)
     "bdq_spark/operators/ivf.py": [
         "knn_ivf_quantized",
         "knn_ivf_embeddings",
@@ -141,7 +175,14 @@ TOUCHED = {
 
 # modules whose in-round change has no relational queries() surface —
 # each needs a reason a reviewer can check
-EXEMPT = {}
+EXEMPT = {
+    "bdq_spark/plans/pipeline.py": (
+        "only the overwrite_partitions V1 write branch changed (dynamic "
+        "overwrite on a private session); no queries() entry writes a "
+        "managed table, so tests/test_pipeline.py::"
+        "test_overwrite_partitions_leaves_session_conf_untouched gates it"
+    ),
+}
 
 # TOUCHED modules whose gating entries intersect the top-20-by-wall
 # bench set this round -> the BENCH_AB_r{N}.json artifact that records
@@ -150,10 +191,13 @@ EXEMPT = {}
 # missing here or the artifact doesn't cover the intersecting entries.
 BENCH_AB = {
     # r14 (optimization round 2): focused same-box A/Bs vs the r13
-    # boundary (65cf836).
-    "bdq_spark/operators/components.py": "BENCH_AB_r14.json",
+    # boundary (65cf836).  The private-session change's modules point
+    # at its own A/B against its parent commit.
+    "bdq_spark/operators/components.py": "BENCH_AB_private_session.json",
+    "bdq_spark/operators/tokenizer.py": "BENCH_AB_private_session.json",
+    "bdq_spark/session.py": "BENCH_AB_private_session.json",
     "bdq_spark/sources/sinks.py": "BENCH_AB_r14.json",
     "bdq_spark/entry_queries.py": "BENCH_AB_r14.json",
     "bdq_spark/operators/dedup.py": "BENCH_AB_r14.json",
-    "bdq_spark/operators/ivf.py": "BENCH_AB_r14.json",
+    "bdq_spark/operators/ivf.py": "BENCH_AB_private_session.json",
 }

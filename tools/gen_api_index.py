@@ -3,11 +3,11 @@
 
 COVERAGE.md maps graded components -> implementation -> tests -> gate
 entries; this is the INVERSE view a user needs: for every module, the
-public callables with a one-line summary, which registry entries gate
-each one on the driver (value-hash vs rows-only), and the measured
-scale exponent where BENCH_SCALE.json holds a curve.  Everything is
-derived from the source tree + the registry + checked-in measurement
-artifacts, so re-running keeps the index honest.
+public callables with a one-line summary and which registry entries gate
+each one on the driver (value-hash vs rows-only).  Everything is derived
+from the source tree + the registry, so re-running keeps the index
+honest; measured scale curves live in SCALING.md, so re-measuring them
+never makes this index stale.
 
 Usage::
 
@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import ast
 import inspect
-import json
 import os
 import re
 import sys
@@ -127,12 +126,6 @@ def build() -> str:
 
     queries = entrymod.queries()
     oracles = set(entrymod.oracle_sql())
-    try:
-        scale = json.load(open(os.path.join(REPO, "BENCH_SCALE.json")))[
-            "queries"
-        ]
-    except Exception:
-        scale = {}
 
     # which registry entries exercise which public name: token search
     # over each entry's source (conservative — name must appear as a
@@ -146,9 +139,8 @@ def build() -> str:
         "hand (CI checks staleness via `--check`).  One row per public",
         "callable: the driver-gate entries that exercise it"
         " (**bold** = value-hashed against an independent DuckDB oracle,",
-        "plain = rows-only with a pytest contract), and the measured",
-        "1x/3x/10x scale exponent where `BENCH_SCALE.json` holds a curve",
-        "(exponent ~1 = linear; see SCALING.md for the methodology).",
+        "plain = rows-only with a pytest contract).  Measured scale",
+        "curves and their methodology are in [SCALING.md](../SCALING.md).",
         "",
     ]
     for modname in MODULES:
@@ -158,8 +150,8 @@ def build() -> str:
             continue
         out.append(f"## `{modname}`")
         out.append("")
-        out.append("| callable | what it does | gate entries | scale exp |")
-        out.append("|---|---|---|---|")
+        out.append("| callable | what it does | gate entries |")
+        out.append("|---|---|---|")
         for n in names:
             obj = getattr(mod, n, None)
             if obj is None or not callable(obj):
@@ -168,22 +160,16 @@ def build() -> str:
                 e for e, src in entry_src.items()
                 if re.search(rf"\b{re.escape(n)}\b", src)
             )
-            shown = []
-            exps = []
-            for g in gates[:4]:
-                shown.append(f"**{g}**" if g in oracles else g)
-                if g in scale:
-                    exps.append(f"{scale[g]['exponent']:.2f}")
+            shown = [f"**{g}**" if g in oracles else g for g in gates[:4]]
             extra = f" +{len(gates) - 4}" if len(gates) > 4 else ""
             out.append(
                 f"| `{n}` | {first_doc_line(obj)} | "
-                f"{', '.join(shown)}{extra} | {', '.join(exps)} |"
+                f"{', '.join(shown)}{extra} |"
             )
         out.append("")
     out.append(
         f"Registry totals: {len(queries)} gate entries, "
-        f"{len(oracles)} value-hashed oracles, "
-        f"{len(scale)} measured scale curves."
+        f"{len(oracles)} value-hashed oracles."
     )
     out.append("")
     return "\n".join(out)
