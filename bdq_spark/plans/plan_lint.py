@@ -72,17 +72,18 @@ from __future__ import annotations
 import io
 import re
 import threading
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 from dataclasses import dataclass
-from typing import Iterable, List, Union
+from typing import Iterable, Iterator, List, Union
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
     "PlanFinding",
     "PlanScaleError",
     "plan_text",
     "plan_fingerprint",
+    "count_jobs",
     "lint_plan",
     "assert_scalable",
 ]
@@ -193,6 +194,59 @@ def checkpoint_partitions(df: DataFrame) -> int:
         return best
     except Exception:
         return 0
+
+
+def _max_job_id(spark: SparkSession) -> int:
+    """The highest job id the SparkContext has scheduled so far (-1
+    before any).  Job ids are allocated consecutively, so a delta
+    across a region counts every job the region scheduled.  The
+    listener bus is drained first: the status store is filled
+    asynchronously, and a job that just finished may not be in it
+    yet.  ``getJobIdsForGroup(None)`` lists only jobs outside a job
+    group, so the walk past its maximum picks up grouped jobs too
+    (streaming micro-batches, pipeline steps)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    top = max(tracker.getJobIdsForGroup(None) or [], default=-1)
+    while tracker.getJobInfo(top + 1) is not None:
+        top += 1
+    return top
+
+
+@contextmanager
+def count_jobs(spark: SparkSession) -> Iterator[dict]:
+    """Count the jobs a block schedules and the distinct stages they
+    run.  Yields a dict that holds ``jobs`` and ``stages`` once the
+    block exits.
+
+    ``stages`` counts the stages among the jobs' stage ids that ran
+    at least one task.  Skipped stages are left out: a job lists the
+    map stages of every shuffle it reads, also those an earlier job
+    already wrote, and whether such a stage keeps its id or gets a
+    new one depends on job timing.  Stages that ran do not.
+
+    Both numbers are host-insensitive: they do not depend on load or
+    core count, only on what the code asks Spark to run.  Jobs from
+    other threads that run at the same time are counted too, so count
+    on a quiet session."""
+    counts: dict = {}
+    first = _max_job_id(spark) + 1
+    yield counts
+    last = _max_job_id(spark)
+    tracker = spark.sparkContext.statusTracker()
+    stages = set()
+    for job in range(first, last + 1):
+        info = tracker.getJobInfo(job)
+        if info is not None:
+            stages.update(info.stageIds)
+    ran = 0
+    for stage in stages:
+        info = tracker.getStageInfo(stage)
+        if info is not None and info.numCompletedTasks:
+            ran += 1
+    counts["jobs"] = last + 1 - first
+    counts["stages"] = ran
 
 
 # ops below a SinglePartition exchange that make it benign: the stream

@@ -173,8 +173,7 @@ def write_zonemap(
     no per-file stats ever land on the driver, so the build scales to
     100 TB file counts.  Candidate resolution
     (:func:`zonemap_candidate_files`) filters the sidecar IN SPARK and
-    collects only the surviving file names.  Pre-r9 ``_ZONEMAP.json``
-    manifests still resolve through a legacy driver-side path.
+    collects only the surviving file names.
 
     ``stats_cols`` must be numeric (int/long/double) — the overlap
     test is numeric comparison.  Returns a bounded summary dict
@@ -283,24 +282,30 @@ def _read_zonemap_sidecar(spark, path: str):
     return spark.read.parquet(sidecar)
 
 
+def _require_sidecar(spark, path: str, name: str, writer: str) -> None:
+    if not _fs_exists(spark, path, name):
+        raise ValueError(
+            f"no {name} sidecar under {path} — build one with "
+            f"{writer} first"
+        )
+
+
 def zonemap_manifest(spark, path: str) -> dict:
-    """The zonemap as a legacy-shaped dict ``{file: {col: [min, max]}}``.
+    """The zonemap as a dict ``{file: {col: [min, max]}}``.
 
     INTROSPECTION/TEST tool only — collects one row per data file onto
-    the driver, which is exactly what the pruning path avoids.  Reads
-    the parquet sidecar when present, else a pre-r9 ``_ZONEMAP.json``.
+    the driver, which is exactly what the pruning path avoids.
     """
-    if _fs_exists(spark, path, "_ZONEMAP"):
-        rows = spark.read.parquet(path.rstrip("/") + "/_ZONEMAP").collect()
-        cols = sorted(
-            c[3:] for c in (rows[0].asDict() if rows else {})
-            if c.startswith("lo_")
-        )
-        return {
-            r["__file"]: {c: [r[f"lo_{c}"], r[f"hi_{c}"]] for c in cols}
-            for r in rows
-        }
-    return _fs_read_json(spark, path, "_ZONEMAP.json")
+    _require_sidecar(spark, path, "_ZONEMAP", "write_zonemap")
+    rows = spark.read.parquet(path.rstrip("/") + "/_ZONEMAP").collect()
+    cols = sorted(
+        c[3:] for c in (rows[0].asDict() if rows else {})
+        if c.startswith("lo_")
+    )
+    return {
+        r["__file"]: {c: [r[f"lo_{c}"], r[f"hi_{c}"]] for c in cols}
+        for r in rows
+    }
 
 
 def append_zonemap(
@@ -346,11 +351,7 @@ def append_zonemap(
 
     if not new_files:
         raise ValueError("new_files must name at least one parquet file")
-    if not _fs_exists(spark, path, "_ZONEMAP"):
-        raise ValueError(
-            f"no _ZONEMAP sidecar under {path} — build one with "
-            "write_zonemap first (append extends, it does not create)"
-        )
+    _require_sidecar(spark, path, "_ZONEMAP", "write_zonemap")
     sidecar = path.rstrip("/") + "/_ZONEMAP"
     existing = _read_zonemap_sidecar(spark, path)
     stats_cols = sorted(
@@ -438,51 +439,30 @@ def zonemap_candidate_files(spark, path: str, predicates: dict) -> dict:
     job whose single collected row carries the total file count plus
     only the SURVIVING file names, so the driver payload is bounded by
     the candidates (the point of pruning), never the table's file
-    census.  Falls back to the driver-side walk of a pre-r9
-    ``_ZONEMAP.json``."""
+    census."""
     from pyspark.sql import functions as F
 
-    if _fs_exists(spark, path, "_ZONEMAP"):
-        sm = _read_zonemap_sidecar(spark, path)
-        have = set(sm.columns)
-        cond = F.lit(True)
-        for col, (lo, hi) in predicates.items():
-            if f"lo_{col}" not in have:
-                raise ValueError(f"column {col!r} not in zonemap")
-            # an all-NULL file (lo IS NULL) can't match a range
-            c = F.col(f"lo_{col}").isNotNull()
-            if hi is not None:
-                c = c & (F.col(f"lo_{col}") <= F.lit(hi))
-            if lo is not None:
-                c = c & (F.col(f"hi_{col}") >= F.lit(lo))
-            cond = cond & c
-        row = sm.agg(
-            F.count(F.lit(1)).alias("total"),
-            F.sort_array(
-                F.collect_list(F.when(cond, F.col("__file")))
-            ).alias("files"),
-        ).collect()[0]
-        return {"files": list(row["files"]), "total": row["total"]}
-
-    manifest = _fs_read_json(spark, path, "_ZONEMAP.json")
-    keep = []
-    for fname, stats in manifest.items():
-        ok = True
-        for col, (lo, hi) in predicates.items():
-            if col not in stats:
-                raise ValueError(f"column {col!r} not in zonemap")
-            fmin, fmax = stats[col]
-            if fmin is None:  # all-NULL file can't match a range
-                ok = False
-                break
-            if (hi is not None and fmin > hi) or (
-                lo is not None and fmax < lo
-            ):
-                ok = False
-                break
-        if ok:
-            keep.append(fname)
-    return {"files": sorted(keep), "total": len(manifest)}
+    _require_sidecar(spark, path, "_ZONEMAP", "write_zonemap")
+    sm = _read_zonemap_sidecar(spark, path)
+    have = set(sm.columns)
+    cond = F.lit(True)
+    for col, (lo, hi) in predicates.items():
+        if f"lo_{col}" not in have:
+            raise ValueError(f"column {col!r} not in zonemap")
+        # an all-NULL file (lo IS NULL) can't match a range
+        c = F.col(f"lo_{col}").isNotNull()
+        if hi is not None:
+            c = c & (F.col(f"lo_{col}") <= F.lit(hi))
+        if lo is not None:
+            c = c & (F.col(f"hi_{col}") >= F.lit(lo))
+        cond = cond & c
+    row = sm.agg(
+        F.count(F.lit(1)).alias("total"),
+        F.sort_array(
+            F.collect_list(F.when(cond, F.col("__file")))
+        ).alias("files"),
+    ).collect()[0]
+    return {"files": list(row["files"]), "total": row["total"]}
 
 
 def read_zonemap(
@@ -596,7 +576,7 @@ def write_bloom_index(
 
     Returns a bounded summary dict ``{"bits", "hashes", "bloom_cols",
     "files", "sidecar"}``; use :func:`bloom_manifest` (O(files) driver
-    memory, introspection only) for the full legacy-shaped manifest.
+    memory, introspection only) for the full manifest.
     """
     from pyspark.sql import functions as F
 
@@ -671,24 +651,6 @@ def write_bloom_index(
 _BLOOM_SIDECAR_SCHEMA = "__file string, __col string, __w int, __word bigint"
 
 
-def _pack_bits(positions, bits: int) -> str:
-    """Pack set positions into a base64 LSB-first bitmap — ~20x smaller
-    than a JSON int list and O(bits/8) to test, so the sidecar READ
-    path stays flat as the key population grows (an int-list sidecar
-    made candidate resolution itself linear in table size — measured as
-    a 1.0 scale exponent before this packing)."""
-    import base64
-
-    buf = bytearray((bits + 7) // 8)
-    for p in positions:
-        buf[p >> 3] |= 1 << (p & 7)
-    return base64.b64encode(bytes(buf)).decode()
-
-
-def _bit_set(packed: bytes, p: int) -> bool:
-    return bool(packed[p >> 3] & (1 << (p & 7)))
-
-
 def _bloom_positions(value, j_count: int, bits: int) -> list:
     import hashlib
 
@@ -699,50 +661,48 @@ def _bloom_positions(value, j_count: int, bits: int) -> list:
 
 
 def bloom_manifest(spark, path: str) -> dict:
-    """The Bloom index as a legacy-shaped dict ``{"bits", "hashes",
-    "files": [...], "columns": {col: {file: base64-bitmap}}}``.
+    """The Bloom index as a dict ``{"bits", "hashes", "files": [...],
+    "columns": {col: {file: base64-bitmap}}}``, the word arrays turned
+    back into LSB-first base64 bitmaps.
 
     INTROSPECTION/TEST tool only — collects one row per (file, column)
     onto the driver, which is exactly what the pruning path avoids.
-    Reads the parquet sidecar when present (converting the word arrays
-    back to LSB-first base64 bitmaps), else a pre-r9 ``_BLOOM.json``.
     """
     import base64
     import struct
 
-    if _fs_exists(spark, path, "_BLOOM"):
-        meta = _fs_read_json(spark, path, "_BLOOM_META.json")
-        bits = meta["bits"]
-        nbytes = (bits + 7) // 8
-        rows = spark.read.schema(_BLOOM_SIDECAR_SCHEMA).parquet(
-            path.rstrip("/") + "/_BLOOM"
-        ).collect()
-        words: dict = {}
-        files = []
-        for r in rows:
-            if r["__col"] is None:
-                files.append(r["__file"])
-                continue
-            words.setdefault(r["__col"], {}).setdefault(r["__file"], {})[
-                r["__w"]
-            ] = r["__word"]
-        columns: dict = {c: {} for c in meta["bloom_cols"]}
-        for col, per_file in words.items():
-            for fname, sparse in per_file.items():
-                buf = bytearray(nbytes)
-                for w, word in sparse.items():
-                    chunk = struct.pack("<q", word)
-                    buf[w * 8: w * 8 + len(chunk)] = chunk
-                columns[col][fname] = base64.b64encode(
-                    bytes(buf[:nbytes])
-                ).decode()
-        return {
-            "bits": bits,
-            "hashes": meta["hashes"],
-            "files": sorted(files),
-            "columns": columns,
-        }
-    return _fs_read_json(spark, path, "_BLOOM.json")
+    _require_sidecar(spark, path, "_BLOOM", "write_bloom_index")
+    meta = _fs_read_json(spark, path, "_BLOOM_META.json")
+    bits = meta["bits"]
+    nbytes = (bits + 7) // 8
+    rows = spark.read.schema(_BLOOM_SIDECAR_SCHEMA).parquet(
+        path.rstrip("/") + "/_BLOOM"
+    ).collect()
+    words: dict = {}
+    files = []
+    for r in rows:
+        if r["__col"] is None:
+            files.append(r["__file"])
+            continue
+        words.setdefault(r["__col"], {}).setdefault(r["__file"], {})[
+            r["__w"]
+        ] = r["__word"]
+    columns: dict = {c: {} for c in meta["bloom_cols"]}
+    for col, per_file in words.items():
+        for fname, sparse in per_file.items():
+            buf = bytearray(nbytes)
+            for w, word in sparse.items():
+                chunk = struct.pack("<q", word)
+                buf[w * 8: w * 8 + len(chunk)] = chunk
+            columns[col][fname] = base64.b64encode(
+                bytes(buf[:nbytes])
+            ).decode()
+    return {
+        "bits": bits,
+        "hashes": meta["hashes"],
+        "files": sorted(files),
+        "columns": columns,
+    }
 
 
 def append_bloom(
@@ -776,11 +736,7 @@ def append_bloom(
 
     if not new_files:
         raise ValueError("new_files must name at least one parquet file")
-    if not _fs_exists(spark, path, "_BLOOM"):
-        raise ValueError(
-            f"no _BLOOM sidecar under {path} — build one with "
-            "write_bloom_index first (append extends, it does not create)"
-        )
+    _require_sidecar(spark, path, "_BLOOM", "write_bloom_index")
     meta = _fs_read_json(spark, path, "_BLOOM_META.json")
     bits, hashes, bloom_cols = (
         meta["bits"], meta["hashes"], meta["bloom_cols"],
@@ -870,111 +826,75 @@ def bloom_candidate_files(spark, path: str, equals: dict) -> dict:
     words per file however large ``bits`` is — and one tiny job
     collects a single row carrying the total file count plus only the
     SURVIVING file names (driver payload bounded by the candidates,
-    never the file census).  Falls back to the driver-side walk of a
-    pre-r9 ``_BLOOM.json``."""
+    never the file census)."""
     from pyspark.sql import functions as F
 
     if not equals:
         raise ValueError("equals must name at least one (column, value)")
-    if _fs_exists(spark, path, "_BLOOM"):
-        meta = _fs_read_json(spark, path, "_BLOOM_META.json")
-        bits, hashes = meta["bits"], meta["hashes"]
-        known = set(meta["bloom_cols"])
-        for col in equals:
-            if col not in known:
-                raise ValueError(f"column {col!r} not in bloom index")
-        sm = spark.read.schema(_BLOOM_SIDECAR_SCHEMA).parquet(
-            path.rstrip("/") + "/_BLOOM"
-        )
-        # per probed column: the distinct words its positions land in,
-        # each with the required bitmask.  A file survives iff EVERY
-        # required (col, word) row exists with all required bits set —
-        # a missing row means those bits are 0, so the file fails that
-        # predicate.  A file absent from the probed column's filters
-        # entirely (all-NULL there) can never satisfy col = value —
-        # pruning it is lossless for THIS predicate only; census rows
-        # (col NULL) contribute 0 hits and keep every file in the
-        # universe.
-        indicators = []
-        scan_cond = F.col("__col").isNull()
-        required = 0
-        for col, value in equals.items():
-            masks: dict = {}
-            for p in set(_bloom_positions(value, hashes, bits)):
-                masks[p // 64] = masks.get(p // 64, 0) | (1 << (p % 64))
-            required += len(masks)
-            scan_cond = scan_cond | (
-                (F.col("__col") == col)
-                & F.col("__w").isin(sorted(masks))
-            )
-            for w, mask in sorted(masks.items()):
-                signed = mask - (1 << 64) if mask >= (1 << 63) else mask
-                indicators.append(
-                    F.when(
-                        (F.col("__col") == col)
-                        & (F.col("__w") == w)
-                        & (
-                            F.col("__word").bitwiseAND(F.lit(signed))
-                            == F.lit(signed)
-                        ),
-                        1,
-                    ).otherwise(0)
-                )
-        npass = indicators[0]
-        for ind in indicators[1:]:
-            npass = npass + ind
-        row = (
-            sm.where(scan_cond)
-            .groupBy("__file")
-            .agg(F.sum(npass).alias("__np"))
-            .agg(
-                F.count(F.lit(1)).alias("total"),
-                F.sort_array(
-                    F.collect_list(
-                        F.when(
-                            F.col("__np") == required, F.col("__file")
-                        )
-                    )
-                ).alias("files"),
-            )
-            .collect()[0]
-        )
-        return {"files": list(row["files"]), "total": row["total"]}
-
-    manifest = _fs_read_json(spark, path, "_BLOOM.json")
-    bits, hashes = manifest["bits"], manifest["hashes"]
-    cols = manifest["columns"]
+    _require_sidecar(spark, path, "_BLOOM", "write_bloom_index")
+    meta = _fs_read_json(spark, path, "_BLOOM_META.json")
+    bits, hashes = meta["bits"], meta["hashes"]
+    known = set(meta["bloom_cols"])
     for col in equals:
-        if col not in cols:
+        if col not in known:
             raise ValueError(f"column {col!r} not in bloom index")
-    import base64
-
-    all_files = manifest.get("files")
-    if all_files is None:
-        # pre-r8 manifest (no file census): reconstruct the universe as
-        # the UNION of every column's keys — never a single column's,
-        # since a column's map omits its all-NULL files
-        union = set()
-        for m in cols.values():
-            union.update(m)
-        all_files = sorted(union)
-    keep = []
-    for fname in all_files:
-        ok = True
-        for col, value in equals.items():
-            # a file absent from the PROBED column's map has zero
-            # non-null values there, so it cannot satisfy col = value —
-            # pruning it is lossless for THIS predicate only
-            packed = base64.b64decode(cols[col].get(fname, ""))
-            if not packed or not all(
-                _bit_set(packed, p)
-                for p in _bloom_positions(value, hashes, bits)
-            ):
-                ok = False
-                break
-        if ok:
-            keep.append(fname)
-    return {"files": keep, "total": len(all_files)}
+    sm = spark.read.schema(_BLOOM_SIDECAR_SCHEMA).parquet(
+        path.rstrip("/") + "/_BLOOM"
+    )
+    # per probed column: the distinct words its positions land in,
+    # each with the required bitmask.  A file survives iff EVERY
+    # required (col, word) row exists with all required bits set —
+    # a missing row means those bits are 0, so the file fails that
+    # predicate.  A file absent from the probed column's filters
+    # entirely (all-NULL there) can never satisfy col = value —
+    # pruning it is lossless for THIS predicate only; census rows
+    # (col NULL) contribute 0 hits and keep every file in the
+    # universe.
+    indicators = []
+    scan_cond = F.col("__col").isNull()
+    required = 0
+    for col, value in equals.items():
+        masks: dict = {}
+        for p in set(_bloom_positions(value, hashes, bits)):
+            masks[p // 64] = masks.get(p // 64, 0) | (1 << (p % 64))
+        required += len(masks)
+        scan_cond = scan_cond | (
+            (F.col("__col") == col)
+            & F.col("__w").isin(sorted(masks))
+        )
+        for w, mask in sorted(masks.items()):
+            signed = mask - (1 << 64) if mask >= (1 << 63) else mask
+            indicators.append(
+                F.when(
+                    (F.col("__col") == col)
+                    & (F.col("__w") == w)
+                    & (
+                        F.col("__word").bitwiseAND(F.lit(signed))
+                        == F.lit(signed)
+                    ),
+                    1,
+                ).otherwise(0)
+            )
+    npass = indicators[0]
+    for ind in indicators[1:]:
+        npass = npass + ind
+    row = (
+        sm.where(scan_cond)
+        .groupBy("__file")
+        .agg(F.sum(npass).alias("__np"))
+        .agg(
+            F.count(F.lit(1)).alias("total"),
+            F.sort_array(
+                F.collect_list(
+                    F.when(
+                        F.col("__np") == required, F.col("__file")
+                    )
+                )
+            ).alias("files"),
+        )
+        .collect()[0]
+    )
+    return {"files": list(row["files"]), "total": row["total"]}
 
 
 def read_bloom(
@@ -1006,9 +926,9 @@ def indexed_candidate_files(
     spark, path: str, ranges: Optional[dict] = None,
     equals: Optional[dict] = None,
 ) -> dict:
-    """Resolve range predicates against ``_ZONEMAP.json`` AND equality
-    predicates against ``_BLOOM.json`` and INTERSECT the candidate
-    sets — a file survives only if no index can rule it out.  Both
+    """Resolve range predicates against the ``_ZONEMAP`` sidecar AND
+    equality predicates against the ``_BLOOM`` sidecar and INTERSECT
+    the candidate sets — a file survives only if no index can rule it out.  Both
     prunings are individually lossless, so the intersection is too.
     Either index may be absent if its predicate kind is unused.
     Returns ``{"files": [...], "total": n}``."""

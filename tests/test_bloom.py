@@ -1,4 +1,4 @@
-"""File-level Bloom-filter skipping (sources/sinks.py _BLOOM.json).
+"""File-level Bloom-filter skipping (sources/sinks.py ``_BLOOM`` sidecar).
 
 The guarantee under test: NO FALSE NEGATIVES — for every value present
 in the data, the file holding it always survives pruning — plus real
@@ -103,7 +103,7 @@ def test_multi_column_and_errors(spark):
 
         with pytest.raises(ValueError):
             bloom_candidate_files(spark, path, {"missing": 1})
-        with pytest.raises(ValueError):
+        with pytest.raises(ValueError, match="no _BLOOM sidecar under"):
             bloom_candidate_files(spark, os.path.join(tmp, "nope"), {"a": 1})
 
 
@@ -160,8 +160,6 @@ def test_all_null_first_column_file_not_dropped(spark):
     indexed column is all-NULL used to vanish from the universe and be
     pruned even when the probe was on a DIFFERENT column — a false
     negative that broke the lossless contract."""
-    import json
-
     with tempfile.TemporaryDirectory() as tmp:
         path = os.path.join(tmp, "t")
         # file 0: a populated;  file 1: a all-NULL but b='needle'
@@ -186,32 +184,6 @@ def test_all_null_first_column_file_not_dropped(spark):
         ca = bloom_candidate_files(spark, path, {"a": 1})
         null_files = set(manifest["files"]) - set(manifest["columns"]["a"])
         assert null_files and not (null_files & set(ca["files"]))
-
-        # legacy _BLOOM.json manifests (pre-r9 format) must resolve to
-        # the SAME candidates through the driver-side fallback path
-        import shutil
-
-        shutil.rmtree(os.path.join(path, "_BLOOM"))
-        os.remove(os.path.join(path, "_BLOOM_META.json"))
-        mpath = os.path.join(path, "_BLOOM.json")
-        with open(mpath, "w") as fh:
-            json.dump(manifest, fh)
-        cand_legacy = bloom_candidate_files(spark, path, {"b": "needle"})
-        assert cand_legacy == cand
-        ca_legacy = bloom_candidate_files(spark, path, {"a": 1})
-        assert ca_legacy == ca
-
-        # pre-r8 manifest (no "files" census): union-of-keys fallback
-        # still spans every column's files
-        old = json.load(open(mpath))
-        del old["files"]
-        with open(mpath, "w") as fh:
-            json.dump(old, fh)
-        crc = os.path.join(path, "._BLOOM.json.crc")
-        if os.path.exists(crc):  # hadoop local-FS checksum of the old bytes
-            os.remove(crc)
-        cand2 = bloom_candidate_files(spark, path, {"b": "needle"})
-        assert set(cand2["files"]) == set(cand["files"])
 
 
 def test_append_bloom_incremental_filters(spark):

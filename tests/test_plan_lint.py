@@ -13,6 +13,7 @@ from pyspark.sql.window import Window
 from bdq_spark.plans.plan_lint import (
     PlanScaleError,
     assert_scalable,
+    count_jobs,
     lint_plan,
     plan_fingerprint,
     plan_text,
@@ -172,6 +173,26 @@ def test_fingerprint_matches_golden_contract(spark):
     assert fp["pushed_scans"] == 1 and not fp["cartesian"]
     # text and DataFrame inputs agree
     assert plan_fingerprint(plan_text(df)) == fp
+
+
+def test_count_jobs_counts_grouped_jobs_and_stages_that_ran(spark):
+    """The construct_jobs / construct_stages golden counters: jobs run
+    under a job group count (streaming micro-batches and pipeline
+    steps run in one), and a map stage that a second job skips because
+    its shuffle is already written counts once."""
+    from operator import add
+
+    sc = spark.sparkContext
+    rdd = sc.parallelize(range(12), 2).map(lambda x: (x % 3, 1))
+    summed = rdd.reduceByKey(add)
+    with count_jobs(spark) as counts:
+        sc.setJobGroup("count-jobs-test", "grouped jobs are counted")
+        try:
+            summed.collect()
+            summed.collect()  # map stage skipped: shuffle reused
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counts == {"jobs": 2, "stages": 3}
 
 
 def test_findings_sorted_worst_first_and_str(no_broadcast):

@@ -20,13 +20,11 @@ def test_every_oracle_has_a_query():
 
 def test_priority_fills_the_driver_window_exactly():
     # the driver checks the first 50 entries; the priority list's
-    # 50-prefix defines them — shorter wastes slots.  Since r13 the
-    # list may CARRY declared positions 51+ (gating entries whose
-    # operator change is value-hash-covered by an in-prefix sibling —
-    # the convention documented at the list's tail); those get no
-    # driver row this round, so each must either be covered by a past
-    # CORRECTNESS round or have a locally-replayable oracle
-    # (test_no_query_is_unverifiable pins that for the whole registry).
+    # 50-prefix defines them — shorter wastes slots.  The list may
+    # carry positions 51+; those get no driver row, so each must
+    # either be covered by a past CORRECTNESS round or have a
+    # locally-replayable oracle (test_no_query_is_unverifiable pins
+    # that for the whole registry).
     assert len(eq._DRIVER_PRIORITY) >= 50
     assert list(eq.QUERIES)[:50] == eq._DRIVER_PRIORITY[:50]
 

@@ -233,41 +233,6 @@ def test_zonemap_zorder_composition_prunes_both_dims(spark, tmp_path):
     assert len(cy["files"]) < cy["total"]
 
 
-def test_zonemap_legacy_json_fallback(spark, tmp_path):
-    """Pre-r9 _ZONEMAP.json manifests must resolve to the SAME
-    candidates through the driver-side fallback path as the parquet
-    sidecar does through the Spark path."""
-    import json
-    import os
-    import shutil
-
-    from bdq_spark.sources.sinks import (
-        write_zonemap,
-        zonemap_candidate_files,
-        zonemap_manifest,
-    )
-
-    path = str(tmp_path / "zml")
-    df = spark.range(0, 2000).select(
-        F.col("id"), (F.col("id") % 50).alias("a")
-    )
-    write_zonemap(
-        spark, df.repartitionByRange(4, "a"), path, ["a"]
-    )
-    preds = {"a": (10, 19)}
-    cand = zonemap_candidate_files(spark, path, preds)
-    assert 0 < len(cand["files"]) < cand["total"] == 4
-
-    manifest = zonemap_manifest(spark, path)
-    shutil.rmtree(os.path.join(path, "_ZONEMAP"))
-    with open(os.path.join(path, "_ZONEMAP.json"), "w") as fh:
-        json.dump(manifest, fh)
-    legacy = zonemap_candidate_files(spark, path, preds)
-    assert legacy == cand
-    # manifest introspection also reads the legacy format
-    assert zonemap_manifest(spark, path) == manifest
-
-
 def test_append_zonemap_incremental_census(spark, tmp_path):
     """append_zonemap censuses ONLY the named new files, the merged
     sidecar equals a from-scratch rebuild, pruning stays lossless over

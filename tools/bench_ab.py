@@ -1,14 +1,14 @@
 #!/usr/bin/env python3
 """Same-box focused bench A/B: old git rev (worktree) vs the working
-tree, machine-stamped — the artifact the bench-A/B rule requires
-(tests/window_policy.py::BENCH_AB, enforced by
-test_plan_regressions.py::test_hot_module_changes_carry_bench_ab).
+tree, machine-stamped.
 
-Why this exists: the r10 CC fuse shipped a 2x bench-scale regression
-behind an x100-only A/B — the rule (VERDICT r10 item 2) says any
-module changed in-round whose gating entries include a top-20-by-wall
-bench entry must record a focused A/B at BENCH scale (sf0.1) on the
-same box, old round-boundary rev vs HEAD, before the round closes.
+Why this exists: a wall-time claim is only evidence when both sides ran
+on the same box at the same time.  The r10 CC fuse shipped a 2x
+bench-scale regression behind an x100-only A/B; a focused A/B at bench
+scale (sf0.1) would have shown it.  Job and stage counts, which do not
+depend on the host, are gated separately by the plan golden
+(``tools/explain_audit.py``); this tool measures the wall time those
+counts cannot see.
 
 Usage::
 

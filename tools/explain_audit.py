@@ -17,18 +17,33 @@ Usage::
 
 ``--assert`` turns plan drift from a review-time WARN into a hard
 failure for the REGRESSION direction only: an entry whose plan gains
-exchanges, sort-merge joins, rdd-scan truncation leaves, or a
-cartesian product over its committed golden exits non-zero
-(improvements — fewer shuffles, more pushdown — stay warnings so a
-better plan never blocks).  ``tests/test_plan_regressions.py`` runs a
-cheap subset in this mode on every pytest run, so a lost broadcast or
-an accidental extra shuffle fails CI instead of waiting for someone to
-re-run the audit by hand.
+exchanges, sort-merge joins, rdd-scan truncation leaves, construction
+jobs or stages, or a cartesian product over its committed golden exits
+non-zero (improvements — fewer shuffles, fewer jobs, more pushdown —
+stay warnings so a better plan never blocks).
+``tests/test_plan_regressions.py`` runs a subset in this mode on every
+pytest run, so a lost broadcast, an accidental extra shuffle or an
+extra eager job fails CI instead of waiting for someone to re-run the
+audit by hand.
 
 The committed snapshot (``plans_golden.json``) records each query's plan
 fingerprint (exchange/join/pushdown counts); the audit prints a DRIFT
 marker when a fingerprint changes, so plan regressions (a lost broadcast,
 an extra shuffle) show up in review diffs.
+
+Two fingerprint fields count work rather than plan shape:
+``construct_jobs`` is the number of Spark jobs the entry function
+schedules while it BUILDS its DataFrame (eager counts, collects,
+checkpoints, staging writes), and ``construct_stages`` the number of
+distinct stages those jobs ran.  Both come from the SparkContext's
+status tracker (:func:`bdq_spark.plans.plan_lint.count_jobs`).  Unlike
+wall time they do not move with host load or core count, so the golden
+compares them exactly.  Two things outside the entry move them: an
+entry that stages a fixture under the temp dir schedules more jobs on
+a cold temp dir (the golden records the warm count), and an entry that
+leaves a frame persisted makes later entries that build the same frame
+cheaper (the golden records a full run in registry order, so such an
+entry audited alone can read more jobs).
 
 Truncation caveat, made explicit in the fingerprint: operators that
 ``localCheckpoint`` internally replace the materialized subtree with a
@@ -46,10 +61,11 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.01"
-SNAPSHOT_PATH = os.path.join(os.path.dirname(__file__), "..", "plans_golden.json")
+SNAPSHOT_PATH = os.path.join(REPO, "plans_golden.json")
 
 # queries where a full-column scan or cartesian join is by design
 FULL_SCAN_OK = {
@@ -118,6 +134,7 @@ CARTESIAN_OK = {
 
 from bdq_spark.plans.plan_lint import (
     checkpoint_partitions,
+    count_jobs,
     plan_fingerprint,
     plan_text,
 )
@@ -128,13 +145,16 @@ plan_of = plan_text  # back-compat alias; the library owns the capture
 # fingerprint fields where a HIGHER value than golden is a regression
 # (more shuffles / more unbroadcast joins / more checkpoint truncation /
 # a checkpoint pinned wider than its data — the r10 CC defect, which no
-# explain-text count could see); cartesian is boolean: golden
+# explain-text count could see / more jobs or stages scheduled while
+# the entry builds its frame); cartesian is boolean: golden
 # False -> True regresses
 _REGRESSION_KEYS = (
     "exchanges",
     "sort_merge_joins",
     "rdd_scans",
     "checkpoint_partitions",
+    "construct_jobs",
+    "construct_stages",
 )
 
 
@@ -168,7 +188,8 @@ def run_audit(spark, queries, only=(), golden=None, quiet=False):
         if only and name not in only:
             continue
         try:
-            df = fn(spark, SF_DIR)
+            with count_jobs(spark) as built:
+                df = fn(spark, SF_DIR)
             plan = plan_of(df)
         except Exception as e:
             problems.append((name, f"explain failed: {e}"))
@@ -188,6 +209,8 @@ def run_audit(spark, queries, only=(), golden=None, quiet=False):
         # partition counts live on the checkpoint RDDs, not in the
         # explain text — read them off the DataFrame's analyzed plan
         fp["checkpoint_partitions"] = checkpoint_partitions(df)
+        fp["construct_jobs"] = built["jobs"]
+        fp["construct_stages"] = built["stages"]
         n_exchange = fp["exchanges"]
         n_bcast = fp["broadcast_hash_joins"]
         n_smj = fp["sort_merge_joins"]
@@ -201,7 +224,7 @@ def run_audit(spark, queries, only=(), golden=None, quiet=False):
                 drift = "DRIFT: new query (re-run --snapshot)"
             elif golden[name] != fp:
                 diffs = [
-                    f"{k} {golden[name][k]}->{fp[k]}"
+                    f"{k} {golden[name].get(k)}->{fp[k]}"
                     for k in fp
                     if golden[name].get(k) != fp[k]
                 ]
@@ -218,7 +241,8 @@ def run_audit(spark, queries, only=(), golden=None, quiet=False):
             print(
                 f"{status:4s} {name:34s} exchanges={n_exchange:2d} "
                 f"bhj={n_bcast} smj={n_smj} pushed_scans={n_pushed} "
-                f"rdd={n_rdd} ckpt_parts={fp['checkpoint_partitions']}"
+                f"rdd={n_rdd} ckpt_parts={fp['checkpoint_partitions']} "
+                f"jobs={fp['construct_jobs']} stages={fp['construct_stages']}"
                 + (f"  <- {'; '.join(notes)}" if notes else "")
             )
         if notes:

@@ -34,18 +34,11 @@ SF_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
 
 def main() -> int:
     names = sys.argv[1].split(",")
+    from bdq_spark.plans.plan_lint import count_jobs
     from bdq_spark.session import get_spark
 
     spark = get_spark()
-    sc = spark.sparkContext
     import bdq_spark.entry_queries as eq
-
-    def n_jobs() -> int:
-        # the max job id seen so far — monotonically increasing, so a
-        # delta across a region counts the jobs that region scheduled
-        t = sc.statusTracker()
-        ids = t.getJobIdsForGroup(None) or []
-        return max(ids) if ids else -1
 
     for name in names:
         fn = eq.QUERIES[name]
@@ -53,20 +46,19 @@ def main() -> int:
         df = fn(spark, SF_DIR)
         df.write.format("noop").mode("overwrite").save()
 
-        j0 = n_jobs()
         t0 = time.monotonic()
-        df = fn(spark, SF_DIR)
+        with count_jobs(spark) as built:
+            df = fn(spark, SF_DIR)
         t1 = time.monotonic()
-        j1 = n_jobs()
-        df.write.format("noop").mode("overwrite").save()
+        with count_jobs(spark) as ran:
+            df.write.format("noop").mode("overwrite").save()
         t2 = time.monotonic()
-        j2 = n_jobs()
         print(json.dumps({
             "entry": name,
             "construct_s": round(t1 - t0, 2),
             "exec_s": round(t2 - t1, 2),
-            "jobs_construct": j1 - j0,
-            "jobs_exec": j2 - j1,
+            "jobs_construct": built["jobs"],
+            "jobs_exec": ran["jobs"],
         }), flush=True)
     return 0
 
