@@ -16,6 +16,10 @@ analytical query) end-to-end against the driver testdata.  Conventions:
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
+import json
+import os
 import re
 import shutil
 import tempfile
@@ -89,6 +93,153 @@ def _plan_has_exchange(plan: str) -> bool:
     import re
 
     return re.search(r"\(\d+\) Exchange\b", plan) is not None
+
+
+# ---------------------------------------------------------------------------
+# Shared fixture plumbing: staged temp dirs, micro-batch feeds, media bytes
+# ---------------------------------------------------------------------------
+
+def _index_marker_content(
+    sf_dir: str, table: str, version: int, params: dict
+) -> str:
+    """Identity of a staged fixture (:func:`_staged`): the sf_dir +
+    version ALONE under-identify it — regenerating the source table in
+    place, or an operator default drifting without a version bump, must
+    invalidate the staged dir.  So the identity folds in a cheap data
+    fingerprint (source parquet mtime + size) and the full
+    build-parameter set; any drift makes it mismatch and the fixture
+    rebuild."""
+    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+    param_sig = ",".join(f"{k}={params[k]!r}" for k in sorted(params))
+    return (
+        f"{sf_dir}:v{version}:data={int(st.st_mtime)}:{st.st_size}"
+        f":params[{param_sig}]"
+    )
+
+
+def _staged(
+    tag: str,
+    sf_dir: str,
+    table: str,
+    build: Callable[[str], Optional[dict]],
+    version: int = 1,
+    params: Optional[dict] = None,
+) -> tuple:
+    """Stage a fixture derived from ``table`` once per machine and return
+    ``(path, facts)``; every later call reuses it.
+
+    The path is ``gettempdir()/bdq_<tag>_<md5(sf_dir)[:12]>``.  Its
+    ``_STAGED`` marker records the fixture's identity
+    (:func:`_index_marker_content` of ``sf_dir``, ``table``, ``version``
+    and ``params``) and the ``facts`` dict ``build`` returned, e.g. a
+    probe key computed while staging.  If the marker is missing or names
+    another identity, the directory is removed, ``build(path)`` writes
+    it afresh and the marker is written last.  Bump ``version`` whenever
+    what ``build`` writes changes.
+
+    An ``flock`` on the sibling ``<path>.lock`` serializes the check and
+    the build across threads and processes, so no caller sees a
+    half-built directory.  The directory is built in place rather than
+    renamed from a temporary one, because zonemap and Bloom sidecars
+    record absolute file URIs."""
+    identity = _index_marker_content(sf_dir, table, version, params or {})
+    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    path = os.path.join(tempfile.gettempdir(), f"bdq_{tag}_{key}")
+    marker = os.path.join(path, "_STAGED")
+    with open(f"{path}.lock", "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        try:
+            with open(marker) as fh:
+                staged = json.load(fh)
+            if staged["identity"] == identity:
+                return path, staged["facts"]
+        except (OSError, ValueError, KeyError):
+            pass
+        shutil.rmtree(path, ignore_errors=True)
+        facts = build(path) or {}
+        os.makedirs(path, exist_ok=True)
+        with open(marker, "w") as fh:
+            json.dump({"identity": identity, "facts": facts}, fh)
+    return path, facts
+
+
+def _write_feed(path: str, parts) -> None:
+    """Write ``parts`` as the micro-batch groups ``path/g0``, ``g1``, ...
+    (one parquet file each) of a ``maxFilesPerTrigger=1`` stream over
+    ``path/g*``.  File mtimes are pinned an hour apart in group order,
+    since FileStreamSource schedules oldest first.  The base is a fixed
+    epoch, not the wall clock: staged feeds outlive the run, and
+    FileStreamSource ages files against the newest mtime it has seen, so
+    a fixed base keeps every group inside its ``maxFileAge``."""
+    base_ts = 1_700_000_000
+    for i, part in enumerate(parts):
+        gdir = os.path.join(path, f"g{i}")
+        part.coalesce(1).write.parquet(gdir)
+        ts = base_ts + 3600 * i
+        for fname in os.listdir(gdir):
+            os.utime(os.path.join(gdir, fname), (ts, ts))
+
+
+def _run_available_now(name: str, writer) -> None:
+    """Drive a streaming query to completion: start ``writer`` (a
+    ``DataStreamWriter``) with an availableNow trigger on a fresh
+    temporary checkpoint, so every call replays the whole source, and
+    wait for it.  A query still running after 300 s is stopped and
+    raises rather than let the caller read a partial result; a failed
+    query re-raises its error.  The checkpoint is dropped either way."""
+    ckpt = tempfile.mkdtemp(prefix=f"entry_{name}_ckpt_")
+    try:
+        q = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError(
+                f"{name}: stream did not finish within 300 s — refusing "
+                "to return a partial result"
+            )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def he(col, width: int):
+    """Big-endian hex of an integer column, zero-padded to ``width``
+    nibbles: the byte builder of the synthesized media payloads."""
+    return F.lpad(F.hex(col), width, "0")
+
+
+def le16(col):
+    """Little-endian 2-byte hex of a column in ``[0, 2^16)``."""
+    return F.concat(
+        he(col % 256, 2), he(F.floor(col / 256).cast("bigint") % 256, 2)
+    )
+
+
+def le32(col):
+    """Little-endian 4-byte hex of a column in ``[0, 2^32)``."""
+    return F.concat(
+        he(col % 256, 2),
+        he(F.floor(col / 256).cast("bigint") % 256, 2),
+        he(F.floor(col / 65536).cast("bigint") % 256, 2),
+        he(F.floor(col / 16777216).cast("bigint") % 256, 2),
+    )
+
+
+def _media(docs: DataFrame, payload, media_type: str) -> DataFrame:
+    """``docs``' ids with a synthesized binary ``payload`` column, tagged
+    for the decode operators.  The caller picks ``docs``: the documents
+    scan, or :func:`_spread_narrow_scan` of its ids to synthesize and
+    decode at session width."""
+    from bdq_spark.operators.multimodal import attach_media_metadata
+
+    return attach_media_metadata(
+        docs.select("doc_id", payload.alias("payload")),
+        content_column="payload",
+        media_type=media_type,
+        id_column="doc_id",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -368,8 +519,8 @@ def cdc_apply_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Version of the synthesized CDC feed staged to the shared temp dir by
 # ``streaming_cdc_merge``.  BUMP whenever ``_cdc_customer_changes``, the
 # micro-batch partitioning, or the staged schema changes — the version
-# is baked into the staging key and the ``_STAGED`` marker body, so a
-# stale cache regenerates instead of silently testing old parquet.
+# is part of the staged feed's identity, so a stale cache regenerates
+# instead of silently testing old parquet.
 _CDC_FEED_VERSION = 2
 
 
@@ -433,9 +584,6 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGE, not just aggregates.  Restart/replay/crash convergence and
     the untouched-buckets-unmodified file census are pinned in
     ``tests/test_streaming_step.py``."""
-    import hashlib
-    import os
-
     from bdq_spark.streaming import (
         cdc_merge_sink_partitioned,
         init_snapshot,
@@ -443,40 +591,25 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     c = _cdc_customer_base(spark, sf_dir)
-    changes = _cdc_customer_changes(c)
-
-    # _CDC_FEED_VERSION is part of the staging key AND the marker body:
-    # bump it whenever _cdc_customer_changes / the partitioning / the
-    # schema below changes, so a machine that cached the old feed
-    # regenerates instead of silently testing stale parquet.
-    key = hashlib.md5(
-        f"{sf_dir}:cdc_feed:v{_CDC_FEED_VERSION}".encode()
-    ).hexdigest()[:12]
-    feed = os.path.join(tempfile.gettempdir(), f"bdq_stage_cdc_feed_{key}")
-    marker = os.path.join(feed, "_STAGED")
-    expected_marker = f"{sf_dir}:v{_CDC_FEED_VERSION}"
-    staged = False
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            staged = fh.read() == expected_marker
-    if not staged:
-        # micro-batches grouped by SNAPSHOT BUCKET ranges (the same
-        # pmod(xxhash64(key), 16) the sink partitions by): each key's
-        # full history still lands in exactly one batch (key → one
-        # bucket → one group, so the sequential merge stays
-        # order-independent and the one-shot oracle exact), and each
-        # batch touches a DISJOINT third of the partitions — the
-        # pruned-rewrite path this entry exists to exercise, instead of
-        # three batches that each rewrite every bucket.
-        b = F.pmod(F.xxhash64(F.col("c_custkey").cast("bigint")), F.lit(16))
-        for i, flt in enumerate([b <= 5, (b > 5) & (b <= 10), b > 10]):
-            changes.filter(flt).withColumn(
-                "acctbal", F.col("acctbal").cast("decimal(12,2)")
-            ).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(feed, f"g{i}")
-            )
-        with open(marker, "w") as fh:
-            fh.write(expected_marker)
+    changes = _cdc_customer_changes(c).withColumn(
+        "acctbal", F.col("acctbal").cast("decimal(12,2)")
+    )
+    # micro-batches grouped by SNAPSHOT BUCKET ranges (the same
+    # pmod(xxhash64(key), 16) the sink partitions by): each key's full
+    # history still lands in exactly one batch (key → one bucket → one
+    # group, so the sequential merge stays order-independent and the
+    # one-shot oracle exact), and each batch touches a DISJOINT third
+    # of the partitions — the pruned-rewrite path this entry exists to
+    # exercise, instead of three batches that each rewrite every bucket.
+    b = F.pmod(F.xxhash64(F.col("c_custkey").cast("bigint")), F.lit(16))
+    feed, _ = _staged(
+        "cdc_feed", sf_dir, "customer",
+        lambda p: _write_feed(p, [
+            changes.filter(flt)
+            for flt in [b <= 5, (b > 5) & (b <= 10), b > 10]
+        ]),
+        version=_CDC_FEED_VERSION,
+    )
 
     snap_path = tempfile.mkdtemp(prefix="entry_cdc_snap_")
     merge = cdc_merge_sink_partitioned(
@@ -490,28 +623,17 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so paying latest_changes + anti-join over the full table buys
     # nothing)
     init_snapshot(spark, snap_path, c, ["c_custkey"], num_buckets=16)
-    ckpt = tempfile.mkdtemp(prefix="entry_cdc_ckpt_")
-    stream = (
-        spark.readStream.schema(
-            "c_custkey bigint, c_name string, acctbal decimal(12,2), "
-            "op string, ver int"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{feed}/g*")
-    )
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming_cdc_merge: stream did not finish within "
-                "300 s — refusing to return a partially merged snapshot"
+        _run_available_now(
+            "streaming_cdc_merge",
+            spark.readStream.schema(
+                "c_custkey bigint, c_name string, acctbal decimal(12,2), "
+                "op string, ver int"
             )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{feed}/g*")
+            .writeStream.foreachBatch(merge),
+        )
         # detach the result from the snapshot path so the per-invocation
         # dir + checkpoint can be dropped (no unbounded temp growth
         # across bench reps); localCheckpoint blocks self-release on GC
@@ -528,7 +650,6 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the timeout/raise path must not leak the snapshot either
         # (generations + manifests all live under snap_path)
         shutil.rmtree(snap_path, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @_register(
@@ -1818,34 +1939,14 @@ def incremental_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: persisted MinHash index version — bump on any index parameter or
-#: schema change so stale staged dirs regenerate (the CDC staging
-#: lesson: the version is baked into the staging key AND the marker)
+#: schema change so stale staged dirs regenerate (it is part of the
+#: staged identity, see _staged)
 _MINHASH_INDEX_VERSION = 1
 
 
-def _index_marker_content(
-    sf_dir: str, table: str, version: int, params: dict
-) -> str:
-    """Marker content for a cross-run staged index (ADVICE r11): the
-    sf_dir + version ALONE under-identify the index — regenerating the
-    fixture in place, or an operator default drifting without a version
-    bump, must invalidate the staged dir.  So the marker folds in a
-    cheap data fingerprint (source parquet mtime + size) and the full
-    build-parameter set; any drift makes the content mismatch and the
-    index rebuild."""
-    import os
-
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    param_sig = ",".join(f"{k}={params[k]!r}" for k in sorted(params))
-    return (
-        f"{sf_dir}:v{version}:data={int(st.st_mtime)}:{st.st_size}"
-        f":params[{param_sig}]"
-    )
-
-
 def _operator_defaults(fn) -> dict:
-    """Every defaulted parameter of ``fn`` — folded into the staging
-    marker so a banding/bucketing default changed WITHOUT a version
+    """Every defaulted parameter of ``fn`` — folded into the staged
+    identity so a banding/bucketing default changed WITHOUT a version
     bump still regenerates the staged index."""
     import inspect
 
@@ -1856,51 +1957,10 @@ def _operator_defaults(fn) -> dict:
     }
 
 
-def _stage_index_atomic(df, path: str, marker_content: str) -> None:
-    """Publish a staged index dir ATOMICALLY (ADVICE r11): write to a
-    pid-suffixed temp dir (marker last, inside it), then a single
-    ``os.rename`` to the final path — a concurrent builder racing us
-    either wins the rename (we discard our temp copy; contents are
-    deterministic, so theirs equals ours) or sees ours.  Readers can
-    never observe a half-written dir with a valid marker."""
-    import os
-    import shutil
-
-    tmp = f"{path}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, "_STAGED"), "w") as fh:
-        fh.write(marker_content)
-    shutil.rmtree(path, ignore_errors=True)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        # Either a concurrent builder published first (fine — contents
-        # are deterministic, theirs equals ours) or the rename failed
-        # for a mundane reason, e.g. the stale dest survived the
-        # ignore_errors rmtree above.  Distinguish the two (ADVICE
-        # r12): accept only a dest that carries a VALID marker;
-        # otherwise surface the failure instead of letting callers
-        # silently read a stale index.
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not _staged_index_ok(path, marker_content):
-            raise
-
-
-def _staged_index_ok(path: str, marker_content: str) -> bool:
-    import os
-
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        return False
-    with open(marker) as fh:
-        return fh.read() == marker_content
-
-
 # build-parameter sets captured at IMPORT time: a source-level default
-# drift regenerates the staged index (the marker changes), while
+# drift regenerates the staged index (the identity changes), while
 # runtime monkeypatching (the steady-state rebuild-poison tests) can't
-# perturb the marker and fake a drift
+# perturb the identity and fake a drift
 from bdq_spark.operators.dedup import (  # noqa: E402
     minhash_band_index as _mbi_for_defaults,
 )
@@ -1939,39 +1999,28 @@ def persisted_minhash_index_probe(
     (``incremental_minhash_md5`` gates the in-memory path; the two
     entries coincide by construction).
     """
-    import hashlib
-    import os
-
     from bdq_spark.operators.dedup import (
         incremental_minhash_near_dup,
         minhash_band_index,
     )
     from bdq_spark.plans.plan_lint import plan_text
 
-    key = hashlib.md5(
-        f"{sf_dir}:minhash_idx_v{_MINHASH_INDEX_VERSION}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"bdq_minhash_idx_{key}")
-    # ADVICE r11: the marker identifies the DATA (fixture fingerprint)
-    # and the BUILD PARAMETERS (operator defaults + explicit overrides),
-    # not just (sf_dir, version) — regenerating the fixture in place or
-    # drifting a banding default regenerates the index instead of
-    # silently reusing a stale one
-    params = dict(_MINHASH_INDEX_PARAMS)
-    params.update(hash_fn="md5", corpus_split="doc_id % 3 != 0")
-    expected_marker = _index_marker_content(
-        sf_dir, "documents", _MINHASH_INDEX_VERSION, params
-    )
     docs = load_table(spark, sf_dir, "documents")
-    if not _staged_index_ok(path, expected_marker):
-        corpus = docs.filter(F.col("doc_id") % 3 != 0)
-        _stage_index_atomic(
-            minhash_band_index(corpus, hash_fn="md5").repartition(
-                16, "band_key"
-            ),
-            path,
-            expected_marker,
-        )
+    # the identity covers the BUILD PARAMETERS (operator defaults +
+    # explicit overrides), so drifting a banding default regenerates
+    # the index instead of silently reusing a stale one
+    path, _ = _staged(
+        "minhash_idx", sf_dir, "documents",
+        lambda p: minhash_band_index(
+            docs.filter(F.col("doc_id") % 3 != 0), hash_fn="md5"
+        ).repartition(16, "band_key").write.parquet(p),
+        version=_MINHASH_INDEX_VERSION,
+        params={
+            **_MINHASH_INDEX_PARAMS,
+            "hash_fn": "md5",
+            "corpus_split": "doc_id % 3 != 0",
+        },
+    )
     index = spark.read.parquet(path)
     batch = docs.filter(F.col("doc_id") % 3 == 0)
     out = incremental_minhash_near_dup(index, batch, hash_fn="md5")
@@ -2264,6 +2313,37 @@ _VECTOR_INDEX_VERSION = 1
 _VECTOR_INDEX_GEO = dict(num_planes=3, num_tables=2, threshold=0.3, dim=64)
 
 
+def _multitable_buckets(
+    df: DataFrame, num_planes: int, num_tables: int, dim: int
+) -> DataFrame:
+    """OR-ed multi-table md5 LSH of ``(vec_id, embedding)`` rows: one
+    ``(id, vec, bucket)`` row per vector and table, with the table
+    namespaced into the bucket as ``(table << planes) | bucket``."""
+    from bdq_spark.operators.similarity import (
+        _table_seed,
+        lsh_bucket_vectors_md5,
+    )
+
+    out = None
+    for t in range(num_tables):
+        ns = F.lit(t * (1 << num_planes)).cast("long")
+        bt = lsh_bucket_vectors_md5(
+            df, "embedding", "vec_id", num_planes, dim,
+            seed=_table_seed("bdq_lshq", t),
+        ).select("id", "vec", (F.col("bucket") + ns).alias("bucket"))
+        out = bt if out is None else out.unionByName(bt)
+    return out
+
+
+def _build_vector_index(corpus: DataFrame, path: str) -> None:
+    """Write the persisted vector index of ``corpus``: its buckets under
+    :data:`_VECTOR_INDEX_GEO`, hash-clustered by bucket."""
+    geo = _VECTOR_INDEX_GEO
+    _multitable_buckets(
+        corpus, geo["num_planes"], geo["num_tables"], geo["dim"]
+    ).repartition(8, "bucket").write.parquet(path)
+
+
 @_register(
     "persisted_vector_index_probe",
     _pairs_lsh_md5_oracle(
@@ -2292,33 +2372,15 @@ def persisted_vector_index_probe(
     behind its lazy checkpoint — if an embeddings scan surfaces, the
     index side has started rebuilding and must fail loudly).  The
     marker carries the fixture fingerprint + full build geometry
-    (ADVICE r11), and staging is atomic (temp dir + rename).  Values
+    (ADVICE r11), and staging holds a lock while it builds.  Values
     hash against DuckDB recomputing BOTH tables' planes, margins,
     buckets and the batch-vs-corpus probe join from scratch — the
     persisted index is lossless vs the in-memory build."""
-    import hashlib
-    import os
-
     from bdq_spark.operators._checkpoint import data_checkpoint
-    from bdq_spark.operators.similarity import (
-        _table_seed,
-        cosine_from_norms,
-        l2_norm,
-        lsh_bucket_vectors_md5,
-    )
+    from bdq_spark.operators.similarity import cosine_from_norms, l2_norm
     from bdq_spark.plans.plan_lint import plan_text
 
     geo = _VECTOR_INDEX_GEO
-    key = hashlib.md5(
-        f"{sf_dir}:vector_idx_v{_VECTOR_INDEX_VERSION}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"bdq_vector_idx_{key}")
-    params = dict(geo)
-    params.update(scale=10000, seed="bdq_lshq",
-                  corpus_split="vec_id % 3 != 0")
-    expected_marker = _index_marker_content(
-        sf_dir, "embeddings", _VECTOR_INDEX_VERSION, params
-    )
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     if n > _FIXED_GEOMETRY_MAX_ROWS:
@@ -2330,23 +2392,17 @@ def persisted_vector_index_probe(
             "occupancy — and therefore probe cost — stays constant"
         )
 
-    def _buckets(df):
-        # OR-ed multi-table md5 bucketing, (table << planes) | bucket
-        out = None
-        for t in range(geo["num_tables"]):
-            ns = F.lit(t * (1 << geo["num_planes"])).cast("long")
-            bt = lsh_bucket_vectors_md5(
-                df, "embedding", "vec_id", geo["num_planes"], geo["dim"],
-                seed=_table_seed("bdq_lshq", t),
-            ).select("id", "vec", (F.col("bucket") + ns).alias("bucket"))
-            out = bt if out is None else out.unionByName(bt)
-        return out
-
-    if not _staged_index_ok(path, expected_marker):
-        corpus = emb.filter(F.col("vec_id") % 3 != 0)
-        _stage_index_atomic(
-            _buckets(corpus).repartition(8, "bucket"), path, expected_marker
-        )
+    path, _ = _staged(
+        "vector_idx", sf_dir, "embeddings",
+        lambda p: _build_vector_index(emb.filter(F.col("vec_id") % 3 != 0), p),
+        version=_VECTOR_INDEX_VERSION,
+        params={
+            **geo,
+            "scale": 10000,
+            "seed": "bdq_lshq",
+            "corpus_split": "vec_id % 3 != 0",
+        },
+    )
     # norms once per ROW below the bucket join (the knn_bruteforce
     # trick; OPTIMIZATION_r14): per candidate PAIR only the dot product
     # remains, and the checkpointed batch side materializes its norms —
@@ -2358,9 +2414,10 @@ def persisted_vector_index_probe(
     # the batch side's single embeddings read hides behind this lazy
     # checkpoint — the plan assertion below would otherwise see it
     batch = data_checkpoint(
-        _buckets(emb.filter(F.col("vec_id") % 3 == 0)).withColumn(
-            "__n", l2_norm(F.col("vec"))
-        ),
+        _multitable_buckets(
+            emb.filter(F.col("vec_id") % 3 == 0),
+            geo["num_planes"], geo["num_tables"], geo["dim"],
+        ).withColumn("__n", l2_norm(F.col("vec"))),
         eager=False,
     )
     cos = cosine_from_norms(
@@ -2452,6 +2509,38 @@ WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
 """
 
 
+def _svi_feed(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the ``streaming_ingest_vector_index`` feed and return its
+    dir: every embedding plus a planted near-twin of every third one
+    (first component halved, id + 1e7) in three micro-batch groups."""
+
+    def build(path: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
+        )
+        twin_vec = F.transform(
+            F.col("embedding"),
+            lambda x, i: F.when(i == 0, x * F.lit(0.5)).otherwise(x),
+        ).cast("array<float>")
+        twins = emb.filter(F.col("vec_id") % 3 == 0).select(
+            (F.col("vec_id") + F.lit(10_000_000)).alias("vec_id"),
+            twin_vec.alias("embedding"),
+        )
+        n = emb.agg(F.max("vec_id")).first()[0] + 1
+        t1, t2 = n // 3, 2 * n // 3
+        feed = emb.unionByName(twins)
+        # g0/g1: low/mid-third originals; g2: top third + ALL twins —
+        # so g2-originals' twins dedup WITHIN a trigger and g0/g1
+        # originals' twins dedup against the persisted index
+        _write_feed(path, [
+            feed.filter(F.col("vec_id") < t1),
+            feed.filter((F.col("vec_id") >= t1) & (F.col("vec_id") < t2)),
+            feed.filter(F.col("vec_id") >= t2),
+        ])
+
+    return _staged("svi_feed", sf_dir, "embeddings", build, version=2)[0]
+
+
 @_register("streaming_ingest_vector_index", _VEC_STREAM_ORACLE)
 def streaming_ingest_vector_index(
     spark: SparkSession, sf_dir: str
@@ -2497,15 +2586,7 @@ def streaming_ingest_vector_index(
     aligned to survivors-only (transitive keeper) semantics first.
     Per-trigger cost is O(batch + bucket-matched candidates + one
     append); the accumulated corpus is never re-scanned."""
-    import hashlib
-    import os
-
-    from bdq_spark.operators.similarity import (
-        _table_seed,
-        cosine_from_norms,
-        l2_norm,
-        lsh_bucket_vectors_md5,
-    )
+    from bdq_spark.operators.similarity import cosine_from_norms, l2_norm
 
     # 5 planes (32 buckets/table): candidate volume stays modest at the
     # bench SF while twin-detection recall through 2 OR-tables remains
@@ -2524,61 +2605,12 @@ def streaming_ingest_vector_index(
             "constant as the corpus grows"
         )
 
-    key = hashlib.md5(
-        f"{sf_dir}:stream_vec_idx:v2".encode()
-    ).hexdigest()[:12]
-    feed_dir = os.path.join(
-        tempfile.gettempdir(), f"bdq_stage_svi_feed_{key}"
-    )
-    marker = os.path.join(feed_dir, "_STAGED")
-    if not os.path.exists(marker):
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding"
-        )
-        twin_vec = F.transform(
-            F.col("embedding"),
-            lambda x, i: F.when(i == 0, x * F.lit(0.5)).otherwise(x),
-        ).cast("array<float>")
-        twins = emb.filter(F.col("vec_id") % 3 == 0).select(
-            (F.col("vec_id") + F.lit(10_000_000)).alias("vec_id"),
-            twin_vec.alias("embedding"),
-        )
-        n = emb.agg(F.max("vec_id")).first()[0] + 1
-        t1, t2 = n // 3, 2 * n // 3
-        feed = emb.unionByName(twins)
-        # g0/g1: low/mid-third originals; g2: top third + ALL twins —
-        # so g2-originals' twins dedup WITHIN a trigger and g0/g1
-        # originals' twins dedup against the persisted index
-        parts = [
-            feed.filter(F.col("vec_id") < t1),
-            feed.filter((F.col("vec_id") >= t1) & (F.col("vec_id") < t2)),
-            feed.filter(F.col("vec_id") >= t2),
-        ]
-        base_ts = 1_700_000_000  # fixed epoch: see the minhash twin
-        for i, p in enumerate(parts):
-            gdir = os.path.join(feed_dir, f"g{i}")
-            p.coalesce(1).write.mode("overwrite").parquet(gdir)
-            for fname in os.listdir(gdir):
-                os.utime(
-                    os.path.join(gdir, fname),
-                    (base_ts + 3600 * i, base_ts + 3600 * i),
-                )
-        with open(marker, "w") as fh:
-            fh.write(f"{sf_dir}:{feed.count()}")
+    feed_dir = _svi_feed(spark, sf_dir)
 
     def _buckets(df):
-        out = None
-        for t in range(geo_tables):
-            ns = F.lit(t * (1 << geo_planes)).cast("long")
-            bt = lsh_bucket_vectors_md5(
-                df, "embedding", "vec_id", geo_planes, geo_dim,
-                seed=_table_seed("bdq_lshq", t),
-            ).select("id", "vec", (F.col("bucket") + ns).alias("bucket"))
-            out = bt if out is None else out.unionByName(bt)
-        return out
+        return _multitable_buckets(df, geo_planes, geo_tables, geo_dim)
 
     index_dir = tempfile.mkdtemp(prefix="entry_svi_index_")
-    ckpt = tempfile.mkdtemp(prefix="entry_svi_ckpt_")
     # per-ROW L2 norms staged below the verify joins so per-PAIR work
     # is one dot product (cosine_from_norms keeps cosine_similarity's
     # exact multiplication/guard order — bit-identical values; the
@@ -2657,25 +2689,13 @@ def streaming_ingest_vector_index(
         kept.write.mode("append").parquet(index_dir)
 
     try:
-        stream = (
-            spark.readStream.schema(
-                "vec_id bigint, embedding array<float>"
-            )
+        _run_available_now(
+            "streaming_ingest_vector_index",
+            spark.readStream.schema("vec_id bigint, embedding array<float>")
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{feed_dir}/g*")
+            .writeStream.foreachBatch(ingest),
         )
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming_ingest_vector_index: stream did not finish "
-                "within 300 s — refusing to read a partial index"
-            )
         idx = spark.read.schema(idx_schema).parquet(index_dir)
         survivors = idx.select(F.col("id").alias("vec_id")).distinct()
         # one aggregation job for both consistency counts (was two
@@ -2692,7 +2712,6 @@ def streaming_ingest_vector_index(
         return survivors.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(index_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @_register(
@@ -3173,20 +3192,10 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (width, height, channels=3) as the header parser (8-bit RGB PNG,
     24bpp BMP, 3-component JPEG); GIF is deliberately absent — PIL
     reports its palette as 1 band where header-level channels are 3."""
-    from bdq_spark.operators.multimodal import attach_media_metadata, decode_images
+    from bdq_spark.operators.multimodal import decode_images
 
     w = (F.col("doc_id") % 512 + 1).cast("bigint")
     h = ((F.col("doc_id") * 7) % 512 + 1).cast("bigint")
-
-    def he(col, width):  # big-endian hex, zero-padded to `width` nibbles
-        return F.lpad(F.hex(col), width, "0")
-
-    def le32(col):  # little-endian 4-byte hex of a value < 2^16
-        return F.concat(
-            he(col % 256, 2),
-            he(F.floor(col / 256).cast("bigint"), 2),
-            F.lit("0000"),
-        )
 
     png = F.concat(
         F.lit("89504E470D0A1A0A0000000D49484452"),  # signature + IHDR
@@ -3210,19 +3219,14 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("doc_id") % 3 == 1, bmp)
         .otherwise(jpg)
     )
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        # coalesce: concat propagates NULL, so a NULL text would null the
-        # whole payload and flip decode_ok for a row the oracle expects TRUE
-        F.concat(
-            F.unhex(header),
-            F.coalesce(F.encode(F.col("text"), "UTF-8"), F.lit(b"")),
-        ).alias("payload"),
+    # coalesce: concat propagates NULL, so a NULL text would null the
+    # whole payload and flip decode_ok for a row the oracle expects TRUE
+    payload = F.concat(
+        F.unhex(header),
+        F.coalesce(F.encode(F.col("text"), "UTF-8"), F.lit(b"")),
     )
-    media = attach_media_metadata(
-        docs, content_column="payload", media_type="image", id_column="doc_id"
-    )
-    return decode_images(media)
+    docs = load_table(spark, sf_dir, "documents")
+    return decode_images(_media(docs, payload, "image"))
 
 
 _AUDIO_ORACLE = """
@@ -3253,25 +3257,9 @@ def multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     entirely in Spark expressions, then decodes them with the pure-Python
     header parser — the oracle recomputes the expected stream parameters
     from doc_id, so the decode path is value-checked end to end."""
-    from bdq_spark.operators.multimodal import attach_media_metadata, decode_audio
+    from bdq_spark.operators.multimodal import decode_audio
 
     did = F.col("doc_id").cast("bigint")
-
-    def he(col, width):  # big-endian hex, zero-padded to `width` nibbles
-        return F.lpad(F.hex(col), width, "0")
-
-    def le16(col):
-        return F.concat(
-            he(col % 256, 2), he(F.floor(col / 256).cast("bigint") % 256, 2)
-        )
-
-    def le32(col):  # little-endian 4-byte hex of a value < 2^32
-        return F.concat(
-            he(col % 256, 2),
-            he(F.floor(col / 256).cast("bigint") % 256, 2),
-            he(F.floor(col / 65536).cast("bigint") % 256, 2),
-            he(F.floor(col / 16777216).cast("bigint") % 256, 2),
-        )
 
     ch = (F.floor(did / 2).cast("bigint") % 2 + 1).cast("bigint")
     # WAV: PCM 16-bit, rate 8..36 kHz, declared data chunk sizes the file
@@ -3302,17 +3290,12 @@ def multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("0000" * 5), he(v, 16), F.lit("00" * 16),      # pad, packed, md5
     )
     header = F.when(did % 2 == 0, wav).otherwise(flac)
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.unhex(header),
-            F.coalesce(F.encode(F.col("text"), "UTF-8"), F.lit(b"")),
-        ).alias("payload"),
+    payload = F.concat(
+        F.unhex(header),
+        F.coalesce(F.encode(F.col("text"), "UTF-8"), F.lit(b"")),
     )
-    media = attach_media_metadata(
-        docs, content_column="payload", media_type="audio", id_column="doc_id"
-    )
-    return decode_audio(media)
+    docs = load_table(spark, sf_dir, "documents")
+    return decode_audio(_media(docs, payload, "audio"))
 
 
 _BMP_PIXEL_ORACLE = """
@@ -3345,24 +3328,11 @@ def multimodal_bmp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec-stub boundary must report ``decode_ok=false`` with zeroed
     stats, and the oracle checks that refusal too.
     """
-    from bdq_spark.operators.multimodal import (
-        attach_media_metadata,
-        image_pixel_stats,
-    )
+    from bdq_spark.operators.multimodal import image_pixel_stats
 
     did = F.col("doc_id").cast("bigint")
     w = (did % 4 + 1).cast("bigint")
     h = (did % 3 + 1).cast("bigint")
-
-    def he(col, width):  # big-endian hex, zero-padded to `width` nibbles
-        return F.lpad(F.hex(col), width, "0")
-
-    def le32(col):  # little-endian 4-byte hex of a value < 2^16
-        return F.concat(
-            he(col % 256, 2),
-            he(F.floor(col / 256).cast("bigint"), 2),
-            F.lit("0000"),
-        )
 
     pad = (4 - (w * 3) % 4) % 4  # pad bytes per row
     row_bytes = w * 3
@@ -3397,12 +3367,7 @@ def multimodal_bmp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("0802000000DEADBEEF"),
     )
     payload = F.unhex(F.when(did % 5 == 0, png).otherwise(bmp))
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", payload.alias("payload")
-    )
-    media = attach_media_metadata(
-        docs, content_column="payload", media_type="image", id_column="doc_id"
-    )
+    media = _media(load_table(spark, sf_dir, "documents"), payload, "image")
     return image_pixel_stats(media).select(
         "media_id",
         "width",
@@ -3442,29 +3407,10 @@ def multimodal_wav_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fifth document gets a COMPRESSED payload (FLAC) — the stub boundary
     reports ``decode_ok=false``, checked by the oracle.
     """
-    from bdq_spark.operators.multimodal import (
-        attach_media_metadata,
-        audio_pcm_stats,
-    )
+    from bdq_spark.operators.multimodal import audio_pcm_stats
 
     did = F.col("doc_id").cast("bigint")
     n = (did % 50 + 1).cast("bigint")
-
-    def he(col, width):
-        return F.lpad(F.hex(col), width, "0")
-
-    def le16(col):
-        return F.concat(
-            he(col % 256, 2), he(F.floor(col / 256).cast("bigint") % 256, 2)
-        )
-
-    def le32(col):
-        return F.concat(
-            he(col % 256, 2),
-            he(F.floor(col / 256).cast("bigint") % 256, 2),
-            he(F.floor(col / 65536).cast("bigint") % 256, 2),
-            he(F.floor(col / 16777216).cast("bigint") % 256, 2),
-        )
 
     data_size = n * 2
     samples_hex = F.array_join(
@@ -3484,12 +3430,7 @@ def multimodal_wav_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     flac = F.lit("664C6143" + "00" * 30)  # compressed: decoder refuses
     payload = F.unhex(F.when(did % 5 == 0, flac).otherwise(wav))
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", payload.alias("payload")
-    )
-    media = attach_media_metadata(
-        docs, content_column="payload", media_type="audio", id_column="doc_id"
-    )
+    media = _media(load_table(spark, sf_dir, "documents"), payload, "audio")
     return audio_pcm_stats(media).select(
         "media_id",
         "n_samples",
@@ -3551,16 +3492,10 @@ def multimodal_mp3_stream_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     without losing the complete ones.  After this entry the multimodal
     stub boundary is sample-accurate MP3 PCM (MDCT) +
     motion-compensated video codecs ONLY."""
-    from bdq_spark.operators.multimodal import (
-        attach_media_metadata,
-        audio_stream_stats,
-    )
+    from bdq_spark.operators.multimodal import audio_stream_stats
 
     did = F.col("doc_id").cast("bigint")
     nf = did % 4 + 2  # 2..5 frames
-
-    def he(col, width):
-        return F.lpad(F.hex(col), width, "0")
 
     br_table = F.array(*[F.lit(v) for v in _MP3_BR_TABLE])
 
@@ -3583,13 +3518,8 @@ def multimodal_mp3_stream_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(F.sequence(F.lit(0).cast("bigint"), nf - 1), frame_hex),
         "",
     )
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.unhex(stream).alias("payload")
-    )
-    media = attach_media_metadata(
-        docs, content_column="payload", media_type="audio",
-        id_column="doc_id",
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    media = _media(docs, F.unhex(stream), "audio")
     return audio_stream_stats(media).select(
         "media_id",
         "frames",
@@ -3637,24 +3567,13 @@ def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     document gets an Adam7-INTERLACED PNG — the honest-refusal
     boundary must report ``decode_ok=false``, checked by the oracle.
     """
-    from bdq_spark.operators.multimodal import (
-        attach_media_metadata,
-        image_pixel_stats,
-    )
+    from bdq_spark.operators.multimodal import image_pixel_stats
 
     did = F.col("doc_id").cast("bigint")
     w = (did % 4 + 1).cast("bigint")
     h = (did % 3 + 1).cast("bigint")
     npix = w * h
     nstream = h * (w + 1)  # + one filter byte per scanline
-
-    def he(col, width):  # big-endian hex, zero-padded to `width` nibbles
-        return F.lpad(F.hex(col), width, "0")
-
-    def le16(col):
-        return F.concat(
-            he(col % 256, 2), he(F.floor(col / 256).cast("bigint") % 256, 2)
-        )
 
     zero = F.lit(0).cast("bigint")
     pix = lambda p: (did * 31 + p) % 256  # noqa: E731
@@ -3706,12 +3625,8 @@ def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("00000000"),                             # IDAT CRC (unchecked)
         F.lit("00000000" "49454E44" "00000000"),       # IEND
     )
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.unhex(png).alias("payload")
-    )
-    media = attach_media_metadata(
-        docs, content_column="payload", media_type="image", id_column="doc_id"
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    media = _media(docs, F.unhex(png), "image")
     return image_pixel_stats(media).select(
         "media_id",
         "width",
@@ -3747,22 +3662,16 @@ def pruned_scan_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     — only the plan assertion catches it.  Values hash against
     DuckDB's filter over the unpartitioned source, proving the layout
     is content-preserving."""
-    import hashlib
-    import os
+    from bdq_spark.sources.sinks import write_partitioned
 
-    key = hashlib.md5(f"{sf_dir}:ppart_orders".encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"bdq_ppart_orders_{key}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        from bdq_spark.sources.sinks import write_partitioned
-
-        write_partitioned(
+    path, _ = _staged(
+        "ppart_orders", sf_dir, "orders",
+        lambda p: write_partitioned(
             load_table(spark, sf_dir, "orders"),
-            path,
+            p,
             partition_by=["o_orderstatus"],
-        )
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
+        ),
+    )
     out = (
         spark.read.parquet(path)
         .filter(
@@ -3822,9 +3731,6 @@ def zonemap_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     would still return correct rows, only the census check catches it.
     Values hash against DuckDB's filter over the raw table, proving
     interval-overlap pruning is lossless."""
-    import hashlib
-    import os
-
     from bdq_spark.operators.layout import zorder_layout
     from bdq_spark.sources.sinks import (
         read_zonemap,
@@ -3832,10 +3738,7 @@ def zonemap_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         zonemap_candidate_files,
     )
 
-    key = hashlib.md5(f"{sf_dir}:zonemap_orders:v2".encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"bdq_zonemap_orders_{key}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
+    def build(path: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_orderpriority",
@@ -3856,8 +3759,8 @@ def zonemap_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_zonemap(
             spark, laid, path, ["o_date_days", "o_price_cents"]
         )
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
+
+    path, _ = _staged("zonemap_orders", sf_dir, "orders", build, version=2)
     preds = {
         "o_date_days": (9862, 10226),       # calendar year 1997
         "o_price_cents": (20000000, 30000000),
@@ -4056,7 +3959,6 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     yields nothing (MP4 sample tables are codec-land; the honest
     boundary)."""
     from bdq_spark.operators.multimodal import (
-        attach_media_metadata,
         decode_video,
         sample_container_frames,
     )
@@ -4065,17 +3967,6 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     nf = did % 6 + 1
     w = did % 5 + 16
     h = did % 4 + 9
-
-    def he(col, width):  # big-endian hex, zero-padded to `width` nibbles
-        return F.lpad(F.hex(col), width, "0")
-
-    def le32(col):
-        return F.concat(
-            he(col % 256, 2),
-            he(F.floor(col / 256).cast("bigint") % 256, 2),
-            he(F.floor(col / 65536).cast("bigint") % 256, 2),
-            he(F.floor(col / 16777216).cast("bigint") % 256, 2),
-        )
 
     zero = F.lit(0).cast("bigint")
     flen = lambda i: (did + i) % 7 + 1  # noqa: E731
@@ -4139,7 +4030,7 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     # width instead of inside the scan's single task
     docs = _spread_narrow_scan(
         load_table(spark, sf_dir, "documents").select("doc_id")
-    ).select("doc_id", payload.alias("payload"))
+    )
     # NOTE (OPTIMIZATION_r14, measured and REJECTED): the meta and
     # frame-walk branches below fork the plan, so the AVI/MP4
     # hex-synthesis expression runs twice per row (RIFF literal appears
@@ -4150,9 +4041,7 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SF) is far below the job floor (~0.3 s); the ids-only scan alone
     # is 0.89 s.  The double synthesis stays until payload volume, not
     # job latency, dominates.
-    media = attach_media_metadata(
-        docs, content_column="payload", media_type="video", id_column="doc_id"
-    )
+    media = _media(docs, payload, "video")
     meta = decode_video(media).select(
         "media_id", "format", "width", "height", "duration_ms", "n_frames"
     )
@@ -4230,24 +4119,10 @@ def multimodal_mjpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     document's FIRST frame is truncated mid-header — the per-frame
     honest-refusal row the oracle also predicts."""
     from bdq_spark.operators.jpeg import encode_flat_jpeg
-    from bdq_spark.operators.multimodal import (
-        attach_media_metadata,
-        video_pixel_stats,
-    )
+    from bdq_spark.operators.multimodal import video_pixel_stats
 
     did = F.col("doc_id").cast("bigint")
     nf = did % 3 + 2  # 2..4 frames
-
-    def he(col, width):  # big-endian hex, zero-padded to `width` nibbles
-        return F.lpad(F.hex(col), width, "0")
-
-    def le32(col):
-        return F.concat(
-            he(col % 256, 2),
-            he(F.floor(col / 256).cast("bigint") % 256, 2),
-            he(F.floor(col / 65536).cast("bigint") % 256, 2),
-            he(F.floor(col / 16777216).cast("bigint") % 256, 2),
-        )
 
     zero = F.lit(0).cast("bigint")
     wide = F.array(*[F.lit(encode_flat_jpeg(g * 17, 16, 8).hex().upper())
@@ -4300,10 +4175,8 @@ def multimodal_mjpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (OPTIMIZATION_r14; see _spread_narrow_scan)
     docs = _spread_narrow_scan(
         load_table(spark, sf_dir, "documents").select("doc_id")
-    ).select("doc_id", F.unhex(avi).alias("payload"))
-    media = attach_media_metadata(
-        docs, content_column="payload", media_type="video", id_column="doc_id"
     )
+    media = _media(docs, F.unhex(avi), "video")
     return video_pixel_stats(media)
 
 
@@ -4373,20 +4246,9 @@ def multimodal_adpcm_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchecked step, the same standard as the md5-twin ANN entries.
     Every fifth document gets an MP3 payload — the stub boundary
     reports ``decode_ok=false``, checked by the oracle too."""
-    from bdq_spark.operators.multimodal import (
-        attach_media_metadata,
-        audio_pcm_stats,
-    )
+    from bdq_spark.operators.multimodal import audio_pcm_stats
 
     did = F.col("doc_id").cast("bigint")
-
-    def he(col, width):
-        return F.lpad(F.hex(col), width, "0")
-
-    def le16(col):
-        return F.concat(
-            he(col % 256, 2), he(F.floor(col / 256).cast("bigint") % 256, 2)
-        )
 
     pred0 = (did * 131) % 4001 - 2000
     idx0 = did % 89
@@ -4414,12 +4276,7 @@ def multimodal_adpcm_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mp3 = F.lit("FFFB9000" + "00" * 40)  # MP3 frame: decoder refuses
     payload = F.unhex(F.when(did % 5 == 0, mp3).otherwise(wav))
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", payload.alias("payload")
-    )
-    media = attach_media_metadata(
-        docs, content_column="payload", media_type="audio", id_column="doc_id"
-    )
+    media = _media(load_table(spark, sf_dir, "documents"), payload, "audio")
     return audio_pcm_stats(media).select(
         "media_id",
         "n_samples",
@@ -4467,26 +4324,12 @@ def multimodal_rle8_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every 7th document's SECOND frame drops its end-of-bitmap marker —
     the strict profile refuses it (undefined pixels are never guessed),
     and the oracle predicts that refusal."""
-    from bdq_spark.operators.multimodal import (
-        attach_media_metadata,
-        video_pixel_stats,
-    )
+    from bdq_spark.operators.multimodal import video_pixel_stats
 
     did = F.col("doc_id").cast("bigint")
     w = did % 5 + 2
     h = did % 3 + 1
     zero = F.lit(0).cast("bigint")
-
-    def he(col, width):
-        return F.lpad(F.hex(col), width, "0")
-
-    def le32(col):
-        return F.concat(
-            he(col % 256, 2),
-            he(F.floor(col / 256).cast("bigint") % 256, 2),
-            he(F.floor(col / 65536).cast("bigint") % 256, 2),
-            he(F.floor(col / 16777216).cast("bigint") % 256, 2),
-        )
 
     palette_hex = "".join(
         f"{(i * 37) % 256 if i % 4 != 3 else 0:02X}" for i in range(32)
@@ -4555,10 +4398,8 @@ def multimodal_rle8_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # see multimodal_mjpeg_pixel_stats: decode at session width
     docs = _spread_narrow_scan(
         load_table(spark, sf_dir, "documents").select("doc_id")
-    ).select("doc_id", F.unhex(avi).alias("payload"))
-    media = attach_media_metadata(
-        docs, content_column="payload", media_type="video", id_column="doc_id"
     )
+    media = _media(docs, F.unhex(avi), "video")
     return video_pixel_stats(media).select(
         "media_id", "frame_idx", "width", "height",
         F.round("mean_brightness", 6).alias("mean_brightness"),
@@ -4786,9 +4627,7 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain batch GROUP BY oracle — the streaming/batch unification
     guarantee, verified."""
     ev = load_table(spark, sf_dir, "events")
-    # staged once per (sf_dir, table), reused across invocations: the
-    # stream must read plain micros timestamps (see load_table notes)
-    src = _stage_table_dir(spark, sf_dir, "events")
+    src = _events_dir(spark, sf_dir)
     sink = "swc_sink"
 
     sdf = spark.readStream.schema(ev.schema).parquet(src)
@@ -4797,14 +4636,12 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 day"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    q = (
+    _run_available_now(
+        "streaming_windowed_counts",
         agg.writeStream.outputMode("complete")
         .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
+        .queryName(sink),
     )
-    q.awaitTermination()
     # detach the (small) result from the memory-sink view, then drop the
     # view — otherwise each invocation pins a complete-mode result table
     # in driver memory for the session's lifetime
@@ -4842,7 +4679,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bdq_spark.streaming import interval_join
 
     ev = load_table(spark, sf_dir, "events")
-    src = _stage_table_dir(spark, sf_dir, "events")
+    src = _events_dir(spark, sf_dir)
     sink = "ssj_sink"
 
     def side(event_type: str) -> DataFrame:
@@ -4871,14 +4708,12 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a private session, so the caller's conf is untouched; the memory
     # sink registers its table in that session.
     stream = private_session(spark, {"spark.sql.shuffle.partitions": "8"})
-    q = (
+    _run_available_now(
+        "streaming_interval_join",
         rebind(joined, stream).writeStream.outputMode("append")
         .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
+        .queryName(sink),
     )
-    q.awaitTermination()
     out = stream.table(sink).select(
         "user_id",
         F.unix_millis("l_ts").alias("l_ts_ms"),
@@ -5107,29 +4942,15 @@ def pipeline_odd_even(spark: SparkSession, sf_dir: str) -> DataFrame:
 # E8/E10 — streaming foreachBatch + state store round trip (rows-only)
 # ---------------------------------------------------------------------------
 
-def _stage_table_dir(
-    spark: SparkSession, sf_dir: str, table: str, format: str = "parquet"
-) -> str:
-    """Stage a testdata table into a DIRECTORY of the given format
-    (FileStreamSource rejects single files; the JSONL ingest entry needs
-    a JSON copy) — once per (sf_dir, table, format) per machine, reused
-    by every later invocation instead of leaking a fresh full copy into
-    /tmp per bench rep."""
-    import hashlib
-    import os
-
-    key = hashlib.md5(f"{sf_dir}:{table}:{format}".encode()).hexdigest()[:12]
-    path = os.path.join(
-        tempfile.gettempdir(), f"bdq_stage_{table}_{key}"
-    )
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, table).write.mode("overwrite").format(
-            format
-        ).save(path)
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
-    return path
+def _events_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The events table staged once as a parquet DIRECTORY — the
+    streaming entries' file source (FileStreamSource rejects single
+    files) — read back with plain micros timestamps (see
+    ``load_table``)."""
+    return _staged(
+        "events_parquet", sf_dir, "events",
+        lambda p: load_table(spark, sf_dir, "events").write.parquet(p),
+    )[0]
 
 
 @_register("jsonl_ingest_documents", "SELECT doc_id, text FROM documents")
@@ -5141,7 +4962,10 @@ def jsonl_ingest_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     is content-preserving, not just runnable."""
     from bdq_spark.sources.readers import read_json, split_corrupt
 
-    src = _stage_table_dir(spark, sf_dir, "documents", format="json")
+    src, _ = _staged(
+        "documents_json", sf_dir, "documents",
+        lambda p: load_table(spark, sf_dir, "documents").write.json(p),
+    )
     df = read_json(spark, src, "doc_id bigint, text string")
     clean, _bad = split_corrupt(df)
     return clean.select("doc_id", "text")
@@ -5163,22 +4987,15 @@ def csv_ingest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     read quarantines exactly the planted garbage; the clean side is
     value-checked against the parquet source.  Raises if the quarantine
     missed or over-caught (planted count is known)."""
-    import hashlib
-    import os
-
     from bdq_spark.sources.readers import read_csv, split_corrupt
 
     schema = "event_id bigint, user_id bigint, event_type string, value double"
 
-    key = hashlib.md5(f"{sf_dir}:events_csv".encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"bdq_stage_events_csv_{key}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
+    def build(path: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .select("event_id", "user_id", "event_type", "value")
-            .write.mode("overwrite")
-            .option("header", True)
+            .write.option("header", True)
             .csv(path)
         )
         # plant malformed lines (first line mimics the header — with
@@ -5188,8 +5005,8 @@ def csv_ingest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write("one,two,three,four,five,six,seven\n")  # wrong arity
             fh.write("not_a_number,7,click,1.5\n")  # bigint parse failure
             fh.write("42,13,click,not_a_double\n")  # double parse failure
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
+
+    path, _ = _staged("events_csv", sf_dir, "events", build)
     df = read_csv(spark, path, schema)
     clean, bad = split_corrupt(df)
     n_bad = bad.count()
@@ -5338,26 +5155,22 @@ def compact_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-read and value-checked against the source — proving the rewrite
     is content-preserving.  Raises unless the file count actually
     shrank."""
-    import hashlib
-    import os
-
     from bdq_spark.sources.sinks import compact_parquet
 
-    key = hashlib.md5(f"{sf_dir}:compact".encode()).hexdigest()[:12]
-    frag = os.path.join(tempfile.gettempdir(), f"bdq_frag_orders_{key}")
-    out = os.path.join(tempfile.gettempdir(), f"bdq_compacted_orders_{key}")
-    marker = os.path.join(out, "_COMPACTED")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "orders").repartition(64).write.mode(
-            "overwrite"
-        ).parquet(frag)
-        stats = compact_parquet(spark, frag, out, target_bytes=1 << 30)
+    def build(path: str) -> None:
+        frag = os.path.join(path, "frag")
+        load_table(spark, sf_dir, "orders").repartition(64).write.parquet(
+            frag
+        )
+        stats = compact_parquet(
+            spark, frag, os.path.join(path, "out"), target_bytes=1 << 30
+        )
         if stats["files_after"] >= stats["files_before"]:
             raise RuntimeError(f"compaction did not shrink files: {stats}")
-        with open(marker, "w") as fh:
-            fh.write(str(stats))
+
+    path, _ = _staged("compacted_orders", sf_dir, "orders", build)
     return (
-        spark.read.parquet(out)
+        spark.read.parquet(os.path.join(path, "out"))
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -5381,7 +5194,10 @@ def orc_roundtrip_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checking that the format conversion is content-preserving.
     Predicate/column pushdown works on ORC scans the same as parquet
     (exercised by the aggregate's column pruning)."""
-    src = _stage_table_dir(spark, sf_dir, "supplier", format="orc")
+    src, _ = _staged(
+        "supplier_orc", sf_dir, "supplier",
+        lambda p: load_table(spark, sf_dir, "supplier").write.orc(p),
+    )
     return (
         spark.read.orc(src)
         .groupBy("s_nationkey")
@@ -5414,7 +5230,10 @@ def streaming_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream checkpoint must be FRESH per invocation (an existing one
     # would mark all files processed -> zero batches); the staged source
     # is reused across invocations
-    src = _stage_table_dir(spark, sf_dir, "region")
+    src, _ = _staged(
+        "region_parquet", sf_dir, "region",
+        lambda p: load_table(spark, sf_dir, "region").write.parquet(p),
+    )
     ckpt = tempfile.mkdtemp(prefix="entry_feb_ckpt_")
     region = load_table(spark, sf_dir, "region")
     acc: dict = defaultdict(lambda: [0, 0])
@@ -8310,17 +8129,9 @@ def orders_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge law as a storage story, not just an algebraic test).  The
     rollup staging is marker-cached; steady-state cost is the rollup
     scan only."""
-    import hashlib
-    import os
+    from bdq_spark.operators.sketches import hll_estimate, hll_registers
 
-    from bdq_spark.operators.sketches import hll_estimate
-
-    key = hashlib.md5(f"{sf_dir}:hll_rollup:v2".encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"bdq_hll_rollup_{key}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        from bdq_spark.operators.sketches import hll_registers
-
+    def build(path: str) -> None:
         orders = load_table(spark, sf_dir, "orders").withColumn(
             "day", F.col("o_orderdate").cast("date")
         )
@@ -8332,9 +8143,9 @@ def orders_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the same slice pruning without the directory explosion.
         hll_registers(
             orders, "o_custkey", ("o_orderpriority", "day"), b=8
-        ).sort("day").coalesce(4).write.mode("overwrite").parquet(path)
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
+        ).sort("day").coalesce(4).write.parquet(path)
+
+    path, _ = _staged("hll_rollup", sf_dir, "orders", build, version=2)
     rollup = spark.read.parquet(path)
     merged = rollup.groupBy("o_orderpriority", "bucket").agg(
         F.max("register").alias("register")
@@ -8998,8 +8809,7 @@ def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; the merge law is what this entry pins)."""
     from bdq_spark.operators.sketches import hll_estimate, hll_registers
 
-    src = _stage_table_dir(spark, sf_dir, "events")
-    ckpt = tempfile.mkdtemp(prefix="entry_shll_ckpt_")
+    src = _events_dir(spark, sf_dir)
     ev_schema = load_table(spark, sf_dir, "events").schema
     regs: dict = {}
     seen_batches: set = set()
@@ -9015,23 +8825,13 @@ def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             if regs.get(r.bucket, 0) < r.register:
                 regs[r.bucket] = r.register
 
-    q = (
+    _run_available_now(
+        "streaming_hll_distinct",
         spark.readStream.schema(ev_schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(fold),
     )
-    try:
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming_hll_distinct: stream did not finish in 300 s"
-            )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     if not n_batches[0]:
         raise RuntimeError("stream terminated without processing any batch")
     reg_df = spark.createDataFrame(
@@ -9067,32 +8867,20 @@ def bloom_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``collect`` (same class as the IVF sample).  Values hash against
     DuckDB's scalar-subquery filter over the raw table, proving the
     pruning is lossless."""
-    import hashlib
-    import os
-
     from bdq_spark.sources.sinks import (
         bloom_candidate_files,
         read_bloom,
         write_bloom_index,
     )
 
-    # v5: exploded (file, col, word) parquet sidecar (r9; v4 was a
-    # dense word-array draft, v3 the packed-bitmap JSON).  Bump on any
-    # staging/index change so cached stale dirs regenerate instead of
-    # silently testing the old index.
-    key = hashlib.md5(f"{sf_dir}:bloom_orders:v5".encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"bdq_bloom_orders_{key}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
+    def build(path: str) -> dict:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_custkey",
             "o_orderdate",
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
-        orders.repartitionByRange(16, "o_orderdate").write.mode(
-            "overwrite"
-        ).parquet(path)
+        orders.repartitionByRange(16, "o_orderdate").write.parquet(path)
         # size the filter to the data: ~16 bits per expected per-file
         # key (FP well under 1%), next power of two, floor 16384 — a
         # fixed bits value that prunes at sf0.01 saturates at 10x the
@@ -9105,16 +8893,13 @@ def bloom_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pin the probe key at staging so the steady-state query path is
         # pure index-resolve + pruned scan (a per-run max() would put a
         # full table scan in front of the point lookup being measured)
-        probe_val = (
-            spark.read.parquet(path)
-            .agg(F.max("o_orderkey").alias("k"))
-            .collect()[0]
-            .k
-        )
-        with open(marker, "w") as fh:
-            fh.write(f"{sf_dir}\n{probe_val}")
-    with open(marker) as fh:
-        probe = int(fh.read().splitlines()[1])
+        probe = spark.read.parquet(path).agg(F.max("o_orderkey")).first()[0]
+        return {"probe": probe}
+
+    # v5: exploded (file, col, word) parquet sidecar (r9; v4 was a
+    # dense word-array draft, v3 the packed-bitmap JSON)
+    path, facts = _staged("bloom_orders", sf_dir, "orders", build, version=5)
+    probe = facts["probe"]
     census = bloom_candidate_files(spark, path, {"o_orderkey": probe})
     if not census["files"] or len(census["files"]) >= census["total"]:
         raise RuntimeError(
@@ -9126,6 +8911,20 @@ def bloom_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "o_orderkey", "o_custkey", "cents"
     )
+
+
+def _max_orderkey_row(spark: SparkSession, path: str) -> dict:
+    """The staged orders dir's max ``o_orderkey`` and its epoch day —
+    the probe the indexed-scan entries pin at staging, so their steady
+    state runs no full scan to find it."""
+    row = (
+        spark.read.parquet(path)
+        .orderBy(F.desc("o_orderkey"))
+        .select("o_orderkey", "o_date_days")
+        .limit(1)
+        .collect()[0]
+    )
+    return {"probe": row.o_orderkey, "day": row.o_date_days}
 
 
 @_register(
@@ -9156,9 +8955,6 @@ def indexed_scan_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     must not exceed either side.  Probe key and its day are pinned at
     staging (no per-run full scan).  Values hash against the raw-table
     filter, proving both prunings compose losslessly."""
-    import hashlib
-    import os
-
     from bdq_spark.operators.layout import zorder_layout
     from bdq_spark.sources.sinks import (
         bloom_candidate_files,
@@ -9169,10 +8965,7 @@ def indexed_scan_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         zonemap_candidate_files,
     )
 
-    key = hashlib.md5(f"{sf_dir}:indexed_orders:v3".encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"bdq_indexed_orders_{key}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
+    def build(path: str) -> dict:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_custkey",
@@ -9194,18 +8987,12 @@ def indexed_scan_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         while bits < 16 * (n_rows // 16 + 1):
             bits *= 2
         write_bloom_index(spark, path, ["o_orderkey"], bits=bits, hashes=5)
-        probe_row = (
-            spark.read.parquet(path)
-            .orderBy(F.desc("o_orderkey"))
-            .select("o_orderkey", "o_date_days")
-            .limit(1)
-            .collect()[0]
-        )
-        with open(marker, "w") as fh:
-            fh.write(f"{sf_dir}\n{probe_row.o_orderkey}\n{probe_row.o_date_days}")
-    with open(marker) as fh:
-        _, probe_s, day_s = fh.read().splitlines()
-    probe, day = int(probe_s), int(day_s)
+        return _max_orderkey_row(spark, path)
+
+    path, facts = _staged(
+        "indexed_orders", sf_dir, "orders", build, version=3
+    )
+    probe, day = facts["probe"], facts["day"]
     ranges = {"o_date_days": (day - 30, day + 30)}
     equals = {"o_orderkey": probe}
     cz = zonemap_candidate_files(spark, path, ranges)
@@ -9260,9 +9047,6 @@ def indexed_append_scan_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     is as lossless as a full rebuild.  New-file discovery at staging is
     an input_file_name diff (bounded by the staged dir's file count;
     a production appender passes the paths it just wrote)."""
-    import hashlib
-    import os
-
     from bdq_spark.sources.sinks import (
         append_bloom,
         append_zonemap,
@@ -9275,17 +9059,7 @@ def indexed_append_scan_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         zonemap_manifest,
     )
 
-    # v2: bloom bits sized from the FULL expected row count (ADVICE r9 —
-    # v1 auto-sized from the gen1-only census, so gen2 doubled the key
-    # population under the same bits and the per-file FPR ran at half
-    # the intended bits/row vs the sibling indexed entries); bump on any
-    # staging/index change so cached stale dirs regenerate instead of
-    # silently testing old data
-    key = hashlib.md5(f"{sf_dir}:indexed_append_orders:v2".encode())\
-        .hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"bdq_idx_append_{key}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
+    def build(path: str) -> dict:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_custkey",
@@ -9326,21 +9100,14 @@ def indexed_append_scan_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_files = sorted(all_files - gen1_files)
         append_zonemap(spark, path, new_files)
         append_bloom(spark, path, new_files)
-        probe_row = (
-            spark.read.parquet(path)
-            .orderBy(F.desc("o_orderkey"))
-            .select("o_orderkey", "o_date_days")
-            .limit(1)
-            .collect()[0]
-        )
-        with open(marker, "w") as fh:
-            fh.write(
-                f"{sf_dir}\n{probe_row.o_orderkey}\n"
-                f"{probe_row.o_date_days}\n{len(all_files)}"
-            )
-    with open(marker) as fh:
-        _, probe_s, day_s, nf_s = fh.read().splitlines()
-    probe, day, n_files = int(probe_s), int(day_s), int(nf_s)
+        return {**_max_orderkey_row(spark, path), "n_files": len(all_files)}
+
+    # v2: bloom bits sized from the FULL expected row count (ADVICE r9 —
+    # v1 auto-sized from the gen1-only census, so gen2 doubled the key
+    # population under the same bits and the per-file FPR ran at half
+    # the intended bits/row vs the sibling indexed entries)
+    path, facts = _staged("idx_append", sf_dir, "orders", build, version=2)
+    probe, day, n_files = facts["probe"], facts["day"], facts["n_files"]
     ranges = {"o_date_days": (day - 30, day + 30)}
     equals = {"o_orderkey": probe}
     cz = zonemap_candidate_files(spark, path, ranges)
@@ -9426,9 +9193,6 @@ def streaming_ingest_dedup_index(
     wrote).  Scale: per-trigger cost is O(batch + distinct corpus
     fingerprints + new files) — nothing re-scans or re-indexes the
     accumulated corpus."""
-    import hashlib
-    import os
-
     from bdq_spark.operators.dedup import incremental_fingerprint_dedup
     from bdq_spark.sources.sinks import (
         append_bloom,
@@ -9440,14 +9204,7 @@ def streaming_ingest_dedup_index(
         zonemap_candidate_files,
     )
 
-    key = hashlib.md5(f"{sf_dir}:stream_dedup_idx:v1".encode()).hexdigest()[
-        :12
-    ]
-    feed_dir = os.path.join(
-        tempfile.gettempdir(), f"bdq_stage_sdi_feed_{key}"
-    )
-    marker = os.path.join(feed_dir, "_STAGED")
-    if not os.path.exists(marker):
+    def build(path: str) -> dict:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text", "lang", "n_chars"
         )
@@ -9464,41 +9221,27 @@ def streaming_ingest_dedup_index(
         # third PLUS every duplicate (+1e7 ids) — so g2-originals' dups
         # are INTRA-batch (min-id keeper within one trigger) and
         # g0/g1-originals' dups are CROSS-batch (anti-join vs corpus)
-        parts = [
+        _write_feed(path, [
             feed.filter(F.col("doc_id") < t1),
             feed.filter((F.col("doc_id") >= t1) & (F.col("doc_id") < t2)),
             feed.filter(F.col("doc_id") >= t2),
-        ]
-        # fixed epoch (not wall clock): staged dirs cache across runs and
-        # FileStreamSource ages files against the NEWEST seen timestamp,
-        # so any fixed base keeps all three inside the maxFileAge window
-        base_ts = 1_700_000_000
-        for i, p in enumerate(parts):
-            gdir = os.path.join(feed_dir, f"g{i}")
-            p.coalesce(1).write.mode("overwrite").parquet(gdir)
-            for fname in os.listdir(gdir):
-                os.utime(
-                    os.path.join(gdir, fname),
-                    (base_ts + 3600 * i, base_ts + 3600 * i),
-                )
-        total_rows = feed.count()
+        ])
         kept = feed.groupBy(
             F.md5(
                 F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
             ).alias("f")
         ).agg(F.min("doc_id").alias("k"))
-        expected_kept = kept.count()
-        probe = kept.agg(F.max("k")).first()[0]
-        with open(marker, "w") as fh:
-            fh.write(f"{sf_dir}\n{total_rows}\n{expected_kept}\n{probe}")
-    with open(marker) as fh:
-        _, total_s, kept_s, probe_s = fh.read().splitlines()
-    total_rows, expected_kept, probe = (
-        int(total_s), int(kept_s), int(probe_s),
-    )
+        return {
+            "total_rows": feed.count(),
+            "expected_kept": kept.count(),
+            "probe": kept.agg(F.max("k")).first()[0],
+        }
+
+    feed_dir, facts = _staged("sdi_feed", sf_dir, "documents", build)
+    total_rows, expected_kept = facts["total_rows"], facts["expected_kept"]
+    probe = facts["probe"]
 
     corpus = tempfile.mkdtemp(prefix="entry_sdi_corpus_")
-    ckpt = tempfile.mkdtemp(prefix="entry_sdi_ckpt_")
     # bloom bits sized from the FULL expected ingest (kept ≤ total), the
     # sizing basis the append path extends under (ADVICE r9)
     bits = 16384
@@ -9610,25 +9353,15 @@ def streaming_ingest_dedup_index(
                 shared.unpersist()
 
     try:
-        stream = (
+        _run_available_now(
+            "streaming_ingest_dedup_index",
             spark.readStream.schema(
                 "doc_id bigint, text string, lang string, n_chars bigint"
             )
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{feed_dir}/g*")
+            .writeStream.foreachBatch(ingest),
         )
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming_ingest_dedup_index: stream did not finish "
-                "within 300 s — refusing to probe a partial corpus"
-            )
         n_kept = spark.read.schema(corpus_ddl).parquet(corpus).count()
         if n_kept != expected_kept:
             raise RuntimeError(
@@ -9673,7 +9406,6 @@ def streaming_ingest_dedup_index(
         )
     finally:
         shutil.rmtree(corpus, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 _MATVIEW_ORACLE = """
@@ -9868,8 +9600,6 @@ def streaming_matview_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay is keyed out by batch_id.  The streaming twin of the IVM
     correctness criterion: stream/batch unification for aggregate
     maintenance, like ``streaming_cdc_merge`` is for MERGE."""
-    import hashlib
-    import os
     from decimal import Decimal
 
     from bdq_spark.operators.matview import agg_view, apply_deltas, view_deltas
@@ -9878,25 +9608,12 @@ def streaming_matview_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys, meas = ["o_orderstatus"], ["o_totalprice"]
     base = orders.where("o_orderkey % 10 < 7")
 
-    key = hashlib.md5(
-        f"{sf_dir}:matview_feed:v{_MATVIEW_FEED_VERSION}".encode()
-    ).hexdigest()[:12]
-    feed_dir = os.path.join(
-        tempfile.gettempdir(), f"bdq_stage_matview_feed_{key}"
+    feed_dir, _ = _staged(
+        "matview_feed", sf_dir, "orders",
+        lambda p: _write_feed(p, _matview_feed(orders, base)),
+        version=_MATVIEW_FEED_VERSION,
     )
-    marker = os.path.join(feed_dir, "_STAGED")
-    expected_marker = f"{sf_dir}:v{_MATVIEW_FEED_VERSION}"
-    staged = os.path.exists(marker) and open(marker).read() == expected_marker
-    if not staged:
-        b1, b2 = _matview_feed(orders, base)
-        for i, b in enumerate((b1, b2)):
-            b.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(feed_dir, f"g{i}")
-            )
-        with open(marker, "w") as fh:
-            fh.write(expected_marker)
 
-    ckpt = tempfile.mkdtemp(prefix="entry_smv_ckpt_")
     acc: dict = {}
     seen: set = set()
     n_batches = [0]
@@ -9911,7 +9628,8 @@ def streaming_matview_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             a[0] += r.sum_o_totalprice
             a[1] += r.cnt
 
-    q = (
+    _run_available_now(
+        "streaming_matview_merge",
         spark.readStream.schema(
             "op string, before_o_orderstatus string, "
             "before_o_totalprice double, after_o_orderstatus string, "
@@ -9919,19 +9637,8 @@ def streaming_matview_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{feed_dir}/g*")
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(fold),
     )
-    try:
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming_matview_merge: stream did not finish in 300 s"
-            )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     if not n_batches[0]:
         raise RuntimeError("stream terminated without processing any batch")
     deltas = spark.createDataFrame(

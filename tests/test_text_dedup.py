@@ -1016,21 +1016,18 @@ def test_trigram_backoff_score_matches_reference(spark):
     assert s[0] > s[1]
 
 
-def test_staged_index_marker_invalidates_on_drift(tmp_path, monkeypatch):
-    """ADVICE r11: the staging marker folds in a DATA fingerprint
+def test_staged_index_marker_invalidates_on_drift(tmp_path):
+    """ADVICE r11: the staged identity folds in a DATA fingerprint
     (source parquet mtime+size) and the full BUILD-PARAMETER set, so
     regenerating the fixture in place or drifting a banding default
     without a version bump regenerates the index instead of silently
     reusing a stale one."""
     import os
-    import shutil
 
     from bdq_spark.entry_queries import (
         _MINHASH_INDEX_PARAMS,
         _index_marker_content,
         _operator_defaults,
-        _stage_index_atomic,
-        _staged_index_ok,
     )
     from bdq_spark.operators.dedup import minhash_band_index
 
@@ -1057,70 +1054,122 @@ def test_staged_index_marker_invalidates_on_drift(tmp_path, monkeypatch):
     os.utime(src, (st.st_atime, st.st_mtime + 10))
     assert _index_marker_content(str(src_dir), "documents", 1, {"n": 3}) != base
 
-    # atomic publish: valid marker only after the rename, tmp dir gone
-    class _FakeWriter:
-        def __init__(self, path):
-            self._p = path
 
-        def mode(self, _):
-            return self
+@pytest.fixture
+def staging_dirs(tmp_path, monkeypatch):
+    """A fake sf_dir with a documents table, and gettempdir() pointed
+    into tmp_path so staged fixtures land there."""
+    import tempfile
 
-        def parquet(self, p):
-            os.makedirs(p, exist_ok=True)
-            with open(os.path.join(p, "part-0.parquet"), "w") as fh:
-                fh.write("data")
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    (sf_dir / "documents.parquet").write_bytes(b"x" * 100)
+    staging = tmp_path / "staging"
+    staging.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(staging))
+    return str(sf_dir), staging
 
-    class _FakeDF:
-        write = property(lambda self: _FakeWriter(None))
 
-    dest = str(tmp_path / "idx")
-    _stage_index_atomic(_FakeDF(), dest, "content-v1")
-    assert _staged_index_ok(dest, "content-v1")
-    assert not _staged_index_ok(dest, "content-v2")
-    leftovers = [d for d in os.listdir(tmp_path) if d.startswith("idx.tmp")]
-    assert leftovers == []
-    shutil.rmtree(dest)
+def _counting_build(calls, facts, delay=0.0):
+    import os
+    import time
 
-    # rename-failure disambiguation (ADVICE r12): an OSError from the
-    # final rename is only acceptable if the dest carries a VALID
-    # marker (a concurrent deterministic builder won); a stale dest
-    # that survived the rmtree must RAISE, not be silently read
-    real_rename = os.rename
+    def build(path):
+        calls.append(path)
+        time.sleep(delay)
+        os.makedirs(path)
+        with open(os.path.join(path, "part-0"), "w") as fh:
+            fh.write("data")
+        return facts
 
-    def _deny_rename(a, b):
-        raise OSError("simulated: dest could not be replaced")
+    return build
 
-    import pytest as _pytest
 
-    # case 1: stale dest (wrong marker) -> the failure surfaces
-    # (the function's local `import os` binds this same module object)
-    stale = str(tmp_path / "idx_stale")
-    _stage_index_atomic(_FakeDF(), stale, "old-content")
-    monkeypatch.setattr(os, "rename", _deny_rename)
-    with _pytest.raises(OSError):
-        _stage_index_atomic(_FakeDF(), stale, "new-content")
-    # case 2: concurrent winner — another builder publishes a VALID
-    # copy between our rmtree and our rename (so the rename fails) ->
-    # swallowed, their copy is used
-    winner = str(tmp_path / "idx_winner")
+def test_staged_builds_once_across_threads(staging_dirs):
+    """Threads staging one tag at once (more threads than cores): the
+    lock lets one build while the others wait, then all of them read
+    the same facts from the marker."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
 
-    def _lose_race_rename(a, b):
-        os.makedirs(winner, exist_ok=True)
-        with open(os.path.join(winner, "_STAGED"), "w") as fh:
-            fh.write("same-content")
-        raise OSError("simulated: concurrent builder won the rename")
+    from bdq_spark.entry_queries import _staged
 
-    monkeypatch.setattr(os, "rename", _lose_race_rename)
-    _stage_index_atomic(_FakeDF(), winner, "same-content")  # no raise
-    assert _staged_index_ok(winner, "same-content")
-    monkeypatch.setattr(os, "rename", real_rename)
+    sf_dir, _ = staging_dirs
+    calls = []
+    build = _counting_build(calls, {"probe": 42}, delay=0.2)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            futures = [
+                pool.submit(_staged, "t", sf_dir, "documents", build)
+                for _ in range(16)
+            ]
+            results = [f.result(timeout=60) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(calls) == 1
+    assert len(set(path for path, _ in results)) == 1
+    assert all(facts == {"probe": 42} for _, facts in results)
+
+
+def test_staged_failed_build_leaves_no_marker(staging_dirs):
+    """A build that raises leaves no marker, so the next call rebuilds
+    instead of trusting a half-written directory."""
+    import os
+
+    from bdq_spark.entry_queries import _staged
+
+    sf_dir, staging = staging_dirs
+
+    def broken(path):
+        os.makedirs(path)
+        raise RuntimeError("simulated build failure")
+
+    with pytest.raises(RuntimeError, match="simulated"):
+        _staged("t", sf_dir, "documents", broken)
+    (staged_dir,) = [d for d in staging.iterdir() if d.is_dir()]
+    assert not (staged_dir / "_STAGED").exists()
+
+    calls = []
+    path, facts = _staged(
+        "t", sf_dir, "documents", _counting_build(calls, {"n": 1})
+    )
+    assert len(calls) == 1 and facts == {"n": 1}
+    assert os.path.exists(os.path.join(path, "_STAGED"))
+
+
+def test_staged_identity_mismatch_rebuilds(staging_dirs):
+    """The same tag under another identity (a version bump, a parameter
+    or source-table drift) rebuilds the directory in place; the same
+    identity reuses it without calling build."""
+    import os
+
+    from bdq_spark.entry_queries import _staged
+
+    sf_dir, _ = staging_dirs
+    calls = []
+    build = _counting_build(calls, {"v": 1})
+    path, _ = _staged("t", sf_dir, "documents", build, version=1)
+    assert _staged("t", sf_dir, "documents", build, version=1) == (
+        path, {"v": 1},
+    )
+    assert len(calls) == 1
+
+    stale = os.path.join(path, "stale-file")
+    open(stale, "w").close()
+    path2, _ = _staged("t", sf_dir, "documents", build, version=2)
+    assert path2 == path and len(calls) == 2
+    assert not os.path.exists(stale)  # removed before the rebuild
+    _staged("t", sf_dir, "documents", build, version=2, params={"k": 1})
+    assert len(calls) == 3
 
 
 def test_persisted_vector_index_probe_steady_state(spark, monkeypatch):
     """The vector-side mirror of the minhash cross-run index (VERDICT
     r11 item 3): first invocation stages the multi-table LSH bucket
     index; the second must be probe-only — proven by poisoning the
-    staging writer (any rebuild would call it and raise).  Both
+    index builder (any rebuild would call it and raise).  Both
     invocations return the identical pair set, and the persisted path
     equals the in-memory two-table probe computed from scratch."""
     import bdq_spark.entry_queries as eq
@@ -1133,11 +1182,11 @@ def test_persisted_vector_index_probe_steady_state(spark, monkeypatch):
 
     def _boom(*a, **kw):  # pragma: no cover - failure path
         raise AssertionError(
-            "_stage_index_atomic called on the steady-state path: the "
+            "_build_vector_index called on the steady-state path: the "
             "persisted vector index was rebuilt instead of loaded"
         )
 
-    monkeypatch.setattr(eq, "_stage_index_atomic", _boom)
+    monkeypatch.setattr(eq, "_build_vector_index", _boom)
     second = sorted(map(tuple, fn(spark, sf_dir).collect()))
     assert second == first
     monkeypatch.undo()

@@ -22,10 +22,12 @@ same signature at pytest time.
 from __future__ import annotations
 
 import math
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 import pyarrow as pa

@@ -22,6 +22,7 @@ import inspect
 import os
 import re
 import sys
+import textwrap
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -128,9 +129,41 @@ def build() -> str:
     oracles = set(entrymod.oracle_sql())
 
     # which registry entries exercise which public name: token search
-    # over each entry's source (conservative — name must appear as a
-    # whole word)
-    entry_src = {name: inspect.getsource(fn) for name, fn in queries.items()}
+    # over each entry's source plus the source of the registry helpers
+    # its body calls, transitively (conservative — name must appear as
+    # a whole word)
+    import bdq_spark.entry_queries as eq
+
+    entry_fns = set(queries.values())
+    helpers = {
+        n: inspect.getsource(f)
+        for n, f in vars(eq).items()
+        if inspect.isfunction(f)
+        and f.__module__ == eq.__name__
+        and f not in entry_fns
+    }
+
+    def helpers_used(src: str) -> set:
+        """Registry helpers named in a function's body — not in its
+        decorator (oracle SQL builders) or its docstring."""
+        (fn,) = ast.parse(textwrap.dedent(src)).body
+        return {
+            n.id
+            for stmt in fn.body
+            for n in ast.walk(stmt)
+            if isinstance(n, ast.Name) and n.id in helpers
+        }
+
+    entry_src = {}
+    for name, fn in queries.items():
+        src = inspect.getsource(fn)
+        todo, used = list(helpers_used(src)), set()
+        while todo:
+            h = todo.pop()
+            if h not in used:
+                used.add(h)
+                todo.extend(helpers_used(helpers[h]))
+        entry_src[name] = "\n".join([src] + [helpers[h] for h in used])
 
     out = [
         "# bdq_spark public API index",

@@ -61,30 +61,15 @@ def main() -> int:
     import shutil
     import tempfile
 
-    import hashlib
-
     from pyspark.sql import functions as F
 
-    from bdq_spark.operators.similarity import (
-        _table_seed,
-        cosine_similarity,
-        lsh_bucket_vectors_md5,
-    )
+    from bdq_spark.operators.similarity import cosine_similarity
 
     geo_planes, geo_tables, geo_dim, geo_thresh = 5, 2, 64, 0.9
-    key = hashlib.md5(f"{SF_DIR}:stream_vec_idx:v2".encode()).hexdigest()[:12]
-    feed_dir = os.path.join(tempfile.gettempdir(), f"bdq_stage_svi_feed_{key}")
+    feed_dir = eq._svi_feed(spark, SF_DIR)
 
     def _buckets(df):
-        acc = None
-        for t in range(geo_tables):
-            ns = F.lit(t * (1 << geo_planes)).cast("long")
-            bt = lsh_bucket_vectors_md5(
-                df, "embedding", "vec_id", geo_planes, geo_dim,
-                seed=_table_seed("bdq_lshq", t),
-            ).select("id", "vec", (F.col("bucket") + ns).alias("bucket"))
-            acc = bt if acc is None else acc.unionByName(bt)
-        return acc
+        return eq._multitable_buckets(df, geo_planes, geo_tables, geo_dim)
 
     index_dir = tempfile.mkdtemp(prefix="svi_decomp_idx_")
     cos = cosine_similarity(F.col("va"), F.col("vb"))
