@@ -635,8 +635,8 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .writeStream.foreachBatch(merge),
         )
         # detach the result from the snapshot path so the per-invocation
-        # dir + checkpoint can be dropped (no unbounded temp growth
-        # across bench reps); localCheckpoint blocks self-release on GC
+        # dir can be dropped (no unbounded temp growth across bench
+        # reps); localCheckpoint blocks self-release on GC
         return (
             read_snapshot(spark, snap_path)
             .select(
