@@ -1806,10 +1806,22 @@ def simhash_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# shared by the md5-hash MinHash/SimHash oracles below: same shingle /
-# token CTEs as near_dup_jaccard, same base hash = first 60 bits of the
-# md5 hex digest — reproducible in DuckDB, unlike xxhash64
-_MINHASH_MD5_ORACLE = r"""
+def _minhash_md5_bands_ctes() -> str:
+    """The ``words/sh/base/sigs/bands`` CTE prefix shared by the md5
+    MinHash oracles: same shingle / token CTEs as near_dup_jaccard, base
+    hash = first 60 bits of the md5 hex digest (reproducible in DuckDB,
+    unlike xxhash64), and the affine coefficients of
+    :func:`~bdq_spark.operators.dedup._minhash_coefficients` as a
+    literal table, so the replay can never drift from the operator."""
+    from bdq_spark.operators.dedup import (
+        _MINHASH_PRIME as p,
+        _minhash_coefficients,
+    )
+
+    coef = ",\n    ".join(
+        f"({i}, {a}, {b})" for i, (a, b) in enumerate(_minhash_coefficients(64))
+    )
+    return f"""
 WITH words AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1826,18 +1838,23 @@ sh AS (
   WHERE shingle <> ''),
 base AS (
   SELECT doc_id,
-         ('0x' || substr(md5(shingle), 1, 15))::BIGINT % 2147483647 AS h
+         ('0x' || substr(md5(shingle), 1, 15))::BIGINT % {p} AS h
   FROM sh),
+coef(i, a, b) AS (
+  VALUES
+    {coef}),
 sigs AS (
-  SELECT doc_id, CAST(t.i AS INTEGER) AS i,
-         min((h * (((2 * t.i + 1) * 2654435761) % 2147483647)
-              + ((t.i * 40503 + 97) % 2147483647)) % 2147483647) AS m
-  FROM base, UNNEST(range(64)) AS t(i)
+  SELECT doc_id, CAST(coef.i AS INTEGER) AS i,
+         min((h * coef.a + coef.b) % {p}) AS m
+  FROM base, coef
   GROUP BY 1, 2),
 bands AS (
   SELECT doc_id, i // 4 AS band,
          string_agg(m::VARCHAR, ',' ORDER BY i) AS band_key
-  FROM sigs GROUP BY doc_id, i // 4),
+  FROM sigs GROUP BY doc_id, i // 4),"""
+
+
+_MINHASH_MD5_ORACLE = _minhash_md5_bands_ctes() + r"""
 cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
   FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
@@ -1868,35 +1885,7 @@ def minhash_md5_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INCREMENTAL_MD5_ORACLE = r"""
-WITH words AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                     x -> x <> '') AS w
-  FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-      CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-           ELSE list_transform(range(1, len(w) - 1),
-                               i -> array_to_string(w[i:i+2], ' '))
-      END AS shingles
-    FROM words) t, UNNEST(t.shingles) AS u(shingle)
-  WHERE shingle <> ''),
-base AS (
-  SELECT doc_id,
-         ('0x' || substr(md5(shingle), 1, 15))::BIGINT % 2147483647 AS h
-  FROM sh),
-sigs AS (
-  SELECT doc_id, CAST(t.i AS INTEGER) AS i,
-         min((h * (((2 * t.i + 1) * 2654435761) % 2147483647)
-              + ((t.i * 40503 + 97) % 2147483647)) % 2147483647) AS m
-  FROM base, UNNEST(range(64)) AS t(i)
-  GROUP BY 1, 2),
-bands AS (
-  SELECT doc_id, i // 4 AS band,
-         string_agg(m::VARCHAR, ',' ORDER BY i) AS band_key
-  FROM sigs GROUP BY doc_id, i // 4),
+_INCREMENTAL_MD5_ORACLE = _minhash_md5_bands_ctes() + r"""
 corpus AS (SELECT * FROM bands WHERE doc_id % 3 <> 0),
 batch AS (SELECT * FROM bands WHERE doc_id % 3 = 0),
 vs_corpus AS (
@@ -1941,7 +1930,7 @@ def incremental_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: persisted MinHash index version — bump on any index parameter or
 #: schema change so stale staged dirs regenerate (it is part of the
 #: staged identity, see _staged)
-_MINHASH_INDEX_VERSION = 1
+_MINHASH_INDEX_VERSION = 2
 
 
 def _operator_defaults(fn) -> dict:
@@ -2313,35 +2302,18 @@ _VECTOR_INDEX_VERSION = 1
 _VECTOR_INDEX_GEO = dict(num_planes=3, num_tables=2, threshold=0.3, dim=64)
 
 
-def _multitable_buckets(
-    df: DataFrame, num_planes: int, num_tables: int, dim: int
-) -> DataFrame:
-    """OR-ed multi-table md5 LSH of ``(vec_id, embedding)`` rows: one
-    ``(id, vec, bucket)`` row per vector and table, with the table
-    namespaced into the bucket as ``(table << planes) | bucket``."""
-    from bdq_spark.operators.similarity import (
-        _table_seed,
-        lsh_bucket_vectors_md5,
-    )
-
-    out = None
-    for t in range(num_tables):
-        ns = F.lit(t * (1 << num_planes)).cast("long")
-        bt = lsh_bucket_vectors_md5(
-            df, "embedding", "vec_id", num_planes, dim,
-            seed=_table_seed("bdq_lshq", t),
-        ).select("id", "vec", (F.col("bucket") + ns).alias("bucket"))
-        out = bt if out is None else out.unionByName(bt)
-    return out
-
-
 def _build_vector_index(corpus: DataFrame, path: str) -> None:
     """Write the persisted vector index of ``corpus``: its buckets under
     :data:`_VECTOR_INDEX_GEO`, hash-clustered by bucket."""
+    from bdq_spark.operators.similarity import lsh_bucket_vectors_md5
+
     geo = _VECTOR_INDEX_GEO
-    _multitable_buckets(
-        corpus, geo["num_planes"], geo["num_tables"], geo["dim"]
-    ).repartition(8, "bucket").write.parquet(path)
+    lsh_bucket_vectors_md5(
+        corpus, "embedding", "vec_id", geo["num_planes"], geo["dim"],
+        num_tables=geo["num_tables"],
+    ).select("id", "vec", "bucket").repartition(8, "bucket").write.parquet(
+        path
+    )
 
 
 @_register(
@@ -2377,7 +2349,11 @@ def persisted_vector_index_probe(
     buckets and the batch-vs-corpus probe join from scratch — the
     persisted index is lossless vs the in-memory build."""
     from bdq_spark.operators._checkpoint import data_checkpoint
-    from bdq_spark.operators.similarity import cosine_from_norms, l2_norm
+    from bdq_spark.operators.similarity import (
+        cosine_from_norms,
+        l2_norm,
+        lsh_bucket_vectors_md5,
+    )
     from bdq_spark.plans.plan_lint import plan_text
 
     geo = _VECTOR_INDEX_GEO
@@ -2414,10 +2390,10 @@ def persisted_vector_index_probe(
     # the batch side's single embeddings read hides behind this lazy
     # checkpoint — the plan assertion below would otherwise see it
     batch = data_checkpoint(
-        _multitable_buckets(
-            emb.filter(F.col("vec_id") % 3 == 0),
-            geo["num_planes"], geo["num_tables"], geo["dim"],
-        ).withColumn("__n", l2_norm(F.col("vec"))),
+        lsh_bucket_vectors_md5(
+            emb.filter(F.col("vec_id") % 3 == 0), "embedding", "vec_id",
+            geo["num_planes"], geo["dim"], num_tables=geo["num_tables"],
+        ).select("id", "vec", "bucket", l2_norm(F.col("vec")).alias("__n")),
         eager=False,
     )
     cos = cosine_from_norms(
@@ -2586,7 +2562,11 @@ def streaming_ingest_vector_index(
     aligned to survivors-only (transitive keeper) semantics first.
     Per-trigger cost is O(batch + bucket-matched candidates + one
     append); the accumulated corpus is never re-scanned."""
-    from bdq_spark.operators.similarity import cosine_from_norms, l2_norm
+    from bdq_spark.operators.similarity import (
+        cosine_from_norms,
+        l2_norm,
+        lsh_bucket_vectors_md5,
+    )
 
     # 5 planes (32 buckets/table): candidate volume stays modest at the
     # bench SF while twin-detection recall through 2 OR-tables remains
@@ -2608,7 +2588,10 @@ def streaming_ingest_vector_index(
     feed_dir = _svi_feed(spark, sf_dir)
 
     def _buckets(df):
-        return _multitable_buckets(df, geo_planes, geo_tables, geo_dim)
+        return lsh_bucket_vectors_md5(
+            df, "embedding", "vec_id", geo_planes, geo_dim,
+            num_tables=geo_tables,
+        ).select("id", "vec", "bucket")
 
     index_dir = tempfile.mkdtemp(prefix="entry_svi_index_")
     # per-ROW L2 norms staged below the verify joins so per-PAIR work

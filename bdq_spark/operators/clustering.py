@@ -50,6 +50,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bdq_spark.operators.similarity import _infer_dim
+
 __all__ = ["kmeans_fit_quantized", "kmeans_quantized"]
 
 
@@ -129,10 +131,7 @@ def kmeans_fit_quantized(
     if k < 1:
         raise ValueError("k must be >= 1")
     if dim is None:
-        first = df.select(F.size(F.col(vector_column)).alias("d")).first()
-        if first is None:
-            raise ValueError("cannot infer dim from an empty DataFrame")
-        dim = first["d"]
+        dim = _infer_dim(df, vector_column)
 
     q = _quantized(df, vector_column, id_column, scale)
 

@@ -29,7 +29,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -578,6 +578,33 @@ def ngram_jaccard_pairs(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
+#: modulus of the MinHash affine family; 2^31-1 keeps ``a * h + b`` under
+#: 2^62, safe under ANSI overflow checks in any int64 engine
+_MINHASH_PRIME = 2_147_483_647
+
+
+def _minhash_coefficients(num_hashes: int) -> List[Tuple[int, int]]:
+    """The ``(a_i, b_i)`` of the MinHash family ``h_i(x) = (a_i x + b_i)
+    mod p``, each drawn independently from the first 60 bits of
+    ``md5(f"bdq_minhash:{i}:a")`` (resp. ``:b``), with ``a_i`` in
+    ``[1, p)``.  Coefficients in arithmetic progression (``a_i``, ``b_i``
+    linear in ``i``) make ``h_i(x) = u(x) + i v(x) mod p``: the minima
+    then move together, and a pair at Jaccard 0.92 agreed on 7 of 64
+    positions instead of the ~59 the banding recall assumes.  The one
+    source of the coefficients for the operator and the SQL replays."""
+    import hashlib
+
+    def draw(i: int, part: str) -> int:
+        digest = hashlib.md5(f"bdq_minhash:{i}:{part}".encode()).hexdigest()
+        return int(digest[:15], 16)
+
+    p = _MINHASH_PRIME
+    return [
+        (1 + draw(i, "a") % (p - 1), draw(i, "b") % p)
+        for i in range(num_hashes)
+    ]
+
+
 def minhash_signatures(
     df: DataFrame,
     text_column: str = "text",
@@ -607,13 +634,9 @@ def minhash_signatures(
     """
     # textbook affine family: h_i(x) = (a_i * h(x) + b_i) mod p over ONE
     # base string hash — 64 long multiply-adds per shingle instead of 64
-    # string hashes (~4x cheaper signature computation, same guarantees).
-    # p = 2^31-1 keeps a_i*h + b_i < 2^62: safe under ANSI overflow checks.
-    p = 2_147_483_647
-    coef = [
-        ((2 * i + 1) * 2_654_435_761 % p, (i * 40_503 + 97) % p)
-        for i in range(num_hashes)
-    ]
+    # string hashes (~4x cheaper signature computation, same guarantees)
+    p = _MINHASH_PRIME
+    coef = _minhash_coefficients(num_hashes)
     if shingles is not None:
         sh = shingles
     else:
@@ -1279,11 +1302,7 @@ def embedding_cosine_pairs(
     if mode not in ("auto", "exact", "lsh"):
         raise ValueError(f"unknown mode: {mode!r} (auto|exact|lsh)")
 
-    from bdq_spark.operators.similarity import (
-        cosine_from_norms,
-        l2_norm,
-        lsh_probe_buckets,
-    )
+    from bdq_spark.operators.similarity import lsh_probe_buckets
 
     base = df.select(
         F.col(id_column).alias("id"), F.col(vector_column).alias("vec")
@@ -1325,11 +1344,23 @@ def embedding_cosine_pairs(
     if mode == "lsh":
         # the same pair can surface from several shared probe buckets
         cand = cand.dropDuplicates(["id_a", "id_b"])
+    return _verify_pairs(cand, base, threshold)
 
-    # norms once per ROW below the verify joins (the knn_bruteforce
-    # trick; OPTIMIZATION_r14): per candidate PAIR only the dot product
-    # remains — cosine_from_norms keeps cosine_similarity's exact
-    # multiplication/guard order, so values are bit-identical
+
+def _verify_pairs(
+    cand: DataFrame, base: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact verify of candidate pairs ``(id_a, id_b)`` against the
+    ``(id, vec)`` frame ``base``: ``id_a, id_b, cosine`` with the
+    sequential double-precision ``round(cosine, 6) >= threshold``.
+
+    Norms are staged once per ROW below the two vector joins (the
+    :func:`~bdq_spark.operators.similarity.knn_bruteforce` trick;
+    OPTIMIZATION_r14), so per candidate PAIR only the dot product
+    remains; ``cosine_from_norms`` keeps ``cosine_similarity``'s exact
+    multiplication/guard order, so values are bit-identical."""
+    from bdq_spark.operators.similarity import cosine_from_norms, l2_norm
+
     va = base.select(
         F.col("id").alias("id_a"), F.col("vec").alias("va"),
         l2_norm(F.col("vec")).alias("__na"),
@@ -1367,49 +1398,37 @@ def embedding_cosine_pairs_md5(
     exact int64 arithmetic so any engine with md5 recomputes the same
     pair set for value-level verification).
 
-    Per table ``t``, vectors are bucketed with
-    :func:`~bdq_spark.operators.similarity.lsh_bucket_vectors_md5`
-    against that table's independent integer hyperplane draw
+    Vectors are bucketed ONCE over all ``num_tables`` tables by
+    :func:`~bdq_spark.operators.similarity.lsh_bucket_vectors_md5`,
+    each table against its independent integer hyperplane draw
     (:func:`~bdq_spark.operators.similarity._table_seed` — seeds are
-    public strings, so the oracle replays ALL ``num_tables`` tables);
-    same-bucket pairs from ANY table are unioned, deduped, and
+    public strings, so the oracle replays ALL ``num_tables`` tables),
+    with table-namespaced bucket ids; one self-join on the bucket gives
+    the same-bucket pairs from ANY table, which are deduped and
     re-scored with the sequential double-precision ``round(cosine, 6)``
     on the original float vectors — the OR-table recall lift
     ``1 - (1 - r)^T`` with an exact, deterministic verify cut.
 
     Pure codegen expressions throughout (``aggregate(zip_with(...))``
-    dots), no UDFs.  Scale shape matches the float path: per-table
-    bucket equi-joins (never all-pairs), candidate volume ``T`` x
-    linear at constant occupancy.  Output: ``id_a, id_b, cosine`` with
+    dots), no UDFs.  Scale shape matches the float path: a bucket
+    equi-join (never all-pairs), candidate volume ``T`` x linear at
+    constant occupancy.  Output: ``id_a, id_b, cosine`` with
     ``id_a < id_b``.
     """
-    from bdq_spark.operators.similarity import (
-        _check_lsh_geometry,
-        _table_seed,
-        cosine_from_norms,
-        l2_norm,
-        lsh_bucket_vectors_md5,
-    )
+    from bdq_spark.operators.similarity import lsh_bucket_vectors_md5
 
-    _check_lsh_geometry(num_planes, num_tables)
     base = df.select(
         F.col(id_column).alias("id"), F.col(vector_column).alias("vec")
     )
-
-    cand = None
-    for t in range(num_tables):
-        bt = lsh_bucket_vectors_md5(
-            base, "vec", "id", num_planes, dim, scale, _table_seed(seed, t)
-        ).select("id", "bucket")
-        lhs, rhs = bt.alias("l"), bt.alias("r")
-        ct = (
-            lhs.join(rhs, "bucket")
-            .filter(F.col("l.id") < F.col("r.id"))
-            .select(
-                F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b")
-            )
-        )
-        cand = ct if cand is None else cand.unionByName(ct)
+    bt = lsh_bucket_vectors_md5(
+        base, "vec", "id", num_planes, dim, scale, seed, num_tables
+    ).select("id", "bucket")
+    cand = (
+        bt.alias("l")
+        .join(bt.alias("r"), "bucket")
+        .filter(F.col("l.id") < F.col("r.id"))
+        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+    )
     # the same pair surfaces from several tables — dedup ON an
     # explicit-width keyed repartition (OPTIMIZATION_r14, guide §2.2):
     # the candidate relation is a few MB but each row costs an
@@ -1420,29 +1439,7 @@ def embedding_cosine_pairs_md5(
     # the verify then runs at session width.
     width = df.sparkSession.sparkContext.defaultParallelism
     cand = cand.repartition(width, "id_a", "id_b").dropDuplicates()
-
-    # per-ROW norms below the verify joins (the knn_bruteforce trick):
-    # per candidate PAIR only the dot product remains — was dot + two
-    # norm aggregates per pair; cosine_from_norms keeps
-    # cosine_similarity's exact multiplication/guard order, so values
-    # are bit-identical (OPTIMIZATION_r14)
-    va = base.select(
-        F.col("id").alias("id_a"), F.col("vec").alias("va"),
-        l2_norm(F.col("vec")).alias("na"),
-    )
-    vb = base.select(
-        F.col("id").alias("id_b"), F.col("vec").alias("vb"),
-        l2_norm(F.col("vec")).alias("nb"),
-    )
-    cos = cosine_from_norms(
-        F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-    )
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", F.round(cos, 6).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
+    return _verify_pairs(cand, base, threshold)
 
 
 def duplicate_spans(

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bdq_spark.operators.similarity import cosine_from_norms, l2_norm
+from bdq_spark.operators.similarity import _rank_candidates
 
 __all__ = [
     "train_ivf_centroids",
@@ -175,8 +175,6 @@ def knn_ivf(
     Output: ``query_id, neighbor_id, rank, cosine``.  Recall rises with
     ``n_probe`` (== ``n_clusters`` gives exact brute force).
     """
-    from pyspark.sql import Window
-
     if centroids is None:
         centroids = train_ivf_centroids(
             corpus, corpus_vec, corpus_id, n_clusters=n_clusters
@@ -184,32 +182,7 @@ def knn_ivf(
 
     cells = assign_ivf_cells(corpus, centroids, corpus_vec, corpus_id, n_probe=1)
     probes = assign_ivf_cells(queries, centroids, query_vec, query_id, n_probe=n_probe)
-
-    # norms once per ROW below the join (same rationale as
-    # knn_bruteforce): per candidate pair only the dot remains
-    cells = cells.withColumn("__n", l2_norm(F.col("vec")))
-    probes = probes.withColumn("__n", l2_norm(F.col("vec")))
-    cos = cosine_from_norms(
-        F.col("q.vec"), F.col("c.vec"), F.col("q.__n"), F.col("c.__n")
-    )
-    scored = (
-        cells.alias("c")
-        .join(F.broadcast(probes.alias("q")), F.col("c.cluster") == F.col("q.cluster"))
-        .select(
-            F.col("q.id").alias("query_id"),
-            F.col("c.id").alias("neighbor_id"),
-            F.round(cos, 6).alias("cosine"),
-        )
-        .distinct()  # a pair can collide in several probed cells
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank_candidates(cells, probes, "cluster", k, dedup=False)
 
 
 def knn_ivf_quantized(
@@ -245,8 +218,6 @@ def knn_ivf_quantized(
     query side broadcast into the cell join.
     Output: ``query_id, neighbor_id, rank, cosine``.
     """
-    from pyspark.sql import Window
-
     from bdq_spark.operators.clustering import (
         _assign_frame,
         _dists_sql,
@@ -273,7 +244,7 @@ def knn_ivf_quantized(
         ),
         centroids,
         ["id", "vec"],
-    ).select("id", "vec", "cluster", l2_norm(F.col("vec")).alias("__n"))
+    )
 
     # probe order: the n_probe nearest centroids by exact (d2, j) —
     # array_sort on (d2, j) structs is deterministic in any engine.
@@ -291,42 +262,7 @@ def knn_ivf_quantized(
             F.col(query_vec).alias("vec"),
             _q_expr(query_vec, scale).alias("q"),
         )
-        .select(
-            "id",
-            "vec",
-            F.expr(_dists_sql("q", centroids)).alias("__d"),
-            # norm staged once per query row, before the per-cell explode
-            l2_norm(F.col("vec")).alias("__n"),
-        )
-        .withColumn("cluster", F.explode(F.expr(probe_cells_sql)))
-        .select("id", "vec", "cluster", "__n")
+        .select("id", "vec", F.expr(_dists_sql("q", centroids)).alias("__d"))
+        .select("id", "vec", F.expr(probe_cells_sql).alias("cluster"))
     )
-
-    # norms once per ROW below the join (same rationale as knn_ivf /
-    # knn_bruteforce): per candidate pair only the dot remains; same
-    # arithmetic order as cosine_similarity, so values bit-identical
-    cos = cosine_from_norms(
-        F.col("q.vec"), F.col("c.vec"), F.col("q.__n"), F.col("c.__n")
-    )
-    scored = (
-        cells.alias("c")
-        .join(
-            F.broadcast(probes.alias("q")),
-            F.col("c.cluster") == F.col("q.cluster"),
-        )
-        .select(
-            F.col("q.id").alias("query_id"),
-            F.col("c.id").alias("neighbor_id"),
-            F.round(cos, 6).alias("cosine"),
-        )
-    )
-    # a corpus vector lives in exactly one cell and probes are distinct
-    # cells, so no dedup is needed — asserted by test_ivf_quantized
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank_candidates(cells, probes, "cluster", k, dedup=False)

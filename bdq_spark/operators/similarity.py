@@ -22,8 +22,9 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 __all__ = [
     "dot_product",
@@ -110,8 +111,6 @@ def knn_bruteforce(
     arithmetic order as :func:`cosine_similarity`, so results are
     bit-identical.
     """
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(query_id).alias("query_id"),
         F.col(query_vec).alias("qv"),
@@ -130,14 +129,90 @@ def knn_bruteforce(
         "neighbor_id",
         F.round(cos, 6).alias("cosine"),
     )
+    return _topk(scored, k)
+
+
+def _topk(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """The ranking step of every KNN operator: per query, the ``k`` best
+    ``(query_id, neighbor_id, <score>)`` rows by ``<score>`` DESC with a
+    deterministic ``neighbor_id`` ASC tiebreak.  Output:
+    ``query_id, neighbor_id, rank, <score>``."""
     w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+        F.col(score).desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+        .select("query_id", "neighbor_id", "rank", score)
     )
+
+
+def _rank_candidates(
+    corpus_side: DataFrame,
+    query_side: DataFrame,
+    on: str,
+    k: int,
+    dedup: bool,
+) -> DataFrame:
+    """Exact cosine top-k over the (query, corpus) pairs that share a
+    value of ``on`` — the candidate join every approximate KNN operator
+    ends in.  Both sides are ``(id, vec, <on>)`` frames; a query side
+    whose ``on`` is an array (its probe set) is exploded into one row
+    per probe.  The query side is broadcast.
+
+    L2 norms are staged per ROW below the join, and on the query side
+    before the probe explode, so per candidate pair only the dot product
+    remains (see :func:`knn_bruteforce`).  ``dedup`` drops repeated
+    pairs before scoring.  Only OR-ed multi-table LSH needs it: within
+    one LSH table or one IVF index a corpus vector has exactly one key
+    and a query's probe keys are distinct, so a pair meets at most once.
+    Output: ``query_id, neighbor_id, rank, cosine``.
+    """
+
+    def normed(side: DataFrame) -> DataFrame:
+        side = side.select(
+            "id", "vec", on, l2_norm(F.col("vec")).alias("__n")
+        )
+        if isinstance(side.schema[on].dataType, ArrayType):
+            side = side.withColumn(on, F.explode(on))
+        return side
+
+    candidates = (
+        normed(corpus_side).alias("c")
+        .join(
+            F.broadcast(normed(query_side).alias("q")),
+            F.col(f"c.{on}") == F.col(f"q.{on}"),
+        )
+        .select(
+            F.col("q.id").alias("query_id"),
+            F.col("c.id").alias("neighbor_id"),
+            F.col("q.vec").alias("qv"),
+            F.col("c.vec").alias("cv"),
+            F.col("q.__n").alias("__qn"),
+            F.col("c.__n").alias("__cn"),
+        )
+    )
+    if dedup:
+        candidates = candidates.dropDuplicates(["query_id", "neighbor_id"])
+    cos = cosine_from_norms(
+        F.col("qv"), F.col("cv"), F.col("__qn"), F.col("__cn")
+    )
+    return _topk(
+        candidates.select(
+            "query_id", "neighbor_id", F.round(cos, 6).alias("cosine")
+        ),
+        k,
+    )
+
+
+def _infer_dim(df: DataFrame, column: str) -> int:
+    """Length of the first vector of ``column`` (one tiny job) — the
+    default of every ``dim=None`` parameter; production pipelines pass
+    ``dim`` explicitly."""
+    first = df.select(F.size(F.col(column)).alias("d")).first()
+    if first is None:
+        raise ValueError("cannot infer dim from an empty DataFrame")
+    return first["d"]
 
 
 def _hyperplanes(num_planes: int, dim: int, seed: str = "bdq_lsh"):
@@ -219,50 +294,8 @@ def lsh_bucket_vectors(
     ``dim`` defaults to the length of the first vector (one tiny job);
     pass it explicitly in production pipelines.
     """
-    import numpy as np
-    import pandas as pd
-
-    _check_lsh_geometry(num_planes, num_tables)
-    if dim is None:
-        first = df.select(F.size(F.col(vector_column)).alias("d")).first()
-        if first is None:
-            raise ValueError("cannot infer dim from an empty DataFrame")
-        dim = first["d"]
-
-    all_planes = [
-        _hyperplanes(num_planes, dim, _table_seed(seed, t))
-        for t in range(num_tables)
-    ]
-    weights = (1 << np.arange(num_planes)).astype(np.int64)
-
-    base = df.select(
-        F.col(id_column).alias("id"), F.col(vector_column).alias("vec")
-    )
-
-    def bucketize(batches):
-        for pdf in batches:
-            block = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["vec"]]
-            ).reshape(len(pdf), dim)
-            per_table = []
-            for t, planes in enumerate(all_planes):
-                signs = (block @ planes.T) >= 0
-                per_table.append(
-                    (signs @ weights).astype(np.int64)
-                    | (np.int64(t) << np.int64(num_planes))
-                )
-            yield pd.DataFrame(
-                {
-                    "id": np.tile(pdf["id"].to_numpy(), num_tables),
-                    "vec": list(pdf["vec"]) * num_tables,
-                    "bucket": np.concatenate(per_table),
-                }
-            )
-
-    id_type = base.schema["id"].dataType.simpleString()
-    vec_type = dict(base.dtypes)["vec"]
-    return base.mapInPandas(
-        bucketize, schema=f"id {id_type}, vec {vec_type}, bucket bigint"
+    return lsh_probe_buckets(
+        df, vector_column, id_column, num_planes, 1, dim, num_tables, seed
     )
 
 
@@ -302,10 +335,7 @@ def lsh_probe_buckets(
 
     _check_lsh_geometry(num_planes, num_tables)
     if dim is None:
-        first = df.select(F.size(F.col(vector_column)).alias("d")).first()
-        if first is None:
-            raise ValueError("cannot infer dim from an empty DataFrame")
-        dim = first["d"]
+        dim = _infer_dim(df, vector_column)
 
     n_probe = max(1, min(n_probe, num_planes + 1))
     all_planes = [
@@ -332,12 +362,14 @@ def lsh_probe_buckets(
                 exact = (signs @ weights).astype(np.int64) | (
                     np.int64(t) << np.int64(num_planes)
                 )
-                # ascending |margin|: nearest hyperplanes flipped first
-                order = np.argsort(np.abs(margins), axis=1)
                 all_buckets = [exact]
-                for p in range(n_probe - 1):
-                    flip_bit = weights[order[:, p]]
-                    all_buckets.append(np.bitwise_xor(exact, flip_bit))
+                if n_probe > 1:
+                    # ascending |margin|: nearest hyperplanes flipped first
+                    order = np.argsort(np.abs(margins), axis=1)
+                    all_buckets += [
+                        np.bitwise_xor(exact, weights[order[:, p]])
+                        for p in range(n_probe - 1)
+                    ]
                 per_table.append(np.concatenate(all_buckets))
             out = pd.DataFrame(
                 {
@@ -381,8 +413,8 @@ def knn_lsh(
     control that doesn't coarsen the buckets).
     Output: ``query_id, neighbor_id, rank, cosine``.
     """
-    from pyspark.sql import Window
-
+    if dim is None:
+        dim = _infer_dim(corpus, corpus_vec)
     cb = lsh_bucket_vectors(
         corpus, corpus_vec, corpus_id, num_planes, dim,
         num_tables=num_tables,
@@ -391,44 +423,7 @@ def knn_lsh(
         queries, query_vec, query_id, num_planes, n_probe, dim,
         num_tables=num_tables,
     )
-
-    # norms once per ROW below the join (same rationale as
-    # knn_bruteforce): per candidate pair only the dot remains
-    cb = cb.withColumn("__n", l2_norm(F.col("vec")))
-    qb = qb.withColumn("__n", l2_norm(F.col("vec")))
-
-    # a corpus vector can match the same query through several probes;
-    # dedup the candidate pair before the (expensive) cosine
-    candidates = (
-        cb.alias("c")
-        .join(F.broadcast(qb.alias("q")), F.col("c.bucket") == F.col("q.bucket"))
-        .select(
-            F.col("q.id").alias("query_id"),
-            F.col("c.id").alias("neighbor_id"),
-            F.col("q.vec").alias("qv"),
-            F.col("c.vec").alias("cv"),
-            F.col("q.__n").alias("__qn"),
-            F.col("c.__n").alias("__cn"),
-        )
-    )
-    if n_probe > 1 or num_tables > 1:
-        candidates = candidates.dropDuplicates(["query_id", "neighbor_id"])
-    cos = cosine_from_norms(
-        F.col("qv"), F.col("cv"), F.col("__qn"), F.col("__cn")
-    )
-    scored = candidates.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cos, 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank_candidates(cb, qb, "bucket", k, dedup=num_tables > 1)
 
 
 def _md5_planes_int(num_planes: int, dim: int, seed: str = "bdq_lshq"):
@@ -464,6 +459,7 @@ def lsh_bucket_vectors_md5(
     dim: Optional[int] = None,
     scale: int = 10000,
     seed: str = "bdq_lshq",
+    num_tables: int = 1,
 ) -> DataFrame:
     """Integer-exact LSH bucketing — the engine-portable twin of
     :func:`lsh_bucket_vectors`.  Quantizes each component to
@@ -473,47 +469,58 @@ def lsh_bucket_vectors_md5(
     vector is reproducible by any engine with md5 + int64 arithmetic
     regardless of summation order.  Output columns: ``id, vec, bucket,
     margins`` (``margins`` are the exact per-plane int64 dots — the
-    multi-probe flip order derives from them)."""
+    multi-probe flip order derives from them).
+
+    ``num_tables > 1`` is OR-ed multi-table LSH, as in the float twin:
+    one row per vector PER TABLE, bucketed against that table's md5
+    plane set (:func:`_table_seed` — public strings, so an oracle
+    replays every table), with ids namespaced
+    ``(table << num_planes) | bucket``."""
+    _check_lsh_geometry(num_planes, num_tables)
     if dim is None:
-        first = df.select(F.size(F.col(vector_column)).alias("d")).first()
-        if first is None:
-            raise ValueError("cannot infer dim from an empty DataFrame")
-        dim = first["d"]
-    planes = _md5_planes_int(num_planes, dim, seed)
-    # The margins expression is built as ONE SQL string (a 2D plane
-    # literal + one transform/aggregate chain) instead of num_planes
-    # separately Python-assembled aggregate trees: per-element F.lit
-    # construction crossed py4j ~2 x planes x dim times and measured
-    # ~0.7 s of DRIVER time per call at 5x64 before a single task ran
-    # (OPTIMIZATION_r13).  Same arithmetic, same analyzed plan shape.
-    rows = ",".join(
-        "array(" + ",".join(f"{int(c)}L" for c in row) + ")"
-        for row in planes
-    )
-    margins_sql = (
-        f"transform(array({rows}), row -> aggregate("
-        f"zip_with(`{vector_column}`, row, "
-        f"(x, hv) -> cast(round(cast(x as double) * {int(scale)}) as bigint)"
-        " * hv), 0L, (acc, t) -> acc + t))"
-    )
-    # margins staged in their own projection: ``bucket`` below reads the
-    # materialized column, so each plane's dot product is evaluated once
-    # per row (the previous single-projection form re-evaluated every
-    # aggregate twice — once for margins, once for the bucket terms —
-    # and CollapseProject keeps multi-referenced non-trivial aliases
-    # staged, verified in the committed plans/r13 artifacts)
-    staged = df.select(
-        F.col(id_column).alias("id"),
-        F.col(vector_column).alias("vec"),
-        F.expr(margins_sql).alias("margins"),
-    )
-    bucket_sql = " + ".join(
-        f"(case when margins[{p}] >= 0 then {1 << p}L else 0L end)"
-        for p in range(num_planes)
-    )
-    return staged.select(
-        "id", "vec", F.expr(bucket_sql).alias("bucket"), "margins"
-    )
+        dim = _infer_dim(df, vector_column)
+    out = None
+    for t in range(num_tables):
+        planes = _md5_planes_int(num_planes, dim, _table_seed(seed, t))
+        # The margins expression is built as ONE SQL string (a 2D plane
+        # literal + one transform/aggregate chain) instead of num_planes
+        # separately Python-assembled aggregate trees: per-element F.lit
+        # construction crossed py4j ~2 x planes x dim times and measured
+        # ~0.7 s of DRIVER time per call at 5x64 before a single task
+        # ran (OPTIMIZATION_r13).  Same arithmetic, same plan shape.
+        rows = ",".join(
+            "array(" + ",".join(f"{int(c)}L" for c in row) + ")"
+            for row in planes
+        )
+        margins_sql = (
+            f"transform(array({rows}), row -> aggregate("
+            f"zip_with(`{vector_column}`, row, "
+            f"(x, hv) -> cast(round(cast(x as double) * {int(scale)}) "
+            "as bigint) * hv), 0L, (acc, t) -> acc + t))"
+        )
+        # margins staged in their own projection: ``bucket`` below reads
+        # the materialized column, so each plane's dot product is
+        # evaluated once per row (the single-projection form re-evaluated
+        # every aggregate twice — once for margins, once for the bucket
+        # terms — and CollapseProject keeps multi-referenced non-trivial
+        # aliases staged, verified in the committed plans/r13 artifacts)
+        staged = df.select(
+            F.col(id_column).alias("id"),
+            F.col(vector_column).alias("vec"),
+            F.expr(margins_sql).alias("margins"),
+        )
+        bucket_sql = " + ".join(
+            ([f"{t << num_planes}L"] if t else [])
+            + [
+                f"(case when margins[{p}] >= 0 then {1 << p}L else 0L end)"
+                for p in range(num_planes)
+            ]
+        )
+        bt = staged.select(
+            "id", "vec", F.expr(bucket_sql).alias("bucket"), "margins"
+        )
+        out = bt if out is None else out.unionByName(bt)
+    return out
 
 
 def knn_lsh_md5(
@@ -551,24 +558,15 @@ def knn_lsh_md5(
     once, query side broadcast, same 100 TB shape as :func:`knn_lsh`.
     Output: ``query_id, neighbor_id, rank, cosine``.
     """
-    from pyspark.sql import Window
-
     if dim is None:
-        first = corpus.select(
-            F.size(F.col(corpus_vec)).alias("d")
-        ).first()
-        if first is None:
-            raise ValueError("cannot infer dim from an empty DataFrame")
-        dim = first["d"]
-
-    _check_lsh_geometry(num_planes, num_tables)
+        dim = _infer_dim(corpus, corpus_vec)
     n_probe = max(1, min(n_probe, num_planes + 1))
 
     # query probes: exact bucket first, then single-bit flips in
     # ascending (|margin|, plane) order — margins are exact ints, so
     # the flip order is deterministic and engine-portable.  Flips only
     # touch bits below num_planes, so the multi-table namespace offset
-    # (applied before probing) survives every probe.
+    # survives every probe.
     probes_expr = (
         "concat(array(bucket), transform("
         "  slice(array_sort(transform(margins,"
@@ -576,72 +574,15 @@ def knn_lsh_md5(
         f"       1, {n_probe - 1}),"
         "  s -> bucket ^ shiftleft(cast(1 as bigint), s.p)))"
     )
-
-    # OR-ed multi-table: one bucketing per independent md5 plane set,
-    # namespaced (table << num_planes) | bucket, unioned — same recall
-    # lift as the float path, still engine-recomputable (each table's
-    # seed is a public string, see _table_seed)
-    cb = None
-    qb = None
-    for t in range(num_tables):
-        ns = F.lit(t * (1 << num_planes)).cast("long")
-        cb_t = (
-            lsh_bucket_vectors_md5(
-                corpus, corpus_vec, corpus_id, num_planes, dim, scale,
-                _table_seed(seed, t),
-            )
-            .withColumn("bucket", F.col("bucket") + ns)
-            .select("id", "vec", "bucket", l2_norm(F.col("vec")).alias("__n"))
-        )
-        qb_t = (
-            lsh_bucket_vectors_md5(
-                queries, query_vec, query_id, num_planes, dim, scale,
-                _table_seed(seed, t),
-            )
-            .withColumn("bucket", F.col("bucket") + ns)
-            .withColumn("__n", l2_norm(F.col("vec")))  # before the fan-out
-            .withColumn("bucket", F.explode(F.expr(probes_expr)))
-            .select("id", "vec", "bucket", "__n")
-        )
-        cb = cb_t if cb is None else cb.unionByName(cb_t)
-        qb = qb_t if qb is None else qb.unionByName(qb_t)
-
-    candidates = (
-        cb.alias("c")
-        .join(
-            F.broadcast(qb.alias("q")),
-            F.col("c.bucket") == F.col("q.bucket"),
-        )
-        .select(
-            F.col("q.id").alias("query_id"),
-            F.col("c.id").alias("neighbor_id"),
-            F.col("q.vec").alias("qv"),
-            F.col("c.vec").alias("cv"),
-            F.col("q.__n").alias("__qn"),
-            F.col("c.__n").alias("__cn"),
-        )
+    cb = lsh_bucket_vectors_md5(
+        corpus, corpus_vec, corpus_id, num_planes, dim, scale, seed,
+        num_tables,
     )
-    if n_probe > 1 or num_tables > 1:
-        # within a table, probes are distinct buckets and a corpus
-        # vector lives in exactly one; ACROSS tables the same pair
-        # re-surfaces routinely — dedup before the (expensive) cosine
-        candidates = candidates.dropDuplicates(["query_id", "neighbor_id"])
-    cos = cosine_from_norms(
-        F.col("qv"), F.col("cv"), F.col("__qn"), F.col("__cn")
-    )
-    scored = candidates.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cos, 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    qb = lsh_bucket_vectors_md5(
+        queries, query_vec, query_id, num_planes, dim, scale, seed,
+        num_tables,
+    ).select("id", "vec", F.expr(probes_expr).alias("bucket"))
+    return _rank_candidates(cb, qb, "bucket", k, dedup=num_tables > 1)
 
 
 def diagonal_metric_score(
@@ -729,8 +670,6 @@ def rerank_topk(
     candidates, one per-query top-k window.  Output:
     ``query_id, neighbor_id, rank, score``.
     """
-    from pyspark.sql import Window
-
     # dedup the candidate pairs (ADVICE r12): all in-repo retrievers
     # emit distinct (query_id, neighbor_id), but an external caller
     # passing a non-deduped relation would otherwise get the same
@@ -784,14 +723,7 @@ def rerank_topk(
             ),
         )
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _topk(scored, k, score="score")
 
 
 # ---------------------------------------------------------------------------

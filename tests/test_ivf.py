@@ -6,11 +6,12 @@ from pyspark.sql import functions as F
 from bdq_spark.operators.ivf import (
     assign_ivf_cells,
     knn_ivf,
+    knn_ivf_quantized,
     load_ivf_index,
     save_ivf_index,
     train_ivf_centroids,
 )
-from bdq_spark.operators.similarity import knn_bruteforce
+from bdq_spark.operators.similarity import knn_bruteforce, knn_lsh, knn_lsh_md5
 
 
 @pytest.fixture()
@@ -53,11 +54,6 @@ def test_knn_ivf_recall_and_self_match(spark, embeddings):
     recall = len(e & a) / len(e)
     assert recall >= 0.4, f"IVF recall too low: {recall}"
 
-    # probing every cell == exact brute force
-    full = knn_ivf(embeddings, queries, k=5, n_clusters=8, n_probe=8)
-    f = {(r.query_id, r.neighbor_id) for r in full.collect()}
-    assert f == e
-
 
 def test_ivf_index_persistence(spark, embeddings, tmp_path):
     import numpy as np
@@ -85,46 +81,82 @@ def test_ivf_index_persistence(spark, embeddings, tmp_path):
         load_ivf_index(spark, empty)
 
 
-def test_knn_ivf_quantized_full_probe_equals_bruteforce(spark):
-    """n_probe == n_clusters probes every cell, so the quantized IVF
-    twin must reproduce exact brute force row for row (the same
-    invariant the float IVF and the md5 LSH twin pin)."""
-    from bdq_spark.operators.ivf import knn_ivf_quantized
-    from bdq_spark.operators.similarity import knn_bruteforce
+# Each approximate KNN operator at a geometry whose probes cover the
+# whole corpus: IVF with n_probe == n_clusters, LSH with one plane and
+# both of its sign buckets probed.
+_FULL_PROBE = {
+    "knn_ivf": lambda emb, q: knn_ivf(emb, q, k=5, n_clusters=4, n_probe=4),
+    "knn_ivf_quantized": lambda emb, q: knn_ivf_quantized(
+        emb, q, k=5, n_clusters=4, n_probe=4, iters=1
+    ),
+    "knn_lsh": lambda emb, q: knn_lsh(emb, q, k=5, num_planes=1, n_probe=2),
+    "knn_lsh_md5": lambda emb, q: knn_lsh_md5(
+        emb, q, k=5, num_planes=1, n_probe=2
+    ),
+}
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 3).select(
+
+@pytest.mark.parametrize("op", sorted(_FULL_PROBE))
+def test_knn_full_probe_equals_bruteforce(spark, embeddings, op):
+    """A probe set that covers the corpus makes the candidate set the
+    whole corpus, so the operator must reproduce exact brute force row
+    for row — the witness that bucketing/probing only FILTERS and never
+    perturbs scoring or ranking."""
+    queries = embeddings.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    ivf = sorted(
-        map(tuple, knn_ivf_quantized(
-            emb, queries, k=5, n_clusters=4, n_probe=4, iters=1
-        ).collect())
+    got = sorted(map(tuple, _FULL_PROBE[op](embeddings, queries).collect()))
+    bf = sorted(
+        map(tuple, knn_bruteforce(embeddings, queries, k=5).collect())
     )
-    bf = sorted(map(tuple, knn_bruteforce(emb, queries, k=5).collect()))
-    assert ivf == bf
+    assert got == bf
 
 
-def test_knn_ivf_quantized_candidates_have_no_duplicates(spark):
-    """One cell per corpus vector + distinct probe cells => the scored
-    candidate relation must already be duplicate-free (the operator
-    relies on this instead of a dropDuplicates)."""
-    from bdq_spark.operators.ivf import knn_ivf_quantized
+# Every candidate a query meets, k unbounded: multi-probe and multi-cell
+# geometries; the IVF operators have no tables to OR.
+_ALL_CANDIDATES = {
+    "knn_ivf": lambda emb, q, t: knn_ivf(
+        emb, q, k=10**9, n_clusters=8, n_probe=3
+    ),
+    "knn_ivf_quantized": lambda emb, q, t: knn_ivf_quantized(
+        emb, q, k=10**9, n_clusters=8, n_probe=3, iters=2
+    ),
+    "knn_lsh": lambda emb, q, t: knn_lsh(
+        emb, q, k=10**9, num_planes=6, n_probe=4, num_tables=t
+    ),
+    "knn_lsh_md5": lambda emb, q, t: knn_lsh_md5(
+        emb, q, k=10**9, num_planes=6, n_probe=4, num_tables=t
+    ),
+}
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 5).select(
+
+@pytest.mark.parametrize(
+    "op,num_tables",
+    [
+        ("knn_ivf", 1),
+        ("knn_ivf_quantized", 1),
+        ("knn_lsh", 1),
+        ("knn_lsh", 2),
+        ("knn_lsh_md5", 1),
+        ("knn_lsh_md5", 2),
+    ],
+)
+def test_knn_candidates_have_no_duplicates(spark, embeddings, op, num_tables):
+    """The dedup rule of the shared ranking step: within one LSH table or
+    IVF index a corpus vector has one key and a query's probes are
+    distinct keys, so a pair meets at most once and no dedup runs; with
+    OR-ed tables the same pair meets once per table and the dedup must
+    remove the repeats.  Either way a neighbor is ranked once."""
+    queries = embeddings.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = knn_ivf_quantized(emb, queries, k=10**9, n_clusters=8,
-                            n_probe=3, iters=2)
+    out = _ALL_CANDIDATES[op](embeddings, queries, num_tables)
     total = out.count()
     distinct = out.select("query_id", "neighbor_id").distinct().count()
-    assert total == distinct
+    assert total == distinct > 5  # more than the self-matches
 
 
 def test_knn_ivf_quantized_deterministic(spark):
-    from bdq_spark.operators.ivf import knn_ivf_quantized
-
     emb = spark.read.parquet(
         "/root/testdata/sf0.01/embeddings.parquet"
     ).repartition(13)

@@ -65,30 +65,6 @@ def test_lsh_buckets_deterministic_and_bounded(spark, embeddings):
     assert len(set(m1.values())) > 4  # vectors actually spread across buckets
 
 
-def test_knn_lsh_md5_full_probe_equals_bruteforce(spark, embeddings):
-    """With num_planes=1 and n_probe=2 the probe set covers BOTH sign
-    buckets, so the md5 twin's candidate set is the whole corpus and
-    its output must equal knn_bruteforce row for row — the end-to-end
-    witness that bucketing/probing only FILTERS and never perturbs
-    scoring or ranking."""
-    from bdq_spark.operators.similarity import knn_lsh_md5
-
-    queries = embeddings.limit(4).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in knn_bruteforce(embeddings, queries, k=5).collect()
-    }
-    twin = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in knn_lsh_md5(
-            embeddings, queries, k=5, num_planes=1, n_probe=2
-        ).collect()
-    }
-    assert twin == exact
-
-
 def test_lsh_md5_buckets_match_python_recompute(spark, embeddings):
     """Every vector's md5-twin bucket is pure int64 arithmetic:
     recompute ALL buckets in plain Python (hashlib md5 planes +

@@ -213,6 +213,58 @@ def test_minhash_lsh_finds_near_dups(spark, docs):
     assert (1, 2) in vp and (1, 4) not in vp  # exact-verify drops the near-dup
 
 
+# Documents 188 and 390 of the seeded benchmark corpus
+# (perfbench/inputs.py ``documents``, seed 1030176022, 400 docs): three
+# substituted words apart, word 3-gram Jaccard 0.92.
+_NEAR_TWIN = (
+    "be gzhn of with of that the have have of and tncf qpin have to have "
+    "have of have and the to nbil mdu adzpp be eyj with have with that {0} "
+    "and to mfqnj fneekyb to of jtw that and ebzgnda and the of be be qpin "
+    "the and tbfkfl be uomsxkm be with to and that with and with mlww yqj "
+    "the and the xdjehkq nery that\n"
+    "be of of of tgu and and dymdmok dropyhtk with with with fzjkcikm with "
+    "with with of the be jscfkyy hwwjo tbpe that with krippbie of and of be "
+    "to zqbvxv the with the qpin that and mfqnj qpin wlyhlus with be that "
+    "with mfqnj and have of be the be ryiuw have be qpin klrpxq that vdwlgjm "
+    "with the that have have to sufaitxs uuf the {1} have\n"
+    "of qpin be that of to that of be {2} have have to ied be that to gwq "
+    "adzpp the the be of ajar vdwlgjm the and ljwjdph be wogun kzwk have "
+    "qpin be the vzslktu ousdzzs have rjpip of be of be have to the that "
+    "and the to that wogun to to eect have to the adzpp be that be have "
+    "the to jivljyt hchwdqc\n"
+    "terms of use and privacy policy apply"
+)
+
+
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+def test_minhash_signature_agreement_tracks_jaccard(spark, hash_fn):
+    """The fraction of equal MinHash positions estimates Jaccard only if
+    the hash functions are independent.  With coefficients in arithmetic
+    progression (``h_i = u + i v mod p``) this pair agreed on 7 of 64
+    positions under xxhash64 and missed every LSH band; independent
+    draws put it at the expected ~59."""
+    from bdq_spark.operators.dedup import minhash_signatures
+
+    df = spark.createDataFrame(
+        [
+            (188, _NEAR_TWIN.format("of", "and", "of")),
+            (390, _NEAR_TWIN.format("aifwqc", "mmkzg", "sdbvgwgi")),
+        ],
+        "doc_id long, text string",
+    )
+    (jaccard,) = [
+        r.jaccard
+        for r in ngram_jaccard_pairs(df, n=3, threshold=0.0).collect()
+    ]
+    assert jaccard >= 0.9
+    sig = {
+        r.id: r.sig
+        for r in minhash_signatures(df, n=3, hash_fn=hash_fn).collect()
+    }
+    agree = sum(a == b for a, b in zip(sig[188], sig[390]))
+    assert agree >= 48, f"{agree}/64 positions agree at Jaccard {jaccard}"
+
+
 def test_simhash_pairs(spark, docs):
     sigs = {r.id: r.simhash for r in simhash(docs).collect()}
     assert sigs[1] == sigs[2]  # identical text, identical fingerprint

@@ -63,13 +63,19 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from bdq_spark.operators.similarity import cosine_similarity
+    from bdq_spark.operators.similarity import (
+        cosine_similarity,
+        lsh_bucket_vectors_md5,
+    )
 
     geo_planes, geo_tables, geo_dim, geo_thresh = 5, 2, 64, 0.9
     feed_dir = eq._svi_feed(spark, SF_DIR)
 
     def _buckets(df):
-        return eq._multitable_buckets(df, geo_planes, geo_tables, geo_dim)
+        return lsh_bucket_vectors_md5(
+            df, "embedding", "vec_id", geo_planes, geo_dim,
+            num_tables=geo_tables,
+        ).select("id", "vec", "bucket")
 
     index_dir = tempfile.mkdtemp(prefix="svi_decomp_idx_")
     cos = cosine_similarity(F.col("va"), F.col("vb"))
