@@ -41,16 +41,28 @@ Scale shape (the 100 TB design):
   iteration (``8 x 64`` longs here) — same bounded-and-documented class
   as the IVF centroid collect (``ivf.py``), orders of magnitude below
   any data-proportional driver path.
+
+Below the session's broadcast threshold
+(``spark.sql.autoBroadcastJoinThreshold``, at ``8 * (dim + 1)`` bytes a
+vector) the fit is finished on the driver instead: the quantized table
+is collected once through Arrow and the same Lloyd rounds run in numpy
+int64 (:func:`_fit_on_driver`) — one job instead of one per round, and
+bit-identical centroids.  Above it the fit runs the distributed rounds
+described above, and the only driver materialization is the
+``k x dim`` centroid table.
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
+import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bdq_spark.operators.similarity import _infer_dim
+from bdq_spark.session import DRIVER_ORDERED_TYPES, collect_if_small
 
 __all__ = ["kmeans_fit_quantized", "kmeans_quantized"]
 
@@ -112,6 +124,45 @@ def _assign_frame(qdf: DataFrame, centroids: list, keep: list) -> DataFrame:
     )
 
 
+def _fit_on_driver(table, k: int, iters: int, dim: int) -> Optional[list]:
+    """The exact Lloyd fit over a collected ``(id, q)`` Arrow table, or
+    ``None`` when numpy could not reproduce the distributed fit bit for
+    bit: null ids or vectors, vectors whose length is not ``dim``, or
+    values whose squared distances or cluster sums could overflow int64
+    (Spark's ANSI arithmetic raises there, numpy would wrap).
+
+    Same steps as the distributed rounds: seeds are the ``k`` smallest
+    ids; distances are ``xx - 2 X Cᵀ + cc``, exact in integers; ties
+    go to the lowest centroid index (``argmin``); updates are floor
+    means by ``//``; an empty cluster keeps its centroid."""
+    q = table.column("q").combine_chunks()
+    if table.column("id").null_count or q.null_count:
+        return None
+    values = q.flatten()
+    n = len(q)
+    ragged = n and pc.any(pc.not_equal(pc.list_value_length(q), dim)).as_py()
+    if values.null_count or ragged:
+        return None
+    x = values.to_numpy().reshape(n, dim)
+    if n < k:
+        raise ValueError(f"need at least k={k} rows, got {n}")
+    bound = max(int(x.max(initial=0)), -int(x.min(initial=0)))
+    if dim * (2 * bound) ** 2 >= 2**63 or n * bound >= 2**63:
+        return None
+    ids = table.column("id").to_numpy(zero_copy_only=False)
+    c = x[np.argsort(ids, kind="stable")[:k]]
+    xx = (x * x).sum(axis=1)
+    for _ in range(iters):
+        d = xx[:, None] - 2 * (x @ c.T) + (c * c).sum(axis=1)[None, :]
+        cluster = d.argmin(axis=1)
+        counts = np.bincount(cluster, minlength=k)
+        sums = np.zeros((k, dim), dtype=np.int64)
+        np.add.at(sums, cluster, x)
+        hit = counts > 0
+        c[hit] = sums[hit] // counts[hit, None]
+    return c.tolist()
+
+
 def kmeans_fit_quantized(
     df: DataFrame,
     vector_column: str = "embedding",
@@ -127,13 +178,20 @@ def kmeans_fit_quantized(
     and :func:`bdq_spark.operators.ivf.knn_ivf_quantized` probes.
     Seeds are the ``k`` vectors with the smallest ids (deterministic —
     no RNG to reproduce across engines); each round assigns and then
-    floor-mean-updates; empty clusters keep their centroid."""
+    floor-mean-updates; empty clusters keep their centroid.  A quantized
+    table under the session's broadcast threshold is fitted on the
+    driver (:func:`_fit_on_driver`), with the same centroids."""
     if k < 1:
         raise ValueError("k must be >= 1")
     if dim is None:
         dim = _infer_dim(df, vector_column)
 
     q = _quantized(df, vector_column, id_column, scale)
+    if isinstance(q.schema["id"].dataType, DRIVER_ORDERED_TYPES):
+        table = collect_if_small(q, 8 * (dim + 1))
+        fit = None if table is None else _fit_on_driver(table, k, iters, dim)
+        if fit is not None:
+            return fit
 
     # deterministic seeds: the k smallest ids (bounded k-row collect)
     seeds = q.orderBy("id").limit(k).collect()

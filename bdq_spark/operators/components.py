@@ -23,15 +23,34 @@ Scale mechanics, per round:
 - early termination via a changed-label count, which doubles as the
   action that materializes the round's checkpoint blocks — exactly one
   job per round.
+
+A pair relation that fits the session's broadcast threshold
+(``spark.sql.autoBroadcastJoinThreshold``) skips the per-round jobs:
+it is already small enough to ship through the driver whole, so it is
+collected once through Arrow and the SAME synchronous min-label rounds
+run on the driver in numpy (same fixpoint, same round count, same
+``max_iterations`` raise).  The labels come back as a ``LocalRelation``
+with exact size statistics, so the dedup anti-join downstream plans a
+broadcast.  Above the threshold, the rounds run distributed as above.
 """
 
 from __future__ import annotations
 
+from typing import Optional
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from bdq_spark.operators._checkpoint import data_checkpoint
-from bdq_spark.session import private_session, rebind
+from bdq_spark.session import (
+    DRIVER_ORDERED_TYPES,
+    collect_if_small,
+    private_session,
+    rebind,
+)
 
 __all__ = ["connected_components", "apply_dedup_clusters", "pagerank", "pagerank_quantized", "triangle_counts", "kcore"]
 
@@ -183,6 +202,66 @@ def _depin_small_edges(e: DataFrame, broadcast_max_nodes: int) -> DataFrame:
     return e
 
 
+def _not_converged(max_iterations: int) -> RuntimeError:
+    return RuntimeError(
+        f"connected_components did not converge in {max_iterations} "
+        "rounds (graph diameter exceeds the bound)"
+    )
+
+
+def _components_on_driver(
+    directed: DataFrame, max_iterations: int, broadcast_max_nodes: int
+) -> Optional[DataFrame]:
+    """The broadcast-regime rounds finished on the driver, or ``None``
+    when the checkpointed ``(a, b)`` pair relation is above the session's
+    broadcast threshold, could exceed ``broadcast_max_nodes`` nodes, has
+    null ids, or has an id type outside ``DRIVER_ORDERED_TYPES``.
+
+    Ids are coded by ``np.unique`` (sorted, so code order is id order)
+    and each round is the distributed round's min-aggregate over both
+    edge directions, ``np.minimum.at`` — synchronous, no pointer
+    jumping — so the fixpoint, the round it is reached in and the
+    ``max_iterations`` raise are those of the distributed loop."""
+    fa, fb = directed.schema.fields
+    if fa.dataType != fb.dataType or not isinstance(fa.dataType, DRIVER_ORDERED_TYPES):
+        return None
+    table = collect_if_small(
+        directed,
+        directed._jdf.schema().defaultSize(),
+        max_rows=broadcast_max_nodes // 2,
+    )
+    if table is None or table.column("a").null_count or table.column("b").null_count:
+        return None
+    ids, codes = np.unique(
+        np.concatenate(
+            [table.column(c).to_numpy(zero_copy_only=False) for c in ("a", "b")]
+        ),
+        return_inverse=True,
+    )
+    a, b = codes[: table.num_rows], codes[table.num_rows :]
+    labels = np.arange(len(ids))
+    for _ in range(max_iterations):
+        new = labels.copy()
+        np.minimum.at(new, b, labels[a])
+        np.minimum.at(new, a, labels[b])
+        if np.array_equal(new, labels):
+            break
+        labels = new
+    else:
+        raise _not_converged(max_iterations)
+    schema = StructType([
+        StructField("id", fa.dataType, fa.nullable or fb.nullable),
+        StructField("cluster_id", fa.dataType),
+        StructField("is_keeper", BooleanType()),
+    ])
+    out = pa.table({
+        "id": ids,
+        "cluster_id": ids[labels],
+        "is_keeper": labels == np.arange(len(ids)),
+    })
+    return directed.sparkSession.createDataFrame(out, schema)
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -199,8 +278,12 @@ def connected_components(
     don't reach the fixpoint (pathologically long chains — raise the
     bound or pre-split the graph).
 
-    When the node table is small (``<= broadcast_max_nodes``, counted
-    once after the input checkpoint), each round is ONE FUSED
+    When the pair relation fits the session's broadcast threshold and
+    ``2 * n_pairs <= broadcast_max_nodes``, it is collected once and
+    the rounds run on the driver (:func:`_components_on_driver`); the
+    result is a ``LocalRelation`` with exact size statistics.
+    Otherwise, when the node table is small (``<= broadcast_max_nodes``,
+    counted once after the input checkpoint), each round is ONE FUSED
     min-aggregate: the broadcast label join's neighbor contributions
     union the labels' own rows and a single keyed shuffle takes the
     min per id (``_round_broadcast`` — provably equal to the classic
@@ -225,12 +308,16 @@ def connected_components(
     directed = data_checkpoint(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     )
+    local = _components_on_driver(directed, max_iterations, broadcast_max_nodes)
+    if local is not None:
+        return local
     both = directed.union(
         directed.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    # the count is one cheap job over the checkpoint blocks just
-    # materialized; it picks the setup regime BEFORE the symmetrize
-    # shuffle runs, so small graphs never get pinned wide
+    # distributed path only: the count is one cheap job over the
+    # checkpoint blocks just materialized; it picks the setup regime
+    # BEFORE the symmetrize shuffle runs, so small graphs never get
+    # pinned wide
     n_pairs = directed.count()
     if _may_exceed_cutover(n_pairs, broadcast_max_nodes):
         # ONE symmetrize-dedup shuffle, captured with hash(a) (AQE off):
@@ -381,10 +468,7 @@ def connected_components(
                 labels = new_labels.drop("__changed")
                 if changed == 0:
                     return _done(labels)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "rounds (graph diameter exceeds the bound)"
-        )
+        raise _not_converged(max_iterations)
 
     if n_nodes > broadcast_max_nodes:
         # edges already carry hash(a) from the setup checkpoint; only

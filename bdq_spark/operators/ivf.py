@@ -126,9 +126,9 @@ def assign_ivf_cells(
                     cells.append(int(c))
             yield pd.DataFrame({"id": ids, "vec": vecs, "cluster": cells})
 
-    vec_type = dict(base.dtypes)["vec"]
+    types = dict(base.dtypes)
     return base.mapInPandas(
-        assign, schema=f"id long, vec {vec_type}, cluster int"
+        assign, schema=f"id {types['id']}, vec {types['vec']}, cluster int"
     )
 
 

@@ -129,5 +129,5 @@ def validate_primary_key_candidate_combinations(
 
         registered[tuple(combo)] = graph.node(depends_on=deps)(make_validator(combo))
 
-    graph.execute(max_workers=max_workers)
+    graph.execute(max_workers=max_workers, spark=df.sparkSession)
     return solutions

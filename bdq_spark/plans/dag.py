@@ -18,7 +18,13 @@ from-scratch implementation with the same observable contract:
   ``ThreadPoolExecutor`` and returns when no node can make progress.
 
 No Spark dependency: Spark only ever sees the independent jobs each node
-submits from its own thread.  Pair with
+submits from its own thread.  When a Spark session is passed to
+``execute`` (or is active on the calling thread), every node runs under
+``pyspark.inheritable_thread_target``: its thread starts with its own
+copy of the caller's Spark local properties — job group, job
+description, scheduler pool, job tags — so cancelling the caller's job
+group (a timed-out ``SparkPipeline`` step) also cancels the nodes'
+jobs.  Pair with
 ``spark.scheduler.mode=FAIR`` (set by :mod:`bdq_spark.session`) so
 concurrent node queries share the cluster instead of FIFO-queueing — this
 is how PK-candidate search (O9) and pipeline steps (E2) overlap their
@@ -240,8 +246,12 @@ class DAG:
 
     # -- execution ----------------------------------------------------------
 
-    def execute(self, max_workers: int) -> None:
+    def execute(self, max_workers: int, spark=None) -> None:
         """Run the whole graph; returns when no node can make progress.
+
+        Nodes inherit the calling thread's Spark local properties (see the
+        module docstring); ``spark`` defaults to the calling thread's
+        active session, and with neither, nodes run on plain threads.
 
         Scheduling is event-driven: a node is submitted as soon as its last
         parent succeeds.  A mutex guards the ready-check; the completion
@@ -267,7 +277,7 @@ class DAG:
                     if cand.future is not None or not self.is_dependency_met(cand):
                         continue
                     in_flight += 1
-                    cand.future = pool.submit(_run_quietly, cand)
+                    cand.future = pool.submit(targets[cand], cand)
                     launched.append(cand)
             # attach callbacks outside the lock: a future finished before
             # attachment runs the callback inline, which needs the lock
@@ -293,11 +303,32 @@ class DAG:
             except Exception:
                 pass  # outcome is recorded on the node itself
 
+        # wrapped here, on the caller's thread: each wrapper captures its
+        # own copy of the caller's local properties, so nodes running
+        # concurrently never share (and clobber) one properties object
+        targets = {n: _inheriting(spark)(_run_quietly) for n in self.nodes}
+
         if not submit_ready(list(self.nodes)):
             pool.shutdown()
             return
         drained.wait()
         pool.shutdown()
 
-    def __call__(self, max_workers: int) -> None:
-        return self.execute(max_workers=max_workers)
+    def __call__(self, max_workers: int, spark=None) -> None:
+        return self.execute(max_workers=max_workers, spark=spark)
+
+
+def _inheriting(spark) -> Callable[[Callable], Callable]:
+    """``pyspark.inheritable_thread_target`` for ``spark`` (else the
+    calling thread's active session), called now so it captures the
+    calling thread's local properties; the identity when there is no
+    session or PySpark is not installed."""
+    try:
+        from pyspark import inheritable_thread_target
+        from pyspark.sql import SparkSession
+    except ImportError:  # pragma: no cover - Spark-free install
+        return lambda target: target
+    session = spark or SparkSession.getActiveSession()
+    if session is None:
+        return lambda target: target
+    return inheritable_thread_target(session)

@@ -605,7 +605,7 @@ class SparkPipeline:
     def _execute(self, max_concurrent_steps: int = 10) -> Dict[str, Step]:
         self.start_ts = datetime.now()
         self.stop_ts = None
-        self._dag.execute(max_workers=max_concurrent_steps)
+        self._dag.execute(max_workers=max_concurrent_steps, spark=self._spark)
         self.stop_ts = datetime.now()
         self._save_state_to_store()
         if self.is_success:

@@ -17,8 +17,10 @@ and `get_spark` never overrides an already-running session's conf.
 from __future__ import annotations
 
 import os
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StringType
 
 __all__ = ["get_spark", "builder_defaults"]
 
@@ -85,3 +87,37 @@ def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
         dataset = session._jvm.org.apache.spark.sql.Dataset
     jdf = dataset.ofRows(session._jsparkSession, df._jdf.logicalPlan())
     return DataFrame(jdf, session)
+
+
+# id types whose numpy order is Spark's order (integers; strings compare
+# by code point, which is UTF-8 byte order): a loop finished on the
+# driver may take minima and sort by them
+DRIVER_ORDERED_TYPES = (ByteType, ShortType, IntegerType, LongType, StringType)
+
+
+def collect_if_small(
+    df: DataFrame, row_bytes: int, max_rows: Optional[int] = None
+):
+    """``df`` as one ``pyarrow.Table`` on the driver when it has at most
+    ``cap = autoBroadcastJoinThreshold // row_bytes`` rows (and at most
+    ``max_rows``), else ``None``.
+
+    The session's broadcast threshold is the budget: a relation under
+    it is already shipped through the driver whole whenever a join
+    broadcasts it, so finishing a loop over it on the driver adds no
+    new memory class and no new knob.  A threshold <= 0 (broadcast
+    disabled) always returns ``None``.  The probe is one job,
+    ``df.limit(cap + 1)`` collected through Arrow whatever the session's
+    Arrow conf says; the table keeps exact nulls, and
+    ``spark.createDataFrame(table, schema)`` turns a driver-side result
+    back into a ``LocalRelation`` with exact size statistics."""
+    if not hasattr(df, "toArrow"):  # PySpark < 4.0
+        return None
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    cap = conf.autoBroadcastJoinThreshold() // row_bytes
+    if max_rows is not None:
+        cap = min(cap, max_rows)
+    if cap <= 0:
+        return None
+    table = df.limit(cap + 1).toArrow()
+    return table if table.num_rows <= cap else None

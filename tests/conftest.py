@@ -35,3 +35,14 @@ def spark():
     )
     session.sparkContext.setLogLevel("ERROR")
     yield session
+
+
+@pytest.fixture()
+def distributed(spark):
+    """A private session of ``spark`` with broadcasts off.  The loops
+    that finish an input under the broadcast threshold on the driver
+    (connected components, exact k-means) take their distributed path
+    on frames of this session, so one test can pin both paths."""
+    from bdq_spark.session import private_session
+
+    return private_session(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})

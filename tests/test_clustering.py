@@ -40,19 +40,23 @@ def _py_kmeans(vecs, k, iters, scale=10000):
     return assign()
 
 
-def test_kmeans_matches_python_replay(spark):
+def test_kmeans_matches_python_replay(spark, distributed):
     rng = random.Random(11)
     vecs = {
         i: [rng.uniform(-1, 1) for _ in range(6)] for i in range(40)
     }
-    df = spark.createDataFrame(
-        [(i, v) for i, v in vecs.items()], "vec_id:long, embedding:array<double>"
-    )
-    got = {
-        r.vec_id: (r.cluster, r.dist2)
-        for r in kmeans_quantized(df, k=4, iters=3, dim=6).collect()
-    }
-    assert got == _py_kmeans(vecs, k=4, iters=3)
+    want = _py_kmeans(vecs, k=4, iters=3)
+    # the driver finish (input under the broadcast threshold) and the
+    # distributed rounds (broadcasts off) must both replay exactly
+    for session in (spark, distributed):
+        df = session.createDataFrame(
+            [(i, v) for i, v in vecs.items()], "vec_id:long, embedding:array<double>"
+        )
+        got = {
+            r.vec_id: (r.cluster, r.dist2)
+            for r in kmeans_quantized(df, k=4, iters=3, dim=6).collect()
+        }
+        assert got == want
 
 
 def test_kmeans_separable_clusters(spark):
@@ -72,7 +76,7 @@ def test_kmeans_separable_clusters(spark):
     assert a_clusters != b_clusters
 
 
-def test_kmeans_empty_cluster_keeps_centroid(spark):
+def test_kmeans_empty_cluster_keeps_centroid(spark, distributed):
     # duplicate seed vectors: cluster 1 loses every argmin tie (ties
     # break to the smaller index), so it EMPTIES in round 1 and must
     # keep its seed centroid — which then wins the [1,1] blob back in
@@ -80,12 +84,42 @@ def test_kmeans_empty_cluster_keeps_centroid(spark):
     # retained-centroid rule is what makes that recovery possible.
     rows = [(0, [1.0, 1.0]), (1, [1.0, 1.0]), (2, [0.5, 0.5]),
             (3, [-1.0, -1.0])]
-    df = spark.createDataFrame(rows, "vec_id:long, embedding:array<double>")
-    got = {r.vec_id: (r.cluster, r.dist2)
-           for r in kmeans_quantized(df, k=2, iters=2, dim=2).collect()}
-    assert got == _py_kmeans(dict(rows), k=2, iters=2)
-    assert got[0] == (1, 0) and got[1] == (1, 0)  # recovered members
-    assert got[3][0] == 0
+    for session in (spark, distributed):
+        df = session.createDataFrame(rows, "vec_id:long, embedding:array<double>")
+        got = {r.vec_id: (r.cluster, r.dist2)
+               for r in kmeans_quantized(df, k=2, iters=2, dim=2).collect()}
+        assert got == _py_kmeans(dict(rows), k=2, iters=2)
+        assert got[0] == (1, 0) and got[1] == (1, 0)  # recovered members
+        assert got[3][0] == 0
+
+
+def test_kmeans_driver_fit_declines_what_numpy_cannot_replay():
+    """The driver finish hands back to the distributed rounds (returns
+    None) on null ids or vectors, vectors whose length is not ``dim``,
+    and values whose int64 distances or sums could overflow; it raises
+    the distributed fit's error when there are fewer than k rows."""
+    import pyarrow as pa
+
+    from bdq_spark.operators.clustering import _fit_on_driver
+
+    def table(ids, qs):
+        return pa.table({
+            "id": pa.array(ids, pa.int64()),
+            "q": pa.array(qs, pa.list_(pa.int64())),
+        })
+
+    ok = table([2, 0, 1], [[5, 5], [0, 0], [1, 1]])
+    # seeds are ids 0 and 1; id 2 joins cluster 1; floor means
+    assert _fit_on_driver(ok, k=2, iters=1, dim=2) == [[0, 0], [3, 3]]
+    assert _fit_on_driver(table([0, None], [[0, 0], [1, 1]]), 1, 1, 2) is None
+    assert _fit_on_driver(table([0, 1], [[0, 0], None]), 1, 1, 2) is None
+    assert _fit_on_driver(table([0, 1], [[0, 0], [1, None]]), 1, 1, 2) is None
+    assert _fit_on_driver(table([0, 1], [[0, 0], [1]]), 1, 1, 2) is None
+    # dim * (2 * max|q|)**2 must stay below 2**63
+    assert _fit_on_driver(table([0, 1], [[0, 0], [2**30, 0]]), 1, 1, 2) is None
+    assert _fit_on_driver(table([0, 1], [[0, 0], [2**29, 0]]), 1, 1, 2) == [[2**28, 0]]
+    with pytest.raises(ValueError, match="at least k"):
+        _fit_on_driver(table([0], [[0, 0]]), k=2, iters=1, dim=2)
 
 
 def test_kmeans_deterministic_across_runs(spark):

@@ -12,6 +12,12 @@ def _collect(df):
     return {r.id: (r.cluster_id, r.is_keeper) for r in df.collect()}
 
 
+def _on_driver(df):
+    """True when ``df`` is a driver-built ``LocalRelation`` (the small-
+    input finish of connected components), False for a planned loop."""
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
+
+
 def test_chain_triangle_and_disjoint(spark):
     pairs = spark.createDataFrame(
         [
@@ -31,45 +37,55 @@ def test_chain_triangle_and_disjoint(spark):
     assert keepers == {1, 10, 20}
 
 
-def test_convergence_bound_raises(spark):
-    # a 6-node path needs more than 1 round
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(6)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iterations=1)
-    # and converges with a sane bound
-    out = _collect(connected_components(pairs))
-    assert {v[0] for v in out.values()} == {0}
+def test_convergence_bound_raises(spark, distributed):
+    # a 6-node path needs more than 1 round — on the driver finish and
+    # on the distributed loop alike
+    for session in (spark, distributed):
+        pairs = session.createDataFrame(
+            [(i, i + 1) for i in range(6)], "id_a long, id_b long"
+        )
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(pairs, max_iterations=1)
+        # and converges with a sane bound
+        out = connected_components(pairs)
+        assert _on_driver(out) == (session is spark)
+        assert {v[0] for v in _collect(out).values()} == {0}
 
 
-def test_geometric_check_boundaries(spark):
+def test_geometric_check_boundaries(spark, distributed):
     """The broadcast-regime loops count their convergence flag only at
     geometrically spaced rounds (OPTIMIZATION_r14).  Pin the boundary
     semantics: a diameter that lands BETWEEN two check rounds is
     detected late but returns identical labels (overshoot rounds are
     no-ops), and the max_iterations raise fires at exactly the same
-    bound as the every-round loop did."""
+    bound as the every-round loop did.  The CC cases run on frames of
+    ``distributed`` (broadcasts off), so they reach the planned loop,
+    not the driver finish of small inputs."""
     from bdq_spark.operators.components import kcore
 
     # 5-node path: fixpoint after round 4, first changed==0 at round 5
     # -> geometric checks (1, 2, 4, 8) detect at round 8; labels must
     # still be the every-round answer
-    pairs = spark.createDataFrame(
+    pairs = distributed.createDataFrame(
         [(i, i + 1) for i in range(4)], "id_a long, id_b long"
     )
-    out = _collect(connected_components(pairs))
+    cc = connected_components(pairs)
+    assert not _on_driver(cc)
+    out = _collect(cc)
     assert {k: v[0] for k, v in out.items()} == {i: 0 for i in range(5)}
     # raise boundary unchanged: an 8-node path needs 7 propagation
     # rounds + 1 no-change round; max_iterations=7 must still raise,
     # 8 must converge (the final geometric check is pinned to the bound)
-    path8 = spark.createDataFrame(
+    path8 = distributed.createDataFrame(
         [(i, i + 1) for i in range(7)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(path8, max_iterations=7)
     out8 = _collect(connected_components(path8, max_iterations=8))
     assert {v[0] for v in out8.values()} == {0}
+    # the driver finish raises at the same bound
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(spark.createDataFrame(path8.collect()), max_iterations=7)
     # kcore boundary (every-round checks + shared-broadcast anti-joins):
     # a 3-level pendant path peels in exactly 3 rounds — max_rounds=4
     # converges, max_rounds=2 raises
@@ -122,10 +138,57 @@ def _union_find(edges):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_matches_union_find(spark, edges):
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
-    assert got == _union_find(edges)
+def test_matches_union_find(spark, distributed, edges):
+    for session in (spark, distributed):
+        pairs = session.createDataFrame(edges, "id_a long, id_b long")
+        got = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
+        assert got == _union_find(edges)
+
+
+def test_driver_finish_keeps_types_and_schema(spark, distributed):
+    """The driver finish returns the distributed loop's schema: string
+    ids stay strings, an empty pair set gives an empty frame, and the
+    nullability matches."""
+    cases = [
+        ([("a", "b"), ("c", "b"), ("x", "y")], "id_a string, id_b string"),
+        ([(1, 2), (2, 3)], "id_a int, id_b int"),
+        ([], "id_a long, id_b long"),
+    ]
+    for rows, schema in cases:
+        local = connected_components(spark.createDataFrame(rows, schema))
+        planned = connected_components(distributed.createDataFrame(rows, schema))
+        assert _on_driver(local) and not _on_driver(planned)
+        assert local.schema == planned.schema
+        assert sorted(local.collect()) == sorted(planned.collect())
+    strings = _collect(connected_components(spark.createDataFrame(*cases[0])))
+    assert strings == {
+        "a": ("a", True), "b": ("a", False), "c": ("a", False),
+        "x": ("x", True), "y": ("x", False),
+    }
+    # non-null ids from a range stay non-nullable
+    from pyspark.sql import functions as F
+
+    ranged = spark.range(3).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    planned = distributed.range(3).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    assert connected_components(ranged).schema == connected_components(planned).schema
+
+
+def test_collect_if_small_gate(spark):
+    """The driver-finish gate: at most ``threshold // row_bytes`` rows
+    (and ``max_rows``) come back as one Arrow table; a larger input,
+    or a threshold <= 0, gives None."""
+    from bdq_spark.session import collect_if_small, private_session
+
+    tiny = private_session(spark, {"spark.sql.autoBroadcastJoinThreshold": "32"})
+    assert collect_if_small(tiny.range(2), 16).num_rows == 2
+    assert collect_if_small(tiny.range(3), 16) is None
+    assert collect_if_small(tiny.range(2), 16, max_rows=1) is None
+    off = private_session(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
+    assert collect_if_small(off.range(1), 16) is None
 
 
 def test_apply_dedup_clusters_end_to_end(spark):
@@ -391,15 +454,23 @@ def test_shuffle_path_parity_all_ops(spark):
     df = spark.createDataFrame(edges, "src long, dst long")
     pairs = df.toDF("id_a", "id_b")
 
-    cc_b = {
-        (r.id, r.cluster_id, r.is_keeper)
-        for r in connected_components(pairs).collect()
-    }
-    cc_s = {
-        (r.id, r.cluster_id, r.is_keeper)
-        for r in connected_components(pairs, broadcast_max_nodes=0).collect()
-    }
-    assert cc_s == cc_b
+    # three CC paths: the driver finish (input under the broadcast
+    # threshold), the broadcast-regime loop (broadcasts off) and the
+    # co-partitioned loop (broadcast_max_nodes=0)
+    from bdq_spark.session import private_session
+
+    no_broadcast = private_session(
+        spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+    )
+    cc_d = connected_components(pairs)
+    cc_b = connected_components(no_broadcast.createDataFrame(edges, "id_a long, id_b long"))
+    cc_s = connected_components(pairs, broadcast_max_nodes=0)
+    assert _on_driver(cc_d) and not _on_driver(cc_b) and not _on_driver(cc_s)
+    cc_d, cc_b, cc_s = (
+        {(r.id, r.cluster_id, r.is_keeper) for r in cc.collect()}
+        for cc in (cc_d, cc_b, cc_s)
+    )
+    assert cc_s == cc_b == cc_d
 
     prq_b = {
         (r.id, r.rank_q) for r in pagerank_quantized(df).collect()
@@ -486,18 +557,20 @@ def test_aqe_disabled_restores_on_exception(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
-def test_loops_leave_caller_session_conf_untouched(spark):
+def test_loops_leave_caller_session_conf_untouched(spark, distributed):
     """The hand-scheduled loops (CC on both regimes, kcore, BPE) plan
     on a private session: a thread polling the CALLER's session while
     they run never sees AQE off or a pinned shuffle width, and a frame
     planned on the caller mid-loop is still adaptive — what a parallel
     ``SparkPipeline`` step on the same session sees.  Results come back
-    as frames of the caller's session."""
+    as frames of the caller's session.  The caller has broadcasts off,
+    so CC runs its planned loops rather than the driver finish."""
     import threading
 
     from bdq_spark.operators.components import kcore
     from bdq_spark.operators.tokenizer import train_bpe
 
+    spark = distributed
     aqe_key = "spark.sql.adaptive.enabled"
     width_key = "spark.sql.shuffle.partitions"
     expected = (spark.conf.get(aqe_key), spark.conf.get(width_key))
@@ -540,6 +613,7 @@ def test_loops_leave_caller_session_conf_untouched(spark):
     assert seen == {expected}, seen
     assert adaptive == {True}
     assert all(o.sparkSession is spark for o in outs)
+    assert not _on_driver(outs[0]) and not _on_driver(outs[1])
     # results compose with caller-session frames
     names = spark.createDataFrame([(1, "a"), (20, "b")], "id long, nm string")
     assert outs[1].join(names, "id").count() == 2
@@ -569,6 +643,18 @@ def test_cluster_relation_keeps_size_statistics(spark):
 
     assert size(crossed) == size(clusters) < 10_000
     kept = apply_dedup_clusters(docs, crossed)
+    plan = kept._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+    assert kept.count() == 997
+
+    # the real connected_components output of a small graph carries
+    # exact size statistics too, so the anti-join broadcasts it
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+    )
+    labels = connected_components(pairs)
+    assert size(labels) < 10_000
+    kept = apply_dedup_clusters(docs, labels)
     plan = kept._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
     assert kept.count() == 997

@@ -132,3 +132,32 @@ def test_is_dependency_met_semantics():
     assert p.state == "ERROR"
     assert q.state == "SKIPPED"
     assert not graph.is_dependency_met(q)
+
+
+def test_nodes_inherit_spark_local_properties(spark):
+    """Each node starts with its own copy of the caller's Spark local
+    properties: it sees the caller's values, and a value one node sets
+    reaches neither a concurrent node nor the caller."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("bdq.test.owner", "caller")
+    try:
+        graph = DAG()
+        barrier = __import__("threading").Barrier(2, timeout=10)
+
+        def make(name):
+            def node():
+                seen = sc.getLocalProperty("bdq.test.owner")
+                sc.setLocalProperty("bdq.test.owner", name)
+                barrier.wait()  # both nodes have set their own value
+                return seen, sc.getLocalProperty("bdq.test.owner")
+
+            node.__name__ = name
+            return graph.node()(node)
+
+        one, two = make("one"), make("two")
+        graph.execute(max_workers=2, spark=spark)
+        assert one.result == ("caller", "one")
+        assert two.result == ("caller", "two")
+        assert sc.getLocalProperty("bdq.test.owner") == "caller"
+    finally:
+        sc.setLocalProperty("bdq.test.owner", None)

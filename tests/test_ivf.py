@@ -96,13 +96,22 @@ _FULL_PROBE = {
 }
 
 
-@pytest.mark.parametrize("op", sorted(_FULL_PROBE))
+@pytest.mark.parametrize("op", sorted(_FULL_PROBE) + ["knn_ivf-string_ids"])
 def test_knn_full_probe_equals_bruteforce(spark, embeddings, op):
     """A probe set that covers the corpus makes the candidate set the
     whole corpus, so the operator must reproduce exact brute force row
     for row — the witness that bucketing/probing only FILTERS and never
-    perturbs scoring or ranking."""
-    queries = embeddings.filter(F.col("vec_id") < 3).select(
+    perturbs scoring or ranking.  One case carries string ids, whose
+    type the cell assignment must keep."""
+    op, _, ids = op.partition("-")
+    if ids == "string_ids":
+        embeddings = embeddings.withColumn(
+            "vec_id", F.concat(F.lit("v"), F.col("vec_id").cast("string"))
+        )
+        small = F.col("vec_id").isin("v0", "v1", "v2")
+    else:
+        small = F.col("vec_id") < 3
+    queries = embeddings.filter(small).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     got = sorted(map(tuple, _FULL_PROBE[op](embeddings, queries).collect()))
@@ -156,13 +165,19 @@ def test_knn_candidates_have_no_duplicates(spark, embeddings, op, num_tables):
     assert total == distinct > 5  # more than the self-matches
 
 
-def test_knn_ivf_quantized_deterministic(spark):
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.01/embeddings.parquet"
-    ).repartition(13)
-    queries = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    a = sorted(map(tuple, knn_ivf_quantized(emb, queries, k=7).collect()))
-    b = sorted(map(tuple, knn_ivf_quantized(emb, queries, k=7).collect()))
-    assert a == b and len(a) == 4 * 7
+def test_knn_ivf_quantized_deterministic(spark, distributed):
+    # the coarse quantizer fitted on the driver and by distributed
+    # rounds (broadcasts off) gives the same neighbors
+    results = []
+    for session in (spark, distributed):
+        emb = session.read.parquet(
+            "/root/testdata/sf0.01/embeddings.parquet"
+        ).repartition(13)
+        queries = emb.filter(F.col("vec_id") < 4).select(
+            F.col("vec_id").alias("query_id"), "embedding"
+        )
+        results += [
+            sorted(map(tuple, knn_ivf_quantized(emb, queries, k=7).collect()))
+            for _ in range(2)
+        ]
+    assert all(r == results[0] for r in results) and len(results[0]) == 4 * 7

@@ -377,6 +377,59 @@ def test_step_timeout_cancels_spark_jobs(spark):
     assert not sc.statusTracker().getActiveJobsIds()
 
 
+def test_step_timeout_cancels_pk_validator_jobs(spark):
+    """A step that times out during a PK search cancels the validators'
+    jobs too: the DAG threads they run on inherit the step's job group.
+    The slow input sleeps only in its ``slow`` columns, so the shared
+    row count is fast and each validator's job hangs."""
+    import time
+
+    from bdq_spark.operators.pk import validate_primary_key_candidate_combinations
+
+    @F.udf("long")
+    def slow(x):
+        time.sleep(60)
+        return x
+
+    df = spark.range(0, 2, 1, 1).select(
+        "id", slow("id").alias("slow_a"), slow("id").alias("slow_b")
+    )
+    ppn = SparkPipeline("timeout_pk", spark=spark)
+
+    @ppn.step_python(timeout_seconds=3.0)
+    def pk_search(step):
+        return validate_primary_key_candidate_combinations(
+            df, [["slow_a"], ["slow_b"]], max_workers=2
+        )
+
+    # tasks of an earlier test's cancelled job may still hold the
+    # cores; the validators must get slots before the step times out
+    executors = spark.sparkContext._jsc.sc().statusTracker()
+    deadline = time.monotonic() + 30
+    while time.monotonic() < deadline and any(
+        e.numRunningTasks() for e in executors.getExecutorInfos()
+    ):
+        time.sleep(0.2)
+
+    t0 = time.monotonic()
+    with pytest.raises(ValueError, match="have failed"):
+        ppn()
+    assert time.monotonic() - t0 < 10
+    tracker = spark.sparkContext.statusTracker()
+    group = "timeout_pk#pk_search#attempt1"
+
+    def running():
+        return set(tracker.getActiveJobsIds()) & set(tracker.getJobIdsForGroup(group))
+
+    deadline = time.monotonic() + 5
+    while running() and time.monotonic() < deadline:
+        time.sleep(0.2)
+    # the row count and both validators ran in the step's group, and
+    # none of them is still running
+    assert len(tracker.getJobIdsForGroup(group)) == 3
+    assert not running()
+
+
 def test_step_policy_validation(spark):
     ppn = SparkPipeline("policy_validation", spark=spark)
     with pytest.raises(ValueError, match="retries"):

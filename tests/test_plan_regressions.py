@@ -79,6 +79,27 @@ def test_regression_classifier_direction():
     ) == []
 
 
+def test_checkpoint_width_relative_to_shuffle_width():
+    """A checkpoint pinned at the shuffle width reads the same at 4 and
+    8 cores, and a checkpoint newly pinned wider than its data still
+    regresses."""
+    width = explain_audit.relative_checkpoint_width
+    assert width(4, 4) == width(8, 8) == "1x shuffle"
+    assert width(16, 8) == "2x shuffle"
+    assert width(1, 4) == width(1, 8) == 1
+    assert width(0, 4) == 0 and width(3, 4) == 3 and width(2, 1) == 2
+    g = {"checkpoint_partitions": 1}
+    assert explain_audit.regressions_vs_golden(
+        g, {"checkpoint_partitions": width(8, 8)}
+    ) == ["checkpoint_partitions 1->1x shuffle"]
+    pinned = {"checkpoint_partitions": "1x shuffle"}
+    assert explain_audit.regressions_vs_golden(pinned, {"checkpoint_partitions": width(4, 4)}) == []
+    assert explain_audit.regressions_vs_golden(pinned, {"checkpoint_partitions": 1}) == []
+    assert explain_audit.regressions_vs_golden(
+        pinned, {"checkpoint_partitions": "2x shuffle"}
+    ) == ["checkpoint_partitions 1x shuffle->2x shuffle"]
+
+
 def test_cheap_subset_matches_golden_in_assert_mode(spark):
     import __spark_entry__ as entrymod
 

@@ -158,16 +158,39 @@ _REGRESSION_KEYS = (
 )
 
 
+def relative_checkpoint_width(n: int, shuffle_width: int):
+    """A checkpoint partition count as recorded in the golden: a
+    multiple of the session's shuffle width (a checkpoint pinned at the
+    width, e.g. a streaming state store's) is recorded as ``"<k>x
+    shuffle"``, so audits at 4 and 8 cores agree; any other count is
+    data-derived and kept as it is.  A data-derived count that happens
+    to be a multiple of the width reads as pinned (shuffle width 1 is
+    left absolute for that reason)."""
+    if shuffle_width > 1 and n >= shuffle_width and n % shuffle_width == 0:
+        return f"{n // shuffle_width}x shuffle"
+    return n
+
+
+def _rank(value):
+    """Order of a fingerprint value for the regression check: any
+    ``"<k>x shuffle"`` width ranks above every data-derived count."""
+    if isinstance(value, str):
+        return (1, int(value.split("x")[0]))
+    return (0, value)
+
+
 def regressions_vs_golden(golden_fp: dict, fp: dict) -> list:
     """The REGRESSION subset of drift: counts that grew, or a cartesian
     that appeared.  Improvements (counts that shrank, pushdown gained)
-    are drift worth a snapshot refresh but never a failure."""
+    are drift worth a snapshot refresh but never a failure.  A
+    checkpoint newly pinned at the shuffle width where the golden has a
+    data-derived width regresses (:func:`relative_checkpoint_width`)."""
     regs = [
         # .get() in the message too: an older golden snapshot missing a
         # newer fingerprint key must REPORT the regression, not KeyError
         f"{k} {golden_fp.get(k, 0)}->{fp.get(k, 0)}"
         for k in _REGRESSION_KEYS
-        if fp.get(k, 0) > golden_fp.get(k, 0)
+        if _rank(fp.get(k, 0)) > _rank(golden_fp.get(k, 0))
     ]
     if fp.get("cartesian") and not golden_fp.get("cartesian"):
         regs.append("cartesian False->True")
@@ -208,7 +231,10 @@ def run_audit(spark, queries, only=(), golden=None, quiet=False):
         fp = plan_fingerprint(plan)
         # partition counts live on the checkpoint RDDs, not in the
         # explain text — read them off the DataFrame's analyzed plan
-        fp["checkpoint_partitions"] = checkpoint_partitions(df)
+        fp["checkpoint_partitions"] = relative_checkpoint_width(
+            checkpoint_partitions(df),
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+        )
         fp["construct_jobs"] = built["jobs"]
         fp["construct_stages"] = built["stages"]
         n_exchange = fp["exchanges"]
