@@ -106,11 +106,14 @@ def collect_if_small(
     it is already shipped through the driver whole whenever a join
     broadcasts it, so finishing a loop over it on the driver adds no
     new memory class and no new knob.  A threshold <= 0 (broadcast
-    disabled) always returns ``None``.  The probe is one job,
-    ``df.limit(cap + 1)`` collected through Arrow whatever the session's
-    Arrow conf says; the table keeps exact nulls, and
-    ``spark.createDataFrame(table, schema)`` turns a driver-side result
-    back into a ``LocalRelation`` with exact size statistics."""
+    disabled) always returns ``None``.  The probe is one job and one
+    task, ``df.coalesce(1).limit(cap + 1)`` collected through Arrow
+    whatever the session's Arrow conf says: the single task stops
+    reading after ``cap + 1`` rows, where a plain limit would shuffle up
+    to ``cap + 1`` rows from EVERY partition of a large input.  The
+    table keeps exact nulls, and ``spark.createDataFrame(table,
+    schema)`` turns a driver-side result back into a ``LocalRelation``
+    with exact size statistics."""
     if not hasattr(df, "toArrow"):  # PySpark < 4.0
         return None
     conf = df.sparkSession._jsparkSession.sessionState().conf()
@@ -119,5 +122,5 @@ def collect_if_small(
         cap = min(cap, max_rows)
     if cap <= 0:
         return None
-    table = df.limit(cap + 1).toArrow()
+    table = df.coalesce(1).limit(cap + 1).toArrow()
     return table if table.num_rows <= cap else None
