@@ -331,4 +331,7 @@ def _inheriting(spark) -> Callable[[Callable], Callable]:
     session = spark or SparkSession.getActiveSession()
     if session is None:
         return lambda target: target
-    return inheritable_thread_target(session)
+    wrap = inheritable_thread_target(session)
+    # without pinned threads (PYSPARK_PIN_THREAD=false) PySpark hands the
+    # session back instead of a decorator: there is nothing to copy
+    return (lambda target: target) if wrap is session else wrap
