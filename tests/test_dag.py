@@ -138,11 +138,13 @@ def test_nodes_inherit_spark_local_properties(spark):
     """Each node starts with its own copy of the caller's Spark local
     properties: it sees the caller's values, and a value one node sets
     reaches neither a concurrent node nor the caller."""
+    import threading
+
     sc = spark.sparkContext
     sc.setLocalProperty("bdq.test.owner", "caller")
     try:
         graph = DAG()
-        barrier = __import__("threading").Barrier(2, timeout=10)
+        barrier = threading.Barrier(2, timeout=10)
 
         def make(name):
             def node():

@@ -166,18 +166,21 @@ def test_knn_candidates_have_no_duplicates(spark, embeddings, op, num_tables):
 
 
 def test_knn_ivf_quantized_deterministic(spark, distributed):
+    from bdq_spark.session import rebind
+
+    emb = spark.read.parquet(
+        "/root/testdata/sf0.01/embeddings.parquet"
+    ).repartition(13)
     # the coarse quantizer fitted on the driver and by distributed
-    # rounds (broadcasts off) gives the same neighbors
+    # rounds (a frame of the broadcasts-off session) gives the same
+    # neighbors
     results = []
-    for session in (spark, distributed):
-        emb = session.read.parquet(
-            "/root/testdata/sf0.01/embeddings.parquet"
-        ).repartition(13)
-        queries = emb.filter(F.col("vec_id") < 4).select(
+    for corpus in (emb, rebind(emb, distributed)):
+        queries = corpus.filter(F.col("vec_id") < 4).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
         results += [
-            sorted(map(tuple, knn_ivf_quantized(emb, queries, k=7).collect()))
+            sorted(map(tuple, knn_ivf_quantized(corpus, queries, k=7).collect()))
             for _ in range(2)
         ]
     assert all(r == results[0] for r in results) and len(results[0]) == 4 * 7
