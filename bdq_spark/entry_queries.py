@@ -117,6 +117,13 @@ def _index_marker_content(
     )
 
 
+#: number of fixture builds :func:`_staged` has run in this process.  A
+#: caller that counts an entry's jobs compares it before and after the
+#: call: a build on a cold temp dir schedules jobs the steady state never
+#: runs.
+_staged_builds = 0
+
+
 def _staged(
     tag: str,
     sf_dir: str,
@@ -142,6 +149,7 @@ def _staged(
     half-built directory.  The directory is built in place rather than
     renamed from a temporary one, because zonemap and Bloom sidecars
     record absolute file URIs."""
+    global _staged_builds
     identity = _index_marker_content(sf_dir, table, version, params or {})
     key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     path = os.path.join(tempfile.gettempdir(), f"bdq_{tag}_{key}")
@@ -156,6 +164,7 @@ def _staged(
         except (OSError, ValueError, KeyError):
             pass
         shutil.rmtree(path, ignore_errors=True)
+        _staged_builds += 1
         facts = build(path) or {}
         os.makedirs(path, exist_ok=True)
         with open(marker, "w") as fh:
@@ -3716,7 +3725,7 @@ def zonemap_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval-overlap pruning is lossless."""
     from bdq_spark.operators.layout import zorder_layout
     from bdq_spark.sources.sinks import (
-        read_zonemap,
+        read_indexed,
         write_zonemap,
         zonemap_candidate_files,
     )
@@ -3755,7 +3764,7 @@ def zonemap_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{len(census['files'])}/{census['total']} files"
         )
     return (
-        read_zonemap(spark, path, preds, candidates=census)
+        read_indexed(spark, path, ranges=preds, candidates=census)
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -8852,7 +8861,7 @@ def bloom_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning is lossless."""
     from bdq_spark.sources.sinks import (
         bloom_candidate_files,
-        read_bloom,
+        read_indexed,
         write_bloom_index,
     )
 
@@ -8889,8 +8898,8 @@ def bloom_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bloom pruning regressed — candidate census "
             f"{len(census['files'])}/{census['total']} files"
         )
-    return read_bloom(
-        spark, path, {"o_orderkey": probe}, candidates=census
+    return read_indexed(
+        spark, path, equals={"o_orderkey": probe}, candidates=census
     ).select(
         "o_orderkey", "o_custkey", "cents"
     )

@@ -70,7 +70,6 @@ non-atomicity, shared by every path-based format.
 
 from __future__ import annotations
 
-import json
 import posixpath
 from typing import Callable, Dict, List, Optional
 
@@ -79,6 +78,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from bdq_spark.operators.cdc import apply_cdc
+from bdq_spark.sources.sinks import _hadoop_fs, _read_json, _write_json
 
 __all__ = [
     "cdc_merge_sink",
@@ -173,16 +173,6 @@ BUCKET_COLUMN = "__cdc_bucket"
 _MANIFEST_PREFIX = "_MANIFEST."
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path-class) for ``path`` via the Hadoop FS API —
-    portable to HDFS/S3A/local, same pattern as
-    :func:`bdq_spark.sources.sinks.compact_parquet`."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jvm.org.apache.hadoop.fs.Path
-
-
 def _list_manifest_gens(fs, Path, path: str) -> List[int]:
     """Sorted generations of every COMMITTED manifest under ``path``."""
     if not fs.exists(Path(path)):
@@ -205,11 +195,7 @@ def _read_manifest(fs, Path, path: str, gen: Optional[int] = None):
     if not gens:
         return None
     g = gens[-1] if gen is None else gen
-    stream = fs.open(Path(posixpath.join(path, f"{_MANIFEST_PREFIX}{g}")))
-    try:
-        return json.loads(bytes(stream.readAllBytes()).decode())
-    finally:
-        stream.close()
+    return _read_json(fs, Path(posixpath.join(path, f"{_MANIFEST_PREFIX}{g}")))
 
 
 def _commit_manifest(fs, Path, path: str, manifest: dict) -> None:
@@ -220,11 +206,7 @@ def _commit_manifest(fs, Path, path: str, manifest: dict) -> None:
     g = manifest["generation"]
     final = Path(posixpath.join(path, f"{_MANIFEST_PREFIX}{g}"))
     tmp = Path(posixpath.join(path, f"{_MANIFEST_PREFIX}{g}.tmp"))
-    out = fs.create(tmp, True)
-    try:
-        out.write(json.dumps(manifest).encode())
-    finally:
-        out.close()
+    _write_json(fs, tmp, manifest)
     if fs.exists(final):  # replay of a crashed-mid-commit attempt
         fs.delete(final, False)
     if not fs.rename(tmp, final):

@@ -19,7 +19,7 @@ from bdq_spark.sources.sinks import (
     _bloom_positions,
     bloom_candidate_files,
     bloom_manifest,
-    read_bloom,
+    read_indexed,
     write_bloom_index,
 )
 
@@ -54,11 +54,11 @@ def test_pruning_happens_and_read_is_exact(spark):
         for probe in (3, 111, 222, 333):
             cand = bloom_candidate_files(spark, path, {"id": probe})
             pruned_any |= len(cand["files"]) < cand["total"]
-            got = read_bloom(spark, path, {"id": probe}).collect()
+            got = read_indexed(spark, path, equals={"id": probe}).collect()
             assert [(r.id, r.payload) for r in got] == [(probe, f"row-{probe}")]
         assert pruned_any  # 2048 bits / ~50 ids per file prunes hard
         # absent value: zero rows, regardless of candidate count
-        assert read_bloom(spark, path, {"id": 10**9}).count() == 0
+        assert read_indexed(spark, path, equals={"id": 10**9}).count() == 0
 
 
 def test_positions_match_spark_side(spark):
@@ -97,7 +97,7 @@ def test_multi_column_and_errors(spark):
         write_bloom_index(spark, path, ["a", "b"], bits=512, hashes=4)
         cand = bloom_candidate_files(spark, path, {"a": 7, "b": "s2"})
         assert cand["total"] == 4 and cand["files"]
-        got = read_bloom(spark, path, {"a": 7, "b": "s2"}).collect()
+        got = read_indexed(spark, path, equals={"a": 7, "b": "s2"}).collect()
         assert [(r.a, r.b) for r in got] == [(7, "s2")]
         import pytest
 
@@ -177,7 +177,7 @@ def test_all_null_first_column_file_not_dropped(spark):
         assert len(manifest["columns"]["a"]) < len(manifest["files"])
         cand = bloom_candidate_files(spark, path, {"b": "needle"})
         assert cand["total"] == len(manifest["files"])
-        got = read_bloom(spark, path, {"b": "needle"}).collect()
+        got = read_indexed(spark, path, equals={"b": "needle"}).collect()
         assert [(r.a, r.b) for r in got] == [(None, "needle")]
         # probing the all-NULL column still prunes that file (correct:
         # NULL never satisfies equality)

@@ -619,6 +619,58 @@ def test_loops_leave_caller_session_conf_untouched(spark, distributed):
     assert outs[1].join(names, "id").count() == 2
 
 
+def test_concurrent_pipeline_step_stays_adaptive(distributed):
+    """Two steps of one ``SparkPipeline`` run at once on the same
+    session.  One runs connected components on pairs above the
+    broadcast threshold (the session has broadcasts off), so the
+    private-session loop runs; every frame the other step plans
+    meanwhile is still adaptive."""
+    import threading
+    import time
+
+    from bdq_spark.plans import SparkPipeline
+
+    spark = distributed
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)] + [(20, 21), (21, 22)],
+        "id_a long, id_b long",
+    )
+    started, done = threading.Event(), threading.Event()
+    got: dict = {}
+    ppn = SparkPipeline("session_isolation", spark=spark)
+
+    @ppn.step_python()
+    def graph(step):
+        started.set()
+        try:
+            got["cc"] = connected_components(pairs)
+            return got["cc"].count()
+        finally:
+            done.set()
+
+    @ppn.step_python()
+    def probe(step):
+        assert started.wait(30)
+        plans = []
+        while True:
+            df = spark.range(100).groupBy("id").count()
+            plans.append(
+                df._jdf.queryExecution().executedPlan()
+                .getClass().getSimpleName()
+            )
+            if done.is_set():
+                break
+            time.sleep(0.02)
+        return {"n": len(plans), "kinds": set(plans)}
+
+    t0 = time.monotonic()
+    ppn()
+    assert time.monotonic() - t0 < 10
+    assert not _on_driver(got["cc"]) and graph.result == [12]
+    assert probe.result[0]["n"] > 1
+    assert probe.result[0]["kinds"] == {"AdaptiveSparkPlanExec"}
+
+
 def test_cluster_relation_keeps_size_statistics(spark):
     """A relation crossing into a loop's private session and back keeps
     its size statistics, so the dedup anti-join against a small cluster

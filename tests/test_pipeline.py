@@ -347,17 +347,18 @@ def test_step_timeout_with_retry_eventually_succeeds(spark):
 
 def test_step_timeout_cancels_spark_jobs(spark):
     """A timed-out step's in-flight Spark job is cancelled via its job
-    group — the cluster stops working on the doomed attempt."""
+    group — the cluster stops working on the doomed attempt.  The job is
+    many short tasks, so once it is cancelled no task is left running
+    on the executors."""
     import time
 
     ppn = SparkPipeline("timeout_cancel", spark=spark)
 
     @ppn.step_spark(timeout_seconds=2.0)
     def heavy(step):
-        # ~forever in local mode without cancellation: cartesian square
-        # of 50M ids forced through an action inside the step body
-        big = spark.range(0, 50_000_000)
-        df = big.crossJoin(big.selectExpr("id AS id2")).filter("id + id2 = -1")
+        # ~0.1 s per task, about a minute of tasks on 4 cores without
+        # cancellation
+        df = spark.range(0, 20_000_000 * 2000, 1, 2000).filter("id % 7 = 3")
         df.count()
         return df
 
@@ -366,15 +367,21 @@ def test_step_timeout_cancels_spark_jobs(spark):
         ppn()
     elapsed = time.monotonic() - t0
     assert elapsed < 60, f"cancellation ineffective: step held on {elapsed}s"
-    # the cancelled action must not leave active jobs behind
-    deadline = time.monotonic() + 30
     sc = spark.sparkContext
-    while time.monotonic() < deadline:
-        active = sc.statusTracker().getActiveJobsIds()
-        if not active:
-            break
-        time.sleep(0.5)
+    executors = sc._jsc.sc().statusTracker()
+
+    def busy():
+        return sc.statusTracker().getActiveJobsIds() or any(
+            e.numRunningTasks() for e in executors.getExecutorInfos()
+        )
+
+    deadline = time.monotonic() + 10
+    while busy() and time.monotonic() < deadline:
+        time.sleep(0.2)
     assert not sc.statusTracker().getActiveJobsIds()
+    assert all(
+        e.numRunningTasks() == 0 for e in executors.getExecutorInfos()
+    )
 
 
 def test_step_timeout_cancels_pk_validator_jobs(spark):
@@ -401,15 +408,6 @@ def test_step_timeout_cancels_pk_validator_jobs(spark):
         return validate_primary_key_candidate_combinations(
             df, [["slow_a"], ["slow_b"]], max_workers=2
         )
-
-    # tasks of an earlier test's cancelled job may still hold the
-    # cores; the validators must get slots before the step times out
-    executors = spark.sparkContext._jsc.sc().statusTracker()
-    deadline = time.monotonic() + 30
-    while time.monotonic() < deadline and any(
-        e.numRunningTasks() for e in executors.getExecutorInfos()
-    ):
-        time.sleep(0.2)
 
     t0 = time.monotonic()
     with pytest.raises(ValueError, match="have failed"):

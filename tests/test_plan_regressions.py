@@ -112,6 +112,35 @@ def test_cheap_subset_matches_golden_in_assert_mode(spark):
     assert regressed == []
 
 
+def test_cold_fixture_entry_audits_at_golden(spark):
+    """An entry that stages its fixture on a cold temp dir also runs the
+    build's jobs; the audit then counts a second call, so a first audit
+    on a fresh checkout reads the golden's steady-state count."""
+    import hashlib
+    import shutil
+    import tempfile
+
+    import __spark_entry__ as entrymod
+
+    key = hashlib.md5(explain_audit.SF_DIR.encode()).hexdigest()[:12]
+    shutil.rmtree(
+        os.path.join(tempfile.gettempdir(), f"bdq_bloom_orders_{key}"),
+        ignore_errors=True,
+    )
+    golden = _golden()
+    fps, _, regressed = explain_audit.run_audit(
+        spark, entrymod.queries(), only=["bloom_pruned_scan"],
+        golden=golden, quiet=True,
+    )
+    want = golden["bloom_pruned_scan"]
+    assert fps["bloom_pruned_scan"]["construct_jobs"] == want["construct_jobs"]
+    assert (
+        fps["bloom_pruned_scan"]["construct_stages"]
+        == want["construct_stages"]
+    )
+    assert regressed == []
+
+
 def test_every_entry_has_plan_golden_and_driver_coverage():
     """Every registered query must have (a) a plans_golden fingerprint
     and (b) either a recorded driver CORRECTNESS row or a slot in the

@@ -2,6 +2,7 @@
 actually delivers pruning and shuffle-free joins."""
 
 import io
+import os
 from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
@@ -112,7 +113,7 @@ def test_zonemap_roundtrip_and_pruning(spark, tmp_path):
     is lossless (pruned read == full filter) and actually prunes when
     the layout is range-clustered; empty ranges return empty."""
     from bdq_spark.sources.sinks import (
-        read_zonemap,
+        read_indexed,
         write_zonemap,
         zonemap_candidate_files,
         zonemap_manifest,
@@ -153,7 +154,8 @@ def test_zonemap_roundtrip_and_pruning(spark, tmp_path):
     assert 0 < len(cand["files"]) < cand["total"] == 8
 
     got = sorted(
-        r.id for r in read_zonemap(spark, path, {"a": (10, 15)}).collect()
+        r.id
+        for r in read_indexed(spark, path, ranges={"a": (10, 15)}).collect()
     )
     exp = sorted(
         r.id
@@ -163,7 +165,7 @@ def test_zonemap_roundtrip_and_pruning(spark, tmp_path):
 
     # two-column predicates compose (AND): still lossless
     preds = {"a": (20, 60), "b": (100, 400)}
-    got2 = read_zonemap(spark, path, preds).count()
+    got2 = read_indexed(spark, path, ranges=preds).count()
     exp2 = df.filter(
         (F.col("a") >= 20) & (F.col("a") <= 60)
         & (F.col("b") >= 100) & (F.col("b") <= 400)
@@ -173,7 +175,7 @@ def test_zonemap_roundtrip_and_pruning(spark, tmp_path):
     # out-of-range: zero candidates, empty frame with the right schema
     c2 = zonemap_candidate_files(spark, path, {"a": (1000, 2000)})
     assert c2["files"] == []
-    empty = read_zonemap(spark, path, {"a": (1000, 2000)})
+    empty = read_indexed(spark, path, ranges={"a": (1000, 2000)})
     assert empty.count() == 0 and empty.columns == ["id", "a", "b"]
 
 
@@ -181,7 +183,7 @@ def test_zonemap_open_bounds_and_errors(spark, tmp_path):
     import pytest as _pt
 
     from bdq_spark.sources.sinks import (
-        read_zonemap,
+        read_indexed,
         write_zonemap,
         zonemap_candidate_files,
     )
@@ -190,9 +192,9 @@ def test_zonemap_open_bounds_and_errors(spark, tmp_path):
     df = spark.range(0, 100).select(F.col("id"), (F.col("id") % 7).alias("a"))
     write_zonemap(spark, df, path, ["a"], num_files=2)
     # open-ended bounds
-    assert read_zonemap(spark, path, {"a": (5, None)}).count() == \
+    assert read_indexed(spark, path, ranges={"a": (5, None)}).count() == \
         df.filter(F.col("a") >= 5).count()
-    assert read_zonemap(spark, path, {"a": (None, 2)}).count() == \
+    assert read_indexed(spark, path, ranges={"a": (None, 2)}).count() == \
         df.filter(F.col("a") <= 2).count()
     with _pt.raises(ValueError, match="not in zonemap"):
         zonemap_candidate_files(spark, path, {"nope": (0, 1)})
@@ -205,6 +207,23 @@ def test_zonemap_open_bounds_and_errors(spark, tmp_path):
             str(tmp_path / "zm3"),
             ["s"],
         )
+
+
+def test_zonemap_without_meta_file_raises(spark, tmp_path):
+    """The zonemap sidecar is only ever read with the schema recorded in
+    ``_ZONEMAP_META.json``: a sidecar whose meta file is gone raises a
+    ValueError naming that file instead of inferring a schema."""
+    import pytest as _pt
+
+    from bdq_spark.sources.sinks import write_zonemap, zonemap_candidate_files
+
+    path = str(tmp_path / "zm_nometa")
+    df = spark.range(0, 40).select(F.col("id"), (F.col("id") % 5).alias("a"))
+    write_zonemap(spark, df, path, ["a"], num_files=2)
+    assert zonemap_candidate_files(spark, path, {"a": (0, 1)})["total"] == 2
+    os.remove(os.path.join(path, "_ZONEMAP_META.json"))
+    with _pt.raises(ValueError, match="_ZONEMAP_META.json"):
+        zonemap_candidate_files(spark, path, {"a": (0, 1)})
 
 
 def test_zonemap_zorder_composition_prunes_both_dims(spark, tmp_path):
@@ -244,7 +263,7 @@ def test_append_zonemap_incremental_census(spark, tmp_path):
 
     from bdq_spark.sources.sinks import (
         append_zonemap,
-        read_zonemap,
+        read_indexed,
         write_zonemap,
         zonemap_candidate_files,
         zonemap_manifest,
@@ -285,7 +304,7 @@ def test_append_zonemap_incremental_census(spark, tmp_path):
     cand = zonemap_candidate_files(spark, path, {"a": (100, 139)})
     assert set(cand["files"]) == set(new_files)
     assert cand["total"] == 6
-    got_rows = read_zonemap(spark, path, {"a": (100, 139)}).count()
+    got_rows = read_indexed(spark, path, ranges={"a": (100, 139)}).count()
     assert got_rows == 2000
 
     # idempotence: same batch again appends nothing
