@@ -378,10 +378,7 @@ def test_step_timeout_cancels_spark_jobs(spark):
     deadline = time.monotonic() + 10
     while busy() and time.monotonic() < deadline:
         time.sleep(0.2)
-    assert not sc.statusTracker().getActiveJobsIds()
-    assert all(
-        e.numRunningTasks() == 0 for e in executors.getExecutorInfos()
-    )
+    assert not busy()
 
 
 def test_step_timeout_cancels_pk_validator_jobs(spark):
