@@ -42,9 +42,10 @@ compares them exactly.  Two things outside the entry move them: an
 entry that stages a fixture under the temp dir schedules more jobs on
 a cold temp dir (when a call built a fixture, :func:`run_audit` counts
 a second call, so the golden records the warm count), and an entry that
-leaves a frame persisted makes later entries that build the same frame
-cheaper (the golden records a full run in registry order, so such an
-entry audited alone can read more jobs).
+leaves a frame persisted would make a later entry that builds the same
+frame cheaper (``prepare_corpus`` persists its deduped corpus), so
+:func:`run_audit` clears the session's cache before each entry and an
+entry reads the same counts alone as in a full run.
 
 Truncation caveat, made explicit in the fingerprint: operators that
 ``localCheckpoint`` internally replace the materialized subtree with a
@@ -214,6 +215,8 @@ def run_audit(spark, queries, only=(), golden=None, quiet=False):
         if only and name not in only:
             continue
         try:
+            # no frame an earlier entry persisted may serve this one
+            spark.catalog.clearCache()
             builds = eq._staged_builds
             with count_jobs(spark) as built:
                 df = fn(spark, SF_DIR)
