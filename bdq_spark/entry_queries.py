@@ -42,13 +42,20 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: Dict[str, QueryFn] = {}
 ORACLE_SQL: Dict[str, str] = {}
+#: pytest node id (``"tests/<file>.py::<test>"``) that value-checks an
+#: entry with no DuckDB oracle; every entry has exactly one of the two
+VALUE_TESTS: Dict[str, str] = {}
 
 
-def _register(name: str, oracle: str | None = None):
+def _register(
+    name: str, oracle: str | None = None, value_test: str | None = None
+):
     def wrap(fn: QueryFn) -> QueryFn:
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE_SQL[name] = oracle
+        if value_test is not None:
+            VALUE_TESTS[name] = value_test
         return fn
 
     return wrap
@@ -66,13 +73,14 @@ def _spread_narrow_scan(df: DataFrame) -> DataFrame:
     mapInPandas — runs in one task (measured: the whole
     multimodal_mjpeg_pixel_stats entry was a single-task job).
     Repartitioning the id-only projection moves a few bytes per row and
-    buys full-width decode (guide §8: move the lightweight proxy,
-    synthesize the heavy bytes after; §2.6: fill the idle cores).
+    buys full-width decode: move the lightweight id proxy across the
+    exchange, synthesize the heavy bytes after it, and fill the idle
+    cores.
     Scale-adaptive, not a local-mode constant: when the scan already
     has >= session-parallelism splits (any real at-scale table) this is
     the identity — no exchange is added.  Keyless repartition is
     deterministic here (sort-before-repartition over a deterministic
-    scan, guide §2.5)."""
+    scan)."""
     spark = df.sparkSession
     width = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < width:
@@ -478,7 +486,10 @@ def surrogate_key_string_customer(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@_register("surrogate_key_hash_customer")  # rows-only: DuckDB lacks sha224
+@_register(
+    "surrogate_key_hash_customer",
+    value_test="tests/test_functions.py::test_surrogate_key_hash_matches_python_sha224",
+)
 def surrogate_key_hash_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = load_table(spark, sf_dir, "customer")
     return df.select(
@@ -1797,14 +1808,20 @@ def incremental_minhash_near_dup_docs(
     )
 
 
-@_register("simhash_fingerprints")  # rows-only: xxhash64 not in DuckDB
+@_register(
+    "simhash_fingerprints",
+    value_test="tests/test_text_dedup.py::test_simhash_matches_python_vote",
+)
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bdq_spark.operators.dedup import simhash
 
     return simhash(load_table(spark, sf_dir, "documents"))
 
 
-@_register("simhash_pairs")  # rows-only: xxhash64-derived fingerprints
+@_register(
+    "simhash_pairs",
+    value_test="tests/test_text_dedup.py::test_simhash_matches_python_vote",
+)
 def simhash_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exercises the combination-banded candidate JOIN (not just the
     fingerprints): near-dup doc pairs within Hamming distance 4."""
@@ -1883,9 +1900,10 @@ def minhash_md5_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash LSH pipeline with the engine-portable md5 base hash —
     the DuckDB oracle recomputes signatures, banding, candidate join and
     the signature-agreement estimate, so the WHOLE LSH path gets a
-    value-hash correctness row (the xxhash64 production entry above
-    stays rows-only).  Uncapped and unverified on purpose: the oracle
-    checks the raw banding semantics, not the skew/verify wrappers."""
+    value-hash correctness row (the xxhash64 production entry above is
+    value-hashed only after its exact verify).  Uncapped and
+    unverified on purpose: the oracle checks the raw banding
+    semantics, not the skew/verify wrappers."""
     from bdq_spark.operators.dedup import minhash_lsh_candidates
 
     return minhash_lsh_candidates(
@@ -2389,7 +2407,7 @@ def persisted_vector_index_probe(
         },
     )
     # norms once per ROW below the bucket join (the knn_bruteforce
-    # trick; OPTIMIZATION_r14): per candidate PAIR only the dot product
+    # trick): per candidate PAIR only the dot product
     # remains, and the checkpointed batch side materializes its norms —
     # cosine_from_norms keeps cosine_similarity's exact multiplication/
     # guard order, so values are bit-identical
@@ -2606,7 +2624,7 @@ def streaming_ingest_vector_index(
     # per-ROW L2 norms staged below the verify joins so per-PAIR work
     # is one dot product (cosine_from_norms keeps cosine_similarity's
     # exact multiplication/guard order — bit-identical values; the
-    # knn_bruteforce trick, OPTIMIZATION_r13).  The norm column rides
+    # knn_bruteforce trick).  The norm column rides
     # the persisted index so cross-batch probes never recompute it.
     cosn = cosine_from_norms(
         F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
@@ -2614,8 +2632,8 @@ def streaming_ingest_vector_index(
     # the index's schema, derived from an EMPTY frame through the same
     # bucket/norm projection (plan analysis only — no job): every later
     # read of index_dir states it explicitly, so no trigger (and not
-    # the final probe) pays spark.read.parquet's footer-inference job
-    # (OPTIMIZATION_r14, guide §1.2)
+    # the final probe) pays spark.read.parquet's footer-inference job,
+    # a serial round of driver latency per read
     idx_schema = (
         _buckets(
             spark.createDataFrame(
@@ -3825,10 +3843,10 @@ def pagerank_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan+distinct: a plain DataFrame referenced twice in a union is
     # planned as two independent subtrees (no cross-branch CSE), i.e.
     # two full lineitem scans and two dedup exchanges for the same
-    # relation (OPTIMIZATION_r13).  The distinct itself stays: lineitem
-    # repeats each (part, supp) pair ~7x, so deduping BEFORE the union
-    # and pagerank's hash(src) edge shuffle cuts the shuffled rows the
-    # same factor at any scale (guide §2.3 aggregate-before-shuffle).
+    # relation.  The distinct itself stays: lineitem repeats each
+    # (part, supp) pair ~7x, so deduping BEFORE the union and
+    # pagerank's hash(src) edge shuffle cuts the shuffled rows the same
+    # factor at any scale (aggregate before the shuffle, not after).
     fwd = l.select(
         F.col("l_partkey").cast("bigint").alias("src"),
         (F.col("l_suppkey").cast("bigint") + 10000000).alias("dst"),
@@ -4023,10 +4041,10 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread_narrow_scan(
         load_table(spark, sf_dir, "documents").select("doc_id")
     )
-    # NOTE (OPTIMIZATION_r14, measured and REJECTED): the meta and
-    # frame-walk branches below fork the plan, so the AVI/MP4
-    # hex-synthesis expression runs twice per row (RIFF literal appears
-    # 2x in the committed plan).  A lazy data_checkpoint of the
+    # NOTE (measured and REJECTED): the meta and frame-walk branches
+    # below fork the plan, so the AVI/MP4 hex-synthesis expression runs
+    # twice per row (the RIFF literal appears twice in the physical
+    # plan).  A lazy data_checkpoint of the
     # synthesized payloads removes the second evaluation but ADDS a
     # materialization job — measured 1.11 -> 1.35 s at sf0.1 (twice,
     # same box) because the per-row synthesis (~0.05 s/branch at this
@@ -4163,8 +4181,8 @@ def multimodal_mjpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # spread the id-only scan BEFORE synthesizing payloads: the AVI
     # bytes and the per-frame huffman+IDCT decode then run at session
-    # width instead of inside the scan's single task
-    # (OPTIMIZATION_r14; see _spread_narrow_scan)
+    # width instead of inside the scan's single task (see
+    # _spread_narrow_scan)
     docs = _spread_narrow_scan(
         load_table(spark, sf_dir, "documents").select("doc_id")
     )
@@ -4931,7 +4949,7 @@ def pipeline_odd_even(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# E8/E10 — streaming foreachBatch + state store round trip (rows-only)
+# E8/E10 — streaming foreachBatch + state store round trip
 # ---------------------------------------------------------------------------
 
 def _events_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -6059,8 +6077,10 @@ def doc_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", F.col("copy_idx").cast("int").alias("copy_idx"))
 
 
-@_register("doc_compression_ratio")  # rows-only: no DEFLATE in DuckDB;
-# the ratio is pinned against direct zlib in test_text_dedup.py
+@_register(
+    "doc_compression_ratio",
+    value_test="tests/test_text_dedup.py::test_compression_ratio_matches_zlib",
+)
 def doc_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RedPajama-style redundancy signal: per-doc zlib compression
     ratio via Arrow-batched mapInPandas (one of the few genuinely
@@ -7109,7 +7129,10 @@ def knn_quantized_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_bruteforce(corpus, queries, k=5)
 
 
-@_register("knn_ivf_embeddings")  # rows-only: approximate by construction
+@_register(
+    "knn_ivf_embeddings",
+    value_test="tests/test_ivf.py::test_knn_full_probe_equals_bruteforce",
+)
 def knn_ivf_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bdq_spark.operators.ivf import knn_ivf
 
@@ -9247,8 +9270,8 @@ def streaming_ingest_dedup_index(
         ``input_file_name()`` over a full corpus read (a DATA scan of
         every file, plus a second O(files) driver collect of the
         zonemap manifest) per trigger; the listing replaces both
-        (OPTIMIZATION_r13, guide §5/§6 — new-file discovery is
-        metadata, not data).  Keyed by basename so the diff is
+        (new-file discovery is metadata, not data).  Keyed by
+        basename so the diff is
         format-stable; the URIs feed spark.read directly."""
         jvm = s._jvm
         hpath = jvm.org.apache.hadoop.fs.Path(corpus)
@@ -9263,8 +9286,8 @@ def streaming_ingest_dedup_index(
     # the corpus schema is fixed by the ingest projection below — state
     # it at every read so no trigger (and no final probe) pays the
     # footer-inference job spark.read.parquet schedules per schema-less
-    # read (OPTIMIZATION_r14, guide §1.2: at any scale that job is a
-    # serial round of driver latency per trigger)
+    # read (at any scale that job is a serial round of driver latency
+    # per trigger)
     corpus_ddl = (
         "doc_id bigint, text string, lang string, n_chars bigint, "
         "fingerprint string"
@@ -9310,12 +9333,12 @@ def streaming_ingest_dedup_index(
         )
         if new_files:
             # ONE scan of the just-written batch files feeds BOTH
-            # sidecar censuses (guide §6: the batch bytes cross the
-            # disk once, not once per sidecar — __file staged from
+            # sidecar censuses (the batch bytes cross the disk once,
+            # not once per sidecar — __file staged from
             # input_file_name BEFORE the persist, which an in-memory
             # scan cannot recover), and the two appends remain
             # INDEPENDENT jobs overlapped so the trigger pays one
-            # round of fixed job latency, not two (guide §2.6);
+            # round of fixed job latency, not two;
             # count_appended=False skips the summary-only census count
             # job (the return value is unused here)
             shared = (
@@ -9362,8 +9385,8 @@ def streaming_ingest_dedup_index(
             )
         ranges = {"n_chars": (250, 350)}
         equals = {"doc_id": probe}
-        # the two sidecar resolutions are independent — overlap them
-        # (guide §2.6), same as the per-trigger appends above
+        # the two sidecar resolutions are independent — overlap them,
+        # same as the per-trigger appends above, so the idle cores fill
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:

@@ -70,8 +70,7 @@ __all__ = ["kmeans_fit_quantized", "kmeans_quantized"]
 def _q_expr(vector_column: str, scale: int):
     """The quantization projection ``round(x * scale)`` as int64, built
     as one SQL string (a single py4j round trip — the per-element
-    Python construction measured as pure driver overhead,
-    OPTIMIZATION_r13)."""
+    Python construction measured as pure driver overhead)."""
     return F.expr(
         f"transform(`{vector_column}`, "
         f"x -> cast(round(cast(x as double) * {int(scale)}) as bigint))"

@@ -102,11 +102,11 @@ _AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
 # broadcast-regime graph rounds: node-scale aggregates whose row count
 # is KNOWN (counted at setup), so the loop pins exactly
 # ceil(n_nodes / this) shuffle partitions — scale-adaptive by data, not
-# a constant for either local mode or a cluster (guide §2)
+# a constant for either local mode or a cluster
 _ROUND_ROWS_PER_PARTITION = 50_000
 
 # largest round gap between convergence-count checks in the CC
-# broadcast-regime loop (OPTIMIZATION_r14): checks run at rounds
+# broadcast-regime loop: checks run at rounds
 # 1, 2, 4, 8, 12, 16, ... — geometric ramp-up capped so a mid-depth
 # graph never pays more overshoot rounds than the check jobs it saves
 _MAX_CHECK_GAP = 4
@@ -419,8 +419,8 @@ def connected_components(
 
     def _rounds(edges: DataFrame, labels: DataFrame) -> DataFrame:
         if n_nodes <= broadcast_max_nodes:
-            # GEOMETRIC convergence checks (OPTIMIZATION_r14, guide
-            # §2.6/§1.2): the changed-count is scheduled only at rounds
+            # GEOMETRIC convergence checks (each check is one more
+            # serial job): the changed-count is scheduled only at rounds
             # 1, 2, 4, 8, ... (bounded by max_iterations), not every
             # round — label mins are monotone and propagation past the
             # fixpoint is a no-op, so detecting convergence a few
@@ -607,8 +607,8 @@ def pagerank(
         # the per-round ranks ⋈ deg join (a broadcast build job per
         # round under the broadcast regime, a merge/hash join per round
         # past the cutover) becomes a filter+project on the carried
-        # column (OPTIMIZATION_r13: 2 joins + 2 broadcasts per round ->
-        # 1 + 1).  Dangling detection is a COUNT comparison (a source
+        # column (2 joins + 2 broadcasts per round -> 1 + 1).
+        # Dangling detection is a COUNT comparison (a source
         # with out-edges has a deg row; n_deg < n_nodes iff some node
         # has no out-edges) instead of materializing an anti-join
         # node set — and the per-round dangling mass, when needed at
@@ -715,7 +715,7 @@ def pagerank_quantized(
     def _run(e: DataFrame, nodes: DataFrame) -> DataFrame:
         # node-scale static — deg carried on the rank relation and
         # dangling detection by count comparison, exactly as in
-        # :func:`pagerank` (see the comment there; OPTIMIZATION_r13)
+        # :func:`pagerank` (see the comment there)
         deg = (
             e.groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
@@ -854,8 +854,7 @@ def triangle_counts(
     # wedge enumeration join (the expensive O(m^1.5) step the
     # orientation exists to bound) ran three times per query.
     # explode(array(u, w1, w2)) is multiset-identical to the union
-    # (3 rows per triangle either way) and plans the join once
-    # (OPTIMIZATION_r13, guide §2.4).
+    # (3 rows per triangle either way) and plans the join once.
     credit = (
         tris.select(
             F.explode(F.array("u", "w1", "w2")).alias("id")
@@ -978,8 +977,8 @@ def kcore(
             # count materializes the blocks; an eager checkpoint + a
             # separate isEmpty was two jobs), and the previous round's
             # lazily-checkpointed cur materializes inside the same job
-            # (OPTIMIZATION_r13 — the peel is a serial job chain, so
-            # every job saved is wall time at any scale)
+            # (the peel is a serial job chain, so every job saved is
+            # wall time at any scale)
             bad = deg.where(F.col("degree") < k).select(
                 "src"
             ).localCheckpoint(eager=False)

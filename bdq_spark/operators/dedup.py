@@ -656,9 +656,9 @@ def minhash_signatures(
         raise ValueError(f"hash_fn must be 'xxhash64' or 'md5': {hash_fn!r}")
     # one selectExpr (a single py4j round trip) instead of num_hashes
     # Python-assembled pmod trees — the per-column construction measured
-    # ~0.6 s of driver time per call at 64 hashes (OPTIMIZATION_r13).
-    # The base hash is STAGED in its own projection (OPTIMIZATION_r14,
-    # guide §7.2 "duplicated subtrees"): inlining it into the 64 affine
+    # ~0.6 s of driver time per call at 64 hashes.
+    # The base hash is STAGED in its own projection (a subtree shared by
+    # 64 expressions is evaluated 64 times): inlining it into the 64 affine
     # columns re-evaluated the md5/conv tree 64x PER SHINGLE — measured
     # 23.0 s vs 8.3 s for the staged shape on a 2M-row hashed
     # projection (subexpression elimination provably did NOT fire; the
@@ -985,8 +985,8 @@ def simhash(
     )
     # SQL-string construction (one py4j round trip per aggregate /
     # one for the fingerprint) — the per-bit Python assembly crossed
-    # py4j ~800 times and measured as pure driver time
-    # (OPTIMIZATION_r13); identical expressions, identical results
+    # py4j ~800 times and measured as pure driver time; identical
+    # expressions, identical results
     votes = toks.groupBy("id").agg(
         *[
             F.expr(
@@ -1355,8 +1355,8 @@ def _verify_pairs(
     sequential double-precision ``round(cosine, 6) >= threshold``.
 
     Norms are staged once per ROW below the two vector joins (the
-    :func:`~bdq_spark.operators.similarity.knn_bruteforce` trick;
-    OPTIMIZATION_r14), so per candidate PAIR only the dot product
+    :func:`~bdq_spark.operators.similarity.knn_bruteforce` trick), so
+    per candidate PAIR only the dot product
     remains; ``cosine_from_norms`` keeps ``cosine_similarity``'s exact
     multiplication/guard order, so values are bit-identical."""
     from bdq_spark.operators.similarity import cosine_from_norms, l2_norm
@@ -1430,7 +1430,7 @@ def embedding_cosine_pairs_md5(
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
     )
     # the same pair surfaces from several tables — dedup ON an
-    # explicit-width keyed repartition (OPTIMIZATION_r14, guide §2.2):
+    # explicit-width keyed repartition (width set by row work, not bytes):
     # the candidate relation is a few MB but each row costs an
     # INTERPRETED 64-dim HOF dot downstream, so AQE's byte-based
     # coalescing packed the whole verify into 1-2 tasks.  A

@@ -234,7 +234,7 @@ def knn_ivf_quantized(
     # quantize in the SAME projection that carries (id, vec): the
     # previous corpus.join(quantized, "id") re-attached a column the
     # scan already had — one whole Exchange + join per side for a
-    # projection's worth of work (OPTIMIZATION_r13; ids are unique by
+    # projection's worth of work (ids are unique by
     # the operator's contract, so row multiplicity is unchanged)
     cells = _assign_frame(
         corpus.select(

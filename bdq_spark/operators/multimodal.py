@@ -1784,7 +1784,7 @@ def video_pixel_stats(
     # project to exactly the two columns the decoder touches BEFORE the
     # Python boundary: mapInPandas is opaque to the optimizer, so
     # without this every media column (mime, meta, ...) is computed and
-    # shipped across Arrow for nothing (guide §4.1/OPTIMIZATION_r14)
+    # shipped across Arrow for nothing
     return df.select("media_id", content_column).mapInPandas(
         stats, schema=_VIDEO_PIXEL_SCHEMA
     )

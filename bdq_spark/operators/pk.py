@@ -50,8 +50,7 @@ def validate_primary_key_candidate(
     knows it — the combination sweep below validates many candidates
     over ONE df, and the row count is a property of the df, not the
     candidate, so re-counting per candidate is a full-table scan wasted
-    per combination (OPTIMIZATION_r13, guide §1.2: don't compute things
-    you already have).
+    per combination.
 
     Deviation from the reference (SURVEY.md §7.0 sanctioned bug-fix): the
     reference returns the *original* df as ``failed_df``

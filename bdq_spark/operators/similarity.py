@@ -487,7 +487,7 @@ def lsh_bucket_vectors_md5(
         # separately Python-assembled aggregate trees: per-element F.lit
         # construction crossed py4j ~2 x planes x dim times and measured
         # ~0.7 s of DRIVER time per call at 5x64 before a single task
-        # ran (OPTIMIZATION_r13).  Same arithmetic, same plan shape.
+        # ran.  Same arithmetic, same plan shape.
         rows = ",".join(
             "array(" + ",".join(f"{int(c)}L" for c in row) + ")"
             for row in planes
@@ -503,7 +503,7 @@ def lsh_bucket_vectors_md5(
         # evaluated once per row (the single-projection form re-evaluated
         # every aggregate twice — once for margins, once for the bucket
         # terms — and CollapseProject keeps multi-referenced non-trivial
-        # aliases staged, verified in the committed plans/r13 artifacts)
+        # aliases staged, as the formatted physical plan shows)
         staged = df.select(
             F.col(id_column).alias("id"),
             F.col(vector_column).alias("vec"),

@@ -466,7 +466,7 @@ def trigram_backoff_score(
     # c1 and c2 each feed TWO scoring joins (context + backoff level);
     # eager-materialize so the tokenize/window/agg subtree runs once —
     # a lazy copy referenced from the parallel broadcast stages of one
-    # job would recompute per stage (the pathology NOTES_r4 documents)
+    # job would recompute the whole subtree once per stage
     c1 = train_toks.groupBy("w1").agg(
         F.count(F.lit(1)).alias("c1")
     ).localCheckpoint(eager=True)

@@ -533,7 +533,7 @@ def cdc_merge_sink_partitioned(
         # bucket), so the separate isEmpty job — one scheduled job per
         # trigger, forever — is only needed on the inferred-columns
         # path, where the schema-divergence check must keep its
-        # pre-r13 skip-on-empty semantics (OPTIMIZATION_r13)
+        # skip-on-empty semantics
         if out_cols is None and batch_df.isEmpty():
             return
 

@@ -97,10 +97,10 @@ def running_counter(
             )
         )
 
-    # BATCH path (OPTIMIZATION_r14, guide §4.2 — the same shape
-    # running_zscore/sessionize got in r13): grouping by the raw key
-    # called the UDF once per key (~tiny frames whose Arrow/call
-    # machinery dwarfed the three aggregates).  Group by a
+    # BATCH path (the same shape running_zscore/sessionize use):
+    # grouping by the raw key called the UDF once per key (~tiny
+    # frames whose Arrow/call machinery dwarfed the three
+    # aggregates).  Group by a
     # DETERMINISTIC hash bucket sized from the row count instead
     # (~100k rows/bucket, floored at defaultParallelism — data-derived,
     # not a local-mode constant) and aggregate ALL keys of a bucket in
@@ -182,9 +182,10 @@ def _zscore_rows(pdf: pd.DataFrame, state, value_column, scale):
     order matches a SQL engine's ``CAST(s AS DOUBLE) / n`` even once a
     key's Σc² exceeds 2^53 — below that the two are identical anyway.
 
-    VECTORIZED (OPTIMIZATION_r13, guide §4.2): the per-row Python fold
-    becomes numpy prefix sums — ``s_prior = cumsum(c) - c`` etc. — with
-    every float op preserved bit-for-bit: int64 -> float64 conversion,
+    VECTORIZED (numpy over the frame, not a Python step per row): the
+    per-row Python fold becomes numpy prefix sums —
+    ``s_prior = cumsum(c) - c`` etc. — with every float op preserved
+    bit-for-bit: int64 -> float64 conversion,
     ``/ n``, ``- mean*mean`` and ``sqrt`` are the same correctly-rounded
     IEEE operations elementwise that the loop performed scalar-wise, and
     the final 6-decimal rounding stays PYTHON's correctly-rounded
@@ -308,9 +309,10 @@ def running_zscore(
             )
         )
 
-    # BATCH path (OPTIMIZATION_r13, guide §4): grouping by the raw key
-    # called the UDF once per key — ~67-row pandas frames whose per-call
-    # machinery (Arrow slice, sort, copy) dwarfed the fold.  Instead,
+    # BATCH path (few large pandas calls, not many tiny ones): grouping
+    # by the raw key called the UDF once per key — ~67-row pandas
+    # frames whose per-call machinery (Arrow slice, sort, copy)
+    # dwarfed the fold.  Instead,
     # group by a DETERMINISTIC hash bucket sized from the row count
     # (~100k rows per bucket, floored at defaultParallelism buckets for
     # cluster width — data-derived, not a local-mode constant) and fold
@@ -525,9 +527,10 @@ def sessionize(
             )
         )
 
-    # BATCH path (OPTIMIZATION_r13, guide §4.2): grouping by the raw key
-    # called the splitter once per key — tiny pandas frames whose
-    # per-call machinery (Arrow slice, datetime coercion, frame build)
+    # BATCH path (few large pandas calls, not many tiny ones): grouping
+    # by the raw key called the splitter once per key — tiny pandas
+    # frames whose per-call machinery (Arrow slice, datetime coercion,
+    # frame build)
     # dwarfed the fold, the same shape running_zscore had.  Group by a
     # DETERMINISTIC hash bucket sized from the row count instead
     # (~100k rows per bucket, floored at defaultParallelism — data-

@@ -54,7 +54,7 @@ def test_convergence_bound_raises(spark, distributed):
 
 def test_geometric_check_boundaries(spark, distributed):
     """The broadcast-regime loops count their convergence flag only at
-    geometrically spaced rounds (OPTIMIZATION_r14).  Pin the boundary
+    geometrically spaced rounds, to save serial check jobs.  Pin the boundary
     semantics: a diameter that lands BETWEEN two check rounds is
     detected late but returns identical labels (overshoot rounds are
     no-ops), and the max_iterations raise fires at exactly the same

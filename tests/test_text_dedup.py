@@ -24,6 +24,17 @@ from bdq_spark.operators.dedup import (
 from bdq_spark.operators.text_analysis import filter_by_quality, profile_documents
 
 
+#: a realistic-length document: a one-word change in it flips few
+#: SimHash bits (short docs have marginal votes on every bit)
+_LONG_DOC = (
+    "data pipelines at scale require careful partitioning of every join "
+    "and aggregation because shuffles dominate the cost of wide "
+    "transformations while narrow maps stream freely through the "
+    "executors and the optimizer prunes columns predicates and "
+    "partitions wherever the plan allows it to do so"
+)
+
+
 @pytest.fixture()
 def docs(spark):
     rows = [
@@ -273,23 +284,68 @@ def test_simhash_pairs(spark, docs):
     assert pairs[(1, 2)] == 0
     assert all(not (9 in k or 8 in k) for k in pairs)
 
-    # SimHash needs realistic doc lengths: a one-word change in a long doc
-    # flips few bits (short docs have marginal votes on every bit)
-    base = (
-        "data pipelines at scale require careful partitioning of every join "
-        "and aggregation because shuffles dominate the cost of wide "
-        "transformations while narrow maps stream freely through the "
-        "executors and the optimizer prunes columns predicates and "
-        "partitions wherever the plan allows it to do so"
-    )
     long_docs = spark.createDataFrame(
-        [(21, base), (22, base.replace("optimizer", "planner")), (23, base)],
+        [
+            (21, _LONG_DOC),
+            (22, _LONG_DOC.replace("optimizer", "planner")),
+            (23, _LONG_DOC),
+        ],
         "doc_id:long, text:string",
     )
     lp = {(r.id_a, r.id_b): r.hamming for r in simhash_pairs(
         long_docs, max_hamming=6).collect()}
     assert lp[(21, 23)] == 0
     assert (21, 22) in lp and 0 < lp[(21, 22)] <= 6
+
+
+def test_simhash_matches_python_vote(spark, docs):
+    """Value check of the ``simhash_fingerprints`` and ``simhash_pairs``
+    entries, which DuckDB cannot replay (it has no xxhash64).  Each
+    token's hash comes from Spark's built-in ``xxhash64``, the engine
+    primitive; the tokenizing, the +-1 vote per bit, the fingerprint
+    packing and the Hamming pair set are recomputed here in Python."""
+    import re
+    from itertools import combinations
+
+    df = docs.unionByName(spark.createDataFrame(
+        [(21, _LONG_DOC), (22, _LONG_DOC.replace("optimizer", "planner"))],
+        "doc_id:long, text:string",
+    ))
+    tokens = {
+        r.doc_id: [w for w in re.split("[^a-z0-9]+", r.text.lower()) if w]
+        for r in df.collect()
+    }
+    vocab = sorted({w for ws in tokens.values() for w in ws})
+    token_hash = dict(
+        spark.createDataFrame([(w,) for w in vocab], "tok string")
+        .select("tok", F.xxhash64("tok"))
+        .collect()
+    )
+    want = {}
+    for doc_id, words in tokens.items():
+        if not words:  # no token, no vote: the doc gets no fingerprint
+            continue
+        fp = 0
+        for bit in range(64):
+            vote = sum(1 if token_hash[w] >> bit & 1 else -1 for w in words)
+            if vote > 0:
+                fp |= 1 << bit
+        want[doc_id] = fp - (1 << 64) if fp >> 63 else fp  # signed long
+    assert {r.id: r.simhash for r in simhash(df).collect()} == want
+
+    hamming = {
+        (a, b): bin((want[a] ^ want[b]) & ((1 << 64) - 1)).count("1")
+        for a, b in combinations(sorted(want), 2)
+    }
+    want_pairs = {k: h for k, h in hamming.items() if h <= 4}
+    # the set holds exact copies and a one-word edit, and leaves pairs out
+    assert 0 in want_pairs.values() and max(want_pairs.values()) > 0
+    assert len(want_pairs) < len(hamming)
+    got_pairs = {
+        (r.id_a, r.id_b): r.hamming
+        for r in simhash_pairs(df, max_hamming=4).collect()
+    }
+    assert got_pairs == want_pairs
 
 
 def test_simhash_pairs_validation(spark, docs):
@@ -303,16 +359,10 @@ def test_simhash_pairs_hot_bucket_cap(spark):
     """A mass-duplicate cluster (one fingerprint shared by many docs)
     must not prevent finding a planted near-dup pair elsewhere when
     max_bucket_size caps hot join keys."""
-    base = (
-        "data pipelines at scale require careful partitioning of every join "
-        "and aggregation because shuffles dominate the cost of wide "
-        "transformations while narrow maps stream freely through the "
-        "executors and the optimizer prunes columns predicates and "
-        "partitions wherever the plan allows it to do so"
-    )
     spam = "buy cheap widgets now " * 15
     rows = [(i, spam) for i in range(50)]           # hot: identical simhash
-    rows += [(100, base), (101, base.replace("optimizer", "planner"))]
+    near_dup = _LONG_DOC.replace("optimizer", "planner")
+    rows += [(100, _LONG_DOC), (101, near_dup)]
     df = spark.createDataFrame(rows, "doc_id:long, text:string")
 
     capped = {(r.id_a, r.id_b): r.hamming for r in simhash_pairs(
@@ -334,16 +384,10 @@ def test_minhash_lsh_hot_bucket_cap(spark):
     uncapped band self-join is quadratic in the cluster.  With the cap
     the cluster's buckets are skipped whole while a planted near-dup
     pair (bucket occupancy 2) still surfaces."""
-    base = (
-        "data pipelines at scale require careful partitioning of every join "
-        "and aggregation because shuffles dominate the cost of wide "
-        "transformations while narrow maps stream freely through the "
-        "executors and the optimizer prunes columns predicates and "
-        "partitions wherever the plan allows it to do so"
-    )
     spam = "buy cheap widgets now from our discount warehouse today " * 5
     rows = [(i, spam) for i in range(1000)]  # hot: identical signatures
-    rows += [(2000, base), (2001, base.replace("optimizer", "planner"))]
+    near_dup = _LONG_DOC.replace("optimizer", "planner")
+    rows += [(2000, _LONG_DOC), (2001, near_dup)]
     df = spark.createDataFrame(rows, "doc_id:long, text:string")
 
     capped = {

@@ -13,7 +13,7 @@ counts cannot see.
 Usage::
 
     python tools/bench_ab.py <old_rev> <entry>[,<entry>...] \
-        [--module path ...] [--out BENCH_AB_rN.json]
+        [--module path ...] --out BENCH_AB_<name>.json
 
 Runs ``SPARK_GRAFT_BENCH_ONLY=<entries> python bench.py`` twice —
 once in a throwaway worktree at ``<old_rev>``, once in this repo —
@@ -66,23 +66,14 @@ def main() -> int:
     ap.add_argument("old_rev")
     ap.add_argument("entries", help="comma-separated bench entry names")
     ap.add_argument("--module", action="append", default=[], dest="modules")
-    ap.add_argument("--out", default=None, dest="out_path")
+    ap.add_argument(
+        "--out", required=True, dest="out_path",
+        help="artifact path relative to the repo; an existing one is merged",
+    )
     ns = ap.parse_args()
     old_rev, entries = ns.old_rev, ns.entries
     modules = ns.modules
-    out_path = ns.out_path
-    if out_path is None:
-        rounds = [
-            int(p.split("_r")[1].split(".")[0])
-            for p in os.listdir(REPO)
-            if p.startswith("CORRECTNESS_r")
-        ]
-        out_path = f"BENCH_AB_r{(max(rounds) + 1) if rounds else 1:02d}.json"
-        # match the unpadded convention if one already exists
-        alt = f"BENCH_AB_r{(max(rounds) + 1) if rounds else 1}.json"
-        if os.path.exists(os.path.join(REPO, alt)):
-            out_path = alt
-    out_path = os.path.join(REPO, out_path)
+    out_path = os.path.join(REPO, ns.out_path)
 
     wt = tempfile.mkdtemp(prefix="bdq_ab_wt_")
     subprocess.run(

@@ -3,7 +3,9 @@
 
 Runs every ``queries()`` entry at a given SF dir on Spark AND the matching
 ``oracle_sql()`` on DuckDB, then compares row count, column names, and an
-order-insensitive value multiset.  Usage::
+order-insensitive value multiset.  An entry without an oracle only has
+to return rows here; its line names the registry's ``value_test``, the
+pytest that checks its values.  Usage::
 
     python tools/check_oracle.py [sf_dir] [query ...]
 
@@ -77,6 +79,7 @@ def arrow_rows(tbl) -> list:
 
 def main() -> int:
     import __spark_entry__ as entrymod
+    from bdq_spark.entry_queries import VALUE_TESTS
     from bdq_spark.session import get_spark
 
     spark = get_spark()
@@ -105,7 +108,10 @@ def main() -> int:
             continue
 
         if name not in oracles:
-            print(f"rows  {name}: {len(spark_rows)} rows (rows-only check)")
+            print(
+                f"rows  {name}: {len(spark_rows)} rows "
+                f"(value test: {VALUE_TESTS[name]})"
+            )
             if len(spark_rows) == 0:
                 failures.append((name, "rows-only query returned 0 rows"))
             continue

@@ -13,6 +13,8 @@ Usage::
 
     python tools/gen_api_index.py          # rewrites docs/API.md
     python tools/gen_api_index.py --check  # exit 1 if docs/API.md stale
+
+Any other argument prints this usage and exits 2 without writing.
 """
 
 from __future__ import annotations
@@ -208,10 +210,13 @@ def build() -> str:
     return "\n".join(out)
 
 
-def main() -> int:
+def main(argv: list[str]) -> int:
+    if argv not in ([], ["--check"]):
+        print("usage:" + __doc__.split("Usage::")[1].rstrip(), file=sys.stderr)
+        return 2
     target = os.path.join(REPO, "docs", "API.md")
     text = build()
-    if "--check" in sys.argv:
+    if argv:
         if not os.path.exists(target) or open(target).read() != text:
             print("docs/API.md is stale — run python tools/gen_api_index.py")
             return 1
@@ -225,4 +230,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))

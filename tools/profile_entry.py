@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
 """Per-entry decomposition: JOB COUNT and construction-vs-execution
-wall for bench entries (guide §1: decide whether time goes to driver
-work, job-scheduling floors, or executor compute BEFORE touching
-code).  Job/stage counts are host-noise-free — on a box with heavy
-hypervisor steal (np_gemm_ms swinging 10x, see OPTIMIZATION_r13.md)
+wall for bench entries: decide whether time goes to driver work,
+job-scheduling floors, or executor compute BEFORE touching code.
+Job/stage counts are host-noise-free — on a host with heavy hypervisor
+steal (the bench's np_gemm_ms host stamp swinging 10x between runs)
 they are the only stable profiling signal, and at sf0.1 (~18 MB input)
 nearly every entry is FIXED-OVERHEAD-bound, so "how many sequential
 jobs does one invocation schedule" is the first-order cost model.
