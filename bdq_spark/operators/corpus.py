@@ -28,9 +28,10 @@ from __future__ import annotations
 
 from typing import List, Optional
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from bdq_spark.operators._checkpoint import data_checkpoint
 
 __all__ = [
     "chunk_documents",
@@ -86,21 +87,24 @@ def prepare_corpus(
     Returns the chunk relation ``(id_column, chunk_idx, chunk_text,
     n_chunk_tokens)`` of the cleaned TRAIN corpus.  Every stage is a
     narrow or partial-agg plan (the only shuffles: fingerprint hash-agg,
-    shingle dedup agg, contamination join) — no driver materialization,
-    so the funnel scales with cluster width.  Inter-step dataflow uses
-    temp views prefixed ``{pipeline_name}_``; use distinct names for
-    concurrent preparations in one session.
+    shingle dedup agg, contamination join), so the funnel scales with
+    cluster width; the near-dup step's Jaccard pairs and components
+    finish on the driver only when their input fits the session's
+    broadcast threshold.  Inter-step dataflow uses temp views prefixed
+    ``{pipeline_name}_``; use distinct names for concurrent preparations
+    in one session.
 
-    ``persist_intermediate`` (default True) eagerly caches the deduped
-    corpus (MEMORY_AND_DISK) at the point where the plan fans out —
+    ``persist_intermediate`` (default True) eagerly checkpoints the
+    deduped corpus (and the near-dup survivors) with serialized
+    MEMORY_AND_DISK blocks at the point where the plan fans out —
     without it the quality+dedup subtree re-reads the source for EVERY
     downstream branch (contamination probe, eval shingle set, final
     anti-join: 6 source scans in the physical plan), which at 100 TB
-    means six full corpus passes instead of one compute plus cached
-    reads.  The cache holds only the surviving ``(id, text)`` pairs and
-    spills to disk; call ``spark.catalog.clearCache()`` (or unpersist
-    via the ``{pipeline_name}_deduped`` view) after materializing the
-    result if the session is long-lived.
+    means six full corpus passes instead of one compute plus stored
+    reads.  The blocks hold only the surviving ``(id, text)`` pairs,
+    spill to disk, and are released with the returned frame: nothing
+    enters the session's cache, so a later call is never served from
+    an earlier one's.
     """
     from bdq_spark.functions.text import quality_score
     from bdq_spark.operators.contamination import contamination_check
@@ -131,12 +135,12 @@ def prepare_corpus(
         ).select(F.col("keeper_id").alias(id_column))
         deduped = docs.join(keepers, id_column, "left_semi")
         if persist_intermediate:
-            # eager populate BEFORE the downstream fan-out: the three
+            # eager checkpoint BEFORE the downstream fan-out: the three
             # consumers (contamination probe, eval shingles, anti-join)
-            # can be scheduled concurrently, and lazily-cached parents
-            # get computed once per concurrent stage instead of once
-            deduped = deduped.persist(StorageLevel.MEMORY_AND_DISK)
-            deduped.count()
+            # can be scheduled concurrently, and a lazily-populated
+            # parent gets computed once per concurrent stage instead of
+            # once; the blocks go with the frame, no cache outlives it
+            deduped = data_checkpoint(deduped)
         return deduped
 
     decon_upstream, decon_source = exact_dedup, v_deduped
@@ -166,8 +170,7 @@ def prepare_corpus(
                 # split, shingle probe, anti-join), and a bare temp view
                 # would re-run the ENTIRE jaccard + connected-components
                 # pipeline per reference
-                survivors = survivors.persist(StorageLevel.MEMORY_AND_DISK)
-                survivors.count()
+                survivors = data_checkpoint(survivors)
             return survivors
 
         decon_upstream, decon_source = near_dedup, v_neardup

@@ -2,8 +2,11 @@
 
 Extension mandate (BASELINE.json north_star): exact dedup, MinHash+LSH,
 SimHash, n-gram Jaccard — each expressed relationally (explode → shuffle
-on shingle/band → join) so Catalyst distributes them; no driver-side
-collection anywhere.
+on shingle/band → join) so Catalyst distributes them.  The one driver
+finish: prefix-filtered n-gram Jaccard over a shingle relation under the
+session's broadcast threshold replays the same relational steps in numpy
+(:func:`_driver_prefix_pairs`), because at that size per-job fixed cost,
+not rows, decides its wall.
 
 Scale design (100 TB):
 
@@ -31,10 +34,14 @@ from __future__ import annotations
 
 from typing import List, Optional, Tuple
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from bdq_spark.operators._checkpoint import data_checkpoint
+from bdq_spark.session import DRIVER_ORDERED_TYPES, collect_if_small, driver_row_cap
 
 from bdq_spark.functions.text import doc_fingerprint, word_tokens
 
@@ -347,17 +354,19 @@ def _jaccard_for_pairs(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     )
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("size_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("size_b"))
-    jac = F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter"))
     return (
         pairs.join(inter, ["id_a", "id_b"], "left")
         .join(sa, "id_a")
         .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(F.coalesce(jac, F.lit(0.0)), 6).alias("jaccard"),
-        )
+        .select("id_a", "id_b", _rounded_jaccard())
     )
+
+
+def _rounded_jaccard() -> Column:
+    """``jaccard`` from ``inter``, ``size_a`` and ``size_b``, rounded to
+    6 decimals by Spark on either Jaccard path."""
+    jac = F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter"))
+    return F.round(F.coalesce(jac, F.lit(0.0)), 6).alias("jaccard")
 
 
 # Candidate-generation skew guard (see :func:`ngram_jaccard_pairs`): a
@@ -463,6 +472,111 @@ def _prefix_candidates(
     )
 
 
+def _run_offsets(counts: np.ndarray) -> np.ndarray:
+    """0..n-1 within each run of ``np.repeat(..., counts)``."""
+    return np.arange(counts.sum()) - np.repeat(np.cumsum(counts) - counts, counts)
+
+
+def _driver_prefix_pairs(
+    sh: DataFrame, threshold: float, max_shingle_doc_freq: Optional[int]
+) -> Optional[DataFrame]:
+    """:func:`_prefix_candidates` + :func:`_jaccard_for_pairs` finished
+    on the driver: ``(id_a, id_b, inter, size_a, size_b)`` as a
+    ``LocalRelation``, or ``None`` when the checkpointed ``(id,
+    shingle)`` relation is over the session's broadcast threshold, has
+    null ids or an id type outside ``DRIVER_ORDERED_TYPES``, or when the
+    prefix self-join or the intersection expansion would exceed the
+    same row cap.
+
+    The steps are the distributed ones over the same rows, duplicate
+    ``(id, shingle)`` rows included: document frequency, the per-id
+    ``(df_cnt, shingle)`` position, the prefix cut, the doc-frequency
+    cap, the self-join on shingle under the id, length and positional
+    filters (same float expressions, same order), distinct candidates,
+    then ``inter`` as the row count of the ``(id, shingle)`` join."""
+    id_type = sh.schema["id"].dataType
+    if not isinstance(id_type, DRIVER_ORDERED_TYPES):
+        return None
+    row_bytes = sh._jdf.schema().defaultSize()
+    table = collect_if_small(sh, row_bytes)
+    if table is None or table.column("id").null_count:
+        return None
+    cap = driver_row_cap(sh.sparkSession, row_bytes)
+    ids, doc = np.unique(
+        table.column("id").to_numpy(zero_copy_only=False), return_inverse=True
+    )
+    # dense shingle codes in hash order; df_cnt counts rows, as the
+    # distributed groupBy does
+    _, key, freq = np.unique(
+        table.column("shingle").to_numpy(), return_inverse=True, return_counts=True
+    )
+    df_cnt = freq[key]
+    size = np.bincount(doc, minlength=len(ids))
+    order = np.lexsort((key, df_cnt, doc))
+    pos = np.empty(len(doc), np.int64)
+    pos[order] = _run_offsets(size) + 1
+
+    t = max(threshold - 1e-6, 0.0)
+    keep = pos <= np.floor((1 - t) * size[doc] + 1e-9).astype(np.int64) + 1
+    if max_shingle_doc_freq is not None:
+        keep &= df_cnt <= max_shingle_doc_freq
+    index = np.flatnonzero(keep)
+    index = index[np.argsort(key[index], kind="stable")]
+    _, group = np.unique(key[index], return_counts=True)
+    if int((group * (group - 1) // 2).sum()) > cap:
+        return None
+    # every row pair within a shingle group, each pair once
+    later = np.repeat(group, group) - _run_offsets(group) - 1
+    first = np.repeat(np.arange(len(index)), later)
+    x, y = index[first], index[first + 1 + _run_offsets(later)]
+    a = np.where(doc[x] < doc[y], x, y)
+    b = np.where(doc[x] < doc[y], y, x)
+    sa, sb = size[doc[a]], size[doc[b]]
+    alpha = np.ceil(t / (1.0 + t) * (sa + sb) - 1e-9)
+    ok = (
+        (doc[a] < doc[b])
+        & (t * sb <= sa)
+        & (t * sa <= sb)
+        & (1 + np.minimum(sa - pos[a], sb - pos[b]) >= alpha)
+    )
+    cand = np.unique(doc[a][ok] * len(ids) + doc[b][ok])
+    ca, cb = cand // len(ids), cand % len(ids)
+
+    # inter: each distinct (id, shingle) with its row multiplicity; a
+    # candidate's a-side rows probe the b side's
+    cell, mult = np.unique(doc * len(freq) + key, return_counts=True)
+    cell_doc = cell // len(freq)
+    run = np.bincount(cell_doc, minlength=len(ids))
+    start = np.cumsum(run) - run
+    if int(run[ca].sum()) > cap:
+        return None
+    pair = np.repeat(np.arange(len(cand)), run[ca])
+    own = np.repeat(start[ca], run[ca]) + _run_offsets(run[ca])
+    probe = cb[pair] * len(freq) + cell[own] % len(freq)
+    hit = np.minimum(np.searchsorted(cell, probe), len(cell) - 1)
+    found = cell[hit] == probe
+    inter = np.zeros(len(cand), np.int64)
+    np.add.at(inter, pair[found], mult[own[found]] * mult[hit[found]])
+
+    id_field = sh.schema["id"]
+    id_arrow = table.schema.field("id").type
+    schema = StructType(
+        [
+            StructField("id_a", id_type, id_field.nullable),
+            StructField("id_b", id_type, id_field.nullable),
+        ]
+        + [StructField(c, LongType(), False) for c in ("inter", "size_a", "size_b")]
+    )
+    out = pa.table({
+        "id_a": pa.array(ids[ca], id_arrow),
+        "id_b": pa.array(ids[cb], id_arrow),
+        "inter": inter,
+        "size_a": size[ca].astype(np.int64),
+        "size_b": size[cb].astype(np.int64),
+    })
+    return sh.sparkSession.createDataFrame(out, schema)
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_column: str = "text",
@@ -509,6 +623,17 @@ def ngram_jaccard_pairs(
     i.e. pure-boilerplate near-dups, whose identical-copy core belongs
     to exact dedup anyway; same capped-recall contract as
     ``max_bucket_size`` in :func:`minhash_lsh_candidates`).
+
+    Small inputs finish on the driver: with ``prefix_filter`` on, when
+    the checkpointed ``(id, shingle)`` relation fits the session's
+    ``autoBroadcastJoinThreshold`` (row width from the schema's
+    ``defaultSize``), it is collected once and the candidate, verify
+    and intersection steps run in numpy (:func:`_driver_prefix_pairs`);
+    the rounding and threshold filter stay Spark expressions over the
+    returned ``LocalRelation``.  The prefix self-join and the
+    intersection expansion must fit the same row cap.  Null ids, an id
+    type outside ``DRIVER_ORDERED_TYPES`` or a larger input take the
+    distributed joins; both paths return the same rows.
     """
     if max_shingle_doc_freq == "auto":
         max_shingle_doc_freq = DEFAULT_MAX_SHINGLE_DOC_FREQ
@@ -525,10 +650,13 @@ def ngram_jaccard_pairs(
     sh = data_checkpoint(sh)
 
     if prefix_filter:
-        cand = _prefix_candidates(sh, threshold, max_shingle_doc_freq)
-        return _jaccard_for_pairs(cand, sh).filter(
-            F.col("jaccard") >= threshold
-        )
+        local = _driver_prefix_pairs(sh, threshold, max_shingle_doc_freq)
+        if local is not None:
+            scored = local.select("id_a", "id_b", _rounded_jaccard())
+        else:
+            cand = _prefix_candidates(sh, threshold, max_shingle_doc_freq)
+            scored = _jaccard_for_pairs(cand, sh)
+        return scored.filter(F.col("jaccard") >= threshold)
 
     if max_shingle_doc_freq is not None:
         freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_cnt"))

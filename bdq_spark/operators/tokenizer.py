@@ -1,5 +1,7 @@
 """Distributed BPE tokenizer training — learn a byte-pair-encoding
-merge table from a document corpus, entirely as DataFrame jobs.
+merge table from a document corpus as DataFrame jobs, finished on the
+driver when the word-frequency table fits the session's broadcast
+threshold.
 
 The reference library has no tokenizer surface at all; this implements
 the training-data-pipeline capability (learn a subword vocabulary from
@@ -15,11 +17,11 @@ Words with Subword Units", ACL 2016):
    pick the most frequent pair, merge it inside every word's symbol
    sequence; repeat ``n_merges`` times.
 
-Scale mechanics, per iteration:
+Scale mechanics of the distributed loop, per iteration:
 
 - one shuffle (pair-count partial agg over the vocabulary table) + a
-  ``TakeOrderedAndProject`` argmax — the ONLY driver materialization is
-  that single argmax row per iteration (bounded by ``n_merges``);
+  ``TakeOrderedAndProject`` argmax — the only driver materialization is
+  a bounded window of top pairs per iteration;
 - the merge rewrite is a left-fold (``F.aggregate``) over each word's
   symbol array — whole-stage-codegen expressions, no Python UDF;
 - a lazy ``localCheckpoint`` per iteration truncates the lineage
@@ -27,21 +29,39 @@ Scale mechanics, per iteration:
   explodes — the classic iterative-lineage failure mode, same cure as
   ``operators/components.py``).
 
+Small vocabularies: when the checkpointed ``(word, freq)`` table fits
+``autoBroadcastJoinThreshold`` (row width from the schema's
+``defaultSize``), it is collected once and the merges run as sequential
+BPE on the driver (:func:`_driver_bpe`); each of the loop's jobs costs
+more fixed scheduling time than the whole merge step at that size.
+
 Determinism: ties in pair frequency break by (left, right) lexicographic
 order, so the learned merge table is a pure function of the corpus —
 pinned by a pytest golden test against an independent pure-Python BPE
-reference implementation (``tests/test_tokenizer.py``).
+reference implementation (``tests/test_tokenizer.py``), on both paths.
 """
 
 from __future__ import annotations
 
+import heapq
 from typing import List, Optional, Tuple
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from bdq_spark.functions.text import word_tokens
-from bdq_spark.session import private_session, rebind
+from bdq_spark.session import collect_if_small, private_session, rebind
 
 __all__ = [
     "word_frequencies",
@@ -190,6 +210,101 @@ def _select_safe_batch(rows: List, complete: bool, cap: int) -> List[tuple]:
     return batch
 
 
+def _merge_syms(syms: List[str], left: str, right: str) -> List[str]:
+    """:func:`_merge_pair`'s left-fold over one Python symbol list."""
+    out: List[str] = []
+    for s in syms:
+        if out and out[-1] == left and s == right:
+            out[-1] = left + right
+        else:
+            out.append(s)
+    return out
+
+
+def _sequential_bpe(
+    syms: List[List[str]], freq: List[int], n_merges: int, min_pair_count: int
+) -> List[tuple]:
+    """Sequential BPE over ``syms`` (merged in place), each word weighted
+    by its ``freq``; returns the merge table.
+
+    Pair counts are kept incrementally: a pair -> words index means a
+    merge rescans only the words holding the merged pair, and a heap of
+    ``(-count, (left, right))`` entries, pushed for each pair a merge
+    touched and skipped once stale, yields the argmax with the
+    distributed loop's tie-break.  A pair exists while some word holds
+    it, whatever its count, as in the distributed ``groupBy``."""
+    counts: dict = {}
+    holders: dict = {}
+    for i, s in enumerate(syms):
+        for p in zip(s, s[1:]):
+            counts[p] = counts.get(p, 0) + freq[i]
+            holders.setdefault(p, set()).add(i)
+    heap = [(-c, p) for p, c in counts.items()]
+    heapq.heapify(heap)
+    merges: List[tuple] = []
+    while len(merges) < n_merges:
+        while heap and counts.get(heap[0][1]) != -heap[0][0]:
+            heapq.heappop(heap)
+        if not heap or -heap[0][0] < min_pair_count:
+            break
+        cnt, (left, right) = -heap[0][0], heap[0][1]
+        merges.append((len(merges), left, right, left + right, cnt))
+        touched = set()
+        for i in holders[(left, right)].copy():
+            old, new = syms[i], _merge_syms(syms[i], left, right)
+            syms[i] = new
+            gone, born = set(zip(old, old[1:])), set(zip(new, new[1:]))
+            for p in zip(old, old[1:]):
+                counts[p] -= freq[i]
+            for p in zip(new, new[1:]):
+                counts[p] = counts.get(p, 0) + freq[i]
+            for p in gone - born:
+                holders[p].discard(i)
+            for p in born - gone:
+                holders.setdefault(p, set()).add(i)
+            touched |= gone | born
+        for p in touched:
+            if holders.get(p):
+                heapq.heappush(heap, (-counts[p], p))
+            else:
+                holders.pop(p, None)
+                del counts[p]
+    return merges
+
+
+def _driver_bpe(
+    words: DataFrame, n_merges: int, min_pair_count: int
+) -> Optional[Tuple[List[tuple], DataFrame]]:
+    """:func:`train_bpe`'s merge loop as sequential BPE on the driver,
+    or ``None`` when the checkpointed ``(word, freq)`` table is over the
+    session's broadcast threshold, has a null, a non-string word or a
+    non-integral ``freq``.
+
+    Symbols are Spark's ``split(word, '')``: the word's code points, and
+    ``[""]`` for the empty word.  The merges are
+    :func:`_sequential_bpe`; the vocabulary returns as a
+    ``LocalRelation`` with the distributed loop's schema."""
+    fields = words.schema
+    if not isinstance(fields["word"].dataType, StringType) or not isinstance(
+        fields["freq"].dataType, (ByteType, ShortType, IntegerType, LongType)
+    ):
+        return None
+    pairs_in = words.select("word", "freq")
+    table = collect_if_small(pairs_in, pairs_in._jdf.schema().defaultSize())
+    if table is None or table.column("word").null_count or table.column("freq").null_count:
+        return None
+    syms = [list(w) or [w] for w in table.column("word").to_pylist()]
+    merges = _sequential_bpe(syms, table.column("freq").to_pylist(), n_merges, min_pair_count)
+    vocab = pa.table({
+        "word": table.column("word"),
+        "freq": table.column("freq"),
+        "syms": pa.array(syms, pa.list_(pa.string())),
+    })
+    if merges:  # the distributed loop's fold output is nullable
+        fields = StructType(fields.fields[:2] + [StructField("syms", ArrayType(StringType()))])
+    return merges, words.sparkSession.createDataFrame(vocab, fields)
+
+
 def train_bpe(
     df: DataFrame,
     text_column: str = "text",
@@ -214,6 +329,14 @@ def train_bpe(
     Initial symbols are the word's characters (GPT-2 style, no
     end-of-word marker — merges never cross word boundaries because
     words are separate rows).
+
+    When the checkpointed ``(word, freq)`` table fits the session's
+    ``autoBroadcastJoinThreshold`` (row width from the schema's
+    ``defaultSize``), it is collected once and the merges run as
+    sequential BPE on the driver (:func:`_driver_bpe`); ``vocab`` is
+    then a ``LocalRelation``.  A larger table, a null word or a
+    non-integral ``freq`` takes the distributed loop.  Both paths give
+    the same ``merges`` and ``vocab``.
     """
     spark = df.sparkSession
     words = word_freq if word_freq is not None else word_frequencies(
@@ -223,6 +346,9 @@ def train_bpe(
     words = words.select(
         "word", "freq", F.split(F.col("word"), "").alias("syms")
     ).localCheckpoint(eager=True)
+    local = _driver_bpe(words, n_merges, min_pair_count)
+    if local is not None:
+        return local
     # right-size the iteration parallelism to the VOCABULARY, not the
     # corpus: the loop runs ~n_merges jobs over this table, and a tiny
     # vocab spread over the session's full shuffle-partition count pays

@@ -95,6 +95,17 @@ def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
 DRIVER_ORDERED_TYPES = (ByteType, ShortType, IntegerType, LongType, StringType)
 
 
+def driver_row_cap(spark: SparkSession, row_bytes: int) -> int:
+    """How many ``row_bytes``-wide rows fit the session's broadcast
+    threshold (read as bytes from the JVM ``SQLConf``); 0 when
+    broadcasts are disabled.  The one budget of every driver finish:
+    :func:`collect_if_small` collects at most this many rows, and a
+    finish that grows its input on the driver (a self-join) checks the
+    grown size against it too."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return max(conf.autoBroadcastJoinThreshold() // row_bytes, 0)
+
+
 def collect_if_small(
     df: DataFrame, row_bytes: int, max_rows: Optional[int] = None
 ):
@@ -116,8 +127,7 @@ def collect_if_small(
     with exact size statistics."""
     if not hasattr(df, "toArrow"):  # PySpark < 4.0
         return None
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
-    cap = conf.autoBroadcastJoinThreshold() // row_bytes
+    cap = driver_row_cap(df.sparkSession, row_bytes)
     if max_rows is not None:
         cap = min(cap, max_rows)
     if cap <= 0:

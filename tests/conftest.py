@@ -41,8 +41,18 @@ def spark():
 def distributed(spark):
     """A private session of ``spark`` with broadcasts off.  The loops
     that finish an input under the broadcast threshold on the driver
-    (connected components, exact k-means) take their distributed path
-    on frames of this session, so one test can pin both paths."""
+    (connected components, exact k-means, prefix-filtered Jaccard, BPE
+    training) take their distributed path on frames of this session, so
+    one test can pin both paths."""
     from bdq_spark.session import private_session
 
     return private_session(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
+
+
+def on_driver(df):
+    """True when every leaf of ``df``'s analyzed plan is a driver-built
+    ``LocalRelation`` (the small-input finish of connected components,
+    Jaccard pairs or BPE training), False for a planned loop."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    kinds = {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
+    return kinds == {"LocalRelation"}

@@ -5,17 +5,13 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from conftest import on_driver
+
 from bdq_spark.operators import connected_components
 
 
 def _collect(df):
     return {r.id: (r.cluster_id, r.is_keeper) for r in df.collect()}
-
-
-def _on_driver(df):
-    """True when ``df`` is a driver-built ``LocalRelation`` (the small-
-    input finish of connected components), False for a planned loop."""
-    return df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
 
 
 def test_chain_triangle_and_disjoint(spark):
@@ -48,7 +44,7 @@ def test_convergence_bound_raises(spark, distributed):
             connected_components(pairs, max_iterations=1)
         # and converges with a sane bound
         out = connected_components(pairs)
-        assert _on_driver(out) == (session is spark)
+        assert on_driver(out) == (session is spark)
         assert {v[0] for v in _collect(out).values()} == {0}
 
 
@@ -70,7 +66,7 @@ def test_geometric_check_boundaries(spark, distributed):
         [(i, i + 1) for i in range(4)], "id_a long, id_b long"
     )
     cc = connected_components(pairs)
-    assert not _on_driver(cc)
+    assert not on_driver(cc)
     out = _collect(cc)
     assert {k: v[0] for k, v in out.items()} == {i: 0 for i in range(5)}
     # raise boundary unchanged: an 8-node path needs 7 propagation
@@ -157,7 +153,7 @@ def test_driver_finish_keeps_types_and_schema(spark, distributed):
     for rows, schema in cases:
         local = connected_components(spark.createDataFrame(rows, schema))
         planned = connected_components(distributed.createDataFrame(rows, schema))
-        assert _on_driver(local) and not _on_driver(planned)
+        assert on_driver(local) and not on_driver(planned)
         assert local.schema == planned.schema
         assert sorted(local.collect()) == sorted(planned.collect())
     strings = _collect(connected_components(spark.createDataFrame(*cases[0])))
@@ -465,7 +461,7 @@ def test_shuffle_path_parity_all_ops(spark):
     cc_d = connected_components(pairs)
     cc_b = connected_components(no_broadcast.createDataFrame(edges, "id_a long, id_b long"))
     cc_s = connected_components(pairs, broadcast_max_nodes=0)
-    assert _on_driver(cc_d) and not _on_driver(cc_b) and not _on_driver(cc_s)
+    assert on_driver(cc_d) and not on_driver(cc_b) and not on_driver(cc_s)
     cc_d, cc_b, cc_s = (
         {(r.id, r.cluster_id, r.is_keeper) for r in cc.collect()}
         for cc in (cc_d, cc_b, cc_s)
@@ -613,7 +609,7 @@ def test_loops_leave_caller_session_conf_untouched(spark, distributed):
     assert seen == {expected}, seen
     assert adaptive == {True}
     assert all(o.sparkSession is spark for o in outs)
-    assert not _on_driver(outs[0]) and not _on_driver(outs[1])
+    assert not on_driver(outs[0]) and not on_driver(outs[1])
     # results compose with caller-session frames
     names = spark.createDataFrame([(1, "a"), (20, "b")], "id long, nm string")
     assert outs[1].join(names, "id").count() == 2
@@ -666,7 +662,7 @@ def test_concurrent_pipeline_step_stays_adaptive(distributed):
     t0 = time.monotonic()
     ppn()
     assert time.monotonic() - t0 < 10
-    assert not _on_driver(got["cc"]) and graph.result == [12]
+    assert not on_driver(got["cc"]) and graph.result == [12]
     assert probe.result[0]["n"] > 1
     assert probe.result[0]["kinds"] == {"AdaptiveSparkPlanExec"}
 
@@ -782,7 +778,7 @@ def test_small_graph_checkpoints_not_pinned_wide(spark, distributed):
         [(i, i + 1) for i in range(0, 40, 2)], "id_a long, id_b long"
     )
     cc = connected_components(distributed.createDataFrame(pairs.collect()))
-    assert not _on_driver(cc)
+    assert not on_driver(cc)
     assert cc.count() == 40
     assert 0 < checkpoint_partitions(cc) < n_part
 

@@ -161,6 +161,34 @@ def test_prepare_corpus_funnel(spark):
     assert first["chunk_text"] == "the and is in it was for on"
 
 
+def test_prepare_corpus_leaves_no_cached_relation(spark):
+    """The deduped corpus and the near-dup survivors are checkpointed,
+    not cached: after a call the session's CacheManager is empty, so a
+    later call with the same quality -> dedup prefix is computed again
+    rather than served from this one's cache."""
+    from bdq_spark.operators.corpus import prepare_corpus
+
+    docs = spark.createDataFrame(
+        [
+            (1, "a quick brown fox jumps over the lazy dog and it was not far"),
+            (2, "a quick brown fox jumps over the lazy dog and it was not far"),
+            (3, "a quick brown fox jumps over the lazy dog and it was not near"),
+            (4, "the and is in it was for on with as sun moon star light river"),
+        ],
+        "doc_id:long, text:string",
+    )
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for near_dup in (None, 0.7):
+        prepare_corpus(
+            docs,
+            max_tokens=8,
+            pipeline_name="cp_nocache",
+            near_dup_threshold=near_dup,
+        ).collect()
+        assert cache.isEmpty()
+
+
 def test_vocabulary_stats(spark):
     from bdq_spark.operators.corpus import vocabulary_stats
 

@@ -1,6 +1,7 @@
 """Text analysis + dedup operator tests on synthetic and driver data."""
 
 import pytest
+from conftest import on_driver
 from pyspark.sql import functions as F
 
 from bdq_spark.functions.text import (
@@ -207,6 +208,107 @@ def test_jaccard_boilerplate_shingle_cap(spark):
         ).collect()
     }
     assert capped_pairs == {(300, 301)}
+
+
+def _jaccard_both_paths(df, distributed, **kwargs):
+    """``ngram_jaccard_pairs`` on ``df`` (small: the driver finish) and
+    on ``df`` rebound to ``distributed`` (broadcasts off: the planned
+    joins); both must give the same schema and rows."""
+    from bdq_spark.session import rebind
+
+    local = ngram_jaccard_pairs(df, **kwargs)
+    planned = ngram_jaccard_pairs(rebind(df, distributed), **kwargs)
+    assert on_driver(local) and not on_driver(planned)
+    assert local.schema == planned.schema
+    got = sorted(local.collect())
+    assert got == sorted(planned.collect())
+    return got
+
+
+def test_jaccard_driver_finish_equals_distributed(spark, distributed, docs):
+    """The prefix-filtered Jaccard finish on the driver returns the
+    distributed path's rows: on the docs fixture, with long, int and
+    string ids, and on the boilerplate corpus at each doc-frequency
+    cap (20 and "auto" skip the hot cluster, None emits it whole)."""
+    got = _jaccard_both_paths(docs, distributed, n=3, threshold=0.5)
+    assert {(r.id_a, r.id_b) for r in got} >= {(1, 2), (1, 3), (1, 4)}
+    for id_type in ("int", "string"):
+        cast = docs.withColumn("doc_id", F.col("doc_id").cast(id_type))
+        assert len(_jaccard_both_paths(cast, distributed, threshold=0.5)) == len(got)
+
+    boiler = (
+        "this software is provided as is without warranty of any kind "
+        "express or implied"
+    )
+    plant = _LONG_DOC + " " + _LONG_DOC.replace("data", "record")
+    hot = spark.createDataFrame(
+        [(i, f"{boiler} unique{i}") for i in range(60)]
+        + [(300, plant), (301, plant.replace("careful", "diligent"))],
+        "doc_id:long, text:string",
+    )
+    for cap, n_pairs in ((20, 1), ("auto", 60 * 59 // 2 + 1), (None, 60 * 59 // 2 + 1)):
+        pairs = _jaccard_both_paths(
+            hot, distributed, threshold=0.8, max_shingle_doc_freq=cap
+        )
+        assert len(pairs) == n_pairs and (300, 301) in {(r.id_a, r.id_b) for r in pairs}
+
+
+def test_jaccard_driver_finish_keeps_duplicate_shingle_rows(spark, distributed):
+    """Two distinct shingles of one document may share an ``xxhash64``
+    value, so the hashed relation can hold duplicate ``(id, shingle)``
+    rows.  The driver finish counts them as the distributed joins do:
+    in document frequency, positions, sizes and intersections."""
+    import random
+
+    from bdq_spark.operators.dedup import (
+        _driver_prefix_pairs,
+        _jaccard_for_pairs,
+        _prefix_candidates,
+        _rounded_jaccard,
+    )
+    from bdq_spark.session import rebind
+
+    rng = random.Random(7)
+    rows = [(rng.randrange(30), rng.randrange(40)) for _ in range(300)]
+    assert len(set(rows)) < len(rows)
+    sh = spark.createDataFrame(rows, "id long, shingle long")
+    planned_sh = rebind(sh, distributed)
+    for threshold, cap in ((0.2, None), (0.3, 8), (0.0, None)):
+        local = _driver_prefix_pairs(sh, threshold, cap)
+        planned = _jaccard_for_pairs(
+            _prefix_candidates(planned_sh, threshold, cap), planned_sh
+        )
+        got = sorted(local.select("id_a", "id_b", _rounded_jaccard()).collect())
+        assert got and got == sorted(planned.collect())
+
+
+def test_jaccard_driver_finish_schedules_fewer_jobs(spark, distributed, docs):
+    """Job count of the whole call plus its collect, a counter that does
+    not move with host load: the driver finish schedules fewer jobs
+    than the forced-distributed joins."""
+    from bdq_spark.plans.plan_lint import count_jobs
+    from bdq_spark.session import rebind
+
+    with count_jobs(spark) as small:
+        ngram_jaccard_pairs(docs, threshold=0.5).collect()
+    with count_jobs(spark) as planned:
+        ngram_jaccard_pairs(rebind(docs, distributed), threshold=0.5).collect()
+    assert small["jobs"] < planned["jobs"]
+
+
+def test_jaccard_null_id_takes_the_distributed_path(spark, distributed, docs):
+    """numpy cannot replay Spark's null ordering, so a null id declines
+    the driver finish; the rows match the forced-distributed run."""
+    from bdq_spark.session import rebind
+
+    with_null = docs.union(
+        spark.createDataFrame([(None, docs.first().text)], docs.schema)
+    )
+    local = ngram_jaccard_pairs(with_null, threshold=0.5)
+    planned = ngram_jaccard_pairs(rebind(with_null, distributed), threshold=0.5)
+    assert not on_driver(local) and not on_driver(planned)
+    assert sorted(local.collect()) == sorted(planned.collect())
+    assert all(r.id_a is not None and r.id_b is not None for r in local.collect())
 
 
 def test_minhash_lsh_finds_near_dups(spark, docs):

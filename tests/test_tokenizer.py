@@ -6,6 +6,7 @@ import re
 from collections import Counter
 
 import pytest
+from conftest import on_driver
 from pyspark.sql import functions as F
 
 from bdq_spark.operators.tokenizer import (
@@ -78,23 +79,98 @@ def test_word_frequencies_matches_reference(spark):
     assert got == dict(_ref_word_freq(CORPUS))
 
 
-def test_train_bpe_matches_reference(spark):
-    merges, vocab = train_bpe(_docs_df(spark), n_merges=25)
-    ref_merges, ref_vocab = _ref_train_bpe(CORPUS, n_merges=25)
+#: BPE training runs on the driver for a small vocabulary and as the
+#: distributed merge loop on a session with broadcasts off
+PATHS = ["driver", "distributed"]
+
+
+def _train(spark, distributed, path, df, **kwargs):
+    """``train_bpe`` on ``df`` along ``path``; asserts the path taken."""
+    from bdq_spark.session import rebind
+
+    if path == "distributed":
+        df = rebind(df, distributed)
+    merges, vocab = train_bpe(df, **kwargs)
+    assert on_driver(vocab) == (path == "driver")
+    return merges, vocab
+
+
+@pytest.mark.parametrize("path", PATHS)
+@pytest.mark.parametrize("min_pair_count", [2, 4])
+def test_train_bpe_matches_reference(spark, distributed, path, min_pair_count):
+    merges, vocab = _train(
+        spark, distributed, path, _docs_df(spark),
+        n_merges=25, min_pair_count=min_pair_count,
+    )
+    ref_merges, ref_vocab = _ref_train_bpe(
+        CORPUS, n_merges=25, min_pair_count=min_pair_count
+    )
     assert merges == ref_merges
+    # both counts run out of qualifying pairs before the 25th merge
+    assert len(merges) < 25
     got_vocab = {
         r["word"]: tuple(r["syms"]) for r in vocab.collect()
     }
     assert got_vocab == ref_vocab
-    # the aaa-run corpus exercises the overlapping-pair rule: (a,a)
-    # merged over "aaa" must give [aa, a], not [aa, aa]
-    assert ("aaa" in got_vocab)
+    # the aaa-run corpus exercises the overlapping-pair rule: (a,a),
+    # the second merge, over "aaa" must give [aa, a], not [aa, aa]
+    merges, vocab = _train(
+        spark, distributed, path, _docs_df(spark),
+        n_merges=2, min_pair_count=min_pair_count,
+    )
+    assert merges[1] == (1, "a", "a", "aa", 9)
+    got_vocab = {r["word"]: tuple(r["syms"]) for r in vocab.collect()}
+    assert got_vocab["aaa"] == ("aa", "a")
+    assert got_vocab["aaaaa"] == ("aa", "aa", "a")
 
 
-def test_train_bpe_early_stop(spark):
+def test_train_bpe_paths_agree_on_schema_and_decline_nulls(spark, distributed):
+    """The driver finish keeps the distributed vocabulary's schema with
+    and without merges; a null word declines it (numpy cannot replay
+    ``split`` of a null), and an empty word splits to ``[""]`` as
+    Spark's ``split(word, '')`` does."""
+    from bdq_spark.session import rebind
+
+    docs = _docs_df(spark)
+    for n_merges in (0, 5):
+        local = train_bpe(docs, n_merges=n_merges)[1]
+        planned = _train(spark, distributed, "distributed", docs, n_merges=n_merges)[1]
+        assert on_driver(local)
+        assert local.schema == planned.schema
+        assert sorted(local.collect()) == sorted(planned.collect())
+    for word in (None, ""):
+        wf = spark.createDataFrame(
+            [("aaab", 3), ("ab", 2), (word, 4)], "word string, freq long"
+        )
+        local = train_bpe(docs, n_merges=3, word_freq=wf)
+        planned = train_bpe(
+            rebind(docs, distributed), n_merges=3, word_freq=rebind(wf, distributed)
+        )
+        assert on_driver(local[1]) == (word == "")
+        assert local[0] == planned[0]
+        assert sorted(local[1].collect(), key=str) == sorted(planned[1].collect(), key=str)
+
+
+def test_train_bpe_driver_finish_schedules_fewer_jobs(spark, distributed):
+    """Job count of training plus the vocabulary's collect, a counter
+    that does not move with host load: the driver finish schedules
+    fewer jobs than the forced-distributed merge loop."""
+    from bdq_spark.plans.plan_lint import count_jobs
+
+    counts = {}
+    for path in PATHS:
+        with count_jobs(spark) as counts[path]:
+            _train(spark, distributed, path, _docs_df(spark), n_merges=10)[1].collect()
+    assert counts["driver"]["jobs"] < counts["distributed"]["jobs"]
+
+
+@pytest.mark.parametrize("path", PATHS)
+def test_train_bpe_early_stop(spark, distributed, path):
     # every word unique, min_pair_count high -> few/no merges, no crash
     df = _docs_df(spark)
-    merges, vocab = train_bpe(df, n_merges=50, min_pair_count=10**9)
+    merges, vocab = _train(
+        spark, distributed, path, df, n_merges=50, min_pair_count=10**9
+    )
     assert merges == []
     got = {r["word"]: tuple(r["syms"]) for r in vocab.collect()}
     assert got["the"] == ("t", "h", "e")
@@ -257,9 +333,11 @@ def test_select_safe_batch_conditions():
     assert got == [("a", "b", 9), ("c", "d", 8)]
 
 
-def test_train_bpe_batched_equals_sequential_reference(spark):
-    """Randomized corpora: the batched trainer must reproduce the
-    pure-sequential reference EXACTLY — merges and final vocab."""
+@pytest.mark.parametrize("path", PATHS)
+def test_train_bpe_batched_equals_sequential_reference(spark, distributed, path):
+    """Randomized corpora: the batched trainer and the driver finish
+    must reproduce the pure-sequential reference EXACTLY — merges and
+    final vocab."""
     import random
 
     rng = random.Random(42)
@@ -274,7 +352,7 @@ def test_train_bpe_batched_equals_sequential_reference(spark):
         df = spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
         )
-        merges, vocab = train_bpe(df, n_merges=30)
+        merges, vocab = _train(spark, distributed, path, df, n_merges=30)
         ref_merges, ref_vocab = _ref_train_bpe(texts, n_merges=30)
         assert merges == ref_merges, f"trial {trial}"
         got = {r["word"]: tuple(r["syms"]) for r in vocab.collect()}

@@ -43,7 +43,7 @@ entry that stages a fixture under the temp dir schedules more jobs on
 a cold temp dir (when a call built a fixture, :func:`run_audit` counts
 a second call, so the golden records the warm count), and an entry that
 leaves a frame persisted would make a later entry that builds the same
-frame cheaper (``prepare_corpus`` persists its deduped corpus), so
+frame cheaper (``prepare_corpus`` once cached its deduped corpus), so
 :func:`run_audit` clears the session's cache before each entry and an
 entry reads the same counts alone as in a full run.
 
