@@ -7726,8 +7726,8 @@ FROM dw JOIN w{n_merges} USING (word) GROUP BY doc_id"""
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn a 30-merge BPE table from the document corpus.  The
     iterations run over the collapsed word-frequency table (the corpus
-    text is scanned once); the only driver materialization is one argmax
-    row per merge.  Deterministic: frequency ties break lexicographically
+    text is scanned once), on the driver when that table fits the
+    broadcast threshold.  Deterministic: frequency ties break lexicographically
     — which is what lets :func:`_bpe_ctes` replay the ENTIRE training
     loop in DuckDB (30 unrolled argmax+fold rounds), graduating this
     entry from rows-only to value-hash in r8: every learned rule's

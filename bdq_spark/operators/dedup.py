@@ -571,8 +571,8 @@ def _driver_prefix_pairs(
         "id_a": pa.array(ids[ca], id_arrow),
         "id_b": pa.array(ids[cb], id_arrow),
         "inter": inter,
-        "size_a": size[ca].astype(np.int64),
-        "size_b": size[cb].astype(np.int64),
+        "size_a": size[ca],
+        "size_b": size[cb],
     })
     return sh.sparkSession.createDataFrame(out, schema)
 

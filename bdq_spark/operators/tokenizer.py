@@ -211,7 +211,8 @@ def _select_safe_batch(rows: List, complete: bool, cap: int) -> List[tuple]:
 
 
 def _merge_syms(syms: List[str], left: str, right: str) -> List[str]:
-    """:func:`_merge_pair`'s left-fold over one Python symbol list."""
+    """One rule of :func:`_merge_pairs_multi`'s left-fold, over a Python
+    symbol list: ``aaa`` with ``(a, a)`` gives ``[aa, a]``."""
     out: List[str] = []
     for s in syms:
         if out and out[-1] == left and s == right:

@@ -84,7 +84,7 @@ def test_word_frequencies_matches_reference(spark):
 PATHS = ["driver", "distributed"]
 
 
-def _train(spark, distributed, path, df, **kwargs):
+def _train(distributed, path, df, **kwargs):
     """``train_bpe`` on ``df`` along ``path``; asserts the path taken."""
     from bdq_spark.session import rebind
 
@@ -95,33 +95,30 @@ def _train(spark, distributed, path, df, **kwargs):
     return merges, vocab
 
 
-@pytest.mark.parametrize("path", PATHS)
-@pytest.mark.parametrize("min_pair_count", [2, 4])
-def test_train_bpe_matches_reference(spark, distributed, path, min_pair_count):
-    merges, vocab = _train(
-        spark, distributed, path, _docs_df(spark),
-        n_merges=25, min_pair_count=min_pair_count,
-    )
-    ref_merges, ref_vocab = _ref_train_bpe(
-        CORPUS, n_merges=25, min_pair_count=min_pair_count
-    )
-    assert merges == ref_merges
-    # both counts run out of qualifying pairs before the 25th merge
-    assert len(merges) < 25
-    got_vocab = {
-        r["word"]: tuple(r["syms"]) for r in vocab.collect()
-    }
-    assert got_vocab == ref_vocab
-    # the aaa-run corpus exercises the overlapping-pair rule: (a,a),
-    # the second merge, over "aaa" must give [aa, a], not [aa, aa]
-    merges, vocab = _train(
-        spark, distributed, path, _docs_df(spark),
-        n_merges=2, min_pair_count=min_pair_count,
-    )
-    assert merges[1] == (1, "a", "a", "aa", 9)
-    got_vocab = {r["word"]: tuple(r["syms"]) for r in vocab.collect()}
-    assert got_vocab["aaa"] == ("aa", "a")
-    assert got_vocab["aaaaa"] == ("aa", "aa", "a")
+def test_train_bpe_matches_reference(spark, distributed):
+    for path in PATHS:
+        for min_pair_count in (2, 4):
+            merges, vocab = _train(
+                distributed, path, _docs_df(spark),
+                n_merges=25, min_pair_count=min_pair_count,
+            )
+            ref_merges, ref_vocab = _ref_train_bpe(
+                CORPUS, n_merges=25, min_pair_count=min_pair_count
+            )
+            assert merges == ref_merges
+            # both counts run out of qualifying pairs before merge 25
+            assert len(merges) < 25
+            got_vocab = {
+                r["word"]: tuple(r["syms"]) for r in vocab.collect()
+            }
+            assert got_vocab == ref_vocab
+        # the aaa-run corpus exercises the overlapping-pair rule: (a,a),
+        # the second merge, over "aaa" must give [aa, a], not [aa, aa]
+        merges, vocab = _train(distributed, path, _docs_df(spark), n_merges=2)
+        assert merges[1] == (1, "a", "a", "aa", 9)
+        got_vocab = {r["word"]: tuple(r["syms"]) for r in vocab.collect()}
+        assert got_vocab["aaa"] == ("aa", "a")
+        assert got_vocab["aaaaa"] == ("aa", "aa", "a")
 
 
 def test_train_bpe_paths_agree_on_schema_and_decline_nulls(spark, distributed):
@@ -134,7 +131,7 @@ def test_train_bpe_paths_agree_on_schema_and_decline_nulls(spark, distributed):
     docs = _docs_df(spark)
     for n_merges in (0, 5):
         local = train_bpe(docs, n_merges=n_merges)[1]
-        planned = _train(spark, distributed, "distributed", docs, n_merges=n_merges)[1]
+        planned = _train(distributed, "distributed", docs, n_merges=n_merges)[1]
         assert on_driver(local)
         assert local.schema == planned.schema
         assert sorted(local.collect()) == sorted(planned.collect())
@@ -160,20 +157,20 @@ def test_train_bpe_driver_finish_schedules_fewer_jobs(spark, distributed):
     counts = {}
     for path in PATHS:
         with count_jobs(spark) as counts[path]:
-            _train(spark, distributed, path, _docs_df(spark), n_merges=10)[1].collect()
+            _train(distributed, path, _docs_df(spark), n_merges=10)[1].collect()
     assert counts["driver"]["jobs"] < counts["distributed"]["jobs"]
 
 
-@pytest.mark.parametrize("path", PATHS)
-def test_train_bpe_early_stop(spark, distributed, path):
+def test_train_bpe_early_stop(spark, distributed):
     # every word unique, min_pair_count high -> few/no merges, no crash
     df = _docs_df(spark)
-    merges, vocab = _train(
-        spark, distributed, path, df, n_merges=50, min_pair_count=10**9
-    )
-    assert merges == []
-    got = {r["word"]: tuple(r["syms"]) for r in vocab.collect()}
-    assert got["the"] == ("t", "h", "e")
+    for path in PATHS:
+        merges, vocab = _train(
+            distributed, path, df, n_merges=50, min_pair_count=10**9
+        )
+        assert merges == []
+        got = {r["word"]: tuple(r["syms"]) for r in vocab.collect()}
+        assert got["the"] == ("t", "h", "e")
 
 
 def test_bpe_segment_corpus_counts(spark):
@@ -333,8 +330,7 @@ def test_select_safe_batch_conditions():
     assert got == [("a", "b", 9), ("c", "d", 8)]
 
 
-@pytest.mark.parametrize("path", PATHS)
-def test_train_bpe_batched_equals_sequential_reference(spark, distributed, path):
+def test_train_bpe_batched_equals_sequential_reference(spark, distributed):
     """Randomized corpora: the batched trainer and the driver finish
     must reproduce the pure-sequential reference EXACTLY — merges and
     final vocab."""
@@ -352,8 +348,9 @@ def test_train_bpe_batched_equals_sequential_reference(spark, distributed, path)
         df = spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
         )
-        merges, vocab = _train(spark, distributed, path, df, n_merges=30)
         ref_merges, ref_vocab = _ref_train_bpe(texts, n_merges=30)
-        assert merges == ref_merges, f"trial {trial}"
-        got = {r["word"]: tuple(r["syms"]) for r in vocab.collect()}
-        assert got == ref_vocab, f"trial {trial}"
+        for path in PATHS:
+            merges, vocab = _train(distributed, path, df, n_merges=30)
+            assert merges == ref_merges, f"trial {trial} {path}"
+            got = {r["word"]: tuple(r["syms"]) for r in vocab.collect()}
+            assert got == ref_vocab, f"trial {trial} {path}"
