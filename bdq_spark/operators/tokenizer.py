@@ -252,13 +252,14 @@ def _sequential_bpe(
         merges.append((len(merges), left, right, left + right, cnt))
         touched = set()
         for i in holders[(left, right)].copy():
-            old, new = syms[i], _merge_syms(syms[i], left, right)
-            syms[i] = new
-            gone, born = set(zip(old, old[1:])), set(zip(new, new[1:]))
-            for p in zip(old, old[1:]):
+            old = list(zip(syms[i], syms[i][1:]))
+            syms[i] = _merge_syms(syms[i], left, right)
+            new = list(zip(syms[i], syms[i][1:]))
+            for p in old:
                 counts[p] -= freq[i]
-            for p in zip(new, new[1:]):
+            for p in new:
                 counts[p] = counts.get(p, 0) + freq[i]
+            gone, born = set(old), set(new)
             for p in gone - born:
                 holders[p].discard(i)
             for p in born - gone:
