@@ -62,7 +62,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bdq_spark.operators.similarity import _infer_dim
-from bdq_spark.session import DRIVER_ORDERED_TYPES, collect_if_small
+from bdq_spark.session import collect_for_driver
 
 __all__ = ["kmeans_fit_quantized", "kmeans_quantized"]
 
@@ -124,19 +124,18 @@ def _assign_frame(qdf: DataFrame, centroids: list, keep: list) -> DataFrame:
 
 
 def _fit_on_driver(table, k: int, iters: int, dim: int) -> Optional[list]:
-    """The exact Lloyd fit over a collected ``(id, q)`` Arrow table, or
-    ``None`` when numpy could not reproduce the distributed fit bit for
-    bit: null ids or vectors, vectors whose length is not ``dim``, or
-    values whose squared distances or cluster sums could overflow int64
-    (Spark's ANSI arithmetic raises there, numpy would wrap).
+    """The exact Lloyd fit over a collected ``(id, q)`` Arrow table
+    without top-level nulls, or ``None`` when numpy could not reproduce
+    the distributed fit bit for bit: null vector elements, vectors whose
+    length is not ``dim``, or values whose squared distances or cluster
+    sums could overflow int64 (Spark's ANSI arithmetic raises there,
+    numpy would wrap).
 
     Same steps as the distributed rounds: seeds are the ``k`` smallest
     ids; distances are ``xx - 2 X Cᵀ + cc``, exact in integers; ties
     go to the lowest centroid index (``argmin``); updates are floor
     means by ``//``; an empty cluster keeps its centroid."""
     q = table.column("q").combine_chunks()
-    if table.column("id").null_count or q.null_count:
-        return None
     values = q.flatten()
     n = len(q)
     ragged = n and pc.any(pc.not_equal(pc.list_value_length(q), dim)).as_py()
@@ -186,11 +185,10 @@ def kmeans_fit_quantized(
         dim = _infer_dim(df, vector_column)
 
     q = _quantized(df, vector_column, id_column, scale)
-    if isinstance(q.schema["id"].dataType, DRIVER_ORDERED_TYPES):
-        table = collect_if_small(q, 8 * (dim + 1))
-        fit = None if table is None else _fit_on_driver(table, k, iters, dim)
-        if fit is not None:
-            return fit
+    table = collect_for_driver(q, ("id",), row_bytes=8 * (dim + 1))
+    fit = None if table is None else _fit_on_driver(table, k, iters, dim)
+    if fit is not None:
+        return fit
 
     # deterministic seeds: the k smallest ids (bounded k-row collect)
     seeds = q.orderBy("id").limit(k).collect()

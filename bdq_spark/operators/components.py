@@ -45,12 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from bdq_spark.operators._checkpoint import data_checkpoint
-from bdq_spark.session import (
-    DRIVER_ORDERED_TYPES,
-    collect_if_small,
-    private_session,
-    rebind,
-)
+from bdq_spark.session import collect_for_driver, private_session, rebind
 
 __all__ = ["connected_components", "apply_dedup_clusters", "pagerank", "pagerank_quantized", "triangle_counts", "kcore"]
 
@@ -213,9 +208,9 @@ def _components_on_driver(
     directed: DataFrame, max_iterations: int, broadcast_max_nodes: int
 ) -> Optional[DataFrame]:
     """The broadcast-regime rounds finished on the driver, or ``None``
-    when the checkpointed ``(a, b)`` pair relation is above the session's
-    broadcast threshold, could exceed ``broadcast_max_nodes`` nodes, has
-    null ids, or has an id type outside ``DRIVER_ORDERED_TYPES``.
+    when :func:`~bdq_spark.session.collect_for_driver` declines the
+    checkpointed ``(a, b)`` pair relation, when it could exceed
+    ``broadcast_max_nodes`` nodes, or when its two id types differ.
 
     Ids are coded by ``np.unique`` (sorted, so code order is id order)
     and each round is the distributed round's min-aggregate over both
@@ -223,14 +218,10 @@ def _components_on_driver(
     jumping — so the fixpoint, the round it is reached in and the
     ``max_iterations`` raise are those of the distributed loop."""
     fa, fb = directed.schema.fields
-    if fa.dataType != fb.dataType or not isinstance(fa.dataType, DRIVER_ORDERED_TYPES):
+    if fa.dataType != fb.dataType:
         return None
-    table = collect_if_small(
-        directed,
-        directed._jdf.schema().defaultSize(),
-        max_rows=broadcast_max_nodes // 2,
-    )
-    if table is None or table.column("a").null_count or table.column("b").null_count:
+    table = collect_for_driver(directed, ("a", "b"), max_rows=broadcast_max_nodes // 2)
+    if table is None:
         return None
     ids, codes = np.unique(
         np.concatenate(

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from bdq_spark.operators._checkpoint import data_checkpoint
-from bdq_spark.session import DRIVER_ORDERED_TYPES, collect_if_small, driver_row_cap
+from bdq_spark.session import collect_for_driver, driver_row_cap
 
 from bdq_spark.functions.text import doc_fingerprint, word_tokens
 
@@ -330,6 +330,11 @@ def positional_shingles(
 def _jaccard_for_pairs(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     """Exact n-gram Jaccard restricted to the given (id_a, id_b) pairs.
 
+    ``sh`` must be a set: a duplicate ``(id, shingle)`` row counts twice
+    in ``inter`` and can push a score above 1.  :func:`shingle` gives a
+    set, and :func:`ngram_jaccard_pairs` deduplicates its hashed
+    relation.
+
     Cost is proportional to |pairs| × doc size, not to the full corpus
     pair space — this is the verify stage of candidates-then-verify.
     The shingle set is semi-join-pruned to documents that appear in a
@@ -482,31 +487,25 @@ def _driver_prefix_pairs(
 ) -> Optional[DataFrame]:
     """:func:`_prefix_candidates` + :func:`_jaccard_for_pairs` finished
     on the driver: ``(id_a, id_b, inter, size_a, size_b)`` as a
-    ``LocalRelation``, or ``None`` when the checkpointed ``(id,
-    shingle)`` relation is over the session's broadcast threshold, has
-    null ids or an id type outside ``DRIVER_ORDERED_TYPES``, or when the
-    prefix self-join or the intersection expansion would exceed the
-    same row cap.
+    ``LocalRelation``, or ``None`` when
+    :func:`~bdq_spark.session.collect_for_driver` declines the
+    checkpointed ``(id, shingle)`` set, or when the prefix self-join or
+    the intersection expansion would exceed its row cap.
 
-    The steps are the distributed ones over the same rows, duplicate
-    ``(id, shingle)`` rows included: document frequency, the per-id
-    ``(df_cnt, shingle)`` position, the prefix cut, the doc-frequency
-    cap, the self-join on shingle under the id, length and positional
-    filters (same float expressions, same order), distinct candidates,
-    then ``inter`` as the row count of the ``(id, shingle)`` join."""
-    id_type = sh.schema["id"].dataType
-    if not isinstance(id_type, DRIVER_ORDERED_TYPES):
+    The steps are the distributed ones over the same rows: document
+    frequency, the per-id ``(df_cnt, shingle)`` position, the prefix
+    cut, the doc-frequency cap, the self-join on shingle under the id,
+    length and positional filters (same float expressions, same order),
+    distinct candidates, then ``inter`` as the size of the ``(id,
+    shingle)`` join."""
+    table = collect_for_driver(sh, ("id", "shingle"))
+    if table is None:
         return None
-    row_bytes = sh._jdf.schema().defaultSize()
-    table = collect_if_small(sh, row_bytes)
-    if table is None or table.column("id").null_count:
-        return None
-    cap = driver_row_cap(sh.sparkSession, row_bytes)
+    cap = driver_row_cap(sh.sparkSession, sh._jdf.schema().defaultSize())
     ids, doc = np.unique(
         table.column("id").to_numpy(zero_copy_only=False), return_inverse=True
     )
-    # dense shingle codes in hash order; df_cnt counts rows, as the
-    # distributed groupBy does
+    # dense shingle codes in hash order, with their document frequency
     _, key, freq = np.unique(
         table.column("shingle").to_numpy(), return_inverse=True, return_counts=True
     )
@@ -542,28 +541,24 @@ def _driver_prefix_pairs(
     cand = np.unique(doc[a][ok] * len(ids) + doc[b][ok])
     ca, cb = cand // len(ids), cand % len(ids)
 
-    # inter: each distinct (id, shingle) with its row multiplicity; a
-    # candidate's a-side rows probe the b side's
-    cell, mult = np.unique(doc * len(freq) + key, return_counts=True)
-    cell_doc = cell // len(freq)
-    run = np.bincount(cell_doc, minlength=len(ids))
-    start = np.cumsum(run) - run
-    if int(run[ca].sum()) > cap:
+    # inter: each of a candidate's a-side shingles probes the b side's
+    # (id, shingle) cells, sorted so each id's cells are one run
+    if int(size[ca].sum()) > cap:
         return None
-    pair = np.repeat(np.arange(len(cand)), run[ca])
-    own = np.repeat(start[ca], run[ca]) + _run_offsets(run[ca])
+    cell = np.sort(doc * len(freq) + key)
+    start = np.cumsum(size) - size
+    pair = np.repeat(np.arange(len(cand)), size[ca])
+    own = np.repeat(start[ca], size[ca]) + _run_offsets(size[ca])
     probe = cb[pair] * len(freq) + cell[own] % len(freq)
     hit = np.minimum(np.searchsorted(cell, probe), len(cell) - 1)
-    found = cell[hit] == probe
-    inter = np.zeros(len(cand), np.int64)
-    np.add.at(inter, pair[found], mult[own[found]] * mult[hit[found]])
+    inter = np.bincount(pair[cell[hit] == probe], minlength=len(cand))
 
     id_field = sh.schema["id"]
     id_arrow = table.schema.field("id").type
     schema = StructType(
         [
-            StructField("id_a", id_type, id_field.nullable),
-            StructField("id_b", id_type, id_field.nullable),
+            StructField("id_a", id_field.dataType, id_field.nullable),
+            StructField("id_b", id_field.dataType, id_field.nullable),
         ]
         + [StructField(c, LongType(), False) for c in ("inter", "size_a", "size_b")]
     )
@@ -584,7 +579,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_shingle_doc_freq: "int | str | None" = "auto",
-    prefix_filter: bool = True,
 ) -> DataFrame:
     """Document pairs with n-gram Jaccard similarity >= ``threshold``.
 
@@ -624,21 +618,25 @@ def ngram_jaccard_pairs(
     to exact dedup anyway; same capped-recall contract as
     ``max_bucket_size`` in :func:`minhash_lsh_candidates`).
 
-    Small inputs finish on the driver: with ``prefix_filter`` on, when
-    the checkpointed ``(id, shingle)`` relation fits the session's
-    ``autoBroadcastJoinThreshold`` (row width from the schema's
-    ``defaultSize``), it is collected once and the candidate, verify
-    and intersection steps run in numpy (:func:`_driver_prefix_pairs`);
-    the rounding and threshold filter stay Spark expressions over the
-    returned ``LocalRelation``.  The prefix self-join and the
-    intersection expansion must fit the same row cap.  Null ids, an id
-    type outside ``DRIVER_ORDERED_TYPES`` or a larger input take the
-    distributed joins; both paths return the same rows.
+    Small inputs finish on the driver: when the checkpointed ``(id,
+    shingle)`` set fits the session's ``autoBroadcastJoinThreshold``
+    (row width from the schema's ``defaultSize``), it is collected once
+    and the candidate, verify and intersection steps run in numpy
+    (:func:`_driver_prefix_pairs`); the rounding and threshold filter
+    stay Spark expressions over the returned ``LocalRelation``.  The
+    prefix self-join and the intersection expansion must fit the same
+    row cap.  Null ids, an id type whose order numpy does not share
+    (:func:`~bdq_spark.session.collect_for_driver`) or a larger input
+    take the distributed joins; both paths return the same rows.
     """
     if max_shingle_doc_freq == "auto":
         max_shingle_doc_freq = DEFAULT_MAX_SHINGLE_DOC_FREQ
-    sh = shingle(df, text_column, id_column, n).select(
-        "id", F.xxhash64("shingle").alias("shingle")
+    # the set _jaccard_for_pairs needs, deduplicated over the 8-byte hash
+    # (shingle()'s hash(id) window partitioning already satisfies it)
+    sh = (
+        shingle(df, text_column, id_column, n, distinct=False)
+        .select("id", F.xxhash64("shingle").alias("shingle"))
+        .distinct()
     )
     # eager: the plan references sh from parallel stages (index build,
     # semi-join prune, intersection, sizes) — a lazily-populated cache
@@ -649,57 +647,13 @@ def ngram_jaccard_pairs(
     # cache would accumulate across invocations in a long session.
     sh = data_checkpoint(sh)
 
-    if prefix_filter:
-        local = _driver_prefix_pairs(sh, threshold, max_shingle_doc_freq)
-        if local is not None:
-            scored = local.select("id_a", "id_b", _rounded_jaccard())
-        else:
-            cand = _prefix_candidates(sh, threshold, max_shingle_doc_freq)
-            scored = _jaccard_for_pairs(cand, sh)
-        return scored.filter(F.col("jaccard") >= threshold)
-
-    if max_shingle_doc_freq is not None:
-        freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_cnt"))
-        cand_sh = (
-            sh.join(
-                freq.filter(F.col("df_cnt") <= max_shingle_doc_freq), "shingle"
-            ).select("id", "shingle")
-        )
-        a = cand_sh.alias("a")
-        b = cand_sh.alias("b")
-        cand = (
-            a.join(b, "shingle")
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
-        )
-        return _jaccard_for_pairs(cand, sh).filter(
-            F.col("jaccard") >= threshold
-        )
-
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("size_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("size_b"))
-    jaccard = F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(jaccard, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    local = _driver_prefix_pairs(sh, threshold, max_shingle_doc_freq)
+    if local is not None:
+        scored = local.select("id_a", "id_b", _rounded_jaccard())
+    else:
+        cand = _prefix_candidates(sh, threshold, max_shingle_doc_freq)
+        scored = _jaccard_for_pairs(cand, sh)
+    return scored.filter(F.col("jaccard") >= threshold)
 
 
 # ---------------------------------------------------------------------------

@@ -61,7 +61,7 @@ from pyspark.sql.types import (
 )
 
 from bdq_spark.functions.text import word_tokens
-from bdq_spark.session import collect_if_small, private_session, rebind
+from bdq_spark.session import collect_for_driver, private_session, rebind
 
 __all__ = [
     "word_frequencies",
@@ -88,6 +88,10 @@ def word_frequencies(
     )
 
 
+#: most merges one job of the distributed loop applies (:func:`_select_safe_batch`)
+_MAX_MERGE_BATCH = 16
+
+
 def _adjacent_pairs(syms: Column) -> Column:
     """Array of (left, right) structs for each adjacent symbol pair."""
     return F.transform(
@@ -95,29 +99,6 @@ def _adjacent_pairs(syms: Column) -> Column:
         lambda s, i: F.struct(
             s.alias("left"), F.element_at(syms, i + 2).alias("right")
         ),
-    )
-
-
-def _merge_pair(syms: Column, left: str, right: str) -> Column:
-    """Left-fold replacing every non-overlapping adjacent ``(left,
-    right)`` occurrence with the concatenated symbol, scanning left to
-    right — exactly the Sennrich merge semantics (after a merge the scan
-    resumes AFTER the merged token: ``aaa`` with pair ``(a,a)`` becomes
-    ``[aa, a]``, which the fold reproduces because the merged symbol no
-    longer equals the pair's left element).
-    """
-    merged = left + right
-    return F.aggregate(
-        syms,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(left))
-            & (s == F.lit(right)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
     )
 
 
@@ -278,9 +259,9 @@ def _driver_bpe(
     words: DataFrame, n_merges: int, min_pair_count: int
 ) -> Optional[Tuple[List[tuple], DataFrame]]:
     """:func:`train_bpe`'s merge loop as sequential BPE on the driver,
-    or ``None`` when the checkpointed ``(word, freq)`` table is over the
-    session's broadcast threshold, has a null, a non-string word or a
-    non-integral ``freq``.
+    or ``None`` when the checkpointed ``(word, freq)`` table has a
+    non-string word or a non-integral ``freq``, or when
+    :func:`~bdq_spark.session.collect_for_driver` declines it.
 
     Symbols are Spark's ``split(word, '')``: the word's code points, and
     ``[""]`` for the empty word.  The merges are
@@ -291,9 +272,8 @@ def _driver_bpe(
         fields["freq"].dataType, (ByteType, ShortType, IntegerType, LongType)
     ):
         return None
-    pairs_in = words.select("word", "freq")
-    table = collect_if_small(pairs_in, pairs_in._jdf.schema().defaultSize())
-    if table is None or table.column("word").null_count or table.column("freq").null_count:
+    table = collect_for_driver(words.select("word", "freq"), ("word",))
+    if table is None:
         return None
     syms = [list(w) or [w] for w in table.column("word").to_pylist()]
     merges = _sequential_bpe(syms, table.column("freq").to_pylist(), n_merges, min_pair_count)
@@ -313,7 +293,6 @@ def train_bpe(
     n_merges: int = 50,
     min_pair_count: int = 2,
     word_freq: Optional[DataFrame] = None,
-    max_batch: int = 16,
 ) -> Tuple[List[tuple], DataFrame]:
     """Learn a BPE merge table from a corpus.
 
@@ -336,9 +315,9 @@ def train_bpe(
     ``autoBroadcastJoinThreshold`` (row width from the schema's
     ``defaultSize``), it is collected once and the merges run as
     sequential BPE on the driver (:func:`_driver_bpe`); ``vocab`` is
-    then a ``LocalRelation``.  A larger table, a null word or a
-    non-integral ``freq`` takes the distributed loop.  Both paths give
-    the same ``merges`` and ``vocab``.
+    then a ``LocalRelation``.  A larger table, a null word or ``freq``,
+    or a non-integral ``freq`` takes the distributed loop.  Both paths
+    give the same ``merges`` and ``vocab``.
     """
     spark = df.sparkSession
     words = word_freq if word_freq is not None else word_frequencies(
@@ -368,7 +347,7 @@ def train_bpe(
     merges: List[tuple] = []
     # the collected pair-list window: big enough that real batches never
     # hit the coverage guard, still a bounded driver materialization
-    window = max(64, 16 * max_batch)
+    window = 16 * _MAX_MERGE_BATCH
     # AQE off for the ITERATION LOOP only, in a private session (the
     # caller's session keeps its conf): every loop query is one
     # pair-count shuffle over the vocabulary table whose partitioning
@@ -394,7 +373,7 @@ def train_bpe(
         # bounded top-window collect; ties break lexicographically
         # for determinism.  _select_safe_batch then takes the
         # longest prefix sequential BPE would provably merge in this
-        # exact order, so one fold applies up to max_batch merges —
+        # exact order, so one fold applies up to _MAX_MERGE_BATCH merges —
         # ~batch× fewer jobs, bit-identical merge table (equivalence
         # pinned in tests/test_tokenizer.py against the Sennrich
         # reference).
@@ -406,7 +385,7 @@ def train_bpe(
         batch = _select_safe_batch(
             top,
             complete=len(top) < window,
-            cap=min(max_batch, n_merges - len(merges)),
+            cap=min(_MAX_MERGE_BATCH, n_merges - len(merges)),
         )
         rules = []
         for left, right, cnt in batch:

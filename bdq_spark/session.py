@@ -17,7 +17,7 @@ and `get_spark` never overrides an already-running session's conf.
 from __future__ import annotations
 
 import os
-from typing import Optional
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StringType
@@ -99,19 +99,28 @@ def driver_row_cap(spark: SparkSession, row_bytes: int) -> int:
     """How many ``row_bytes``-wide rows fit the session's broadcast
     threshold (read as bytes from the JVM ``SQLConf``); 0 when
     broadcasts are disabled.  The one budget of every driver finish:
-    :func:`collect_if_small` collects at most this many rows, and a
+    :func:`collect_for_driver` collects at most this many rows, and a
     finish that grows its input on the driver (a self-join) checks the
     grown size against it too."""
     conf = spark._jsparkSession.sessionState().conf()
     return max(conf.autoBroadcastJoinThreshold() // row_bytes, 0)
 
 
-def collect_if_small(
-    df: DataFrame, row_bytes: int, max_rows: Optional[int] = None
+def collect_for_driver(
+    df: DataFrame,
+    ordered: Sequence[str],
+    row_bytes: Optional[int] = None,
+    max_rows: Optional[int] = None,
 ):
-    """``df`` as one ``pyarrow.Table`` on the driver when it has at most
-    ``cap = autoBroadcastJoinThreshold // row_bytes`` rows (and at most
-    ``max_rows``), else ``None``.
+    """``df`` as one ``pyarrow.Table`` for a loop that numpy replays on
+    the driver, or ``None`` when the replay could differ from Spark's or
+    the input is too large: a column in ``ordered`` (the columns whose
+    order the replay takes minima or sorts by) has a type outside
+    ``DRIVER_ORDERED_TYPES``, ``df`` has more than ``cap =
+    autoBroadcastJoinThreshold // row_bytes`` rows (or ``max_rows``),
+    or any top-level value is null (numpy cannot replay Spark's null
+    ordering).  ``row_bytes`` defaults to the JVM schema's
+    ``defaultSize()``.
 
     The session's broadcast threshold is the budget: a relation under
     it is already shipped through the driver whole whenever a join
@@ -121,16 +130,21 @@ def collect_if_small(
     task, ``df.coalesce(1).limit(cap + 1)`` collected through Arrow
     whatever the session's Arrow conf says: the single task stops
     reading after ``cap + 1`` rows, where a plain limit would shuffle up
-    to ``cap + 1`` rows from EVERY partition of a large input.  The
-    table keeps exact nulls, and ``spark.createDataFrame(table,
-    schema)`` turns a driver-side result back into a ``LocalRelation``
-    with exact size statistics."""
+    to ``cap + 1`` rows from EVERY partition of a large input.
+    ``spark.createDataFrame(table, schema)`` turns a driver-side result
+    back into a ``LocalRelation`` with exact size statistics."""
     if not hasattr(df, "toArrow"):  # PySpark < 4.0
         return None
+    if not all(isinstance(df.schema[c].dataType, DRIVER_ORDERED_TYPES) for c in ordered):
+        return None
+    if row_bytes is None:
+        row_bytes = df._jdf.schema().defaultSize()
     cap = driver_row_cap(df.sparkSession, row_bytes)
     if max_rows is not None:
         cap = min(cap, max_rows)
     if cap <= 0:
         return None
     table = df.coalesce(1).limit(cap + 1).toArrow()
-    return table if table.num_rows <= cap else None
+    if table.num_rows > cap or any(col.null_count for col in table.columns):
+        return None
+    return table

@@ -95,9 +95,10 @@ def test_kmeans_empty_cluster_keeps_centroid(spark, distributed):
 
 def test_kmeans_driver_fit_declines_what_numpy_cannot_replay():
     """The driver finish hands back to the distributed rounds (returns
-    None) on null ids or vectors, vectors whose length is not ``dim``,
+    None) on null vector elements, vectors whose length is not ``dim``,
     and values whose int64 distances or sums could overflow; it raises
-    the distributed fit's error when there are fewer than k rows."""
+    the distributed fit's error when there are fewer than k rows.  Null
+    ids and vectors never reach it (``tests/test_driver_finish.py``)."""
     import pyarrow as pa
 
     from bdq_spark.operators.clustering import _fit_on_driver
@@ -111,8 +112,6 @@ def test_kmeans_driver_fit_declines_what_numpy_cannot_replay():
     ok = table([2, 0, 1], [[5, 5], [0, 0], [1, 1]])
     # seeds are ids 0 and 1; id 2 joins cluster 1; floor means
     assert _fit_on_driver(ok, k=2, iters=1, dim=2) == [[0, 0], [3, 3]]
-    assert _fit_on_driver(table([0, None], [[0, 0], [1, 1]]), 1, 1, 2) is None
-    assert _fit_on_driver(table([0, 1], [[0, 0], None]), 1, 1, 2) is None
     assert _fit_on_driver(table([0, 1], [[0, 0], [1, None]]), 1, 1, 2) is None
     assert _fit_on_driver(table([0, 1], [[0, 0], [1]]), 1, 1, 2) is None
     # dim * (2 * max|q|)**2 must stay below 2**63

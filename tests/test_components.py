@@ -173,20 +173,6 @@ def test_driver_finish_keeps_types_and_schema(spark, distributed):
     assert connected_components(ranged).schema == connected_components(planned).schema
 
 
-def test_collect_if_small_gate(spark):
-    """The driver-finish gate: at most ``threshold // row_bytes`` rows
-    (and ``max_rows``) come back as one Arrow table; a larger input,
-    or a threshold <= 0, gives None."""
-    from bdq_spark.session import collect_if_small, private_session
-
-    tiny = private_session(spark, {"spark.sql.autoBroadcastJoinThreshold": "32"})
-    assert collect_if_small(tiny.range(2), 16).num_rows == 2
-    assert collect_if_small(tiny.range(3), 16) is None
-    assert collect_if_small(tiny.range(2), 16, max_rows=1) is None
-    off = private_session(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
-    assert collect_if_small(off.range(1), 16) is None
-
-
 def test_apply_dedup_clusters_end_to_end(spark):
     from pyspark.sql import functions as F
 

@@ -6,8 +6,9 @@ import json
 from datetime import datetime, timezone
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from conftest import on_driver
 
 from bdq_spark.functions import NULL_STR_REPR, surrogate_key_hash, surrogate_key_string
 from bdq_spark.schema import dict_compare
@@ -98,6 +99,39 @@ def test_dict_compare_properties(d1, d2):
     }
 
 
+def _python_jaccard(texts, n, threshold):
+    """Pure-Python word n-gram set Jaccard: ``{(i, j): J}`` for every
+    pair ``i < j`` that shares a shingle and whose ``J`` rounded to 6
+    decimals reaches ``threshold``.  Words are lowercased alphanumeric
+    runs; a document of fewer than ``n`` words is one shingle."""
+
+    def shingles(text):
+        words = [w for w in "".join(
+            ch if ch.isalnum() else " " for ch in text.lower()
+        ).split() if w]
+        if len(words) < n:
+            return {" ".join(words)} if words else set()
+        return {" ".join(words[i : i + n]) for i in range(len(words) - n + 1)}
+
+    sets = [shingles(t) for t in texts]
+    out = {}
+    for i, a in enumerate(sets):
+        for j in range(i + 1, len(sets)):
+            inter = len(a & sets[j])
+            if inter:
+                jaccard = inter / (len(a) + len(sets[j]) - inter)
+                if round(jaccard, 6) >= threshold:
+                    out[(i, j)] = jaccard
+    return out
+
+
+def _assert_matches_python_jaccard(pairs, texts, n, threshold):
+    got = {(r.id_a, r.id_b): r.jaccard for r in pairs.collect()}
+    expected = _python_jaccard(texts, n, threshold)
+    assert got.keys() == expected.keys()
+    assert all(abs(got[p] - expected[p]) < 1e-6 for p in got)
+
+
 @given(
     docs=st.lists(
         st.text(alphabet="ab cd", min_size=0, max_size=40), min_size=2, max_size=6
@@ -108,31 +142,8 @@ def test_jaccard_matches_python_reference(spark, docs):
     from bdq_spark.operators.dedup import ngram_jaccard_pairs
 
     df = spark.createDataFrame(list(enumerate(docs)), "doc_id:long, text:string")
-    got = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, n=2, threshold=0.0).collect()
-    }
-
-    def shingles(text):
-        words = [w for w in "".join(
-            ch if ch.isalnum() else " " for ch in text.lower()
-        ).split() if w]
-        if not words:
-            return set()
-        if len(words) < 2:
-            return {" ".join(words)}
-        return {" ".join(words[i : i + 2]) for i in range(len(words) - 1)}
-
-    sets = {i: shingles(t) for i, t in enumerate(docs)}
-    for i in sets:
-        for j in sets:
-            if i < j and sets[i] and sets[j]:
-                inter = len(sets[i] & sets[j])
-                if inter == 0:
-                    assert (i, j) not in got  # no shared shingle -> no pair
-                else:
-                    expected = inter / (len(sets[i]) + len(sets[j]) - inter)
-                    assert abs(got[(i, j)] - expected) < 1e-6
+    pairs = ngram_jaccard_pairs(df, n=2, threshold=0.0)
+    _assert_matches_python_jaccard(pairs, docs, n=2, threshold=0.0)
 
 
 @given(
@@ -147,31 +158,33 @@ def test_jaccard_matches_python_reference(spark, docs):
     ),
     threshold=st.sampled_from([0.2, 0.35, 0.5, 0.65, 0.8, 0.95]),
 )
+# one shingle each, and J exactly at the threshold (2 of 4 shingles)
+@example(docs=[["alpha"], ["alpha"]], threshold=0.2)
+@example(docs=[["alpha", "beta", "gamma", "delta"], ["alpha", "beta", "gamma", "eps"]],
+         threshold=0.5)
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_prefix_filter_lossless(spark, docs, threshold):
-    """Prefix + positional + length filtering must be LOSSLESS: the
-    filtered candidate pipeline returns exactly the exhaustive
-    inverted-index result for arbitrary corpora and thresholds.  A tiny
-    shared vocabulary maximizes shingle overlap, stressing the epsilon
-    bounds in the prefix-length and PPJoin-alpha arithmetic (the
-    hand-reasoned 1e-9 terms this test pins down)."""
+def test_prefix_filter_lossless(spark, distributed, docs, threshold):
+    """Prefix + positional + length filtering must be LOSSLESS: both
+    paths of the filtered candidate pipeline — the numpy replay on the
+    driver (``spark``) and the distributed joins (``distributed``,
+    broadcasts off) — return exactly the pure-Python set-Jaccard pairs
+    for arbitrary corpora and thresholds.  A tiny shared vocabulary
+    maximizes shingle overlap, stressing the epsilon bounds in the
+    prefix-length and PPJoin-alpha arithmetic (the hand-reasoned 1e-9
+    terms this test pins down)."""
     from bdq_spark.operators.dedup import ngram_jaccard_pairs
 
-    df = spark.createDataFrame(
-        [(i, " ".join(words)) for i, words in enumerate(docs)],
-        "doc_id:long, text:string",
-    )
-    kw = dict(n=2, threshold=threshold, max_shingle_doc_freq=None)
-    filtered = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, prefix_filter=True, **kw).collect()
-    }
-    exhaustive = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, prefix_filter=False, **kw).collect()
-    }
-    assert filtered == exhaustive
+    texts = [" ".join(words) for words in docs]
+    for session in (spark, distributed):
+        df = session.createDataFrame(
+            list(enumerate(texts)), "doc_id:long, text:string"
+        )
+        pairs = ngram_jaccard_pairs(
+            df, n=2, threshold=threshold, max_shingle_doc_freq=None
+        )
+        assert on_driver(pairs) == (session is spark)
+        _assert_matches_python_jaccard(pairs, texts, n=2, threshold=threshold)
 
 
 @given(

@@ -253,11 +253,12 @@ def test_jaccard_driver_finish_equals_distributed(spark, distributed, docs):
         assert len(pairs) == n_pairs and (300, 301) in {(r.id_a, r.id_b) for r in pairs}
 
 
-def test_jaccard_driver_finish_keeps_duplicate_shingle_rows(spark, distributed):
-    """Two distinct shingles of one document may share an ``xxhash64``
-    value, so the hashed relation can hold duplicate ``(id, shingle)``
-    rows.  The driver finish counts them as the distributed joins do:
-    in document frequency, positions, sizes and intersections."""
+def test_jaccard_paths_agree_on_hashed_shingle_sets(spark, distributed):
+    """Both Jaccard paths over hand-built hashed ``(id, shingle)`` sets
+    (the relation ``ngram_jaccard_pairs`` deduplicates after hashing)
+    return the same rows with every score at most 1, among them the
+    dense 30-id x 12-hash set whose duplicate rows once drove a score
+    to 7.25."""
     import random
 
     from bdq_spark.operators.dedup import (
@@ -268,18 +269,20 @@ def test_jaccard_driver_finish_keeps_duplicate_shingle_rows(spark, distributed):
     )
     from bdq_spark.session import rebind
 
-    rng = random.Random(7)
-    rows = [(rng.randrange(30), rng.randrange(40)) for _ in range(300)]
-    assert len(set(rows)) < len(rows)
-    sh = spark.createDataFrame(rows, "id long, shingle long")
-    planned_sh = rebind(sh, distributed)
-    for threshold, cap in ((0.2, None), (0.3, 8), (0.0, None)):
-        local = _driver_prefix_pairs(sh, threshold, cap)
-        planned = _jaccard_for_pairs(
-            _prefix_candidates(planned_sh, threshold, cap), planned_sh
-        )
-        got = sorted(local.select("id_a", "id_b", _rounded_jaccard()).collect())
-        assert got and got == sorted(planned.collect())
+    # the doc-frequency cap keeps some shingles of each relation
+    for n_hashes, doc_freq_cap in ((40, 8), (12, 25)):
+        rng = random.Random(7)
+        rows = {(rng.randrange(30), rng.randrange(n_hashes)) for _ in range(300)}
+        sh = spark.createDataFrame(sorted(rows), "id long, shingle long")
+        planned_sh = rebind(sh, distributed)
+        for threshold, cap in ((0.2, None), (0.3, doc_freq_cap), (0.0, None)):
+            local = _driver_prefix_pairs(sh, threshold, cap)
+            planned = _jaccard_for_pairs(
+                _prefix_candidates(planned_sh, threshold, cap), planned_sh
+            )
+            got = sorted(local.select("id_a", "id_b", _rounded_jaccard()).collect())
+            assert got and got == sorted(planned.collect())
+            assert all(r.jaccard <= 1 for r in got)
 
 
 def test_jaccard_driver_finish_schedules_fewer_jobs(spark, distributed, docs):
@@ -294,21 +297,6 @@ def test_jaccard_driver_finish_schedules_fewer_jobs(spark, distributed, docs):
     with count_jobs(spark) as planned:
         ngram_jaccard_pairs(rebind(docs, distributed), threshold=0.5).collect()
     assert small["jobs"] < planned["jobs"]
-
-
-def test_jaccard_null_id_takes_the_distributed_path(spark, distributed, docs):
-    """numpy cannot replay Spark's null ordering, so a null id declines
-    the driver finish; the rows match the forced-distributed run."""
-    from bdq_spark.session import rebind
-
-    with_null = docs.union(
-        spark.createDataFrame([(None, docs.first().text)], docs.schema)
-    )
-    local = ngram_jaccard_pairs(with_null, threshold=0.5)
-    planned = ngram_jaccard_pairs(rebind(with_null, distributed), threshold=0.5)
-    assert not on_driver(local) and not on_driver(planned)
-    assert sorted(local.collect()) == sorted(planned.collect())
-    assert all(r.id_a is not None and r.id_b is not None for r in local.collect())
 
 
 def test_minhash_lsh_finds_near_dups(spark, docs):
