@@ -2175,7 +2175,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic): this entry pins ``mode="exact"`` so its DuckDB oracle
     can replay EVERY pair, and SELF-ENFORCES that contract by raising
     once the corpus exceeds the operator's own exact/LSH cutover
-    (``exact_max_rows``) — mirroring ``pruned_scan_orders``'
+    (``EMBEDDING_PAIRS_EXACT_MAX_ROWS``) — mirroring ``pruned_scan_orders``'
     plan-assertion pattern: the registered artifact states its own
     scale limit instead of silently going quadratic.  The production
     path at scale is :func:`embedding_cosine_pairs` with
@@ -2186,12 +2186,11 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bdq_spark.operators.dedup import embedding_cosine_pairs
 
     emb = load_table(spark, sf_dir, "embeddings")
-    exact_max_rows = _NEAR_DUP_PAIRS_EXACT_MAX_ROWS
     n = emb.count()
-    if n > exact_max_rows:
+    if n > _NEAR_DUP_PAIRS_EXACT_MAX_ROWS:
         raise ValueError(
             f"embedding_near_dup_pairs is the sf-bounded EXACT twin "
-            f"({n} rows > exact_max_rows={exact_max_rows}); run "
+            f"({n} rows > {_NEAR_DUP_PAIRS_EXACT_MAX_ROWS}); run "
             "embedding_cosine_pairs(mode='lsh') — the measured-"
             "sublinear production path — instead of forcing the "
             "all-pairs oracle shape at this scale"

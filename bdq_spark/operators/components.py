@@ -36,11 +36,11 @@ broadcast.  Above the threshold, the rounds run distributed as above.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Any, Callable, Optional
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
@@ -62,15 +62,18 @@ __all__ = ["connected_components", "apply_dedup_clusters", "pagerank", "pagerank
 GRAPH_BROADCAST_MAX_NODES = 2_000_000
 
 
-def _maybe_broadcast(df: DataFrame, n_nodes: int, bound: int) -> DataFrame:
-    """Below the bound: broadcast.  Above it: SHUFFLE_HASH build hint —
-    on the co-partitioned path both join sides are already hash-
-    partitioned, so the hint's only effect is join STRATEGY: the node-
-    sized side becomes a per-partition hash build and the edge side
-    STREAMS, instead of the default sort-merge join re-sorting the full
-    edge relation every round (at x100 scale those per-round sorts ran
-    the 16 GiB measurement heap out of execution memory)."""
-    return F.broadcast(df) if n_nodes <= bound else df.hint("shuffle_hash")
+def _maybe_broadcast(df: DataFrame, n_nodes: int) -> DataFrame:
+    """Up to ``GRAPH_BROADCAST_MAX_NODES`` nodes: broadcast.  Above
+    it: SHUFFLE_HASH build hint — on the co-partitioned path both join
+    sides are already hash-partitioned, so the hint's only effect is
+    join STRATEGY: the node-sized side becomes a per-partition hash
+    build and the edge side STREAMS, instead of the default sort-merge
+    join re-sorting the full edge relation every round (at x100 scale
+    those per-round sorts ran the 16 GiB measurement heap out of
+    execution memory)."""
+    if n_nodes <= GRAPH_BROADCAST_MAX_NODES:
+        return F.broadcast(df)
+    return df.hint("shuffle_hash")
 
 
 # conf of the private session (:func:`bdq_spark.session.private_session`)
@@ -164,8 +167,8 @@ def _keyed_checkpoint(df: DataFrame, key: str) -> DataFrame:
 # the AQE-coalesced setup vs 12.1 s pinned at 32 partitions).  Small
 # graphs keep the AQE-planned symmetrize-distinct; only graphs that can
 # cross the cutover pay the fused co-partitioned setup.
-def _may_exceed_cutover(n_pairs: int, broadcast_max_nodes: int) -> bool:
-    return 2 * n_pairs > broadcast_max_nodes
+def _may_exceed_cutover(n_pairs: int) -> bool:
+    return 2 * n_pairs > GRAPH_BROADCAST_MAX_NODES
 
 
 # de-pin coalesce target: ~4 MiB of serialized 16-byte edge rows per
@@ -175,7 +178,7 @@ def _may_exceed_cutover(n_pairs: int, broadcast_max_nodes: int) -> bool:
 _EDGE_ROWS_PER_PARTITION = 262_144
 
 
-def _depin_small_edges(e: DataFrame, broadcast_max_nodes: int) -> DataFrame:
+def _depin_small_edges(e: DataFrame) -> DataFrame:
     """PageRank's fused setup shuffles the edge relation ONCE at the
     session shuffle partition count, necessarily before any count
     exists (pre-counting would re-materialize the edge-scale input —
@@ -192,7 +195,7 @@ def _depin_small_edges(e: DataFrame, broadcast_max_nodes: int) -> DataFrame:
     n_edges = e.count()
     n_cur = e.rdd.getNumPartitions()
     want = max(1, min(n_cur, -(-n_edges // _EDGE_ROWS_PER_PARTITION)))
-    if want < n_cur and not _may_exceed_cutover(n_edges, broadcast_max_nodes):
+    if want < n_cur and not _may_exceed_cutover(n_edges):
         return data_checkpoint(e.coalesce(want))
     return e
 
@@ -205,12 +208,12 @@ def _not_converged(max_iterations: int) -> RuntimeError:
 
 
 def _components_on_driver(
-    directed: DataFrame, max_iterations: int, broadcast_max_nodes: int
+    directed: DataFrame, max_iterations: int
 ) -> Optional[DataFrame]:
     """The broadcast-regime rounds finished on the driver, or ``None``
     when :func:`~bdq_spark.session.collect_for_driver` declines the
     checkpointed ``(a, b)`` pair relation, when it could exceed
-    ``broadcast_max_nodes`` nodes, or when its two id types differ.
+    ``GRAPH_BROADCAST_MAX_NODES`` nodes, or when its two id types differ.
 
     Ids are coded by ``np.unique`` (sorted, so code order is id order)
     and each round is the distributed round's min-aggregate over both
@@ -220,7 +223,9 @@ def _components_on_driver(
     fa, fb = directed.schema.fields
     if fa.dataType != fb.dataType:
         return None
-    table = collect_for_driver(directed, ("a", "b"), max_rows=broadcast_max_nodes // 2)
+    table = collect_for_driver(
+        directed, ("a", "b"), max_rows=GRAPH_BROADCAST_MAX_NODES // 2
+    )
     if table is None:
         return None
     ids, codes = np.unique(
@@ -258,7 +263,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 20,
-    broadcast_max_nodes: int = GRAPH_BROADCAST_MAX_NODES,
 ) -> DataFrame:
     """Label every node appearing in ``pairs`` with its component's
     minimum member id.
@@ -270,14 +274,15 @@ def connected_components(
     bound or pre-split the graph).
 
     When the pair relation fits the session's broadcast threshold and
-    ``2 * n_pairs <= broadcast_max_nodes``, it is collected once and
-    the rounds run on the driver (:func:`_components_on_driver`); the
-    result is a ``LocalRelation`` with exact size statistics.
-    Otherwise, when the node table is small (``<= broadcast_max_nodes``,
-    counted once after the input checkpoint), each round is ONE FUSED
-    min-aggregate: the broadcast label join's neighbor contributions
-    union the labels' own rows and a single keyed shuffle takes the
-    min per id (``_round_broadcast`` — provably equal to the classic
+    ``2 * n_pairs <= GRAPH_BROADCAST_MAX_NODES``, it is collected once
+    and the rounds run on the driver (:func:`_components_on_driver`);
+    the result is a ``LocalRelation`` with exact size statistics.
+    Otherwise, when the node table is small (at most
+    ``GRAPH_BROADCAST_MAX_NODES``, counted once after the input
+    checkpoint), each round is ONE FUSED min-aggregate: the broadcast
+    label join's neighbor contributions union the labels' own rows and
+    a single keyed shuffle takes the min per id (``_round_broadcast``
+    — provably equal to the classic
     neighbor-min + merge-join round, with one broadcast build instead
     of two and no second join).  Near-dup graphs are sized by the
     duplicate population, not the corpus, so this is the common case.
@@ -299,7 +304,7 @@ def connected_components(
     directed = data_checkpoint(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     )
-    local = _components_on_driver(directed, max_iterations, broadcast_max_nodes)
+    local = _components_on_driver(directed, max_iterations)
     if local is not None:
         return local
     both = directed.union(
@@ -310,7 +315,7 @@ def connected_components(
     # BEFORE the symmetrize shuffle runs, so small graphs never get
     # pinned wide
     n_pairs = directed.count()
-    if _may_exceed_cutover(n_pairs, broadcast_max_nodes):
+    if _may_exceed_cutover(n_pairs):
         # ONE symmetrize-dedup shuffle, captured with hash(a) (AQE off):
         # the per-partition dropDuplicates rides the repartition
         # exchange (hash(a) satisfies the (a, b) clustering), and past
@@ -339,6 +344,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     n_nodes = labels.count()
+    broadcast_regime = n_nodes <= GRAPH_BROADCAST_MAX_NODES
 
     def _round_broadcast(edges: DataFrame, labels: DataFrame) -> DataFrame:
         """One FUSED propagation round for the broadcast regime: the
@@ -409,7 +415,7 @@ def connected_components(
         )
 
     def _rounds(edges: DataFrame, labels: DataFrame) -> DataFrame:
-        if n_nodes <= broadcast_max_nodes:
+        if broadcast_regime:
             # GEOMETRIC convergence checks (each check is one more
             # serial job): the changed-count is scheduled only at rounds
             # 1, 2, 4, 8, ... (bounded by max_iterations), not every
@@ -420,11 +426,11 @@ def connected_components(
             # the next check's single count job (the rounds are a
             # serial driver-bound chain: each count job saved is wall
             # time at any scale; the overshoot rounds are node-scale
-            # no-op aggregates, bounded-cheap in this regime by
-            # n_nodes <= broadcast_max_nodes).  The past-cutover path
-            # below keeps its every-round check: there an overshoot
-            # round is a full node-scale exchange, which at cutover
-            # scale costs more than the count job it saves.
+            # no-op aggregates, bounded-cheap in this regime by the
+            # node cutover).  The past-cutover path below keeps its
+            # every-round check: there an overshoot round is a full
+            # node-scale exchange, which at cutover scale costs more
+            # than the count job it saves.
             rounds_run = 0
             next_check = 1
             while rounds_run < max_iterations:
@@ -461,7 +467,7 @@ def connected_components(
                     return _done(labels)
         raise _not_converged(max_iterations)
 
-    if n_nodes > broadcast_max_nodes:
+    if not broadcast_regime:
         # edges already carry hash(a) from the setup checkpoint; only
         # the label relation needs keying
         loop = private_session(spark, _AQE_OFF)
@@ -493,15 +499,32 @@ def apply_dedup_clusters(
     return df.join(non_keepers, id_column, "left_anti")
 
 
-def _pagerank_setup(
-    edges: DataFrame, src: str, dst: str, broadcast_max_nodes: int
-) -> tuple:
-    """Setup shared by :func:`pagerank` and :func:`pagerank_quantized`:
-    ONE edge shuffle for the whole query, planned without AQE so the
-    checkpoint keeps its hash(src) partitioning (same shuffle count as
-    a plain distinct; small graphs get de-pinned right after), then the
-    node set.  Returns ``(e, nodes, n_nodes)`` on the caller's
-    session."""
+def _power_iteration(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    iterations: int,
+    rank: str,
+    zero: Column,
+    init: Callable[[int], Column],
+    weight: Column,
+    update: Callable[[int, Any], Column],
+) -> DataFrame:
+    """The power iteration shared by :func:`pagerank` and
+    :func:`pagerank_quantized` (scale mechanics in :func:`pagerank`'s
+    docstring).  ``rank`` names the rank column and ``zero`` is its typed
+    zero; ``init(n_nodes)`` is the starting rank, ``weight`` a source's
+    per-edge share of its rank, and ``update(n_nodes, dangling)`` the next
+    rank from the summed in-contribution ``c`` (null for a node with no
+    in-edges) and the round's dangling mass.
+
+    Setup: ONE edge shuffle for the whole query, planned without AQE so
+    the checkpoint keeps its hash(src) partitioning (same shuffle count
+    as a plain distinct; small graphs get de-pinned right after), then
+    the node set.  Under the node cutover the rounds run on the caller's
+    session; past it in an AQE-off private session over id-keyed nodes,
+    so the rounds' checkpoints keep their partitioning (the
+    co-partitioned path), with the result rebound to the caller."""
     spark = edges.sparkSession
     e = rebind(
         data_checkpoint(
@@ -514,29 +537,77 @@ def _pagerank_setup(
         ),
         spark,
     )
-    e = _depin_small_edges(e, broadcast_max_nodes)
+    e = _depin_small_edges(e)
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    return e, nodes, nodes.count()
+    n_nodes = nodes.count()
+    if n_nodes == 0:
+        return nodes.withColumn(rank, zero)
 
+    def _run(e: DataFrame, nodes: DataFrame) -> DataFrame:
+        # node-scale static: out-degree per source (exchange-free over
+        # the src-partitioned edges).  The degree is joined onto the
+        # rank relation ONCE here and CARRIED through the iterations —
+        # the per-round ranks ⋈ deg join (a broadcast build job per
+        # round under the broadcast regime, a merge/hash join per round
+        # past the cutover) becomes a filter+project on the carried
+        # column (2 joins + 2 broadcasts per round -> 1 + 1).
+        # Dangling detection is a COUNT comparison (a source
+        # with out-edges has a deg row; n_deg < n_nodes iff some node
+        # has no out-edges) instead of materializing an anti-join
+        # node set — and the per-round dangling mass, when needed at
+        # all, is a filter on the carried deg (IS NULL), not a join.
+        deg = (
+            e.groupBy("src")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .select(F.col("src").alias("id"), "deg")
+            .localCheckpoint(eager=True)
+        )
+        has_dangling = deg.count() < n_nodes
+        ranks = nodes.join(_maybe_broadcast(deg, n_nodes), "id", "left").select(
+            "id", "deg", init(n_nodes).alias(rank)
+        )
+        for _ in range(iterations):
+            dangling = (
+                ranks.filter(F.col("deg").isNull())
+                .agg(F.coalesce(F.sum(rank), zero))
+                .first()[0]
+                if has_dangling
+                else 0
+            )
+            # per-source weight, node-scale (deg-null rows excluded:
+            # zero-outdegree nodes contribute through the dangling term)
+            rdeg = ranks.filter(F.col("deg").isNotNull()).select(
+                "id", weight.alias("w")
+            )
+            contrib = (
+                e.join(_maybe_broadcast(rdeg, n_nodes), e["src"] == rdeg["id"])
+                .groupBy("dst")
+                .agg(F.sum(F.col("w")).alias("c"))
+            )
+            ranks = (
+                ranks.join(
+                    _maybe_broadcast(contrib, n_nodes),
+                    ranks["id"] == contrib["dst"],
+                    "left",
+                )
+                .select("id", "deg", update(n_nodes, dangling).alias(rank))
+                .localCheckpoint(eager=False)
+            )
+        # every round is PLANNED here (localCheckpoint builds its RDD at
+        # call time, lazy only in materialization), so the whole loop's
+        # plans are captured in the session ``e`` and ``nodes`` belong to
+        return ranks.select("id", rank)
 
-def _pagerank_rounds(
-    run, e: DataFrame, nodes: DataFrame, n_nodes: int, broadcast_max_nodes: int
-) -> DataFrame:
-    """``run(e, nodes)`` on the caller's session under the node cutover;
-    past it in an AQE-off private session over id-keyed nodes, so the
-    rounds' checkpoints keep their partitioning (the co-partitioned
-    path), with the result rebound to the caller."""
-    if n_nodes <= broadcast_max_nodes:
-        return run(e, nodes)
-    spark = e.sparkSession
+    if n_nodes <= GRAPH_BROADCAST_MAX_NODES:
+        return _run(e, nodes)
     loop = private_session(spark, _AQE_OFF)
     return rebind(
-        run(rebind(e, loop), _keyed_checkpoint(rebind(nodes, loop), "id")),
+        _run(rebind(e, loop), _keyed_checkpoint(rebind(nodes, loop), "id")),
         spark,
     )
 
@@ -547,7 +618,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    broadcast_max_nodes: int = GRAPH_BROADCAST_MAX_NODES,
 ) -> DataFrame:
     """Fixed-iteration PageRank power iteration over an edge relation —
     the standard importance measure for entity graphs a data pipeline
@@ -580,88 +650,25 @@ def pagerank(
     exist at all — a 1-row mass aggregate over the deg-null rank rows.
     A LAZY ``localCheckpoint`` per iteration keeps the plan flat (same iterative-lineage cure as
     :func:`connected_components`).  When the node table is small
-    (``<= broadcast_max_nodes``), the weight and update joins run as
+    (``<= GRAPH_BROADCAST_MAX_NODES``), the weight and update joins run as
     BROADCAST hash joins; a huge graph takes the CO-PARTITIONED path —
     node tables hash-partitioned by id at setup, the rank relation
     inheriting hash(id) through its per-round lazy checkpoint, and the
     node-sized join sides built as SHUFFLE_HASH maps so the edge side
     streams without per-round sorts.
     """
-    e, nodes, n_nodes = _pagerank_setup(edges, src, dst, broadcast_max_nodes)
-    if n_nodes == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
 
-    def _run(e: DataFrame, nodes: DataFrame) -> DataFrame:
-        # node-scale static: out-degree per source (exchange-free over
-        # the src-partitioned edges).  The degree is joined onto the
-        # rank relation ONCE here and CARRIED through the iterations —
-        # the per-round ranks ⋈ deg join (a broadcast build job per
-        # round under the broadcast regime, a merge/hash join per round
-        # past the cutover) becomes a filter+project on the carried
-        # column (2 joins + 2 broadcasts per round -> 1 + 1).
-        # Dangling detection is a COUNT comparison (a source
-        # with out-edges has a deg row; n_deg < n_nodes iff some node
-        # has no out-edges) instead of materializing an anti-join
-        # node set — and the per-round dangling mass, when needed at
-        # all, is a filter on the carried deg (IS NULL), not a join.
-        deg = (
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .select(F.col("src").alias("id"), "deg")
-            .localCheckpoint(eager=True)
+    def _update(n_nodes: int, dangling: float) -> Column:
+        return F.lit((1.0 - damping) / n_nodes) + F.lit(damping) * (
+            F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dangling / n_nodes)
         )
-        has_dangling = deg.count() < n_nodes
-        ranks = nodes.join(
-            _maybe_broadcast(deg, n_nodes, broadcast_max_nodes), "id", "left"
-        ).select("id", "deg", F.lit(1.0 / n_nodes).alias("rank"))
-        base = (1.0 - damping) / n_nodes
-        for _ in range(iterations):
-            dangling = (
-                ranks.filter(F.col("deg").isNull())
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-                .first()[0]
-                if has_dangling
-                else 0.0
-            )
-            # per-source weight, node-scale (deg-null rows excluded:
-            # zero-outdegree nodes contribute through the dangling term)
-            rdeg = ranks.filter(F.col("deg").isNotNull()).select(
-                "id", (F.col("rank") / F.col("deg")).alias("w")
-            )
-            contrib = (
-                e.join(
-                    _maybe_broadcast(rdeg, n_nodes, broadcast_max_nodes),
-                    e["src"] == rdeg["id"],
-                )
-                .groupBy("dst")
-                .agg(F.sum(F.col("w")).alias("c"))
-            )
-            ranks = (
-                ranks.join(
-                    _maybe_broadcast(contrib, n_nodes, broadcast_max_nodes),
-                    ranks["id"] == contrib["dst"],
-                    "left",
-                )
-                .select(
-                    "id",
-                    "deg",
-                    (
-                        F.lit(base)
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col("c"), F.lit(0.0))
-                            + F.lit(dangling / n_nodes)
-                        )
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=False)
-            )
-        # every round is PLANNED here (localCheckpoint builds its RDD at
-        # call time, lazy only in materialization), so the whole loop's
-        # plans are captured in the session ``e`` and ``nodes`` belong to
-        return ranks.select("id", "rank")
 
-    return _pagerank_rounds(_run, e, nodes, n_nodes, broadcast_max_nodes)
+    return _power_iteration(
+        edges, src, dst, iterations, "rank", F.lit(0.0),
+        init=lambda n_nodes: F.lit(1.0 / n_nodes),
+        weight=F.col("rank") / F.col("deg"),
+        update=_update,
+    )
 
 
 def pagerank_quantized(
@@ -670,7 +677,6 @@ def pagerank_quantized(
     dst: str = "dst",
     iterations: int = 3,
     scale: int = 10**12,
-    broadcast_max_nodes: int = GRAPH_BROADCAST_MAX_NODES,
 ) -> DataFrame:
     """Engine-portable PageRank twin: the same power iteration as
     :func:`pagerank` carried out entirely in EXACT bigint arithmetic —
@@ -699,70 +705,24 @@ def pagerank_quantized(
     without AQE) keeps the rounds at one exchange with the edge
     relation shuffled once at setup.
     """
-    e, nodes, n_nodes = _pagerank_setup(edges, src, dst, broadcast_max_nodes)
-    if n_nodes == 0:
-        return nodes.withColumn("rank_q", F.lit(0).cast("bigint"))
 
-    def _run(e: DataFrame, nodes: DataFrame) -> DataFrame:
-        # node-scale static — deg carried on the rank relation and
-        # dangling detection by count comparison, exactly as in
-        # :func:`pagerank` (see the comment there)
-        deg = (
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .select(F.col("src").alias("id"), "deg")
-            .localCheckpoint(eager=True)
-        )
-        has_dangling = deg.count() < n_nodes
-        ranks = nodes.join(
-            _maybe_broadcast(deg, n_nodes, broadcast_max_nodes), "id", "left"
-        ).select(
-            "id", "deg", F.lit(scale // n_nodes).cast("bigint").alias("rank_q")
-        )
+    def _update(n_nodes: int, dangling: int) -> Column:
         base = (15 * (scale // n_nodes)) // 100
-        for _ in range(iterations):
-            dangling = (
-                ranks.filter(F.col("deg").isNull())
-                .agg(F.coalesce(F.sum("rank_q"), F.lit(0)).cast("bigint"))
-                .first()[0]
-                if has_dangling
-                else 0
-            )
-            # `div` is Spark's EXACT integer division — floor() of the
-            # double quotient can misround for large operands.  Computed
-            # once per NODE; the per-edge contribution is identical to
-            # dividing per edge, so the recurrence is unchanged.
-            rdeg = ranks.filter(F.col("deg").isNotNull()).select(
-                "id", F.expr("rank_q div deg").alias("w")
-            )
-            contrib = (
-                e.join(
-                    _maybe_broadcast(rdeg, n_nodes, broadcast_max_nodes),
-                    e["src"] == rdeg["id"],
-                )
-                .groupBy("dst")
-                .agg(F.sum(F.col("w")).alias("c"))
-            )
-            ranks = (
-                ranks.join(
-                    _maybe_broadcast(contrib, n_nodes, broadcast_max_nodes),
-                    ranks["id"] == contrib["dst"],
-                    "left",
-                )
-                .withColumn("c", F.coalesce(F.col("c"), F.lit(0)))
-                .select(
-                    "id",
-                    "deg",
-                    F.expr(
-                        f"CAST({base} + (85 * (c + {dangling // n_nodes}))"
-                        " div 100 AS BIGINT)"
-                    ).alias("rank_q"),
-                )
-                .localCheckpoint(eager=False)
-            )
-        return ranks.select("id", "rank_q")
+        return F.expr(
+            f"CAST({base} + (85 * (coalesce(c, 0) + {dangling // n_nodes}))"
+            " div 100 AS BIGINT)"
+        )
 
-    return _pagerank_rounds(_run, e, nodes, n_nodes, broadcast_max_nodes)
+    # `div` is Spark's EXACT integer division — floor() of the double
+    # quotient can misround for large operands.  The weight is computed
+    # once per NODE; the per-edge contribution is identical to dividing
+    # per edge, so the recurrence is unchanged.
+    return _power_iteration(
+        edges, src, dst, iterations, "rank_q", F.lit(0).cast("bigint"),
+        init=lambda n_nodes: F.lit(scale // n_nodes).cast("bigint"),
+        weight=F.expr("rank_q div deg"),
+        update=_update,
+    )
 
 
 def triangle_counts(
@@ -871,7 +831,6 @@ def kcore(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 20,
-    broadcast_max_nodes: int = GRAPH_BROADCAST_MAX_NODES,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling (Seidman 1983; the
     Matula-Beck peel, rounds-synchronous): repeatedly delete every node
@@ -894,7 +853,7 @@ def kcore(
     past convergence are no-ops).
 
     Scale shape, two regimes split on the symmetrized edge count
-    compared against ``broadcast_max_nodes`` — a deliberately
+    compared against ``GRAPH_BROADCAST_MAX_NODES`` — a deliberately
     CONSERVATIVE node-regime test, not a repurposing of the bound:
     every node of the symmetrized relation contributes at least one
     source row, so ``n_nodes <= n_edges_sym``, and an edge count at or
@@ -906,10 +865,10 @@ def kcore(
     the simple peel is the right direction).  The same inequality
     bounds the small path's unconditional ``F.broadcast(bad)``: the
     sub-k node set is at most ``n_nodes <= n_edges_sym <=
-    broadcast_max_nodes`` rows of one long (~16 MB at the default
-    bound), within Spark's broadcast comfort zone by construction:
+    GRAPH_BROADCAST_MAX_NODES`` rows of one long (~16 MB), within
+    Spark's broadcast comfort zone by construction:
 
-    - ``<= broadcast_max_nodes`` edges: each round is one degree
+    - ``<= GRAPH_BROADCAST_MAX_NODES`` edges: each round is one degree
       aggregation plus two BROADCAST anti-joins against the (shrinking)
       sub-k node set, lazy checkpoint per round, AQE off and the
       shuffle width pinned to the data (:func:`_round_loop_confs`).
@@ -1007,7 +966,7 @@ def kcore(
             survivors = cur.join(
                 bad.hint("shuffle_hash"), "src", "left_anti"
             )
-            if k * n_bad <= broadcast_max_nodes:
+            if k * n_bad <= GRAPH_BROADCAST_MAX_NODES:
                 # deleted rows' mirrors = the rows whose DESTINATION is
                 # bad; <= k * n_bad rows, so broadcast beats re-keying
                 # the adjacency
@@ -1036,7 +995,7 @@ def kcore(
         # one final check: the last filter round may have converged
         return _degrees_if_converged(cur)
 
-    if n_edges <= broadcast_max_nodes:
+    if n_edges <= GRAPH_BROADCAST_MAX_NODES:
         # same round-loop conf as the CC broadcast regime: every peel
         # round's only shuffle is the degree aggregate over n_edges
         # known rows, and the anti-joins are explicit broadcasts, so AQE
@@ -1044,7 +1003,7 @@ def kcore(
         # the shrinking peel (ADVICE r13): the width is derived once
         # from the INITIAL n_edges while cur only shrinks, so late
         # rounds run wider than their data — but this regime is entered
-        # only when n_edges <= broadcast_max_nodes, which caps the
+        # only when n_edges <= GRAPH_BROADCAST_MAX_NODES, which caps the
         # over-partitioning at ceil(bound / 50k) tasks (a handful);
         # re-deriving would cost the very count jobs this loop removes.
         loop = private_session(spark, _round_loop_confs(spark, n_edges))

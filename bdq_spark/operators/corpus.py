@@ -54,7 +54,6 @@ def prepare_corpus(
     overlap: int = 0,
     split_salt: str = "",
     pipeline_name: str = "corpus_prepare",
-    persist_intermediate: bool = True,
     near_dup_threshold: Optional[float] = None,
     near_dup_n: int = 3,
 ) -> DataFrame:
@@ -94,17 +93,16 @@ def prepare_corpus(
     ``{pipeline_name}_``; use distinct names for concurrent preparations
     in one session.
 
-    ``persist_intermediate`` (default True) eagerly checkpoints the
-    deduped corpus (and the near-dup survivors) with serialized
-    MEMORY_AND_DISK blocks at the point where the plan fans out —
-    without it the quality+dedup subtree re-reads the source for EVERY
-    downstream branch (contamination probe, eval shingle set, final
-    anti-join: 6 source scans in the physical plan), which at 100 TB
-    means six full corpus passes instead of one compute plus stored
-    reads.  The blocks hold only the surviving ``(id, text)`` pairs,
-    spill to disk, and are released with the returned frame: nothing
-    enters the session's cache, so a later call is never served from
-    an earlier one's.
+    The deduped corpus (and the near-dup survivors) is eagerly
+    checkpointed with serialized MEMORY_AND_DISK blocks at the point
+    where the plan fans out — without that the quality+dedup subtree
+    re-reads the source for EVERY downstream branch (contamination
+    probe, eval shingle set, final anti-join: 6 source scans in the
+    physical plan), which at 100 TB means six full corpus passes
+    instead of one compute plus stored reads.  The blocks hold only the
+    surviving ``(id, text)`` pairs, spill to disk, and are released with
+    the returned frame: nothing enters the session's cache, so a later
+    call is never served from an earlier one's.
     """
     from bdq_spark.functions.text import quality_score
     from bdq_spark.operators.contamination import contamination_check
@@ -133,15 +131,12 @@ def prepare_corpus(
         keepers = fingerprint_dedup(
             docs, text_column=text_column, id_column=id_column
         ).select(F.col("keeper_id").alias(id_column))
-        deduped = docs.join(keepers, id_column, "left_semi")
-        if persist_intermediate:
-            # eager checkpoint BEFORE the downstream fan-out: the three
-            # consumers (contamination probe, eval shingles, anti-join)
-            # can be scheduled concurrently, and a lazily-populated
-            # parent gets computed once per concurrent stage instead of
-            # once; the blocks go with the frame, no cache outlives it
-            deduped = data_checkpoint(deduped)
-        return deduped
+        # eager checkpoint BEFORE the downstream fan-out: the three
+        # consumers (contamination probe, eval shingles, anti-join)
+        # can be scheduled concurrently, and a lazily-populated
+        # parent gets computed once per concurrent stage instead of
+        # once; the blocks go with the frame, no cache outlives it
+        return data_checkpoint(docs.join(keepers, id_column, "left_semi"))
 
     decon_upstream, decon_source = exact_dedup, v_deduped
     if near_dup_threshold is not None:
@@ -163,15 +158,14 @@ def prepare_corpus(
                 threshold=near_dup_threshold,
             )
             clusters = connected_components(pairs)
-            survivors = apply_dedup_clusters(docs, clusters, id_column=id_column)
-            if persist_intermediate:
-                # same fan-out rule as exact_dedup: the decontamination
-                # step references this view several times (train/eval
-                # split, shingle probe, anti-join), and a bare temp view
-                # would re-run the ENTIRE jaccard + connected-components
-                # pipeline per reference
-                survivors = data_checkpoint(survivors)
-            return survivors
+            # same fan-out rule as exact_dedup: the decontamination
+            # step references this view several times (train/eval
+            # split, shingle probe, anti-join), and a bare temp view
+            # would re-run the ENTIRE jaccard + connected-components
+            # pipeline per reference
+            return data_checkpoint(
+                apply_dedup_clusters(docs, clusters, id_column=id_column)
+            )
 
         decon_upstream, decon_source = near_dedup, v_neardup
 

@@ -728,12 +728,9 @@ def minhash_signatures(
         # shingle set is private to this signature computation
         sh = shingle(df, text_column, id_column, n, distinct=False)
     if hash_fn == "md5":
-        base_sql = (
-            f"pmod(cast(conv(substring(md5(shingle), 1, 15), 16, 10) "
-            f"as bigint), {p})"
-        )
+        base = _md5_base_hash(F.col("shingle"))
     elif hash_fn == "xxhash64":
-        base_sql = f"pmod(xxhash64(shingle), {p})"
+        base = F.xxhash64("shingle")
     else:
         raise ValueError(f"hash_fn must be 'xxhash64' or 'md5': {hash_fn!r}")
     # one selectExpr (a single py4j round trip) instead of num_hashes
@@ -747,7 +744,7 @@ def minhash_signatures(
     # optimizer keeps the two projections apart because a non-cheap
     # expression consumed 64x is excluded from CollapseProject).
     # Same values bit-for-bit — the affine family reads one shared base.
-    hashed = sh.selectExpr("id", f"{base_sql} as __base").selectExpr(
+    hashed = sh.select("id", F.pmod(base, F.lit(p)).alias("__base")).selectExpr(
         "id",
         *[
             f"pmod(__base * {a}L + {b}L, {p}) as h{i}"
@@ -1184,33 +1181,38 @@ def simhash_pairs(
 # embedding cosine near-dup
 # ---------------------------------------------------------------------------
 
+# rows per hash sub-block of a cosine comparison group: one GEMM task
+# holds at most ~2x this many vectors however large the group is
+_COSINE_BLOCK_ROWS = 16384
+
+
 def _blocked_cosine_candidates(
     assigned: DataFrame,
     threshold: float,
     margin: float,
-    block_rows: int,
     id_type: str,
 ) -> DataFrame:
     """Candidate ``(id_a, id_b)`` pairs with float64-GEMM cosine >=
     ``threshold - margin``, computed entirely on executors.
 
     Input is ``(id, vec, grp)``; only same-``grp`` pairs are considered.
-    Each group is sub-blocked into ``nb = ceil(group_size / block_rows)``
-    hash blocks and every unordered block pair ``(i, j)`` becomes one
-    ``applyInPandas`` task holding at most ~2x ``block_rows`` vectors —
-    the classic distributed block-matrix product.  A vector is shuffled
+    Each group is sub-blocked into ``nb = ceil(group_size /
+    _COSINE_BLOCK_ROWS)`` hash blocks and every unordered block pair
+    ``(i, j)`` becomes one ``applyInPandas`` task holding at most ~2x
+    ``_COSINE_BLOCK_ROWS`` vectors — the classic distributed
+    block-matrix product.  A vector is shuffled
     ``nb`` times (the replication cost of exact all-pairs), per-task
     memory is bounded regardless of group size, and a hot group (skewed
     LSH bucket) simply gets a larger ``nb`` instead of one quadratic
     task.  The GEMM itself runs in row strips so the similarity matrix
-    never materializes beyond ``strip x block_rows`` doubles.
+    never materializes beyond ``strip x _COSINE_BLOCK_ROWS`` doubles.
     """
     import numpy as np
     import pandas as pd
 
     sizes = assigned.groupBy("grp").agg(F.count(F.lit(1)).alias("__n"))
     nb = F.greatest(
-        F.lit(1), F.ceil(F.col("__n") / F.lit(block_rows))
+        F.lit(1), F.ceil(F.col("__n") / F.lit(_COSINE_BLOCK_ROWS))
     ).cast("int")
     a = (
         assigned.join(sizes, "grp")
@@ -1227,7 +1229,7 @@ def _blocked_cosine_candidates(
         .select("grp", "__bi", "__bj", "__sub", "id", "vec")
     )
 
-    strip = 512  # rows per GEMM strip: 512 x block_rows x 8 B ~ 64 MB
+    strip = 512  # rows per GEMM strip: 512 x _COSINE_BLOCK_ROWS x 8 B ~ 64 MB
 
     def _norm_matrix(series) -> "np.ndarray":
         m = np.asarray([np.asarray(v, dtype=np.float64) for v in series])
@@ -1332,8 +1334,6 @@ def embedding_cosine_pairs(
     mode: str = "auto",
     num_planes: Optional[int] = None,
     n_probe: int = 3,
-    block_rows: int = 16384,
-    exact_max_rows: int = EMBEDDING_PAIRS_EXACT_MAX_ROWS,
     dim: Optional[int] = None,
     num_tables: Optional[int] = None,
 ) -> DataFrame:
@@ -1349,7 +1349,8 @@ def embedding_cosine_pairs(
        (:func:`~bdq_spark.operators.similarity.lsh_probe_buckets`), so
        only bucket-sharing pairs are compared (recall < 1, rising with
        ``n_probe`` / falling with ``num_planes``).  ``mode="auto"``
-       counts the corpus and picks exact up to ``exact_max_rows``, lsh
+       counts the corpus and picks exact up to
+       :data:`EMBEDDING_PAIRS_EXACT_MAX_ROWS`, lsh
        beyond.  ``num_planes=None`` (the default) sizes the plane
        count ADAPTIVELY from the corpus count so bucket occupancy
        stays ~``LSH_TARGET_BUCKET_ROWS`` assignments however large the
@@ -1370,8 +1371,8 @@ def embedding_cosine_pairs(
     2. **Candidates:** per group, a sub-blocked executor-side BLAS GEMM
        (:func:`_blocked_cosine_candidates`) emits pairs above
        ``threshold - margin``.  Per-task memory is capped at ~2x
-       ``block_rows`` vectors however large the group is, and hot LSH
-       buckets are split instead of becoming one quadratic task.
+       ``_COSINE_BLOCK_ROWS`` vectors however large the group is, and
+       hot LSH buckets are split instead of becoming one quadratic task.
     3. **Verify (exact, deterministic):** survivors re-join their
        vectors and are re-scored with the sequential double-precision
        :func:`~bdq_spark.operators.similarity.cosine_similarity`
@@ -1394,7 +1395,7 @@ def embedding_cosine_pairs(
     n_rows = None
     if mode == "auto":
         n_rows = base.count()
-        mode = "exact" if n_rows <= exact_max_rows else "lsh"
+        mode = "exact" if n_rows <= EMBEDDING_PAIRS_EXACT_MAX_ROWS else "lsh"
 
     if mode == "exact":
         assigned = base.withColumn("grp", F.lit(0))
@@ -1420,9 +1421,7 @@ def embedding_cosine_pairs(
         ).withColumnRenamed("bucket", "grp")
 
     margin = 1e-6
-    cand = _blocked_cosine_candidates(
-        assigned, threshold, margin, block_rows, id_type
-    )
+    cand = _blocked_cosine_candidates(assigned, threshold, margin, id_type)
     if mode == "lsh":
         # the same pair can surface from several shared probe buckets
         cand = cand.dropDuplicates(["id_a", "id_b"])

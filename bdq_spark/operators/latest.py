@@ -49,40 +49,14 @@ def get_latest_records(
     df: DataFrame,
     primary_key_columns: List[str],
     order_by_columns: List[str],
-    strategy: str = "window",
 ) -> DataFrame:
     """Keep the newest row per primary key; ties broken arbitrarily.
 
-    ``strategy="window"`` (default, reference parity,
-    `/root/reference/bdq/dataframe.py:150-157`): ``row_number() == 1``
-    over the shared descending window.  For deterministic results on tied
-    order columns, include a tiebreaker column in ``order_by_columns``.
-
-    ``strategy="aggregate"`` (the skew path): ``max(struct(order_cols))``
-    per key + an equi-join back.  Unlike a window — which must co-locate
-    every version of a hot key in one task — the max is PARTIALLY
-    aggregated map-side, so a key with 100M versions costs one row per
-    input partition in the shuffle.  Semantics differ on ties: all rows
-    sharing the maximal order tuple are kept (dense-rank semantics), so
-    make the order tuple unique (add a tiebreaker) for exact parity.
-    Order columns should be non-null under this strategy.
+    ``row_number() == 1`` over the shared descending window (parity with
+    the reference bdq's ``bdq/dataframe.py:150-157``).  For deterministic
+    results on tied order columns, include a tiebreaker column in
+    ``order_by_columns``.
     """
-    if strategy == "aggregate":
-        ord_struct = F.struct(*[F.col(c) for c in order_by_columns])
-        latest = df.groupBy(*primary_key_columns).agg(
-            F.max(ord_struct).alias("__latest_ord")
-        )
-        out = (
-            df.withColumn("__ord", ord_struct)
-            .join(latest, primary_key_columns)
-            .filter(F.col("__ord").eqNullSafe(F.col("__latest_ord")))
-            .drop("__ord", "__latest_ord")
-        )
-        # restore input column order (the USING join moves keys first) and
-        # collapse carbon-copy duplicate rows that all match the max tuple
-        return out.select(*df.columns).distinct()
-    if strategy != "window":
-        raise ValueError(f"unknown strategy: {strategy!r} (window|aggregate)")
     w = get_latest_records_window(primary_key_columns, order_by_columns)
     return (
         df.withColumn("__row_number", F.row_number().over(w))
@@ -95,7 +69,6 @@ def get_latest_records_with_pk_confict_detection_flag(
     df: DataFrame,
     primary_key_columns: List[str],
     order_by_columns: List[str],
-    strategy: str = "window",
 ) -> DataFrame:
     """Latest records keeping *all* rows tied at the newest version, each
     flagged ``__has_pk_conflict`` when the tie is a genuine conflict.
@@ -110,34 +83,7 @@ def get_latest_records_with_pk_confict_detection_flag(
     3. a PK is conflicted iff any surviving row has ``row_number != 1``
        (i.e. >1 distinct row ties at the newest order value);
     4. every kept row gets a boolean ``__has_pk_conflict``.
-
-    ``strategy="aggregate"`` (skew path, same semantics): the survivors
-    are found via a partially-aggregated ``max(struct(order_cols))`` +
-    join-back instead of a window — a hot key contributes one row per
-    input partition to the shuffle rather than forcing all its versions
-    into a single window task.  The conflict flag is a count over the
-    already-reduced survivor set (ties only), so no skew remains when it
-    is computed.
     """
-    if strategy == "aggregate":
-        deduped = df.distinct()
-        ord_struct = F.struct(*[F.col(c) for c in order_by_columns])
-        latest = deduped.groupBy(*primary_key_columns).agg(
-            F.max(ord_struct).alias("__latest_ord")
-        )
-        kept = (
-            deduped.withColumn("__ord", ord_struct)
-            .join(latest, primary_key_columns)
-            .filter(F.col("__ord").eqNullSafe(F.col("__latest_ord")))
-            .drop("__ord", "__latest_ord")
-            .select(*df.columns)
-        )
-        tie_count = F.count(F.lit(1)).over(
-            Window.partitionBy(*primary_key_columns)
-        )
-        return kept.withColumn("__has_pk_conflict", tie_count > 1)
-    if strategy != "window":
-        raise ValueError(f"unknown strategy: {strategy!r} (window|aggregate)")
     w = get_latest_records_window(primary_key_columns, order_by_columns)
 
     ranked = (

@@ -16,7 +16,6 @@ from bdq_spark.functions import text as TXT
 
 __all__ = [
     "profile_documents",
-    "detect_language",
     "filter_by_quality",
     "repetition_stats",
     "unigram_logprob_score",
@@ -198,11 +197,6 @@ def gopher_quality(
         & (F.col("frac_alpha_words") >= 0.8)
         & (F.col("n_stopwords") >= 2),
     )
-
-
-def detect_language(df: DataFrame, text_column: str = "text") -> DataFrame:
-    """Append just the predicted language column (``lang_pred``)."""
-    return df.withColumn("lang_pred", TXT.language_id(F.col(text_column)))
 
 
 def filter_by_quality(

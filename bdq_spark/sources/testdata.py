@@ -22,6 +22,8 @@ from typing import Dict
 
 from pyspark.sql import DataFrame, SparkSession
 
+from bdq_spark.session import private_session, rebind
+
 __all__ = ["TABLES", "load_table", "load_tables", "register_views"]
 
 #: Tables the driver generates at every scale factor (TESTDATA.md).
@@ -114,8 +116,13 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     except Exception:
         pass
     # retry with nanos-as-long for TIMESTAMP(NANOS) files (events.parquet)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(path)
+    # on a private clone, so the caller's conf is never set.  The file
+    # relation keeps the clone's conf, so the scan still reads the
+    # nanos as longs after the frame is rebound to the caller.
+    nanos = private_session(
+        spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}
+    )
+    return rebind(nanos.read.parquet(path), spark)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:

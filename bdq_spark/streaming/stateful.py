@@ -45,12 +45,37 @@ def _fold(rows_n: int, rows_total: float, rows_max: float, state):
     return n, total, mx
 
 
+def _apply_per_key_bucket(
+    df: DataFrame, key_column: str, one_shot, schema: str
+) -> DataFrame:
+    """The batch path of the three operators.  Grouping by the raw key
+    called the UDF once per key: tiny pandas frames whose per-call
+    machinery (Arrow slice, sort, copy) dwarfed the fold.  Instead,
+    ``one_shot`` runs once per DETERMINISTIC hash bucket of the key,
+    sized from the row count (~100k rows per bucket, floored at
+    ``defaultParallelism`` for cluster width: data-derived, not a
+    local-mode constant), and handles ALL keys of a bucket in one
+    pandas pass.  Each operator's result is per-key, so bucketing
+    cannot change a value; ``one_shot`` keeps Spark's null-key group
+    with ``groupby(dropna=False)``.  The sizing runs one ``count()``
+    over ``df``."""
+    n_buckets = max(
+        df.sparkSession.sparkContext.defaultParallelism,
+        -(-df.count() // 100_000),
+    )
+    bucket = F.pmod(F.xxhash64(F.col(key_column)), F.lit(n_buckets))
+    return (
+        df.withColumn("__bucket", bucket)
+        .groupBy("__bucket")
+        .applyInPandas(one_shot, schema=schema)
+    )
+
+
 def running_counter(
     df: DataFrame,
     key_column: str = "user_id",
     value_column: str = "value",
     timeout: str = "NoTimeout",
-    n_buckets: "int | None" = None,
 ) -> DataFrame:
     """Per-key running (count, sum, max) maintained across micro-batches.
 
@@ -97,25 +122,11 @@ def running_counter(
             )
         )
 
-    # BATCH path (the same shape running_zscore/sessionize use):
-    # grouping by the raw key called the UDF once per key (~tiny
-    # frames whose Arrow/call machinery dwarfed the three
-    # aggregates).  Group by a
-    # DETERMINISTIC hash bucket sized from the row count instead
-    # (~100k rows/bucket, floored at defaultParallelism — data-derived,
-    # not a local-mode constant) and aggregate ALL keys of a bucket in
-    # one pandas groupby pass.  count/max are order-free; the float
-    # total's last-ulp accumulation order was never deterministic under
-    # the per-key path either (post-shuffle row order), and every
-    # declared consumer rounds it over exact fixed-point inputs.  Null
-    # keys keep Spark's null-group semantics via dropna=False.
-    if n_buckets is None:
-        n_rows = df.count()
-        n_buckets = max(
-            df.sparkSession.sparkContext.defaultParallelism,
-            -(-n_rows // 100_000),
-        )
-
+    # BATCH path (:func:`_apply_per_key_bucket`): count/max are
+    # order-free; the float total's last-ulp accumulation order was
+    # never deterministic under the per-key path either (post-shuffle
+    # row order), and every declared consumer rounds it over exact
+    # fixed-point inputs.
     def one_shot(pdf: pd.DataFrame) -> pd.DataFrame:
         vals = pdf[value_column].astype(float)
         agg = (
@@ -135,12 +146,7 @@ def running_counter(
             }
         )
 
-    bucket = F.pmod(F.xxhash64(F.col(key_column)), F.lit(n_buckets))
-    return (
-        df.withColumn("__bucket", bucket)
-        .groupBy("__bucket")
-        .applyInPandas(one_shot, schema=output_schema)
-    )
+    return _apply_per_key_bucket(df, key_column, one_shot, output_schema)
 
 
 _ZSCORE_STATE = "n bigint, s bigint, q bigint"
@@ -242,7 +248,6 @@ def running_zscore(
     value_column: str = "value",
     order_columns: List[str] = None,
     scale: int = 100,
-    n_buckets: "int | None" = None,
 ) -> DataFrame:
     """Per-key streaming anomaly score: each event's z-score against the
     statistics of all PRIOR events of the same key — the standard
@@ -309,29 +314,10 @@ def running_zscore(
             )
         )
 
-    # BATCH path (few large pandas calls, not many tiny ones): grouping
-    # by the raw key called the UDF once per key — ~67-row pandas
-    # frames whose per-call machinery (Arrow slice, sort, copy)
-    # dwarfed the fold.  Instead,
-    # group by a DETERMINISTIC hash bucket sized from the row count
-    # (~100k rows per bucket, floored at defaultParallelism buckets for
-    # cluster width — data-derived, not a local-mode constant) and fold
-    # ALL keys of a bucket in one vectorized pass: pandas groupby prefix
-    # sums over exact int64 (order-independent by design, so bucketing
-    # cannot change any value; per-key results are bit-identical and
-    # the oracle hash is order-insensitive).  Null keys survive via
-    # dropna=False — Spark's groupBy keeps a null-key group, so the
-    # bucketed twin must too.
-    # ``n_buckets``: pass explicitly when the input is an expensive
-    # derived frame — the default sizing runs one count() over it.
+    # BATCH path (:func:`_apply_per_key_bucket`): one vectorized fold
+    # per bucket, pandas groupby prefix sums over exact int64, so
+    # per-key results are bit-identical to the streaming fold.
     import numpy as np
-
-    if n_buckets is None:
-        n_rows = df.count()
-        n_buckets = max(
-            df.sparkSession.sparkContext.defaultParallelism,
-            -(-n_rows // 100_000),
-        )
 
     def one_shot(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(
@@ -368,12 +354,7 @@ def running_zscore(
         out["zscore"] = pd.array(zs, dtype="Float64")
         return out[out_cols]
 
-    bucket = F.pmod(F.xxhash64(F.col(key_column)), F.lit(n_buckets))
-    return (
-        df.withColumn("__bucket", bucket)
-        .groupBy("__bucket")
-        .applyInPandas(one_shot, schema=output_schema)
-    )
+    return _apply_per_key_bucket(df, key_column, one_shot, output_schema)
 
 
 _SESSION_STATE = "start_ms bigint, last_ms bigint, n bigint"
@@ -423,7 +404,6 @@ def sessionize(
     ts_column: str = "ts",
     gap: str = "1 hour",
     watermark: str = "0 seconds",
-    n_buckets: "int | None" = None,
 ) -> DataFrame:
     """Custom session machine over ``applyInPandasWithState`` with
     EVENT-TIME TIMEOUT — the arbitrary-state path Spark's native
@@ -527,28 +507,9 @@ def sessionize(
             )
         )
 
-    # BATCH path (few large pandas calls, not many tiny ones): grouping
-    # by the raw key called the splitter once per key — tiny pandas
-    # frames whose per-call machinery (Arrow slice, datetime coercion,
-    # frame build)
-    # dwarfed the fold, the same shape running_zscore had.  Group by a
-    # DETERMINISTIC hash bucket sized from the row count instead
-    # (~100k rows per bucket, floored at defaultParallelism — data-
-    # derived, not a local-mode constant) and split ALL keys of a
-    # bucket in one vectorized gaps-and-islands pass.  Sessionization
-    # is per-key order-dependent only, so bucketing cannot change any
-    # session; null keys keep Spark's null-group semantics via
-    # groupby(dropna=False).  ``n_buckets``: pass explicitly when the
-    # input is an expensive derived frame — the default sizing runs one
-    # count() over it.
+    # BATCH path (:func:`_apply_per_key_bucket`): one vectorized
+    # gaps-and-islands pass per bucket.
     import numpy as np
-
-    if n_buckets is None:
-        n_rows = df.count()
-        n_buckets = max(
-            df.sparkSession.sparkContext.defaultParallelism,
-            -(-n_rows // 100_000),
-        )
 
     def one_shot(pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(pdf):
@@ -592,9 +553,4 @@ def sessionize(
             }
         )
 
-    bucket = F.pmod(F.xxhash64(F.col(key_column)), F.lit(n_buckets))
-    return (
-        df.withColumn("__bucket", bucket)
-        .groupBy("__bucket")
-        .applyInPandas(one_shot, schema=session_output)
-    )
+    return _apply_per_key_bucket(df, key_column, one_shot, session_output)

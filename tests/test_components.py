@@ -419,11 +419,12 @@ def _rand_graph(seed, n_nodes=60, n_edges=140):
     )
 
 
-def test_shuffle_path_parity_all_ops(spark):
-    """``broadcast_max_nodes=0`` forces the co-partitioned shuffle path;
+def test_shuffle_path_parity_all_ops(spark, monkeypatch):
+    """``GRAPH_BROADCAST_MAX_NODES = 0`` forces the co-partitioned shuffle path;
     results must match the broadcast path exactly (exact-integer ops)
     or to float round-off (pagerank), and the AQE conf must be restored
     afterward."""
+    from bdq_spark.operators import components
     from bdq_spark.operators.components import (
         connected_components,
         kcore,
@@ -438,7 +439,7 @@ def test_shuffle_path_parity_all_ops(spark):
 
     # three CC paths: the driver finish (input under the broadcast
     # threshold), the broadcast-regime loop (broadcasts off) and the
-    # co-partitioned loop (broadcast_max_nodes=0)
+    # co-partitioned loop (GRAPH_BROADCAST_MAX_NODES = 0)
     from bdq_spark.session import private_session
 
     no_broadcast = private_session(
@@ -446,7 +447,14 @@ def test_shuffle_path_parity_all_ops(spark):
     )
     cc_d = connected_components(pairs)
     cc_b = connected_components(no_broadcast.createDataFrame(edges, "id_a long, id_b long"))
-    cc_s = connected_components(pairs, broadcast_max_nodes=0)
+    prq_b = {
+        (r.id, r.rank_q) for r in pagerank_quantized(df).collect()
+    }
+    pr_b = {r.id: r.rank for r in pagerank(df).collect()}
+    kc_b = {(r.id, r.degree) for r in kcore(df, k=3).collect()}
+
+    monkeypatch.setattr(components, "GRAPH_BROADCAST_MAX_NODES", 0)
+    cc_s = connected_components(pairs)
     assert on_driver(cc_d) and not on_driver(cc_b) and not on_driver(cc_s)
     cc_d, cc_b, cc_s = (
         {(r.id, r.cluster_id, r.is_keeper) for r in cc.collect()}
@@ -454,29 +462,17 @@ def test_shuffle_path_parity_all_ops(spark):
     )
     assert cc_s == cc_b == cc_d
 
-    prq_b = {
-        (r.id, r.rank_q) for r in pagerank_quantized(df).collect()
-    }
     prq_s = {
-        (r.id, r.rank_q)
-        for r in pagerank_quantized(df, broadcast_max_nodes=0).collect()
+        (r.id, r.rank_q) for r in pagerank_quantized(df).collect()
     }
     assert prq_s == prq_b
 
-    pr_b = {r.id: r.rank for r in pagerank(df).collect()}
-    pr_s = {
-        r.id: r.rank
-        for r in pagerank(df, broadcast_max_nodes=0).collect()
-    }
+    pr_s = {r.id: r.rank for r in pagerank(df).collect()}
     assert set(pr_s) == set(pr_b)
     assert all(abs(pr_s[i] - pr_b[i]) < 1e-9 for i in pr_b)
 
     # kcore's broadcast-mirror round vs the shuffled-fallback round
-    kc_b = {(r.id, r.degree) for r in kcore(df, k=3).collect()}
-    kc_s = {
-        (r.id, r.degree)
-        for r in kcore(df, k=3, broadcast_max_nodes=0).collect()
-    }
+    kc_s = {(r.id, r.degree) for r in kcore(df, k=3).collect()}
     assert kc_s == kc_b
 
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
@@ -520,26 +516,27 @@ def test_keyed_checkpoint_elides_round_exchanges(spark):
     assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") != "-1"
 
 
-def test_aqe_disabled_restores_on_exception(spark):
+def test_aqe_disabled_restores_on_exception(spark, monkeypatch):
     """A graph operator that raises inside its AQE-off loop (here a
     convergence bound past the cutover: a 6-node path needs >1 round)
     leaves the caller's session with AQE on."""
     import pytest as _p
 
-    from bdq_spark.operators import connected_components
+    from bdq_spark.operators import components, connected_components
 
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "id_a long, id_b long"
     )
+    monkeypatch.setattr(components, "GRAPH_BROADCAST_MAX_NODES", 0)
     with _p.raises(RuntimeError, match="did not converge"):
-        connected_components(
-            pairs, max_iterations=1, broadcast_max_nodes=0
-        )
+        connected_components(pairs, max_iterations=1)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
-def test_loops_leave_caller_session_conf_untouched(spark, distributed):
+def test_loops_leave_caller_session_conf_untouched(
+    spark, distributed, monkeypatch
+):
     """The hand-scheduled loops (CC on both regimes, kcore, BPE) plan
     on a private session: a thread polling the CALLER's session while
     they run never sees AQE off or a pinned shuffle width, and a frame
@@ -549,6 +546,7 @@ def test_loops_leave_caller_session_conf_untouched(spark, distributed):
     so CC runs its planned loops rather than the driver finish."""
     import threading
 
+    from bdq_spark.operators import components
     from bdq_spark.operators.components import kcore
     from bdq_spark.operators.tokenizer import train_bpe
 
@@ -581,13 +579,11 @@ def test_loops_leave_caller_session_conf_untouched(spark, distributed):
     poller = threading.Thread(target=poll, daemon=True)
     poller.start()
     try:
-        outs = [
-            connected_components(pairs),
-            connected_components(pairs, broadcast_max_nodes=0),
-            kcore(edges, k=2),
-            kcore(edges, k=2, broadcast_max_nodes=0),
-            train_bpe(docs, n_merges=8)[1],
-        ]
+        outs = [connected_components(pairs), kcore(edges, k=2)]
+        with monkeypatch.context() as m:
+            m.setattr(components, "GRAPH_BROADCAST_MAX_NODES", 0)
+            outs += [connected_components(pairs), kcore(edges, k=2)]
+        outs.append(train_bpe(docs, n_merges=8)[1])
     finally:
         stop.set()
         poller.join(timeout=60)
@@ -595,10 +591,10 @@ def test_loops_leave_caller_session_conf_untouched(spark, distributed):
     assert seen == {expected}, seen
     assert adaptive == {True}
     assert all(o.sparkSession is spark for o in outs)
-    assert not on_driver(outs[0]) and not on_driver(outs[1])
+    assert not on_driver(outs[0]) and not on_driver(outs[2])
     # results compose with caller-session frames
     names = spark.createDataFrame([(1, "a"), (20, "b")], "id long, nm string")
-    assert outs[1].join(names, "id").count() == 2
+    assert outs[2].join(names, "id").count() == 2
 
 
 def test_concurrent_pipeline_step_stays_adaptive(distributed):
@@ -777,12 +773,13 @@ def test_small_graph_checkpoints_not_pinned_wide(spark, distributed):
     assert checkpoint_partitions(prq) < n_part
 
 
-def test_depin_small_edges_keeps_cutover_capable_graphs(spark):
+def test_depin_small_edges_keeps_cutover_capable_graphs(spark, monkeypatch):
     """_depin_small_edges must only coalesce when the graph PROVABLY
     cannot cross the node cutover; a cutover-capable edge relation keeps
     its keyed pin (partitioning reuse is the whole point there)."""
     from pyspark.sql import functions as F
 
+    from bdq_spark.operators import components
     from bdq_spark.operators.components import (
         _AQE_OFF,
         _depin_small_edges,
@@ -801,10 +798,7 @@ def test_depin_small_edges_keeps_cutover_capable_graphs(spark):
     )
     n_before = e.rdd.getNumPartitions()
     # tiny vs its cutover: coalesced below the pin
-    assert (
-        _depin_small_edges(e, broadcast_max_nodes=2_000_000)
-        .rdd.getNumPartitions()
-        < n_before
-    )
+    assert _depin_small_edges(e).rdd.getNumPartitions() < n_before
     # cutover-capable (2 * 2000 > 1000): pin kept, same object
-    assert _depin_small_edges(e, broadcast_max_nodes=1_000) is e
+    monkeypatch.setattr(components, "GRAPH_BROADCAST_MAX_NODES", 1_000)
+    assert _depin_small_edges(e) is e

@@ -29,7 +29,6 @@ def test_latest_records_empty(spark):
 
     e = spark.createDataFrame([], "k:int, ts:timestamp, v:string")
     assert get_latest_records(e, ["k"], ["ts"]).count() == 0
-    assert get_latest_records(e, ["k"], ["ts"], strategy="aggregate").count() == 0
     out = get_latest_records_with_pk_confict_detection_flag(e, ["k"], ["ts"])
     assert out.count() == 0
     assert out.columns == ["k", "ts", "v", "__has_pk_conflict"]

@@ -62,33 +62,3 @@ def test_conflict_flag_column_name(spark):
     got = get_latest_records_with_pk_confict_detection_flag(df, ["pk"], ["change_ts"])
     assert got.columns == ["pk", "change_ts", "attr", "__has_pk_conflict"]
 
-
-def test_latest_records_aggregate_strategy(spark):
-    from bdq_spark.operators import get_latest_records
-
-    df = _increment_df(spark)
-    # with a unique order tuple the two strategies agree exactly
-    w = get_latest_records(df, ["pk"], ["change_ts", "attr"]).collect()
-    a = get_latest_records(df, ["pk"], ["change_ts", "attr"], strategy="aggregate").collect()
-    assert sorted(map(tuple, w)) == sorted(map(tuple, a))
-
-    # on ties the aggregate strategy keeps all maximal rows (dense-rank)
-    tied = get_latest_records(df, ["pk"], ["change_ts"], strategy="aggregate")
-    by_pk = {}
-    for r in tied.collect():
-        by_pk.setdefault(r.pk, []).append(r.attr)
-    assert sorted(by_pk[3]) == ["3002#1", "3002#2"]
-
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown strategy"):
-        get_latest_records(df, ["pk"], ["change_ts"], strategy="nope")
-
-
-def test_conflict_flag_aggregate_strategy_matches_window(spark):
-    from bdq_spark.operators import get_latest_records_with_pk_confict_detection_flag as f
-
-    df = _increment_df(spark)
-    w = {tuple(r) for r in f(df, ["pk"], ["change_ts"]).collect()}
-    a = {tuple(r) for r in f(df, ["pk"], ["change_ts"], strategy="aggregate").collect()}
-    assert w == a

@@ -87,6 +87,42 @@ def test_load_table_events_requires_utc_session(spark):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def test_load_table_reads_nanos_events_without_touching_conf(spark, tmp_path):
+    """An events.parquet whose ``ts`` is TIMESTAMP(NANOS), which Spark 4
+    rejects on a plain read, loads as a timestamp truncated to micros,
+    and the caller's ``nanosAsLong`` conf stays as it was."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bdq_spark.sources import load_table
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    ns = [1_700_000_000_123_456_789, 1_700_000_360_000_000_999, None]
+    pq.write_table(
+        pa.table(
+            {"event_id": [1, 2, 3], "ts": pa.array(ns, pa.timestamp("ns"))}
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+        spark.read.parquet(str(tmp_path / "events.parquet")).collect()
+
+    df = load_table(spark, str(tmp_path), "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    got = dict(df.selectExpr("event_id", "unix_micros(ts)").collect())
+    assert got == {1: ns[0] // 1000, 2: ns[1] // 1000, 3: None}
+    df.createOrReplaceTempView("nanos_events")
+    try:
+        n = spark.sql(
+            "SELECT count(*) FROM nanos_events WHERE ts IS NOT NULL"
+        ).first()[0]
+    finally:
+        spark.catalog.dropTempView("nanos_events")
+    assert n == 2
+    assert spark.conf.get(key) == before
+
+
 def test_utc_equivalence_rejects_historical_offsets():
     """Zones that are zero TODAY but had a historical offset (Monrovia
     -00:44:30 until 1972, Reykjavik DST pre-1968) must fail the guard:

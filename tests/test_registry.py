@@ -98,7 +98,6 @@ def test_near_dup_pairs_entry_self_guards(spark):
     import pytest
 
     from bdq_spark.operators import dedup
-    import inspect
 
     # ADVICE r8: the guard bound IS the operator's auto-cutover
     # constant (one definition, imported) — not a duplicated literal
@@ -106,11 +105,6 @@ def test_near_dup_pairs_entry_self_guards(spark):
     assert (
         eq._NEAR_DUP_PAIRS_EXACT_MAX_ROWS
         is dedup.EMBEDDING_PAIRS_EXACT_MAX_ROWS
-    )
-    assert (
-        inspect.signature(dedup.embedding_cosine_pairs)
-        .parameters["exact_max_rows"].default
-        == dedup.EMBEDDING_PAIRS_EXACT_MAX_ROWS
     )
 
     bound = eq._NEAR_DUP_PAIRS_EXACT_MAX_ROWS

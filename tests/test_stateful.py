@@ -353,6 +353,66 @@ def test_running_zscore_batch_reference(spark):
     assert out[(2, 2)] == (2, None)
 
 
+def _bigint_zscores(values, scale=100):
+    """Pure-Python reference: each value's z-score against its key's
+    prior values, with the scaled sums kept as Python integers."""
+    n = s = q = 0
+    out = []
+    for v in values:
+        c = int(round(v * scale))
+        z = None
+        if n >= 2:
+            mean = float(s) / n
+            var = float(q) / n - mean * mean
+            if var > 0:
+                z = round((c - mean) / var**0.5, 6)
+        out.append((n, z))
+        n, s, q = n + 1, s + c, q + c * c
+    return out
+
+
+def test_running_zscore_int64_fallback_matches_bigint_reference(spark):
+    """Values near 3e7 at scale 100 give c^2 > 2^62, so both the batch
+    fold and the streaming fold must leave int64 for the bigint loop;
+    their scores equal the pure-Python bigint reference."""
+    import pandas as pd
+
+    from bdq_spark.streaming import running_zscore
+    from bdq_spark.streaming.stateful import _zscore_rows
+
+    big = [30_000_000.0 + 1234.56 * ((i * 7) % 11) for i in range(12)]
+    small = [10.0, 12.0, 11.0, 50.0]
+    rows = [(1, i, v) for i, v in enumerate(big)]
+    rows += [(2, i, v) for i, v in enumerate(small)]
+    ev = spark.createDataFrame(
+        rows, "user_id long, event_id long, value double"
+    ).withColumn(
+        "ts",
+        F.to_timestamp(F.lit("2024-01-01"))
+        + F.make_interval(secs=F.col("event_id")),
+    )
+    expected = {
+        (k, i): z
+        for k, vals in ((1, big), (2, small))
+        for i, z in enumerate(_bigint_zscores(vals))
+    }
+    batch = {
+        (r.user_id, r.event_id): (r.n_prior, r.zscore)
+        for r in running_zscore(ev, order_columns=["event_id"]).collect()
+    }
+    assert batch == expected
+
+    # the streaming fold over two micro-batches of key 1, state carried
+    pdf = pd.DataFrame({"value": big})
+    state, got = (0, 0, 0), []
+    for part in (pdf.iloc[:5], pdf.iloc[5:]):
+        scored, state = _zscore_rows(part, state, "value", 100)
+        got += list(zip(scored["n_prior"], scored["zscore"]))
+    got = [(int(n), None if pd.isna(z) else float(z)) for n, z in got]
+    assert got == _bigint_zscores(big)
+    assert state[2] == sum(int(round(v * 100)) ** 2 for v in big) > 2**63
+
+
 def test_running_zscore_streaming_state_across_batches(spark, tmp_path):
     """The (n, sum, sumsq) state must carry across micro-batches: an
     event in batch 2 is scored against batch 1's priors."""

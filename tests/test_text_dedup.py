@@ -649,10 +649,12 @@ def test_embedding_cosine_pairs(spark):
     assert not any(3 in k for k in pairs)
 
 
-def test_embedding_cosine_pairs_blocked_matches_single_block(spark):
-    """Forcing many sub-blocks (block_rows=2) must produce exactly the
+def test_embedding_cosine_pairs_blocked_matches_single_block(spark, monkeypatch):
+    """Forcing many sub-blocks (2 rows each) must produce exactly the
     same pairs as one block — the block grid covers every pair once."""
     import random
+
+    from bdq_spark.operators import dedup
 
     rng = random.Random(7)
     rows = [
@@ -663,10 +665,12 @@ def test_embedding_cosine_pairs_blocked_matches_single_block(spark):
     rows.append((101, [v * 1.001 + 1e-4 for v in rows[17][1]]))
     df = spark.createDataFrame(rows, "vec_id:long, embedding:array<float>")
 
+    monkeypatch.setattr(dedup, "_COSINE_BLOCK_ROWS", 1 << 20)
     one = {(r.id_a, r.id_b, r.cosine) for r in embedding_cosine_pairs(
-        df, threshold=0.9, mode="exact", block_rows=1 << 20).collect()}
+        df, threshold=0.9, mode="exact").collect()}
+    monkeypatch.setattr(dedup, "_COSINE_BLOCK_ROWS", 2)
     many = {(r.id_a, r.id_b, r.cosine) for r in embedding_cosine_pairs(
-        df, threshold=0.9, mode="exact", block_rows=2).collect()}
+        df, threshold=0.9, mode="exact").collect()}
     assert one == many
     assert any(a == 3 and b == 100 for a, b, _ in one)
     assert any(a == 17 and b == 101 for a, b, _ in one)
@@ -702,7 +706,10 @@ def test_embedding_cosine_pairs_lsh_recall(spark):
     assert len(lsh) / len(exact) >= 0.6      # recall floor at n_probe=3
 
 
-def test_embedding_cosine_pairs_string_ids(spark):
+def test_embedding_cosine_pairs_string_ids(spark, monkeypatch):
+    from bdq_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_COSINE_BLOCK_ROWS", 1)
     rows = [
         ("alpha", [1.0, 0.0]),
         ("beta", [1.0, 0.001]),
@@ -710,7 +717,7 @@ def test_embedding_cosine_pairs_string_ids(spark):
     ]
     df = spark.createDataFrame(rows, "doc:string, embedding:array<float>")
     pairs = {(r.id_a, r.id_b) for r in embedding_cosine_pairs(
-        df, id_column="doc", threshold=0.99, mode="exact", block_rows=1
+        df, id_column="doc", threshold=0.99, mode="exact"
     ).collect()}
     assert pairs == {("alpha", "beta")}
 

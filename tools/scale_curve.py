@@ -121,9 +121,10 @@ def _embedding_near_dup_pairs_lsh(spark, sf_dir):
     operator's 100 TB path FORCED ON (``mode="lsh"``) instead of letting
     ``mode="auto"`` pick exact at these row counts.  The registered entry
     keeps exact mode because its DuckDB oracle replays all pairs; at real
-    scale ``auto`` cuts over to this banded path at ``exact_max_rows``,
-    so THIS curve — not the registry entry's by-design-quadratic exact
-    curve — is the one that answers the 100 TB question."""
+    scale ``auto`` cuts over to this banded path at
+    ``EMBEDDING_PAIRS_EXACT_MAX_ROWS``, so THIS curve — not the registry
+    entry's by-design-quadratic exact curve — is the one that answers
+    the 100 TB question."""
     from bdq_spark.operators.dedup import embedding_cosine_pairs
     from bdq_spark.sources import load_table
 
