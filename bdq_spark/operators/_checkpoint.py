@@ -24,13 +24,16 @@ band keys, token streams); keep the default level for node-scale and
 per-round relations.
 
 One deliberate exception to the keep-node-scale-deserialized default:
-``components._keyed_checkpoint`` routes its node-scale relations (CC
-labels, PageRank nodes/ranks) through ``data_checkpoint`` too — that
-helper only runs PAST the 2M-node broadcast cutover, where the "node
-scale" relation exceeds 2M rows by definition and keeps growing with
-the graph, so capping its storage footprint wins over saving a
-per-round deserialize that is noise next to the edge-scan join it
-feeds (rationale restated at the call site).
+``components._keyed_checkpoint`` routes its node-scale relations
+through ``data_checkpoint`` too.  It runs for the CC node set of every
+graph the driver finish declines (``components._components_on_driver``:
+mostly a pair relation over the session's broadcast threshold or over
+1M pairs), and for the PageRank nodes and kcore adjacency past the
+2M-node broadcast cutover.  There the relation is past what the driver
+or one broadcast holds and keeps growing with the graph, so
+capping its storage footprint wins over saving a per-round deserialize
+that is noise next to the edge-scan join it feeds (rationale restated
+at the call site).
 """
 
 from __future__ import annotations

@@ -15,8 +15,10 @@ MapReduce and Beyond", SoCC'14) that wins on pathological long chains.
 
 Scale mechanics, per round:
 
-- one shuffle: edges join labels on src, then min-aggregate per dst,
-  merged with the current label (all partial-combinable);
+- one shuffle: edges join labels on src exchange-free (both sides are
+  hash-partitioned on the join key at setup), then the min-aggregate
+  per dst is the round's one exchange, and the merge with the current
+  label joins co-partitioned sides again;
 - a LAZY ``localCheckpoint`` after every round — without checkpointing
   the plan DOUBLES per iteration and the job dies of lineage, the
   classic Spark iterative-algorithm failure mode;
@@ -50,15 +52,17 @@ from bdq_spark.session import collect_for_driver, private_session, rebind
 __all__ = ["connected_components", "apply_dedup_clusters", "pagerank", "pagerank_quantized", "triangle_counts", "kcore"]
 
 
-# node-table size under which iterative graph ops broadcast the label/
-# rank relation into their per-round joins (2 longs/row -> ~32 MB at
-# the bound) instead of shuffling both sides: near-dup graphs are
-# proportional to the DUPLICATE population, so they sit far below this
-# in practice, while a genuinely huge graph takes the CO-PARTITIONED
-# shuffle path: every static relation is hash-partitioned by its join
-# key once at setup, the iterated relation keeps that partitioning
-# through its per-round checkpoint, and each round's only exchange is
-# the keyed aggregate — the edge relation is never re-shuffled.
+# node-table size under which PageRank and kcore broadcast the rank/
+# deletion relation into their per-round joins (2 longs/row -> ~32 MB
+# at the bound) instead of shuffling both sides; connected components
+# finishes at most half as many pairs on the driver.  Near-dup graphs
+# are proportional to the DUPLICATE population, so they sit far below
+# this in practice, while a genuinely huge graph takes the
+# CO-PARTITIONED shuffle path: every static relation is hash-partitioned
+# by its join key once at setup, the iterated relation keeps that
+# partitioning through its per-round checkpoint, and each round's only
+# exchange is the keyed aggregate — the edge relation is never
+# re-shuffled.
 GRAPH_BROADCAST_MAX_NODES = 2_000_000
 
 
@@ -97,17 +101,11 @@ _AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
 
 
 # per-partition row target for the ITERATION-LOOP shuffles of the
-# broadcast-regime graph rounds: node-scale aggregates whose row count
-# is KNOWN (counted at setup), so the loop pins exactly
-# ceil(n_nodes / this) shuffle partitions — scale-adaptive by data, not
-# a constant for either local mode or a cluster
+# CC rounds and the kcore peel: aggregates whose input row count is
+# KNOWN (counted at setup), so the loop pins exactly ceil(n_rows / this)
+# shuffle partitions — scale-adaptive by data, not a constant for
+# either local mode or a cluster
 _ROUND_ROWS_PER_PARTITION = 50_000
-
-# largest round gap between convergence-count checks in the CC
-# broadcast-regime loop: checks run at rounds
-# 1, 2, 4, 8, 12, 16, ... — geometric ramp-up capped so a mid-depth
-# graph never pays more overshoot rounds than the check jobs it saves
-_MAX_CHECK_GAP = 4
 
 
 def _shuffle_partitions(spark) -> int:
@@ -123,14 +121,15 @@ def _shuffle_partitions(spark) -> int:
 
 
 def _round_loop_confs(spark, n_rows: int) -> dict:
-    """Conf of the private session a broadcast-regime round loop runs
-    in: AQE off and the shuffle width pinned to the data,
+    """Conf of the private session the CC round loop and the small-graph
+    kcore peel run in: AQE off and the shuffle width pinned to the data,
     ``ceil(n_rows / _ROUND_ROWS_PER_PARTITION)`` capped at the session's
     count.  Every loop query is one aggregate whose input row count is
     KNOWN (counted at setup), so AQE's only per-round contribution was
     re-deriving that width as an extra scheduled query-stage job, and
     the rounds are a serial driver-bound chain (measured at sf0.1: CC
-    4 -> 2 jobs and ~0.5 -> ~0.25 s per round; results bit-identical)."""
+    4 -> 2 jobs and ~0.5 -> ~0.25 s per round; results bit-identical).
+    With AQE off, a checkpoint planned here keeps its partitioning."""
     n_part = max(
         1, min(_shuffle_partitions(spark), -(-n_rows // _ROUND_ROWS_PER_PARTITION))
     )
@@ -146,29 +145,16 @@ def _keyed_checkpoint(df: DataFrame, key: str) -> DataFrame:
 
     Storage level: SERIALIZED (:func:`data_checkpoint`) even for the
     node-scale relations routed here, deliberately diverging from
-    ``_checkpoint.py``'s keep-node-scale-deserialized default — this
-    helper only runs PAST the broadcast cutover, where "node-scale"
-    means >2M rows by definition and grows with the graph, so the ~4x
-    deserialized object overhead is exactly the storage-memory pressure
-    the serialized level exists to cap; the per-round deserialize of a
-    2-long-row relation is noise next to the round's edge-scan join it
-    feeds."""
+    ``_checkpoint.py``'s keep-node-scale-deserialized default.  Callers:
+    the CC labels of every graph above the driver cap (the driver finish
+    takes the rest), and the PageRank nodes and kcore adjacency past the
+    ``GRAPH_BROADCAST_MAX_NODES`` cutover.  There "node-scale" grows
+    with the graph, so the ~4x deserialized object overhead is exactly
+    the storage-memory pressure the serialized level exists to cap; the
+    per-round deserialize of a 2-long-row relation is noise next to the
+    round's edge-scan join it feeds."""
     spark = df.sparkSession
     return data_checkpoint(df.repartition(_shuffle_partitions(spark), key))
-
-
-# fused-setup regime floor, in INPUT PAIR rows: a pair relation at or
-# below half the node cutover cannot produce a past-cutover graph
-# (n_nodes <= 2 * n_pairs), so its edge checkpoint's hash(a)
-# partitioning would never be reused — the rounds broadcast the node
-# side — and pinning a tiny edge relation at the session shuffle
-# partition count just schedules that many near-empty tasks in EVERY
-# per-round job (measured at sf0.1: embedding_dedup_clusters 5.6 s with
-# the AQE-coalesced setup vs 12.1 s pinned at 32 partitions).  Small
-# graphs keep the AQE-planned symmetrize-distinct; only graphs that can
-# cross the cutover pay the fused co-partitioned setup.
-def _may_exceed_cutover(n_pairs: int) -> bool:
-    return 2 * n_pairs > GRAPH_BROADCAST_MAX_NODES
 
 
 # de-pin coalesce target: ~4 MiB of serialized 16-byte edge rows per
@@ -185,17 +171,19 @@ def _depin_small_edges(e: DataFrame) -> DataFrame:
     the second edge materialization the x100 sweep removed).  When the
     count — one cheap job over the just-written checkpoint blocks —
     then shows a graph that CANNOT cross the node cutover
-    (``n_nodes <= 2 * n_edges``), the captured hash(src) partitioning
+    (``n_nodes <= 2 * n_edges <= GRAPH_BROADCAST_MAX_NODES``), the
+    captured hash(src) partitioning
     will never be reused (the rounds broadcast the node side), so a
     tiny relation pinned at the shuffle partition count pays that many
-    near-empty tasks in every per-round job — the CC bench cliff
-    (5.6 s -> 12.1 s at sf0.1).  Re-checkpoint coalesced to the data's
+    near-empty tasks in every per-round job — the bench cliff measured
+    on CC's old setup (embedding_dedup_clusters 5.6 s -> 12.1 s at
+    sf0.1).  Re-checkpoint coalesced to the data's
     natural width; a cutover-capable graph keeps its keyed pin
     untouched."""
     n_edges = e.count()
     n_cur = e.rdd.getNumPartitions()
     want = max(1, min(n_cur, -(-n_edges // _EDGE_ROWS_PER_PARTITION)))
-    if want < n_cur and not _may_exceed_cutover(n_edges):
+    if want < n_cur and 2 * n_edges <= GRAPH_BROADCAST_MAX_NODES:
         return data_checkpoint(e.coalesce(want))
     return e
 
@@ -210,7 +198,7 @@ def _not_converged(max_iterations: int) -> RuntimeError:
 def _components_on_driver(
     directed: DataFrame, max_iterations: int
 ) -> Optional[DataFrame]:
-    """The broadcast-regime rounds finished on the driver, or ``None``
+    """The distributed loop's rounds finished on the driver, or ``None``
     when :func:`~bdq_spark.session.collect_for_driver` declines the
     checkpointed ``(a, b)`` pair relation, when it could exceed
     ``GRAPH_BROADCAST_MAX_NODES`` nodes, or when its two id types differ.
@@ -245,10 +233,13 @@ def _components_on_driver(
         labels = new
     else:
         raise _not_converged(max_iterations)
+    # the loop's schema: its label and keeper expressions are nullable
+    # exactly when the ids are
+    nullable = fa.nullable or fb.nullable
     schema = StructType([
-        StructField("id", fa.dataType, fa.nullable or fb.nullable),
-        StructField("cluster_id", fa.dataType),
-        StructField("is_keeper", BooleanType()),
+        StructField("id", fa.dataType, nullable),
+        StructField("cluster_id", fa.dataType, nullable),
+        StructField("is_keeper", BooleanType(), nullable),
     ])
     out = pa.table({
         "id": ids,
@@ -277,24 +268,19 @@ def connected_components(
     ``2 * n_pairs <= GRAPH_BROADCAST_MAX_NODES``, it is collected once
     and the rounds run on the driver (:func:`_components_on_driver`);
     the result is a ``LocalRelation`` with exact size statistics.
-    Otherwise, when the node table is small (at most
-    ``GRAPH_BROADCAST_MAX_NODES``, counted once after the input
-    checkpoint), each round is ONE FUSED min-aggregate: the broadcast
-    label join's neighbor contributions union the labels' own rows and
-    a single keyed shuffle takes the min per id (``_round_broadcast``
-    — provably equal to the classic
-    neighbor-min + merge-join round, with one broadcast build instead
-    of two and no second join).  Near-dup graphs are sized by the
-    duplicate population, not the corpus, so this is the common case.
-    A larger graph takes the CO-PARTITIONED shuffle path: edges are
-    hash-partitioned by source and labels by id once at setup (planned
-    without AQE, so the checkpoints keep their partitioning), the
-    per-round label relation inherits hash(id) through its lazy
-    checkpoint (the merge join's left side), and each round again costs
-    exactly one exchange — the min-aggregate; the edge relation is
-    shuffled once at setup, never per round.  Values are exact integers
-    on either path, so the result is identical.  The AQE-off sections
-    plan on a private session; the caller's conf is never touched.
+    Otherwise the rounds run distributed, CO-PARTITIONED: the
+    symmetrized edges are hash-partitioned by source and the labels by
+    id once at setup, planned on a private session with AQE off so the
+    checkpoints keep their partitioning (:func:`_round_loop_confs`).
+    The shuffle width is pinned from the pair count,
+    ``min(session width, ceil(2 * n_pairs / _ROUND_ROWS_PER_PARTITION))``,
+    so a small graph is not spread over near-empty tasks and a large one
+    gets the session's width.  The per-round label relation inherits
+    hash(id) through its lazy checkpoint (the merge join's left side),
+    and each round costs exactly one exchange — the min-aggregate; the
+    edge relation is shuffled once at setup, never per round.  Values
+    are exact integers on either path, so the result is identical; the
+    caller's conf is never touched.
     """
     # checkpoint the INPUT first: the union below reads the pair relation
     # twice (both edge directions), and the upstream pair producers
@@ -307,96 +293,44 @@ def connected_components(
     local = _components_on_driver(directed, max_iterations)
     if local is not None:
         return local
-    both = directed.union(
-        directed.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    # distributed path only: the count is one cheap job over the
-    # checkpoint blocks just materialized; it picks the setup regime
-    # BEFORE the symmetrize shuffle runs, so small graphs never get
-    # pinned wide
+    # one cheap job over the checkpoint blocks just materialized: it
+    # sizes the loop's shuffle width before the symmetrize shuffle runs
     n_pairs = directed.count()
-    if _may_exceed_cutover(n_pairs):
-        # ONE symmetrize-dedup shuffle, captured with hash(a) (AQE off):
-        # the per-partition dropDuplicates rides the repartition
-        # exchange (hash(a) satisfies the (a, b) clustering), and past
-        # the cutover the rounds reuse this partitioning without a
-        # second edge materialization — see :func:`pagerank`
-        edges = rebind(
-            data_checkpoint(
-                rebind(both, private_session(spark, _AQE_OFF))
-                .repartition(_shuffle_partitions(spark), "a")
-                .dropDuplicates()
-            ),
-            spark,
-        )
-    else:
-        # small graph (cannot cross the node cutover): the rounds
-        # broadcast the label side, so edge partitioning is never
-        # reused — let AQE plan the symmetrize-dedup and COALESCE the
-        # checkpoint to the data's natural width instead of pinning a
-        # sub-partition-size relation at the session shuffle count
-        # (see :func:`_may_exceed_cutover` for the measured cliff)
-        edges = data_checkpoint(both.distinct())
-    labels = (
-        edges.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint(eager=True)
+    loop = private_session(spark, _round_loop_confs(spark, 2 * n_pairs))
+    d = rebind(directed, loop)
+    # ONE symmetrize-dedup shuffle, captured with hash(a): the
+    # per-partition dropDuplicates rides the repartition exchange
+    # (hash(a) satisfies the (a, b) clustering)
+    edges = data_checkpoint(
+        d.union(d.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .repartition(_shuffle_partitions(loop), "a")
+        .dropDuplicates()
     )
-    n_nodes = labels.count()
-    broadcast_regime = n_nodes <= GRAPH_BROADCAST_MAX_NODES
-
-    def _round_broadcast(edges: DataFrame, labels: DataFrame) -> DataFrame:
-        """One FUSED propagation round for the broadcast regime: the
-        neighbor contributions ``(b, comp_of_a)`` UNION the nodes' own
-        ``(id, comp)`` rows feed a single min-aggregate keyed by id —
-        ``min(own, neighbor mins)`` in one shuffle with NO second join
-        (the classic round's neighbor-min agg + label merge join cost
-        two broadcast builds + a join per round).  The old label rides
-        along as ``__own`` (exactly one non-null per group — labels
-        hold each id once), so the changed flag is computed in the
-        same aggregate.  Result provably identical: min over {own} ∪
-        {neighbor comps} = least(own, coalesce(min(neighbors), own)).
-
-        (A Shiloach-Vishkin pointer-jumping variant was measured and
-        REJECTED in r13: on the diameter-17 cosine-0.4 graph it cut
-        rounds 17 -> 11 but cost a broadcast self-join per round —
-        6 jobs/round vs 4 and a higher per-round wall, net slower.
-        One jump per round only shortcuts one chase level; the log-
-        diameter bound needs per-round compression to a fixpoint,
-        which costs more joins than the rounds it saves here.)"""
-        contrib = edges.join(
-            F.broadcast(labels), edges.a == labels.id
-        ).select(F.col("b").alias("id"), "comp", F.lit(None).cast(
-            labels.schema["comp"].dataType
-        ).alias("__own"))
-        own = labels.select("id", "comp", F.col("comp").alias("__own"))
-        return (
-            own.unionByName(contrib)
-            .groupBy("id")
-            .agg(
-                F.min("comp").alias("comp"),
-                F.min("__own").alias("__own"),
-            )
-            .select(
-                "id",
-                "comp",
-                (F.col("comp") < F.col("__own")).alias("__changed"),
-            )
-        )
-
-    def _round_copartitioned(edges: DataFrame, labels: DataFrame) -> DataFrame:
-        # past the cutover the classic two-step round is load-bearing:
+    # the initial label is added AFTER the checkpoint: a checkpoint of
+    # ``(id, id AS comp)`` records only the first of its two equal
+    # partitionings, hash(comp), and the first round re-shuffles the
+    # labels on both of its joins
+    labels = _keyed_checkpoint(
+        edges.select(F.col("a").alias("id")).distinct(), "id"
+    ).withColumn("comp", F.col("id"))
+    # (A Shiloach-Vishkin pointer-jumping round was measured and
+    # REJECTED in r13: on the diameter-17 cosine-0.4 graph it cut rounds
+    # 17 -> 11 but cost a self-join per round, net slower.  One jump per
+    # round only shortcuts one chase level.)
+    for _ in range(max_iterations):
         # the neighbor-min agg exchanges only the (partial-aggregated)
-        # contributions and the label merge join is exchange-free on
-        # the co-partitioned sides — a fused union-agg would re-shuffle
-        # the node-scale label relation every round
+        # contributions, and the label merge join is exchange-free on
+        # the co-partitioned sides
         neighbor_min = (
             edges.join(labels.hint("shuffle_hash"), edges.a == labels.id)
             .groupBy(F.col("b").alias("id"))
             .agg(F.min("comp").alias("__n_comp"))
         )
-        return labels.join(
+        # LAZY checkpoint: the changed-count below is the round's one
+        # and only action — it materializes and stores the checkpoint
+        # blocks as a side effect (an eager checkpoint + separate count
+        # was two full jobs)
+        new_labels = labels.join(
             neighbor_min.hint("shuffle_hash"), "id", "left"
         ).select(
             "id",
@@ -405,79 +339,19 @@ def connected_components(
                 F.coalesce(F.col("__n_comp"), F.col("comp")),
             ).alias("comp"),
             (F.col("__n_comp") < F.col("comp")).alias("__changed"),
-        )
-
-    def _done(labels: DataFrame) -> DataFrame:
-        return labels.select(
-            "id",
-            F.col("comp").alias("cluster_id"),
-            (F.col("id") == F.col("comp")).alias("is_keeper"),
-        )
-
-    def _rounds(edges: DataFrame, labels: DataFrame) -> DataFrame:
-        if broadcast_regime:
-            # GEOMETRIC convergence checks (each check is one more
-            # serial job): the changed-count is scheduled only at rounds
-            # 1, 2, 4, 8, ... (bounded by max_iterations), not every
-            # round — label mins are monotone and propagation past the
-            # fixpoint is a no-op, so detecting convergence a few
-            # no-op rounds late returns IDENTICAL labels while the
-            # skipped rounds' lazy checkpoints all materialize inside
-            # the next check's single count job (the rounds are a
-            # serial driver-bound chain: each count job saved is wall
-            # time at any scale; the overshoot rounds are node-scale
-            # no-op aggregates, bounded-cheap in this regime by the
-            # node cutover).  The past-cutover path below keeps its
-            # every-round check: there an overshoot round is a full
-            # node-scale exchange, which at cutover scale costs more
-            # than the count job it saves.
-            rounds_run = 0
-            next_check = 1
-            while rounds_run < max_iterations:
-                target = min(next_check, max_iterations)
-                while rounds_run < target:
-                    new_labels = _round_broadcast(
-                        edges, labels
-                    ).localCheckpoint(eager=False)
-                    labels = new_labels.drop("__changed")
-                    rounds_run += 1
-                if new_labels.filter(F.col("__changed")).count() == 0:
-                    return _done(labels)
-                # gap capped at _MAX_CHECK_GAP: an overshoot round costs
-                # one broadcast-build job, a skipped check saves one
-                # count job — uncapped doubling can overshoot by up to
-                # the whole diameter (net loss on mid-depth graphs,
-                # e.g. diameter 9 detected at round 16), while the cap
-                # bounds the overshoot at 3 rounds and keeps nearly all
-                # of the deep-graph check savings (measured at sf0.1:
-                # embedding_dedup_clusters 50 -> 42 construct jobs)
-                next_check = rounds_run + min(rounds_run, _MAX_CHECK_GAP)
-        else:
-            for _ in range(max_iterations):
-                # LAZY checkpoint: the changed-count below is the
-                # round's one and only action — it materializes and
-                # stores the checkpoint blocks as a side effect (an
-                # eager checkpoint + separate count was two full jobs)
-                new_labels = _round_copartitioned(
-                    edges, labels
-                ).localCheckpoint(eager=False)
-                changed = new_labels.filter(F.col("__changed")).count()
-                labels = new_labels.drop("__changed")
-                if changed == 0:
-                    return _done(labels)
-        raise _not_converged(max_iterations)
-
-    if not broadcast_regime:
-        # edges already carry hash(a) from the setup checkpoint; only
-        # the label relation needs keying
-        loop = private_session(spark, _AQE_OFF)
-        labels = _keyed_checkpoint(rebind(labels, loop), "id")
-    else:
-        # broadcast-regime rounds: one node-scale min-aggregate each,
-        # over n_nodes known rows (see :func:`_round_loop_confs`)
-        loop = private_session(spark, _round_loop_confs(spark, n_nodes))
-        labels = rebind(labels, loop)
-    return rebind(_rounds(rebind(edges, loop), labels), spark)
+        ).localCheckpoint(eager=False)
+        changed = new_labels.filter(F.col("__changed")).count()
+        labels = new_labels.drop("__changed")
+        if changed == 0:
+            return rebind(
+                labels.select(
+                    "id",
+                    F.col("comp").alias("cluster_id"),
+                    (F.col("id") == F.col("comp")).alias("is_keeper"),
+                ),
+                spark,
+            )
+    raise _not_converged(max_iterations)
 
 
 def apply_dedup_clusters(
@@ -919,8 +793,7 @@ def kcore(
         # in r14: a kcore overshoot round costs broadcast-build jobs that
         # outweigh the one count job a skipped check saves —
         # docs_kcore_graph read 33 -> 42 construct jobs with the
-        # doubling schedule.  The CC broadcast loop keeps them because
-        # its overshoot rounds cost exactly one job each.)
+        # doubling schedule.)
         for _ in range(max_rounds):
             deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
             # LAZY checkpoint + count as the round's single action (the
@@ -996,7 +869,7 @@ def kcore(
         return _degrees_if_converged(cur)
 
     if n_edges <= GRAPH_BROADCAST_MAX_NODES:
-        # same round-loop conf as the CC broadcast regime: every peel
+        # same round-loop conf as the CC loop: every peel
         # round's only shuffle is the degree aggregate over n_edges
         # known rows, and the anti-joins are explicit broadcasts, so AQE
         # had no join strategy left to improve here.  NOTE on the pin vs

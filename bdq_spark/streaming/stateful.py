@@ -319,22 +319,7 @@ def running_zscore(
     # per-key results are bit-identical to the streaming fold.
     import numpy as np
 
-    def one_shot(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            [key_column] + sort_cols, kind="mergesort"
-        )
-        vals = pdf[value_column].to_numpy(dtype="float64")
-        c = np.rint(vals * scale)
-        cmax = float(np.max(np.abs(c))) if len(c) else 0.0
-        if not np.isfinite(cmax) or len(c) * cmax * cmax >= 2**62:
-            # int64 could overflow: per-key exact bigint fallback
-            pieces = []
-            for _, g in pdf.groupby(key_column, sort=False, dropna=False):
-                scored, _ = _zscore_rows_loop(
-                    g, (0, 0, 0), value_column, scale
-                )
-                pieces.append(scored[out_cols])
-            return pd.concat(pieces, ignore_index=True)
+    def vectorized(pdf: pd.DataFrame, c: np.ndarray) -> pd.DataFrame:
         ci = c.astype("int64")
         sq = ci * ci
         keys = pdf[key_column]
@@ -353,6 +338,28 @@ def running_zscore(
         out["n_prior"] = n_prior
         out["zscore"] = pd.array(zs, dtype="Float64")
         return out[out_cols]
+
+    def one_shot(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(
+            [key_column] + sort_cols, kind="mergesort"
+        )
+        c = np.rint(pdf[value_column].to_numpy(dtype="float64") * scale)
+        # int64 exactness, per key: a key whose (s, q) sums could reach
+        # 2^62 (n_k * max|c| or n_k * max(c^2)), or that holds a
+        # non-finite value, takes the exact bigint fold; the bucket's
+        # other keys stay vectorized
+        per_key = pd.DataFrame({
+            "k": pdf[key_column].to_numpy(),
+            "a": np.where(np.isfinite(c), np.abs(c), np.inf),
+        }).groupby("k", sort=False, dropna=False)["a"]
+        n_k = per_key.transform("size").to_numpy(dtype="float64")
+        cmax_k = per_key.transform("max").to_numpy()
+        wide = (n_k * cmax_k >= 2**62) | (n_k * cmax_k * cmax_k >= 2**62)
+        pieces = [vectorized(pdf[~wide], c[~wide])]
+        for _, g in pdf[wide].groupby(key_column, sort=False, dropna=False):
+            scored, _ = _zscore_rows_loop(g, (0, 0, 0), value_column, scale)
+            pieces.append(scored[out_cols])
+        return pd.concat(pieces, ignore_index=True)
 
     return _apply_per_key_bucket(df, key_column, one_shot, output_schema)
 

@@ -48,43 +48,25 @@ def test_convergence_bound_raises(spark, distributed):
         assert {v[0] for v in _collect(out).values()} == {0}
 
 
-def test_geometric_check_boundaries(spark, distributed):
-    """The broadcast-regime loops count their convergence flag only at
-    geometrically spaced rounds, to save serial check jobs.  Pin the boundary
-    semantics: a diameter that lands BETWEEN two check rounds is
-    detected late but returns identical labels (overshoot rounds are
-    no-ops), and the max_iterations raise fires at exactly the same
-    bound as the every-round loop did.  The CC cases run on frames of
-    ``distributed`` (broadcasts off), so they reach the planned loop,
-    not the driver finish of small inputs."""
+def test_convergence_raise_boundary_both_paths(spark, distributed):
+    """The ``max_iterations`` raise fires at the same bound on the
+    driver finish and on the distributed loop (frames of
+    ``distributed``, broadcasts off): an 8-node path needs 7
+    propagation rounds plus one no-change round, so ``max_iterations=7``
+    raises and 8 converges.  The kcore peel is pinned the same way."""
     from bdq_spark.operators.components import kcore
 
-    # 5-node path: fixpoint after round 4, first changed==0 at round 5
-    # -> geometric checks (1, 2, 4, 8) detect at round 8; labels must
-    # still be the every-round answer
-    pairs = distributed.createDataFrame(
-        [(i, i + 1) for i in range(4)], "id_a long, id_b long"
-    )
-    cc = connected_components(pairs)
-    assert not on_driver(cc)
-    out = _collect(cc)
-    assert {k: v[0] for k, v in out.items()} == {i: 0 for i in range(5)}
-    # raise boundary unchanged: an 8-node path needs 7 propagation
-    # rounds + 1 no-change round; max_iterations=7 must still raise,
-    # 8 must converge (the final geometric check is pinned to the bound)
-    path8 = distributed.createDataFrame(
-        [(i, i + 1) for i in range(7)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(path8, max_iterations=7)
-    out8 = _collect(connected_components(path8, max_iterations=8))
-    assert {v[0] for v in out8.values()} == {0}
-    # the driver finish raises at the same bound
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(spark.createDataFrame(path8.collect()), max_iterations=7)
-    # kcore boundary (every-round checks + shared-broadcast anti-joins):
-    # a 3-level pendant path peels in exactly 3 rounds — max_rounds=4
-    # converges, max_rounds=2 raises
+    for session in (spark, distributed):
+        path8 = session.createDataFrame(
+            [(i, i + 1) for i in range(7)], "id_a long, id_b long"
+        )
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(path8, max_iterations=7)
+        out8 = connected_components(path8, max_iterations=8)
+        assert on_driver(out8) == (session is spark)
+        assert {v[0] for v in _collect(out8).values()} == {0}
+    # kcore boundary: a 3-level pendant path peels in exactly 3 rounds —
+    # max_rounds=4 converges, max_rounds=2 raises
     edges = [(i, i % 6 + 1) for i in range(1, 7)] + [
         (1, 10), (10, 11), (11, 12)
     ]
@@ -170,7 +152,11 @@ def test_driver_finish_keeps_types_and_schema(spark, distributed):
     planned = distributed.range(3).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    assert connected_components(ranged).schema == connected_components(planned).schema
+    local, planned = connected_components(ranged), connected_components(planned)
+    assert on_driver(local) and not on_driver(planned)
+    assert local.schema == planned.schema
+    assert not any(f.nullable for f in local.schema.fields)
+    assert sorted(local.collect()) == sorted(planned.collect())
 
 
 def test_apply_dedup_clusters_end_to_end(spark):
@@ -420,10 +406,11 @@ def _rand_graph(seed, n_nodes=60, n_edges=140):
 
 
 def test_shuffle_path_parity_all_ops(spark, monkeypatch):
-    """``GRAPH_BROADCAST_MAX_NODES = 0`` forces the co-partitioned shuffle path;
-    results must match the broadcast path exactly (exact-integer ops)
-    or to float round-off (pagerank), and the AQE conf must be restored
-    afterward."""
+    """``GRAPH_BROADCAST_MAX_NODES = 0`` forces the co-partitioned shuffle
+    path of PageRank and kcore; results must match the broadcast path
+    exactly (exact-integer ops) or to float round-off (pagerank).  CC's
+    two paths, the driver finish and the distributed loop (broadcasts
+    off), must agree too, and the AQE conf must be restored afterward."""
     from bdq_spark.operators import components
     from bdq_spark.operators.components import (
         connected_components,
@@ -437,16 +424,22 @@ def test_shuffle_path_parity_all_ops(spark, monkeypatch):
     df = spark.createDataFrame(edges, "src long, dst long")
     pairs = df.toDF("id_a", "id_b")
 
-    # three CC paths: the driver finish (input under the broadcast
-    # threshold), the broadcast-regime loop (broadcasts off) and the
-    # co-partitioned loop (GRAPH_BROADCAST_MAX_NODES = 0)
+    # two CC paths: the driver finish (input under the broadcast
+    # threshold) and the distributed loop (broadcasts off)
     from bdq_spark.session import private_session
 
     no_broadcast = private_session(
         spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}
     )
     cc_d = connected_components(pairs)
-    cc_b = connected_components(no_broadcast.createDataFrame(edges, "id_a long, id_b long"))
+    cc_l = connected_components(no_broadcast.createDataFrame(edges, "id_a long, id_b long"))
+    assert on_driver(cc_d) and not on_driver(cc_l)
+    cc_d, cc_l = (
+        {(r.id, r.cluster_id, r.is_keeper) for r in cc.collect()}
+        for cc in (cc_d, cc_l)
+    )
+    assert cc_l == cc_d
+
     prq_b = {
         (r.id, r.rank_q) for r in pagerank_quantized(df).collect()
     }
@@ -454,13 +447,6 @@ def test_shuffle_path_parity_all_ops(spark, monkeypatch):
     kc_b = {(r.id, r.degree) for r in kcore(df, k=3).collect()}
 
     monkeypatch.setattr(components, "GRAPH_BROADCAST_MAX_NODES", 0)
-    cc_s = connected_components(pairs)
-    assert on_driver(cc_d) and not on_driver(cc_b) and not on_driver(cc_s)
-    cc_d, cc_b, cc_s = (
-        {(r.id, r.cluster_id, r.is_keeper) for r in cc.collect()}
-        for cc in (cc_d, cc_b, cc_s)
-    )
-    assert cc_s == cc_b == cc_d
 
     prq_s = {
         (r.id, r.rank_q) for r in pagerank_quantized(df).collect()
@@ -516,6 +502,38 @@ def test_keyed_checkpoint_elides_round_exchanges(spark):
     assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") != "-1"
 
 
+def test_loop_round_plans_one_exchange_at_data_width(distributed, monkeypatch):
+    """Above the driver cap CC runs one co-partitioned loop: every
+    round's plan has exactly one exchange (the neighbor-min aggregate)
+    and no broadcast, and the labels are checkpointed at
+    ``min(session width, ceil(2 * n_pairs / 50_000))`` partitions."""
+    from pyspark.sql import functions as F
+
+    from bdq_spark.plans.plan_lint import checkpoint_partitions
+
+    n_pairs = 30_000
+    pairs = distributed.range(n_pairs).select(
+        (F.col("id") * 2).alias("id_a"), (F.col("id") * 2 + 1).alias("id_b")
+    )
+    plans = []
+    checkpoint = type(pairs).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        if "__changed" in self.columns:
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(pairs), "localCheckpoint", spy)
+    cc = connected_components(pairs)
+    assert not on_driver(cc) and cc.count() == 2 * n_pairs
+    assert plans
+    for plan in plans:
+        assert plan.count("Exchange") == 1, plan
+        assert "BroadcastExchange" not in plan, plan
+    width = int(distributed.conf.get("spark.sql.shuffle.partitions"))
+    assert checkpoint_partitions(cc) == min(width, -(-2 * n_pairs // 50_000))
+
+
 def test_aqe_disabled_restores_on_exception(spark, monkeypatch):
     """A graph operator that raises inside its AQE-off loop (here a
     convergence bound past the cutover: a 6-node path needs >1 round)
@@ -537,13 +555,13 @@ def test_aqe_disabled_restores_on_exception(spark, monkeypatch):
 def test_loops_leave_caller_session_conf_untouched(
     spark, distributed, monkeypatch
 ):
-    """The hand-scheduled loops (CC on both regimes, kcore, BPE) plan
+    """The hand-scheduled loops (CC, kcore on both regimes, BPE) plan
     on a private session: a thread polling the CALLER's session while
     they run never sees AQE off or a pinned shuffle width, and a frame
     planned on the caller mid-loop is still adaptive — what a parallel
     ``SparkPipeline`` step on the same session sees.  Results come back
     as frames of the caller's session.  The caller has broadcasts off,
-    so CC runs its planned loops rather than the driver finish."""
+    so CC runs its planned loop rather than the driver finish."""
     import threading
 
     from bdq_spark.operators import components
@@ -582,7 +600,7 @@ def test_loops_leave_caller_session_conf_untouched(
         outs = [connected_components(pairs), kcore(edges, k=2)]
         with monkeypatch.context() as m:
             m.setattr(components, "GRAPH_BROADCAST_MAX_NODES", 0)
-            outs += [connected_components(pairs), kcore(edges, k=2)]
+            outs.append(kcore(edges, k=2))
         outs.append(train_bpe(docs, n_merges=8)[1])
     finally:
         stop.set()
@@ -591,10 +609,10 @@ def test_loops_leave_caller_session_conf_untouched(
     assert seen == {expected}, seen
     assert adaptive == {True}
     assert all(o.sparkSession is spark for o in outs)
-    assert not on_driver(outs[0]) and not on_driver(outs[2])
+    assert not on_driver(outs[0])
     # results compose with caller-session frames
     names = spark.createDataFrame([(1, "a"), (20, "b")], "id long, nm string")
-    assert outs[2].join(names, "id").count() == 2
+    assert outs[0].join(names, "id").count() == 2
 
 
 def test_concurrent_pipeline_step_stays_adaptive(distributed):

@@ -413,6 +413,69 @@ def test_running_zscore_int64_fallback_matches_bigint_reference(spark):
     assert state[2] == sum(int(round(v * 100)) ** 2 for v in big) > 2**63
 
 
+def test_running_zscore_bigint_fallback_is_per_key(spark, monkeypatch):
+    """The batch fold's int64 guard is per key: of two keys that share a
+    hash bucket, only the one whose scaled sums could overflow takes the
+    bigint loop, the other stays vectorized, and both equal the
+    pure-Python bigint reference."""
+    import pandas as pd
+
+    from bdq_spark.streaming import stateful
+
+    # the batch path's bucket count for a small input is
+    # defaultParallelism; pick a small key in the big key's bucket
+    n_buckets = spark.sparkContext.defaultParallelism
+    bucket = {
+        r.id: r.b
+        for r in spark.range(1, 64)
+        .select("id", F.pmod(F.xxhash64("id"), F.lit(n_buckets)).alias("b"))
+        .collect()
+    }
+    small_key = next(k for k in range(2, 64) if bucket[k] == bucket[1])
+    big = [30_000_000.0 + 1234.56 * ((i * 7) % 11) for i in range(12)]
+    small = [10.0, 12.0, 11.0, 50.0, 9.5]
+    rows = [(1, i, v) for i, v in enumerate(big)]
+    rows += [(small_key, i, v) for i, v in enumerate(small)]
+    ev = spark.createDataFrame(
+        rows, "user_id long, event_id long, value double"
+    ).withColumn(
+        "ts",
+        F.to_timestamp(F.lit("2024-01-01"))
+        + F.make_interval(secs=F.col("event_id")),
+    )
+    expected = {
+        (k, i): z
+        for k, vals in ((1, big), (small_key, small))
+        for i, z in enumerate(_bigint_zscores(vals))
+    }
+    batch = {
+        (r.user_id, r.event_id): (r.n_prior, r.zscore)
+        for r in stateful.running_zscore(ev, order_columns=["event_id"]).collect()
+    }
+    assert batch == expected
+
+    # the bucket's fold, run in this process with a spy on the loop
+    seen = []
+    loop = stateful._zscore_rows_loop
+
+    def spy(pdf, *args):
+        seen.append(set(pdf["user_id"]))
+        return loop(pdf, *args)
+
+    monkeypatch.setattr(stateful, "_zscore_rows_loop", spy)
+    monkeypatch.setattr(
+        stateful, "_apply_per_key_bucket", lambda df, key, one_shot, schema: one_shot
+    )
+    one_shot = stateful.running_zscore(ev, order_columns=["event_id"])
+    out = one_shot(ev.toPandas())
+    assert seen == [{1}]
+    got = {
+        (r.user_id, r.event_id): (r.n_prior, None if pd.isna(r.zscore) else r.zscore)
+        for r in out.itertuples()
+    }
+    assert got == expected
+
+
 def test_running_zscore_streaming_state_across_batches(spark, tmp_path):
     """The (n, sum, sumsq) state must carry across micro-batches: an
     event in batch 2 is scored against batch 1's priors."""
